@@ -91,9 +91,18 @@ object Tables {
     // query stages at plan-BUILD time and read the pre-AQE partition
     // count; `queryExecution.toRdd` on a shuffle-free plan builds the
     // scan RDD on the driver with no job and no row-format conversion.
-    val physical = df.queryExecution.executedPlan
-    assert(!physical.exists(
-      _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]),
+    // Under AQE (on by default) the executed plan is an
+    // AdaptiveSparkPlanExec leaf whose Exchanges live in its current
+    // physical plan (query stages once it has run), not in its tree.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, ExchangeQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    def shuffles(p: SparkPlan): Boolean = p.exists {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case _: Exchange | _: ExchangeQueryStageExec => true
+      case _ => false
+    }
+    assert(!shuffles(df.queryExecution.executedPlan),
       "spreadIfNarrow requires a shuffle-free plan (narrow scan + maps); " +
         "apply it to the scan side before any join/aggregation")
     if (df.queryExecution.toRdd.getNumPartitions < par) df.repartition(par)

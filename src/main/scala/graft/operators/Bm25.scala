@@ -299,6 +299,20 @@ object Bm25 {
       cacheKey = Some(k)))
   }
 
+  /** Drop this session's memoized [[readIndex]] plans of the store at
+    * `dir`, under every fingerprint. On a filesystem with no `java.io`
+    * view the fingerprint is always 0, so the key alone cannot tell a
+    * store from its rewritten self; [[appendIndexStore]] evicts around
+    * its commit so that neither it nor a later reader sees stale stats or
+    * file listings.
+    */
+  private def forgetStored(spark: org.apache.spark.sql.SparkSession,
+                           dir: String): Unit = {
+    val perSession = storedIndexCache.synchronized(storedIndexCache.get(spark))
+    if (perSession != null)
+      perSession.keySet.removeIf(_.startsWith(s"stored:$dir@"))
+  }
+
   /** Incremental append to an AT-REST BM25 store — [[mergeIndex]]'s
     * economics on the persisted artifact (the [[graft.operators.VectorSearch.appendIvfStore]]
     * analogue; reference: the NPZ sidecar is rebuilt whole on every
@@ -318,7 +332,10 @@ object Bm25 {
     *    batch's; stores written before `sum_dl` pay one slim scan of the
     *    stored lengths table instead.
     * The stats rewrite changes the store's [[PathFingerprint]], so the
-    * in-process serving memo can never serve the pre-append snapshot.
+    * in-process serving memo can never serve the pre-append snapshot on a
+    * filesystem with a `java.io` view. The append reads the store's plans
+    * fresh and evicts them after the commit ([[forgetStored]]), so stats
+    * and listings stay fresh on any filesystem.
     * Contract (as [[mergeIndex]]): batch doc ids are disjoint from the
     * store's — ENFORCED here (one slim semi-join against the stored
     * lengths), which also makes a crashed append retry-SAFE: lengths are
@@ -330,6 +347,7 @@ object Bm25 {
                        newDocs: DataFrame, idCol: String,
                        textCol: String): Unit = {
     import spark.implicits._
+    forgetStored(spark, dir)
     val stored = readIndex(spark, dir)
     // ONE one-row head for every stats scalar this append needs (r18: n,
     // term_buckets, n_len and sum_dl each ran their own job — four
@@ -373,7 +391,7 @@ object Bm25 {
     val batchDocs = newDocs.count() // ALL batch docs — idf's N counts
     // docs that tokenize to nothing too, exactly as buildIndex's n does
     require(overlap == 0L,
-      s"appendIndexStore: $overlap stored doc ids also present in the batch at " +
+      s"appendIndexStore: $overlap batch doc ids already in the store at " +
         s"$dir — route re-ingests through the S5 anti-join; if a previous " +
         "append crashed mid-write, rebuild the store (writeIndex) instead " +
         "of retrying")
@@ -428,7 +446,10 @@ object Bm25 {
       Seq((sum2.toDouble / nLen2, sum2, nLen2, n2, storedBuckets))
         .toDF("avgdl", "sum_dl", "n_len", "n", "term_buckets")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    } finally lens.unpersist()
+    } finally {
+      lens.unpersist()
+      forgetStored(spark, dir)
+    }
   }
 
   /** Memoized per-corpus index — the "load the persisted index" path the

@@ -25,6 +25,11 @@ object ContextWindow {
     when(scoreCol < threshold,
       greatest(lit((scope * factor).toInt), lit(1))).otherwise(lit(scope))
 
+  /** [[adaptiveScope]] on a value. */
+  def adaptiveScopeValue(score: Double, scope: Int, threshold: Double,
+                         factor: Double): Int =
+    if (score < threshold) math.max((scope * factor).toInt, 1) else scope
+
   /** Expand each hit `(sourcedoc, sid, ...)` into the band
     * [sid - scope, sid + scope] of chunks from the same sourcedoc.
     *
@@ -49,6 +54,33 @@ object ContextWindow {
       .agg(min("hit_sid").as("hit_sid")) // dedup overlapping windows
     chunks.join(broadcast(want), Seq("sourcedoc", "sid"))
   }
+
+  /** [[expandScoped]] for driver-held hits over a driver-resident chunk
+    * index — the reference's per-hit range read against its open store,
+    * with no job. Same band (`sequence(max(sid - scope, 0), sid + scope)`,
+    * which counts down when its start passes its end), same dedup of
+    * overlapping bands, same inner-join drop of sids absent from the index.
+    *
+    * @param index  sourcedoc → (ascending unique sids, their texts)
+    * @param hits   `(sourcedoc, sid, scope)` per hit
+    * @return the context rows `(sourcedoc, sid, text)`, each sourcedoc's
+    *         rows contiguous and in ascending sid order
+    */
+  def expandValues(index: Map[String, (Array[Long], Array[String])],
+                   hits: Seq[(String, Long, Int)]): Seq[(String, Long, String)] =
+    hits.groupBy(_._1).toSeq.flatMap { case (sd, hs) =>
+      index.get(sd).toSeq.flatMap { case (sids, texts) =>
+        val keep = new java.util.BitSet(sids.length)
+        hs.foreach { case (_, sid, scope) =>
+          val (a, b) = (math.max(sid - scope, 0L), sid + scope)
+          val (lo, hi) = (math.min(a, b), math.max(a, b))
+          val at = java.util.Arrays.binarySearch(sids, lo)
+          var i = if (at >= 0) at else -at - 1
+          while (i < sids.length && sids(i) <= hi) { keep.set(i); i += 1 }
+        }
+        keep.stream().toArray.toSeq.map(i => (sd, sids(i), texts(i)))
+      }
+    }
 
   /** BATCHED [[expandScoped]]: hits from N queries expand in one DAG, window
     * dedup keyed by (query, sourcedoc, sid) so each query keeps its OWN

@@ -66,9 +66,12 @@ object KbPipeline {
   }
 
   /** Search-hit schema: (doc_id, score, rank). `formatted` is lazy: the
-    * driver-side context assembly (a collect) runs only when the caller
-    * actually consumes the formatted string — a caller that only needs the
-    * hit DataFrame never materializes the context expansion.
+    * context expansion and formatting run only when the caller consumes
+    * the formatted string — on the driver with no job when the serving
+    * rung held the hits and the resident chunk index, otherwise as one
+    * collect of the bounded block rows. `context` stays the lazy
+    * distributed expansion either way; a caller that only needs the hit
+    * DataFrame never materializes it.
     */
   final class QueryResult(val hits: DataFrame, val context: DataFrame,
                           formattedThunk: () => String) {
@@ -139,18 +142,9 @@ object KbPipeline {
     val effServing =
       if (cfg.indexType == "exact") VectorSearch.Serving.Flat else serving
 
-    // 3-warm. FULLY in-process hit serving: vector top-k, BM25, RRF, text
-    //    fetch, and the lexical rerank all value-computed driver-side when
-    //    every serving cache is resident (see [[hitsInProcess]]) — the hits
-    //    arrive as one rank-ready LocalRelation with zero jobs. Any miss
-    //    falls through to the distributed DAG below, unchanged.
-    val servedHits: Option[DataFrame] =
-      if (effServing == VectorSearch.Serving.Flat)
-        hitsInProcess(spark, chunks, embeddings, enhanced, qvec, cfg,
-          categoryFilter, bm25Index, corpusKey)
-      else None
-    val hits = servedHits.getOrElse {
-    val vtop = effServing match {
+    // the vector tier's top-k plan — built only when the fully in-process
+    // rung below misses
+    lazy val vtop: DataFrame = effServing match {
       case VectorSearch.Serving.Flat =>
         // with a corpus key the flat tier serves IN-PROCESS when the
         // corpus fits the guarded broadcast (VectorSearch.corpusInMemory):
@@ -220,33 +214,40 @@ object KbPipeline {
           .select(col("doc_id"), col("score"))
     }
 
-    // 3-warm-stitch. the vector TIER ran distributed (ANN tiers / cold
-    //    corpus), but the stitching caches may still be resident: collect
-    //    the ≤ topK tier rows (ONE job) and run fusion → text fetch →
-    //    rerank driver-side through the same hitRowsFor core — 4 warm
-    //    stitch jobs become 1. Guards mirror hitsInProcess; a miss keeps
-    //    the distributed stitch below unchanged.
-    val stitched: Option[DataFrame] =
-      if (categoryFilter.nonEmpty || !cfg.enableReranking ||
-          (cfg.enableHybridSearch &&
-            (cfg.fusionMethod == "weighted" || bm25Index.isEmpty))) None
-      else for {
-        ck <- corpusKey
-        cmap <- chunksInMemory(chunks, ck)
-        kraw <- if (!cfg.enableHybridSearch) Some(Seq.empty[(Long, Double)])
-                else Bm25.scoreWithIndexValues(bm25Index.get, spark, enhanced,
-                  cfg.bm25K1, cfg.bm25B)
-      } yield {
-        import spark.implicits._
-        val vvals = vtop.select(col("doc_id").cast("long"),
-            col("score").cast("double"))
-          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-        hitRowsFor(spark, cfg, enhanced, vvals, kraw, cmap)
-          .take(cfg.queryTopK)
-          .toDF("doc_id", "score", "text", "sourcedoc", "sid",
-            "rerank_score", "final_rank")
+    // 3-warm. the hit rows on the driver, with the resident chunks they
+    //    were fetched from, when a serving rung answers:
+    //    - FULLY in-process: vector top-k, BM25, RRF, text fetch, and the
+    //      lexical rerank all value-computed driver-side when every serving
+    //      cache is resident (see [[hitsInProcess]]) — zero jobs;
+    //    - warm stitch: the vector TIER ran distributed (ANN tiers / cold
+    //      corpus), but the stitching caches are resident: collect the
+    //      ≤ topK tier rows (ONE job) and run fusion → text fetch → rerank
+    //      driver-side through the same hitRowsFor core — 4 warm stitch
+    //      jobs become 1. Guards mirror hitsInProcess.
+    //    A miss keeps the distributed stitch below unchanged.
+    val warm: Option[(Seq[HitRow], ResidentChunks)] =
+      (if (effServing == VectorSearch.Serving.Flat)
+        hitsInProcess(spark, chunks, embeddings, enhanced, qvec, cfg,
+          categoryFilter, bm25Index, corpusKey)
+      else None).orElse {
+        if (categoryFilter.nonEmpty || !cfg.enableReranking ||
+            (cfg.enableHybridSearch &&
+              (cfg.fusionMethod == "weighted" || bm25Index.isEmpty))) None
+        else for {
+          ck <- corpusKey
+          rc <- chunksInMemory(chunks, ck)
+          kraw <- if (!cfg.enableHybridSearch) Some(Seq.empty[(Long, Double)])
+                  else Bm25.scoreWithIndexValues(bm25Index.get, spark, enhanced,
+                    cfg.bm25K1, cfg.bm25B)
+        } yield {
+          val vvals = vtop.select(col("doc_id").cast("long"),
+              col("score").cast("double"))
+            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          (hitRowsFor(spark, cfg, enhanced, vvals, kraw, rc.byId)
+            .take(cfg.queryTopK), rc)
+        }
       }
-    stitched.getOrElse {
+    val hits = warm.map { case (rows, _) => hitFrame(spark, rows) }.getOrElse {
     // 3b. BM25 (A2/T2) — skipped when hybrid disabled (the reference's
     //     low-memory tier does the same, README.md:454-459); k1/b and the
     //     candidate cap come from config
@@ -291,7 +292,6 @@ object KbPipeline {
         .orderBy("final_rank").limit(cfg.queryTopK)
     else withText.orderBy(col("score").desc, col("doc_id")).limit(cfg.queryTopK)
     }
-    }
 
     // 5. context expansion (J2/W2) with the P5 adaptive scope: low-scoring
     //    hits get a halved window (similarity_threshold /
@@ -301,42 +301,89 @@ object KbPipeline {
         ContextWindow.adaptiveScope(col("score"), cfg.queryContextScope,
           cfg.similarityThreshold, cfg.lowSimilarityScopeFactor).as("_scope")))
 
-    // 7. formatting (driver-side assembly of ≤ top-k · scope blocks) —
-    //    deferred until the caller reads `formatted`
+    // 6-7. consecutive-run blocks and formatting, deferred until the
+    //    caller reads `formatted`. Hit rows held on the driver over a
+    //    resident chunk index expand, group and render there with no job —
+    //    the same band, dedup, grouping and renderer as the distributed
+    //    form; otherwise `context`'s block rows (≤ top-k · scope) are
+    //    collected once and rendered by that same renderer
+    import graft.format.Formatters
     new QueryResult(hits, context, () =>
-      graft.format.Formatters.assemble(
-        graft.format.Formatters.formatBlocks(
-          graft.format.Formatters.blocks(context, "text"), cfg.referenceFormat),
-        cfg.referenceFormat))
+      warm.flatMap { case (rows, rc) => rc.bySource.map { ix =>
+        Formatters.render(Formatters.blockValues(ContextWindow.expandValues(ix,
+          rows.map(r => (r._4, r._5.toLong,
+            ContextWindow.adaptiveScopeValue(r._2, cfg.queryContextScope,
+              cfg.similarityThreshold, cfg.lowSimilarityScopeFactor))))),
+          cfg.referenceFormat)
+      } }.getOrElse(
+        Formatters.document(Formatters.blocks(context, "text"), cfg.referenceFormat)))
   }
 
-  /** Guarded in-memory chunk-row map for the serving fast path — the
-    * reference's resident SQLite chunk store (`query/search.py:207-231`
-    * fetches hit text by id from the open connection, not a table scan).
-    * LIMIT-bounded row guard, memoized per (session, key); None over the
-    * limit — the broadcast text-fetch join is the 100 TB path either way.
+  /** A driver-side hit row: `(doc_id, score, text, sourcedoc, sid,
+    * rerank_score, final_rank)`, the hit DataFrame's columns.
     */
-  private val chunkMapMemo =
-    new graft.operators.SessionMemo[Option[Map[Long, (String, String, Int)]]]
+  private type HitRow = (Long, Double, String, String, Int, Option[Double], Int)
+
+  private def hitFrame(spark: SparkSession, rows: Seq[HitRow]): DataFrame = {
+    import spark.implicits._
+    rows.toDF("doc_id", "score", "text", "sourcedoc", "sid",
+      "rerank_score", "final_rank")
+  }
+
+  /** The resident chunk table of the serving rung, from ONE guarded
+    * collect: `byId` (id → (text, sourcedoc, sid)) serves the hit text
+    * fetch; `bySource` (sourcedoc → (ascending sids, texts), the same
+    * String instances) serves the context window. `bySource` is None when
+    * the chunk set holds what the driver window does not replicate: a
+    * null sourcedoc or text, a repeated (sourcedoc, sid), or a sourcedoc /
+    * sid type other than string / int / bigint.
+    */
+  private final case class ResidentChunks(
+      byId: Map[Long, (String, String, Int)],
+      bySource: Option[Map[String, (Array[Long], Array[String])]])
+
+  /** Guarded in-memory chunk rows for the serving fast path — the
+    * reference's resident SQLite chunk store (`query/search.py:207-231`
+    * fetches hit text by id and context by `(sourcedoc, sid)` range from
+    * the open connection, not a table scan). LIMIT-bounded row guard,
+    * memoized per (session, key); None over the limit or when a sid is
+    * null (a hit row cannot carry it) — the broadcast joins are the
+    * 100 TB path either way.
+    */
+  private val chunkMapMemo = new graft.operators.SessionMemo[Option[ResidentChunks]]
   private def chunksInMemory(chunks: DataFrame, key: String,
-                             maxRows: Int = 200000): Option[Map[Long, (String, String, Int)]] = {
+                             maxRows: Int = 200000): Option[ResidentChunks] = {
     val spark = chunks.sparkSession
     import spark.implicits._
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     chunkMapMemo.getOrBuild(spark, s"$key|lim=$maxRows") {
       // maintained kbs key chunks by STRING ids (sourcedoc#sid) — the
       // Long-keyed resident map can't hold them (and the ANSI cast would
       // throw); those serve through the distributed text-fetch join
       val idType = chunks.schema("doc_id").dataType
-      val numericId =
-        idType == org.apache.spark.sql.types.LongType ||
-          idType == org.apache.spark.sql.types.IntegerType
-      if (!numericId) None
+      val sel = chunks.select(col("doc_id").cast("long"), col("text"),
+        col("sourcedoc"), col("sid").cast("int"))
+      if ((idType != LongType && idType != IntegerType) ||
+          sel.limit(maxRows + 1).count() > maxRows) None
       else {
-        val sel = chunks.select(col("doc_id").cast("long"), col("text"),
-          col("sourcedoc"), col("sid").cast("int"))
-        if (sel.limit(maxRows + 1).count() > maxRows) None
-        else Some(sel.as[(Long, String, String, Int)].collect()
-          .map { case (id, t, sd, si) => id -> ((t, sd, si)) }.toMap)
+        val rows = sel.as[(Option[Long], String, String, Option[Int])].collect()
+        if (rows.exists(_._4.isEmpty)) None
+        else {
+          // a null id never matches the text-fetch join, but its chunk
+          // still lies in a context band
+          val byId = rows.collect { case (Some(id), t, sd, Some(si)) =>
+            id -> ((t, sd, si)) }.toMap
+          val keyTypes = chunks.schema("sourcedoc").dataType == StringType &&
+            Seq(IntegerType, LongType).contains(chunks.schema("sid").dataType)
+          val bySource =
+            if (!keyTypes || rows.exists(r => r._2 == null || r._3 == null) ||
+                rows.map(r => (r._3, r._4)).distinct.length != rows.length) None
+            else Some(rows.groupBy(_._3).map { case (sd, rs) =>
+              val asc = rs.sortBy(_._4.get)
+              sd -> ((asc.map(_._4.get.toLong), asc.map(_._2)))
+            })
+          Some(ResidentChunks(byId, bySource))
+        }
       }
     }
   }
@@ -347,9 +394,10 @@ object KbPipeline {
     * ([[chunksInMemory]]) are ALL resident under the session's guarded
     * serving caches, every stage after embedding — rounded vector top-k,
     * BM25 scoring, RRF fusion, inner-join text fetch, head/tail lexical
-    * rerank — is value-computed on the driver and the hits arrive as ONE
-    * rank-ready LocalRelation with zero jobs: the reference's resident
-    * SQLite+FAISS+NPZ regime. Stage semantics replicate the distributed
+    * rerank — is value-computed on the driver and the hit rows arrive
+    * rank-ready with zero jobs, together with the resident chunks the
+    * context window reads ([[query]] wraps the rows in ONE LocalRelation):
+    * the reference's resident SQLite+FAISS+NPZ regime. Stage semantics replicate the distributed
     * plan operation for operation (rounded rank keys, set-semantics
     * Jaccard, the rerankHead head/tail contract); InProcessPipelineSpec
     * pins warm == distributed column for column. None — any cache miss, a
@@ -362,7 +410,8 @@ object KbPipeline {
                             qvec: Seq[Float], cfg: KbConfig,
                             categoryFilter: Seq[String],
                             bm25Index: Option[Bm25.Index],
-                            corpusKey: Option[String]): Option[DataFrame] = {
+                            corpusKey: Option[String])
+      : Option[(Seq[HitRow], ResidentChunks)] = {
     if (categoryFilter.nonEmpty || !cfg.enableReranking) return None
     if (cfg.enableHybridSearch &&
         (cfg.fusionMethod == "weighted" || bm25Index.isEmpty)) return None
@@ -373,14 +422,9 @@ object KbPipeline {
       kraw <- if (!cfg.enableHybridSearch) Some(Seq.empty[(Long, Double)])
               else Bm25.scoreWithIndexValues(bm25Index.get, spark, enhanced,
                 cfg.bm25K1, cfg.bm25B)
-      cmap <- chunksInMemory(chunks, ck)
-    } yield {
-      import spark.implicits._
-      hitRowsFor(spark, cfg, enhanced, vtop, kraw, cmap)
-        .take(cfg.queryTopK)
-        .toDF("doc_id", "score", "text", "sourcedoc", "sid",
-          "rerank_score", "final_rank")
-    }
+      rc <- chunksInMemory(chunks, ck)
+    } yield (hitRowsFor(spark, cfg, enhanced, vtop, kraw, rc.byId)
+      .take(cfg.queryTopK), rc)
   }
 
   /** [[hitsInProcess]] for a BATCH: the same per-query driver computation
@@ -408,7 +452,7 @@ object KbPipeline {
     if (qData.map(_._1).distinct.size != qData.size) return None
     for {
       ck <- corpusKey
-      cmap <- chunksInMemory(chunks, ck)
+      rc <- chunksInMemory(chunks, ck)
       perQuery <- {
         val rows = qData.map { case (qid, enhanced, qv) =>
           for {
@@ -417,7 +461,7 @@ object KbPipeline {
             kraw <- if (!cfg.enableHybridSearch) Some(Seq.empty[(Long, Double)])
                     else Bm25.scoreWithIndexValues(bm25Index.get, spark,
                       enhanced, cfg.bm25K1, cfg.bm25B)
-          } yield hitRowsFor(spark, cfg, enhanced, vtop, kraw, cmap)
+          } yield hitRowsFor(spark, cfg, enhanced, vtop, kraw, rc.byId)
             .filter(_._7 <= cfg.queryTopK)
             .map(r => (qid, r._1, r._2, r._3, r._4, r._5, r._6, r._7))
         }
@@ -442,7 +486,7 @@ object KbPipeline {
   private def hitRowsFor(spark: SparkSession, cfg: KbConfig, enhanced: String,
                          vtop: Seq[(Long, Double)], kraw: Seq[(Long, Double)],
                          cmap: Map[Long, (String, String, Int)])
-      : Seq[(Long, Double, String, String, Int, Option[Double], Int)] = {
+      : Seq[HitRow] = {
     val hits0: Seq[(Long, Double)] =
       if (!cfg.enableHybridSearch) vtop
       else {

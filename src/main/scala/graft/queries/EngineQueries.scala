@@ -592,10 +592,10 @@ object EngineQueries {
        |SELECT $frame AS doc FROM joined""".stripMargin
   }
 
-  /** Spark side of f_format_xml/_md: the REAL serving path —
-    * [[graft.format.Formatters.blocks]] → formatBlocks → assemble (a
-    * bounded driver-side join of per-block strings), re-wrapped as a
-    * 1-row DataFrame for the comparator.
+  /** Spark side of f_format_xml/_md/_json/_plain: the REAL serving path —
+    * [[graft.format.Formatters.blocks]] → document (the bounded block rows
+    * collected and rendered on the driver), re-wrapped as a 1-row
+    * DataFrame for the comparator.
     */
   private def formatDocDf(s: org.apache.spark.sql.SparkSession,
                           dir: String, style: String): org.apache.spark.sql.DataFrame = {
@@ -606,8 +606,7 @@ object EngineQueries {
       .select(col("doc_id"), col("source").as("sourcedoc"),
         (row_number().over(w) - 1).cast("int").as("sid"), col("text"))
     val ctx = chunks.filter(col("sid") % 7 < 3)
-    val fmt = Formatters.formatBlocks(Formatters.blocks(ctx, "text"), style)
-    Seq(Tuple1(Formatters.assemble(fmt, style))).toDF("doc")
+    Seq(Tuple1(Formatters.document(Formatters.blocks(ctx, "text"), style))).toDF("doc")
   }
 
   /** The complete single-query lifecycle as one DuckDB SQL statement,

@@ -279,6 +279,29 @@ class Bm25Spec extends SparkSpec {
     assert(appended.cacheKey != preKey)
   }
 
+  test("two appends in one session stay fresh on a filesystem with no java.io view") {
+    val docs = corpus.toDF("doc_id", "text")
+    val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_bm25_noio")
+    val ref = java.nio.file.Files.createTempDirectory("graft_bm25_noioref").toString
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"),
+      dir, termBuckets = 4)
+    assert(PathFingerprint(s"$dir/stats") == 0L)
+    // a serving reader memoizes the store's plans first, as a session does
+    assert(Bm25.readIndex(spark, dir).nDocs == 2L)
+    Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") === 3), "doc_id", "text")
+    Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") > 3), "doc_id", "text")
+    Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 4)
+    val appended = Bm25.readIndex(spark, dir)
+    val rebuilt = Bm25.readIndex(spark, ref)
+    assert(appended.stats.select("n", "n_len", "sum_dl").head() ==
+      rebuilt.stats.select("n", "n_len", "sum_dl").head())
+    assert(appended.avgdl == rebuilt.avgdl)
+    def idfKey(ix: Bm25.Index) = ix.idf.select("term", "df", "idf")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(idfKey(appended) == idfKey(rebuilt))
+    assert(appended.lengths.count() == 5L)
+  }
+
   test("appendIndexStore == rebuild when docs tokenize to NOTHING on either side") {
     // n counts all docs (idf's N) while avgdl averages token-bearing rows
     // only — an empty-tokenizing doc must shift them exactly as a rebuild

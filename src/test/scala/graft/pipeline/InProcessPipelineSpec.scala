@@ -44,10 +44,13 @@ class InProcessPipelineSpec extends SparkSpec {
     val emb = embeddings.localCheckpoint(true)
     val q = "spark joins ranking"
     val ix = Bm25.cachedIndex("inproc-spec", ch, "doc_id", "text")
-    val warm = KbPipeline.query(spark, ch, emb, q,
-      bm25Index = Some(ix), corpusKey = Some("inproc-spec")).hits
-    val dist = KbPipeline.query(spark, ch, emb, q,
-      bm25Index = Some(ix), corpusKey = None).hits
+    val warmRes = KbPipeline.query(spark, ch, emb, q,
+      bm25Index = Some(ix), corpusKey = Some("inproc-spec"))
+    val distRes = KbPipeline.query(spark, ch, emb, q,
+      bm25Index = Some(ix), corpusKey = None)
+    // the null-text chunk keeps formatting on the distributed chain
+    assert(warmRes.formatted == distRes.formatted)
+    val (warm, dist) = (warmRes.hits, distRes.hits)
     assert(warm.queryExecution.optimizedPlan
         .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
       s"warm path did not serve a LocalRelation:\n${warm.queryExecution.optimizedPlan}")
@@ -171,5 +174,110 @@ class InProcessPipelineSpec extends SparkSpec {
       bm25Index = Some(ix), corpusKey = Some("inproc-spec3")).hits
     assert(!weighted.queryExecution.optimizedPlan
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+  }
+
+  // ── context expansion and formatting on the rung ──────────────────────
+  // Four sourcedocs: XML/JSON metacharacters, and non-ASCII names whose
+  // UTF-8 order (Spark's) differs from String.compareTo's (U+FF21 vs
+  // U+1F600). Sids have gaps; texts carry control characters; the
+  // threshold splits RRF scores so some hits get the halved scope.
+  private val fmtCfg = graft.config.KbConfig(queryTopK = 8, rerankingTopK = 4,
+    queryContextScope = 2, similarityThreshold = 0.025)
+  private val fmtQuery = "spark joins ranking"
+  private val fmtDocs = Seq("docs/a&b<c>\"d'.md", "docs/\uFF21.md",
+    "docs/\u00e9.md", "docs/\uD83D\uDE00.md")
+  private type ChunkRow = (Long, String, String, Option[Int])
+  private val fmtRows: Seq[ChunkRow] = for {
+    (sd, j) <- fmtDocs.zipWithIndex
+    sid <- Seq(0, 1, 2, 3, 5, 6, 7, 10, 11, 14)
+  } yield {
+    val topic = if ((sid + j) % 3 == 0) "spark joins ranking" else "window functions"
+    (j * 100L + sid, s"chunk $sid of <$j> & \"$topic\" 'q' \\ tab\there " +
+      "\u0000\u0001\u001f\u007f\u2028 \u00eb", sd, Some(sid))
+  }
+
+  private def fmtFrames(rows: Seq[ChunkRow]) = {
+    val p = Embedder.Deterministic(64)
+    (rows.toDF("doc_id", "text", "sourcedoc", "sid").localCheckpoint(true),
+      rows.map { case (id, t, _, _) =>
+        (id, p.embedBatch(Seq(Option(t).getOrElse(""))).head)
+      }.toDF("doc_id", "embedding").localCheckpoint(true))
+  }
+
+  /** Per style: warm `.formatted`, the jobs it ran, distributed `.formatted`
+    * and the distributed context rendered by Spark column expressions.
+    */
+  private def formattedBothWays(rows: Seq[ChunkRow], key: String,
+                                styles: Seq[String]) = {
+    val (ch, emb) = fmtFrames(rows)
+    val ix = Bm25.cachedIndex(key, ch, "doc_id", "text")
+    styles.map { style =>
+      val cfg = fmtCfg.copy(referenceFormat = style)
+      val warm = KbPipeline.query(spark, ch, emb, fmtQuery, cfg,
+        bm25Index = Some(ix), corpusKey = Some(key))
+      val dist = KbPipeline.query(spark, ch, emb, fmtQuery, cfg,
+        bm25Index = Some(ix), corpusKey = None)
+      val (w, jobs) = graft.JobCount(spark)(warm.formatted)
+      (style, w, jobs, dist.formatted,
+        graft.format.ColumnRender(graft.format.Formatters.blocks(dist.context, "text"), style))
+    }
+  }
+
+  test("warm formatted == distributed formatted, byte for byte, in every style") {
+    val (ch, emb) = fmtFrames(fmtRows)
+    val ix = Bm25.cachedIndex("inproc-fmt", ch, "doc_id", "text")
+    val hits = KbPipeline.query(spark, ch, emb, fmtQuery, fmtCfg,
+        bm25Index = Some(ix), corpusKey = Some("inproc-fmt"))
+      .hits.select("sourcedoc", "sid", "score").as[(String, Int, Double)].collect()
+    // the fixture reaches the edges it exists for
+    assert(hits.exists(_._2 == 0), "no hit at sid 0")
+    assert(hits.exists(_._3 < fmtCfg.similarityThreshold) &&
+      hits.exists(_._3 >= fmtCfg.similarityThreshold), "no halved-and-full scope mix")
+    assert(hits.groupBy(_._1).values.exists(hs =>
+      hs.combinations(2).exists(p => math.abs(p(0)._2 - p(1)._2) <= 2)),
+      "no overlapping windows")
+    assert(Set("docs/\uFF21.md", "docs/\uD83D\uDE00.md").subsetOf(hits.map(_._1).toSet),
+      s"the UTF-8-ordered pair is not both hit: ${hits.toSeq}")
+    formattedBothWays(fmtRows, "inproc-fmt", Seq("xml", "json", "markdown", "plain"))
+      .foreach { case (style, w, jobs, d, columns) =>
+        assert(jobs == 0, s"$style: warm formatting ran $jobs jobs")
+        assert(w == d, s"$style warm:\n$w\ndistributed:\n$d")
+        assert(d == columns, s"$style distributed:\n$d\ncolumn-rendered:\n$columns")
+      }
+  }
+
+  test("chunk sets the driver window does not replicate decline; output unchanged") {
+    val isolated = fmtRows.find(r => r._3 == fmtDocs.head && r._4.contains(14)).get
+    Seq(
+      // identical text: the duplicate's two one-chunk blocks tie in order
+      // but render the same, so the distributed output is deterministic
+      "dup" -> (fmtRows :+ isolated.copy(_1 = 9999L)),
+      "nullsd" -> (fmtRows :+ ((9998L, "spark joins ranking", null, Some(3)))),
+      "nullsid" -> (fmtRows :+ ((9997L, "spark joins ranking", fmtDocs.head, None))),
+      "nulltext" -> (fmtRows :+ ((9996L, null, fmtDocs.head, Some(4))))
+    ).foreach { case (name, rows) =>
+      formattedBothWays(rows, s"inproc-fmt-$name", Seq("xml", "json"))
+        .foreach { case (style, w, jobs, d, columns) =>
+          assert(jobs > 0, s"$name/$style: the driver path did not decline")
+          assert(w == d, s"$name/$style warm:\n$w\ndistributed:\n$d")
+          assert(d == columns, s"$name/$style")
+        }
+    }
+  }
+
+  test("a warm keyed query runs zero Spark jobs, formatted included") {
+    val (ch, emb) = fmtFrames(fmtRows)
+    val ix = Bm25.cachedIndex("inproc-fmt-jobs", ch, "doc_id", "text")
+    def ask(key: Option[String]) = KbPipeline.query(spark, ch, emb, fmtQuery,
+      fmtCfg, bm25Index = Some(ix), corpusKey = key)
+    ask(Some("inproc-fmt-jobs")).formatted // fills the serving memos
+    val (_, formatJobs) = graft.JobCount(spark)(ask(Some("inproc-fmt-jobs")).formatted)
+    assert(formatJobs == 0, s"warm query + formatted ran $formatJobs jobs")
+    val (_, opJobs) = graft.JobCount(spark) {
+      val r = ask(Some("inproc-fmt-jobs")); r.formatted; r.hits.collect()
+    }
+    assert(opJobs == 0, s"warm query op ran $opJobs jobs")
+    val (_, distJobs) = graft.JobCount(spark)(ask(None).formatted)
+    assert(distJobs > 0, "the listener saw no distributed jobs")
   }
 }
