@@ -24,44 +24,13 @@ object Tables {
     * serve was paying more for re-deriving the table's schema than for
     * the search itself. Plan reuse also lets the whole registry share one
     * FileIndex/statistics object per table. (The driver-provided sf
-    * directories are read-only; a mutable table would belong behind a
-    * catalog, not this accessor.)
+    * directories are read-only; a harness that rewrites one in place
+    * drops its reads with [[operators.SessionMemo.forget]].)
     */
-  private val readCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val readCache = new operators.SessionMemo[DataFrame](_.unpersist())
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = readCache.synchronized {
-      readCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet",
-      p => spark.read.parquet(p))
-  }
-
-  /** Drop the memoized reads (and derived chunk plans) for `dir` in this
-    * session — the escape hatch for a harness that rewrites an sf
-    * directory in place mid-session, which would otherwise keep serving
-    * the stale FileIndex/schema. Production corpora stay behind the
-    * read-only assumption above; this is for test fixtures only.
-    */
-  def invalidate(spark: SparkSession, dir: String): Unit = {
-    def drop(cache: java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]]): Unit = {
-      val perSession = cache.synchronized(cache.get(spark))
-      if (perSession != null) {
-        val it = perSession.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          if (e.getKey.startsWith(dir)) {
-            e.getValue.unpersist() // no-op for unpersisted reads
-            it.remove()
-          }
-        }
-      }
-    }
-    drop(readCache)
-    drop(chunksCache)
+    val p = s"$dir/$name.parquet"
+    readCache.getOrBuild(spark, p)(spark.read.parquet(p))
   }
 
   def documents(spark: SparkSession, dir: String): DataFrame =
@@ -116,15 +85,9 @@ object Tables {
     * same way), so deriving it per query would charge serving for ingest
     * work. Memoized per (session, dir) like the other serving indexes.
     */
-  private val chunksCache =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
-  def chunksWithSid(spark: SparkSession, dir: String): DataFrame = {
-    val perSession = chunksCache.synchronized {
-      chunksCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(dir, _ => {
+  private val chunksCache = new operators.SessionMemo[DataFrame](_.unpersist())
+  def chunksWithSid(spark: SparkSession, dir: String): DataFrame =
+    chunksCache.getOrBuild(spark, dir) {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
       val w = Window.partitionBy("source").orderBy("doc_id")
@@ -132,8 +95,7 @@ object Tables {
         .select(col("doc_id"), col("text"), col("source").as("sourcedoc"),
           (row_number().over(w) - 1).cast("int").as("sid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     apply(spark, dir, "embeddings")
   def lineitem(spark: SparkSession, dir: String): DataFrame =

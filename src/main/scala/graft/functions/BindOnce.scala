@@ -22,16 +22,10 @@ import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression, Ru
   * caches its last compiled pattern in the (shared) tree.
   */
 object BindOnce {
-  private val caches =
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Expression]]()
+  private val caches = new graft.operators.SessionMemo[Expression]
 
-  def apply(spark: SparkSession, key: String)(build: Column => Column): Expression = {
-    val perSession = caches.synchronized {
-      caches.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, Expression]())
-    }
-    perSession.computeIfAbsent(key, { _ =>
+  def apply(spark: SparkSession, key: String)(build: Column => Column): Expression =
+    caches.getOrBuild(spark, key) {
       import spark.implicits._
       import org.apache.spark.sql.functions.col
       val analyzed = Seq("").toDF("q").select(build(col("q")).as("e"))
@@ -48,6 +42,5 @@ object BindOnce {
         }
       }
       BindReferences.bindReference(replaced, proj.child.output)
-    })
-  }
+    }
 }

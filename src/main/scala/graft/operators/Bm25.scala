@@ -274,9 +274,7 @@ object Bm25 {
   // rides: every store mutation (writeIndex, appendIndexStore) rewrites
   // stats last, so a rewritten store reads fresh and an unchanged store
   // serves the memoized plans (and its already-snapshotted statsRow).
-  private val storedIndexCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Index]]()
+  private val storedIndexCache = new SessionMemo[Index]
   def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
     // a stored index has a natural identity — the serving fast path
     // ([[indexInProcess]]) memoizes its in-memory term arrays under it,
@@ -285,32 +283,15 @@ object Bm25 {
     // REWRITTEN index read in the same session gets a fresh snapshot
     // instead of the stale memoized arrays; non-local filesystems
     // (no java.io view) fingerprint as 0 and fall back to dir-only
-    // identity — the pre-existing cachedIndex staleness contract
+    // identity, which [[appendIndexStore]] keeps coherent by evicting
+    // the store ([[SessionMemo.forget]]) around its commit
     val key = s"stored:$dir@${PathFingerprint(s"$dir/stats")}"
-    val perSession = storedIndexCache.synchronized {
-      storedIndexCache.computeIfAbsent(spark,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, Index]())
-    }
-    perSession.computeIfAbsent(key, k => Index(
+    storedIndexCache.getOrBuild(spark, key)(Index(
       spark.read.parquet(s"$dir/postings"),
       spark.read.parquet(s"$dir/lengths"),
       spark.read.parquet(s"$dir/idf"),
       spark.read.parquet(s"$dir/stats"),
-      cacheKey = Some(k)))
-  }
-
-  /** Drop this session's memoized [[readIndex]] plans of the store at
-    * `dir`, under every fingerprint. On a filesystem with no `java.io`
-    * view the fingerprint is always 0, so the key alone cannot tell a
-    * store from its rewritten self; [[appendIndexStore]] evicts around
-    * its commit so that neither it nor a later reader sees stale stats or
-    * file listings.
-    */
-  private def forgetStored(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Unit = {
-    val perSession = storedIndexCache.synchronized(storedIndexCache.get(spark))
-    if (perSession != null)
-      perSession.keySet.removeIf(_.startsWith(s"stored:$dir@"))
+      cacheKey = Some(key)))
   }
 
   /** Incremental append to an AT-REST BM25 store — [[mergeIndex]]'s
@@ -333,9 +314,10 @@ object Bm25 {
     *    stored lengths table instead.
     * The stats rewrite changes the store's [[PathFingerprint]], so the
     * in-process serving memo can never serve the pre-append snapshot on a
-    * filesystem with a `java.io` view. The append reads the store's plans
-    * fresh and evicts them after the commit ([[forgetStored]]), so stats
-    * and listings stay fresh on any filesystem.
+    * filesystem with a `java.io` view. On any filesystem the append
+    * evicts the store from every session memo ([[SessionMemo.forget]])
+    * before its read and after its commit, so its stats and listings, the
+    * later readers' plans and the in-process term arrays stay fresh.
     * Contract (as [[mergeIndex]]): batch doc ids are disjoint from the
     * store's — ENFORCED here (one slim semi-join against the stored
     * lengths), which also makes a crashed append retry-SAFE: lengths are
@@ -347,7 +329,7 @@ object Bm25 {
                        newDocs: DataFrame, idCol: String,
                        textCol: String): Unit = {
     import spark.implicits._
-    forgetStored(spark, dir)
+    SessionMemo.forget(spark, dir)
     val stored = readIndex(spark, dir)
     // ONE one-row head for every stats scalar this append needs (r18: n,
     // term_buckets, n_len and sum_dl each ran their own job — four
@@ -448,26 +430,17 @@ object Bm25 {
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     } finally {
       lens.unpersist()
-      forgetStored(spark, dir)
+      SessionMemo.forget(spark, dir)
     }
   }
 
   /** Memoized per-corpus index — the "load the persisted index" path the
     * reference takes on every query. Keyed by corpus identity (sf dir).
     */
-  // weak-keyed by SparkSession: plans are session-bound, hits across
-  // sessions would hand out a stopped session's plans, and weak keys let a
-  // stopped session's entries (and persisted blocks) be collected
-  private val indexCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Index]]()
+  private val indexCache = new SessionMemo[Index]
   def cachedIndex(key: String, docs: => DataFrame, idCol: String, textCol: String): Index = {
     val d = docs
-    val perSession = indexCache.synchronized {
-      indexCache.computeIfAbsent(d.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, Index]())
-    }
-    perSession.computeIfAbsent(key, _ =>
+    indexCache.getOrBuild(d.sparkSession, key)(
       buildIndex(d, idCol, textCol, persist = true).copy(cacheKey = Some(key)))
   }
 

@@ -405,17 +405,11 @@ object Dedup {
     * queries that consume it (components, keep-canonical) share one
     * computation per session+corpus, like [[Bm25.cachedIndex]].
     */
-  private val simhashPairsCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val simhashPairsCache = new SessionMemo[DataFrame]
   def cachedSimhashPairs(key: String, docs: => DataFrame, idCol: String,
                          textCol: String, maxHamming: Int = 3): DataFrame = {
     val d = docs
-    val perSession = simhashPairsCache.synchronized {
-      simhashPairsCache.computeIfAbsent(d.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
-    perSession.computeIfAbsent(s"$key|$maxHamming", _ =>
+    simhashPairsCache.getOrBuild(d.sparkSession, s"$key|$maxHamming")(
       simhashPairs(d, idCol, textCol, maxHamming)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }

@@ -2,16 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
-/** Per-(session, key) memoization shared by the in-process serving rungs
-  * (flat / IVF / graph corpora, BM25 term arrays): weak-keyed by
-  * SparkSession so a stopped session's entries (and their broadcasts) can
-  * be collected, ConcurrentHashMap inside for compute-once semantics.
-  * One implementation instead of a copy per cache — the guard policies
-  * that sit in front of these memos (LIMIT-bounded counts, byte budgets)
-  * are easier to audit when the memo itself has exactly one shape.
-  */
-/** Cheap driver-side change marker for a locally-stored table directory:
-  * CRC32 over the sorted (name, mtime, length) tuples — 0 when the path
+/** Cheap driver-side change marker for a locally-stored table directory
+  * (or a single-file table): CRC32 over the sorted (name, mtime, length)
+  * tuples of its files — 0 when the path
   * has no local java.io view (non-local filesystems fall back to
   * path-only identity, the pre-existing cachedIndex staleness contract).
   * A plain mtime+length SUM collides on rewrites inside the mtime
@@ -21,7 +14,9 @@ private[graft] object PathFingerprint {
   def apply(path: String): Long =
     scala.util.Try {
       val d = new java.io.File(path)
-      val fs = Option(d.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
+      val fs =
+        if (d.isFile) Array(d)
+        else Option(d.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
       val crc = new java.util.zip.CRC32()
       fs.foreach { f =>
         crc.update(s"${f.getName}:${f.lastModified()}:${f.length()};"
@@ -71,10 +66,34 @@ private[graft] object PathInventory {
     }.getOrElse(Seq.empty)
 }
 
-private[graft] final class SessionMemo[V] {
+/** Per-(session, key) memoization — the one shape of every per-session
+  * cache in the engine (in-process serving rungs, stored-index plans, table
+  * reads, bound expressions): weak-keyed by SparkSession so a stopped
+  * session's entries (and their broadcasts) can be collected,
+  * ConcurrentHashMap inside for compute-once semantics. The guard policies
+  * in front of these memos (LIMIT-bounded counts, byte budgets) are easier
+  * to audit when the memo itself has exactly one shape.
+  *
+  * Keep one instance per kind of value: a build that reads another entry
+  * of the SAME instance re-enters `ConcurrentHashMap.computeIfAbsent`,
+  * which throws.
+  *
+  * Keys name the store they memoize by its path — `dir`,
+  * `dir/table.parquet`, `tag:dir@fingerprint|knobs`. A fingerprint in the
+  * key keeps an entry coherent with rewrites on a filesystem with a
+  * `java.io` view; [[SessionMemo.forget]] is the one eviction, for writers
+  * and for filesystems without that view. `forget(spark, dir)` drops, from
+  * every instance, the session's entries whose key holds `dir` as a whole
+  * path: at the start of the key or right after a `:`, and followed by the
+  * end of the key, `/`, `@` or `|`. So `/a/b` evicts `/a/b`,
+  * `/a/b/x.parquet` and `stored:/a/b@7|lim=5`, but not `/a/bc`. `release`
+  * runs on each evicted value (an unpersist, for a persisted plan).
+  */
+private[graft] final class SessionMemo[V](release: V => Unit = (_: V) => ()) {
   private val cache =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[String, V]]()
+  SessionMemo.register(this)
 
   def getOrBuild(spark: SparkSession, key: String)(build: => V): V = {
     val perSession = cache.synchronized {
@@ -82,5 +101,47 @@ private[graft] final class SessionMemo[V] {
         _ => new java.util.concurrent.ConcurrentHashMap[String, V]())
     }
     perSession.computeIfAbsent(key, _ => build)
+  }
+
+  private def evict(spark: SparkSession, dir: String): Unit = {
+    val perSession = cache.synchronized(cache.get(spark))
+    if (perSession != null) {
+      val it = perSession.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (SessionMemo.holds(e.getKey, dir)) {
+          release(e.getValue)
+          it.remove()
+        }
+      }
+    }
+  }
+}
+
+private[graft] object SessionMemo {
+  private val live = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SessionMemo[_], java.lang.Boolean]())
+  private def register(m: SessionMemo[_]): Unit = live.synchronized(live.add(m))
+
+  /** Drop `dir`'s entries of this session from every memo (the key rule is
+    * on [[SessionMemo]]); other sessions keep theirs.
+    */
+  def forget(spark: SparkSession, dir: String): Unit = {
+    val d = dir.stripSuffix("/")
+    require(d.nonEmpty, "SessionMemo.forget needs a directory, not the root")
+    val memos = live.synchronized(live.toArray(Array.empty[SessionMemo[_]]))
+    memos.foreach(_.evict(spark, d))
+  }
+
+  private[graft] def holds(key: String, dir: String): Boolean = {
+    var i = key.indexOf(dir)
+    while (i >= 0) {
+      val end = i + dir.length
+      if ((i == 0 || key.charAt(i - 1) == ':') &&
+          (end == key.length || "/@|".indexOf(key.charAt(end)) >= 0))
+        return true
+      i = key.indexOf(dir, i + 1)
+    }
+    false
   }
 }

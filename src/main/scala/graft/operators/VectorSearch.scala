@@ -392,9 +392,7 @@ object VectorSearch {
     * probed table (`encoded`) is persisted; IVF/Flat outcomes delegate to
     * the existing per-tier caches.
     */
-  private val servingCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, Serving]]()
+  private val servingCache = new SessionMemo[Serving]
   def cachedServing(key: String, embeddings: => DataFrame, idCol: String,
                     vecCol: String, strategy: IndexStrategy,
                     shortlist: Int = 100, pqCodewords: Int = 16): Serving =
@@ -403,11 +401,7 @@ object VectorSearch {
       case IndexStrategy.Ivf(nc) =>
         Serving.Ivf(cachedIvf(key, embeddings, idCol, vecCol, nc))
       case IndexStrategy.IvfPq(nc, m) =>
-        val e = embeddings // weak session keying: see Bm25.cachedIndex
-        val perSession = servingCache.synchronized {
-          servingCache.computeIfAbsent(e.sparkSession,
-            _ => new java.util.concurrent.ConcurrentHashMap[String, Serving]())
-        }
+        val e = embeddings
         // every BUILD parameter is part of the cache key — a re-ingested
         // corpus whose chooseIndex outcome changes (more centroids /
         // subquantizers) must never be served another configuration's stale
@@ -416,7 +410,7 @@ object VectorSearch {
         // callers differing only in shortlist share one trained index and
         // one persisted encoded table via copy.
         val cacheKey = s"$key|nc=$nc|m=$m|cw=$pqCodewords"
-        val cached = perSession.computeIfAbsent(cacheKey, _ =>
+        val cached = servingCache.getOrBuild(e.sparkSession, cacheKey)(
           buildServing(e, idCol, vecCol, strategy, shortlist, pqCodewords) match {
             case Serving.IvfPq(ix, cb, encoded, sl) => Serving.IvfPq(ix, cb,
               encoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), sl)
@@ -451,6 +445,18 @@ object VectorSearch {
     */
   private val InMemMaxFloats = 64L * 1024 * 1024
 
+  /** The residency guard in front of every in-memory build: at most
+    * `limit` rows (LIMIT-bounded count) AND rows × dim under
+    * [[InMemMaxFloats]]. Always two jobs in this order — the row count,
+    * then the `take(1)` dimension probe.
+    */
+  private def fitsInMemory(rows: DataFrame, vecCol: String, limit: Int): Boolean = {
+    val n = rows.limit(limit + 1).count()
+    val dim = rows.select(size(col(vecCol))).take(1)
+      .headOption.map(_.getInt(0).toLong).getOrElse(0L)
+    n <= limit && n * math.max(dim, 1L) <= InMemMaxFloats
+  }
+
   /** Guarded in-memory corpus for the flat-tier serving fast path: when the
     * embeddings table fits under `inMemoryLimit` rows (LIMIT-bounded count,
     * the [[graft.operators.Dedup]] broadcast-guard pattern) AND under the
@@ -480,10 +486,7 @@ object VectorSearch {
       inMemCorpusCache.getOrBuild(spark, s"$k0|lim=$inMemoryLimit") {
         val emb = embeddings.select(col(idCol), col(vecCol))
           .filter(col(vecCol).isNotNull)
-        val n = emb.limit(inMemoryLimit + 1).count()
-        val dim = emb.select(size(col(vecCol))).take(1)
-          .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-        if (n > inMemoryLimit || n * math.max(dim, 1L) > InMemMaxFloats) None
+        if (!fitsInMemory(emb, vecCol, inMemoryLimit)) None
         else Some(spark.sparkContext.broadcast(emb.as[(Long, Array[Float])].collect()))
       }
     }
@@ -825,10 +828,7 @@ object VectorSearch {
           val a = assigned.select(col(idCol), col(vecCol),
               col("cluster_id").cast("int"))
             .filter(col(vecCol).isNotNull)
-          val n = a.limit(inMemoryLimit + 1).count()
-          val dim = a.select(size(col(vecCol))).take(1)
-            .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-          if (n > inMemoryLimit || n * math.max(dim, 1L) > InMemMaxFloats) None
+          if (!fitsInMemory(a, vecCol, inMemoryLimit)) None
           else {
             val byCluster = a.as[(Long, Array[Float], Int)].collect()
               .groupBy(_._3).map { case (cid, xs) => cid -> xs.map(x => (x._1, x._2)) }
@@ -927,10 +927,7 @@ object VectorSearch {
           val sel = encoded.select(col(idCol), col("cluster_id").cast("int"),
               col("codes"), col(vecCol))
             .filter(col(vecCol).isNotNull && col("codes").isNotNull)
-          val n = sel.limit(inMemoryLimit + 1).count()
-          val dim = sel.select(size(col(vecCol))).take(1)
-            .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-          if (n > inMemoryLimit || n * math.max(dim, 1L) > InMemMaxFloats) None
+          if (!fitsInMemory(sel, vecCol, inMemoryLimit)) None
           else Some(spark.sparkContext.broadcast(
             sel.as[(Long, Int, Array[Int], Array[Float])].collect()
               .groupBy(_._2)
@@ -1071,27 +1068,21 @@ object VectorSearch {
   /** Memoized IVF index per corpus (the reference loads its FAISS index
     * once and reuses it across queries; same economics here).
     */
-  private val ivfCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, IvfIndex]]()
+  private val ivfCache = new SessionMemo[IvfIndex]
   def cachedIvf(key: String, embeddings: => DataFrame, idCol: String, vecCol: String,
                 nCentroids: Int): IvfIndex = {
-    val e = embeddings // weak session keying: see Bm25.cachedIndex
-    val perSession = ivfCache.synchronized {
-      ivfCache.computeIfAbsent(e.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, IvfIndex]())
-    }
+    val e = embeddings
     // nCentroids is part of the key (like cachedGraph's |k=..|p=..): a
     // re-ingested corpus whose chooseIndex outcome changes must rebuild,
     // never serve another configuration's stale centroids/assignment
-    perSession.computeIfAbsent(s"$key|nc=$nCentroids", _ => {
+    ivfCache.getOrBuild(e.sparkSession, s"$key|nc=$nCentroids") {
       val ix = buildIvf(e, idCol, vecCol, nCentroids)
       ix.copy(
         assigned = ix.assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
         // keyed index → the in-process serving rung can memoize its
         // cluster-grouped collect ([[ivfInMemory]])
         cacheKey = Some(s"$key|nc=$nCentroids"))
-    })
+    }
   }
 
   /** Deterministic seeded IVF: centroids are designated corpus rows (no
@@ -1627,23 +1618,17 @@ object VectorSearch {
   /** Memoized [[knnGraph]] per corpus (an index: built once, persisted,
     * reused across queries — same economics as [[cachedIvf]]).
     */
-  private val graphCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val graphCache = new SessionMemo[DataFrame]
   def cachedGraph(key: String, embeddings: => DataFrame, idCol: String,
                   vecCol: String, k: Int, numPlanes: Int = 4): DataFrame = {
-    val e = embeddings // weak session keying: see Bm25.cachedIndex
-    val perSession = graphCache.synchronized {
-      graphCache.computeIfAbsent(e.sparkSession,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }
+    val e = embeddings
     // localCheckpoint (not just persist): the graph's build plan embeds
     // large plane-literal expression trees, and search plans reference the
     // graph several times per hop — truncating lineage to a LogicalRDD
     // leaf keeps per-query analysis O(search plan), not O(build plan).
     // Cluster deployments would write the graph to storage instead
     // (reliable checkpoint), same economics as any index.
-    perSession.computeIfAbsent(s"$key|k=$k|p=$numPlanes", _ =>
+    graphCache.getOrBuild(e.sparkSession, s"$key|k=$k|p=$numPlanes")(
       knnGraph(e, idCol, vecCol, k, numPlanes = numPlanes).localCheckpoint(true))
   }
 
@@ -1940,10 +1925,7 @@ object VectorSearch {
     def build(): Option[InMemGraph] = {
       val emb = embeddings.select(col(idCol), col(vecCol))
         .filter(col(vecCol).isNotNull)
-      val n = emb.limit(inMemoryLimit + 1).count()
-      val dim = emb.select(size(col(vecCol))).take(1)
-        .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-      if (n > inMemoryLimit || n * math.max(dim, 1L) > InMemMaxFloats) None
+      if (!fitsInMemory(emb, vecCol, inMemoryLimit)) None
       else {
         val vectors = emb.as[(Long, Array[Float])].collect().toMap
         val adj = undirectedEdges(graph)
@@ -2078,9 +2060,7 @@ object VectorSearch {
     * [[cachedServing]]. Without it every call re-derives the index
     * (correct, but the build dominates serving).
     */
-  private val dedupServeCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame, Seq[Long])]]()
+  private val dedupServeCache = new SessionMemo[(DataFrame, DataFrame, Seq[Long])]
   /** How many smallest rep ids the dedup build pre-collects: entry sets up
     * to this size (the tuner's whole ladder) come from the cached prefix
     * with no extra job.
@@ -2119,11 +2099,7 @@ object VectorSearch {
     }
     cacheKey match {
       case Some(k0) =>
-        val perSession = dedupServeCache.synchronized {
-          dedupServeCache.computeIfAbsent(embeddings.sparkSession,
-            _ => new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame, Seq[Long])]())
-        }
-        perSession.computeIfAbsent(s"$k0|base", _ => build())
+        dedupServeCache.getOrBuild(embeddings.sparkSession, s"$k0|base")(build())
       case None => build()
     }
   }

@@ -711,6 +711,14 @@ object EngineQueries {
     s"concat_ws(';', ${parts.mkString(", ")})"
   }
 
+  /** The corpus key of the late-interaction vocab memo: the directory at
+    * the documents table's [[graft.operators.PathFingerprint]] (the
+    * [[graft.operators.Bm25.readIndex]] rule), so a rewrite of the
+    * documents misses the memo instead of serving the old vocabulary.
+    */
+  private def lateVocabKey(dir: String): String =
+    s"$dir@${graft.operators.PathFingerprint(s"$dir/documents.parquet")}"
+
   /** Seeded IVFPQ serving artifacts (centroids = vec_id < 8, codebook from
     * the subvectors of vec_id < 16, m = 8), memoized per (session, corpus)
     * with the encoded table persisted — an index: built once, served many
@@ -718,16 +726,11 @@ object EngineQueries {
     * assignment + PQ codes per query would charge serving for build work).
     */
   private val ivfPqCache =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentHashMap[String, graft.operators.VectorSearch.Serving.IvfPq]]()
+    new graft.operators.SessionMemo[graft.operators.VectorSearch.Serving.IvfPq]
   private def cachedSeededIvfPq(s: org.apache.spark.sql.SparkSession, dir: String,
                                 emb: org.apache.spark.sql.DataFrame): graft.operators.VectorSearch.Serving.IvfPq = {
     import graft.operators.VectorSearch
-    val perSession = ivfPqCache.synchronized {
-      ivfPqCache.computeIfAbsent(s,
-        _ => new java.util.concurrent.ConcurrentHashMap[String, VectorSearch.Serving.IvfPq]())
-    }
-    perSession.computeIfAbsent(dir, _ => {
+    ivfPqCache.getOrBuild(s, dir) {
       val centSeq = emb.filter(col("doc_id") < 8)
         .select(col("doc_id"), col("embedding")).collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Float](1))).sortBy(_._1).toSeq
@@ -741,7 +744,7 @@ object EngineQueries {
         VectorSearch.pqEncode(assigned, "doc_id", "embedding", cb)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
         shortlist = 100)
-    })
+    }
   }
 
   /** IVFPQ-served vector stage for [[e2eCoreSql]]: seeded coarse quantizer
@@ -1386,7 +1389,7 @@ object EngineQueries {
     }) { (s, dir) =>
       graft.operators.LateInteraction.maxSimTopKPruned(
         Tables.documents(s, dir), "doc_id", "text", QueryText, 20,
-        dims = 8, candPerTok = 50, cacheKey = Some(dir))
+        dims = 8, candPerTok = 50, cacheKey = Some(lateVocabKey(dir)))
     },
 
     // ── Batched late interaction: top-10 MaxSim per query for the 20-query
@@ -1485,7 +1488,7 @@ object EngineQueries {
       graft.operators.LateInteraction.maxSimTopKBatchPruned(
           Tables.documents(s, dir), "doc_id", "text",
           E2eBatch20.zipWithIndex.map { case ((raw, _), i) => (i + 1).toLong -> raw },
-          k = 10, dims = 8, candPerTok = 50, cacheKey = Some(dir))
+          k = 10, dims = 8, candPerTok = 50, cacheKey = Some(lateVocabKey(dir)))
         .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
         .orderBy("query_id", "rank")
     },

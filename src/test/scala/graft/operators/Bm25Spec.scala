@@ -288,6 +288,12 @@ class Bm25Spec extends SparkSpec {
     assert(PathFingerprint(s"$dir/stats") == 0L)
     // a serving reader memoizes the store's plans first, as a session does
     assert(Bm25.readIndex(spark, dir).nDocs == 2L)
+    // ... and its in-process term arrays, under `stored:<dir>@0|lim=…`
+    val q = "quick fox"
+    def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, dir), spark, q))
+      .keySet == Set(1L, 2L))
     Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") === 3), "doc_id", "text")
     Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") > 3), "doc_id", "text")
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 4)
@@ -300,6 +306,12 @@ class Bm25Spec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     assert(idfKey(appended) == idfKey(rebuilt))
     assert(appended.lengths.count() == 5L)
+    // the in-process rung serves the appended store, not the snapshot it
+    // memoized before the appends under the same fingerprint-0 key
+    val served = scores(Bm25.scoreWithIndex(appended, spark, q))
+    val reference = scores(Bm25.scoreWithIndex(rebuilt, spark, q, inProcessLimit = 0))
+    assert(served.keySet == reference.keySet)
+    reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
 
   test("appendIndexStore == rebuild when docs tokenize to NOTHING on either side") {

@@ -302,4 +302,21 @@ class LateInteractionSpec extends SparkSpec {
       batch, 5).as[(Long, Long, Double, Int)].collect().toSet
     assert(sb == cb)
   }
+
+  test("t11_late_pruned's vocab memo misses after the documents are rewritten in place") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_late_rw").toString
+    val path = s"$dir/documents.parquet"
+    val t11 = graft.queries.EngineQueries.defs.find(_.name == "t11_late_pruned").get.fn
+    Seq((1L, "lorem ipsum dolor"), (2L, "sit amet consectetur"))
+      .toDF("doc_id", "text").write.parquet(path)
+    t11(spark, dir).collect() // memoizes the first corpus's vocabulary
+    Seq((1L, "spark join planner"), (2L, "window filter pushdown"), (3L, "spark window"))
+      .toDF("doc_id", "text").write.mode("overwrite").parquet(path)
+    // the table read itself sits behind Tables' read-only contract: drop
+    // that one entry, so only the vocab key's fingerprint can notice
+    SessionMemo.forget(spark, path)
+    val keyless = LateInteraction.maxSimTopKPruned(spark.read.parquet(path),
+      "doc_id", "text", "spark join filter window", 20, dims = 8, candPerTok = 50)
+    assert(t11(spark, dir).collect().toSeq == keyless.collect().toSeq)
+  }
 }
