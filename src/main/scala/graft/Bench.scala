@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query seconds.
   *
@@ -32,21 +31,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-coalesce scans of CACHED plans: the persisted index
-      // tables (BM25 postings/idf, IVF assignment) are tiny per partition
-      // at bench scale, and without this flag every per-query index scan
-      // schedules shuffle.partitions tasks of pure overhead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     def secs(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -101,7 +87,7 @@ object Bench {
               // executeCollect — every row and column, no scheduler —
               // exactly the reference's in-process serving regime.
               // Distributed plans keep count() (comparable to prior
-              // rounds; projection-masking is tracked by Profile/fullrows).
+              // rounds).
               df.queryExecution.optimizedPlan match {
                 case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
                   df.queryExecution.executedPlan.executeCollect()

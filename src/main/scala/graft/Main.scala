@@ -29,25 +29,6 @@ import graft.pipeline.{KbPipeline, Tuning}
   */
 object Main {
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-coalesce scans of CACHED plans: the persisted index
-      // tables (BM25 postings/idf, IVF assignment) are tiny per partition
-      // at bench scale, and without this flag every per-query index scan
-      // schedules shuffle.partitions tasks of pure overhead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Explicit cfg path beats the KB's own `config.ini` (written by the
     * `edit` verb) beats defaults — the reference resolves its `.cfg` the
     * same way (nearest config wins).
@@ -62,7 +43,7 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    val spark = Sessions.local()
     try run(args, spark)
     finally spark.stop()
   }

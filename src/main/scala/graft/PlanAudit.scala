@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan auditor: runs every SparkEntry query through EXPLAIN FORMATTED and
@@ -21,17 +20,11 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val prefix = if (args.length > 1) args(1) else ""
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // inspection-only: AQE re-plans at runtime and hides codegen marks in
-      // the static EXPLAIN; prod sessions (Verify/Bench) keep AQE on
-      .config("spark.sql.adaptive.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(logLevel = "ERROR")
+    // inspection-only: AQE re-plans at runtime and hides codegen marks in
+    // the static EXPLAIN; the production config from [[Sessions]] keeps
+    // AQE on
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val all = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(_._1.startsWith(prefix))

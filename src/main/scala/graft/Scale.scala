@@ -75,19 +75,7 @@ object Scale {
     val base = "/tmp/graft_scale"
     val kDocs = 20
     val kEmb = 50
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-coalesce scans of CACHED plans: the persisted index
-      // tables (BM25 postings/idf, IVF assignment) are tiny per partition
-      // at bench scale, and without this flag every per-query index scan
-      // schedules shuffle.partitions tasks of pure overhead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
 
     // optional row filter (regex over labels) so one family can be measured
     // without paying for the whole suite. Caveat: build rows assign state

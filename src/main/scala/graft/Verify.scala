@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,28 +11,7 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def keep(name: String): Boolean =
       nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores TIMESTAMP(NANOS); Spark 4 reads those as
-      // LongType nanos under this legacy flag (else PARQUET_TYPE_ILLEGAL).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-coalesce scans of CACHED plans: the persisted index
-      // tables (BM25 postings/idf, IVF assignment) are tiny per partition
-      // at bench scale, and without this flag every per-query index scan
-      // schedules shuffle.partitions tasks of pure overhead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // FileStreamSink.hasMetadata WARNs a full stack trace on EVERY
-    // spark.read of a glob path (it stats the literal glob string) — the
-    // s1/s10 glob-scan entries are correct, the trace is pure log noise
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

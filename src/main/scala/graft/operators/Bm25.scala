@@ -227,7 +227,10 @@ object Bm25 {
     * `termBuckets`), so a query's semi-join scans only its terms' bucket
     * directories (PartitionFilters in the served plan — Bm25Spec asserts
     * it). `termBuckets = 0` writes flat postings (the pre-r11 layout; reads
-    * of either layout keep working).
+    * of either layout keep working). A rewrite in place keeps the store's
+    * memo key on a filesystem with no `java.io` view (fingerprint 0), so
+    * the write evicts `dir` from every session memo
+    * ([[SessionMemo.forget]]).
     */
   def writeIndex(ix: Index, dir: String,
                  termBuckets: Int = DefaultTermBuckets): Unit = {
@@ -262,7 +265,10 @@ object Bm25 {
       ix.idf.write.mode("overwrite").parquet(s"$dir/idf")
       ix.stats.withColumn("term_buckets", lit(termBuckets))
         .write.mode("overwrite").parquet(s"$dir/stats")
-    } finally if (!alreadyPersisted) post.unpersist()
+    } finally {
+      if (!alreadyPersisted) post.unpersist()
+      SessionMemo.forget(ix.postings.sparkSession, dir)
+    }
   }
 
   // r19: the Index PLANS are memoized per (session, dir@fingerprint) too —
@@ -283,8 +289,8 @@ object Bm25 {
     // REWRITTEN index read in the same session gets a fresh snapshot
     // instead of the stale memoized arrays; non-local filesystems
     // (no java.io view) fingerprint as 0 and fall back to dir-only
-    // identity, which [[appendIndexStore]] keeps coherent by evicting
-    // the store ([[SessionMemo.forget]]) around its commit
+    // identity, which the writers ([[writeIndex]], [[appendIndexStore]])
+    // keep coherent by evicting the store ([[SessionMemo.forget]])
     val key = s"stored:$dir@${PathFingerprint(s"$dir/stats")}"
     storedIndexCache.getOrBuild(spark, key)(Index(
       spark.read.parquet(s"$dir/postings"),

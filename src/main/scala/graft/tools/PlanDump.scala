@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
@@ -8,9 +7,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * (`plans/r18/<query>_{before,after}.txt`).
   *
   * Usage: `runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> <name>[,<name>...]`
-  * — `<name>` may also be `ALL`. The session mirrors Bench's config (same
-  * master/core count via SPARK_GRAFT_CPUS, same shuffle partitions, AQE
-  * left at its default) so the captured initial plan is the one Bench
+  * — `<name>` may also be `ALL`. The session is Bench's ([[graft.Sessions]],
+  * AQE left at its default) so the captured initial plan is the one Bench
   * executes.
   */
 object PlanDump {
@@ -18,16 +16,7 @@ object PlanDump {
     require(args.length >= 4,
       "usage: PlanDump <sfDir> <outDir> <suffix> <names|ALL>")
     val Array(sfDir, outDir, suffix, namesArg) = args.take(4)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(logLevel = "ERROR")
     val all = graft.SparkEntry.queries
     val names =
       if (namesArg == "ALL") all.keys.toSeq.sorted

@@ -1,14 +1,14 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query profiler for the r18 optimization round: runs named
-  * SparkEntry queries exactly like Bench (same session config, same
-  * count/executeCollect action), `reps` times each, and prints per-rep
-  * wall time split into plan-build (query fn + analysis/optimization up
-  * to the physical plan) vs action, plus Spark job/stage counts, total
-  * task time, and shuffle bytes — the empirical side of guide §1.
+  * SparkEntry queries exactly like Bench (it shares [[graft.Sessions]]
+  * with Bench, and the same count/executeCollect action), `reps` times
+  * each, and prints per-rep wall time split into plan-build (query fn +
+  * analysis/optimization up to the physical plan) vs action, plus Spark
+  * job/stage counts, total task time, and shuffle bytes — the empirical
+  * side of guide §1.
   *
   * Usage: `runMain graft.tools.QProf <sfDir> <reps> <name>[,<name>...]`
   */
@@ -18,16 +18,7 @@ object QProf {
     val sfDir = args(0)
     val reps = args(1).toInt
     val names = args(2).split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(logLevel = "ERROR")
 
     // counters mutated by the listener between probe points
     object L extends SparkListener {

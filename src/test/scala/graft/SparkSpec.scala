@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for operator specs. Small fixed parallelism —
-  * test data is tiny; the scale behavior is exercised by Bench/explain
-  * audits, not unit specs.
+/** Shared local SparkSession for operator specs, built by [[Sessions]].
+  * Small fixed parallelism — test data is tiny; the scale behavior is
+  * exercised by Bench/explain audits, not unit specs.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,23 +14,6 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // let AQE re-coalesce scans of CACHED plans: the persisted index
-      // tables (BM25 postings/idf, IVF assignment) are tiny per partition
-      // at bench scale, and without this flag every per-query index scan
-      // schedules shuffle.partitions tasks of pure overhead
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local(cores = 4, logLevel = "ERROR",
+    warehouseDir = Some(java.nio.file.Files.createTempDirectory("graft_wh").toString))
 }

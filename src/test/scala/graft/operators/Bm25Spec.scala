@@ -279,6 +279,9 @@ class Bm25Spec extends SparkSpec {
     assert(appended.cacheKey != preKey)
   }
 
+  private def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
   test("two appends in one session stay fresh on a filesystem with no java.io view") {
     val docs = corpus.toDF("doc_id", "text")
     val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_bm25_noio")
@@ -290,8 +293,6 @@ class Bm25Spec extends SparkSpec {
     assert(Bm25.readIndex(spark, dir).nDocs == 2L)
     // ... and its in-process term arrays, under `stored:<dir>@0|lim=…`
     val q = "quick fox"
-    def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
-      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, dir), spark, q))
       .keySet == Set(1L, 2L))
     Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") === 3), "doc_id", "text")
@@ -310,6 +311,30 @@ class Bm25Spec extends SparkSpec {
     // memoized before the appends under the same fingerprint-0 key
     val served = scores(Bm25.scoreWithIndex(appended, spark, q))
     val reference = scores(Bm25.scoreWithIndex(rebuilt, spark, q, inProcessLimit = 0))
+    assert(served.keySet == reference.keySet)
+    reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
+  }
+
+  test("writeIndex over a served store stays fresh on a filesystem with no java.io view") {
+    val docs = corpus.toDF("doc_id", "text")
+    val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_bm25_noiow")
+    val ref = java.nio.file.Files.createTempDirectory("graft_bm25_noiowref").toString
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"),
+      dir, termBuckets = 4)
+    // a serving reader memoizes the store's plans and in-process arrays
+    val q = "quick fox"
+    assert(Bm25.readIndex(spark, dir).nDocs == 2L)
+    assert(scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, dir), spark, q))
+      .keySet == Set(1L, 2L))
+    // the `bm25` verb's rebuild: the same dir rewritten in place, so the
+    // fingerprint-0 key does not change
+    Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), dir, termBuckets = 4)
+    Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 4)
+    val rewritten = Bm25.readIndex(spark, dir)
+    assert(rewritten.nDocs == 5L)
+    val served = scores(Bm25.scoreWithIndex(rewritten, spark, q))
+    val reference = scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, ref), spark, q,
+      inProcessLimit = 0))
     assert(served.keySet == reference.keySet)
     reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
