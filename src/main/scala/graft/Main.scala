@@ -449,8 +449,8 @@ object Main {
           // the SAME session must never serve the stale memoized broadcast
           corpusKey = Some(s"$kb/embeddings@" +
             graft.operators.PathFingerprint(s"$kb/embeddings")),
-          // at-rest query-embedding cache: a repeated query reads its
-          // vector back instead of re-calling the provider
+          // query-embedding cache: a repeated query is served from its
+          // resident map instead of re-calling the provider
           queryVecCacheDir = Some(s"$kb/qcache"))
         // The reference's query flow returns the built context when
         // `--context-only` is passed and otherwise generates the answer

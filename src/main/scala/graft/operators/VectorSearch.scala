@@ -441,9 +441,10 @@ object VectorSearch {
     * the row limit — a 1536-d corpus under 200k ROWS would otherwise
     * collect ~1 GB to the driver that the distributed plan never
     * materializes. The dim probe is one `take(1)` inside the memoized
-    * build.
+    * build. The query-vector cache's resident map
+    * ([[graft.query.QueryCache.embedQueryCached]]) shares it.
     */
-  private val InMemMaxFloats = 64L * 1024 * 1024
+  private[graft] val InMemMaxFloats = 64L * 1024 * 1024
 
   /** The residency guard in front of every in-memory build: at most
     * `limit` rows (LIMIT-bounded count) AND rows × dim under

@@ -69,12 +69,14 @@ object KbPipeline {
     * context expansion and formatting run only when the caller consumes
     * the formatted string — on the driver with no job when the serving
     * rung held the hits and the resident chunk index, otherwise as one
-    * collect of the bounded block rows. `context` stays the lazy
-    * distributed expansion either way; a caller that only needs the hit
-    * DataFrame never materializes it.
+    * collect of the bounded block rows. `context` is the distributed
+    * expansion, and its plan is built only on first read: a caller that
+    * reads only the hits or the driver-rendered `formatted` never pays
+    * for its analysis.
     */
-  final class QueryResult(val hits: DataFrame, val context: DataFrame,
+  final class QueryResult(val hits: DataFrame, contextThunk: () => DataFrame,
                           formattedThunk: () => String) {
+    lazy val context: DataFrame = contextThunk()
     lazy val formatted: String = formattedThunk()
   }
 
@@ -114,10 +116,10 @@ object KbPipeline {
     //    score garbage against a Deterministic(cfg.vectorDimensions) query
     //    vector) and a transient provider failure retries instead of
     //    aborting the query
-    //    With `queryVecCacheDir`, the vector comes through the AT-REST
+    //    With `queryVecCacheDir`, the vector comes through the
     //    query-embedding cache (keyed by the ENHANCED text — the same
-    //    string the provider would see): a repeated query reads its row
-    //    back instead of re-calling the provider
+    //    string the provider would see): a repeated query is served from
+    //    its resident map with no job instead of re-calling the provider
     //    (query/embedding.py:47-143; hit ≡ recompute is the m16 oracle)
     val qvec = queryVecCacheDir match {
       case Some(dir) => graft.query.QueryCache
@@ -295,8 +297,8 @@ object KbPipeline {
 
     // 5. context expansion (J2/W2) with the P5 adaptive scope: low-scoring
     //    hits get a halved window (similarity_threshold /
-    //    low_similarity_scope_factor from config)
-    val context = ContextWindow.expandScoped(chunks,
+    //    low_similarity_scope_factor from config); planned on first read
+    lazy val context = ContextWindow.expandScoped(chunks,
       hits.select(col("sourcedoc"), col("sid"),
         ContextWindow.adaptiveScope(col("score"), cfg.queryContextScope,
           cfg.similarityThreshold, cfg.lowSimilarityScopeFactor).as("_scope")))
@@ -308,7 +310,7 @@ object KbPipeline {
     //    form; otherwise `context`'s block rows (≤ top-k · scope) are
     //    collected once and rendered by that same renderer
     import graft.format.Formatters
-    new QueryResult(hits, context, () =>
+    new QueryResult(hits, () => context, () =>
       warm.flatMap { case (rows, rc) => rc.bySource.map { ix =>
         Formatters.render(Formatters.blockValues(ContextWindow.expandValues(ix,
           rows.map(r => (r._4, r._5.toLong,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder
+import graft.operators.SessionMemo
 
 /** The reference's two QUERY-side caches, re-expressed as cache-table
   * JOINS (the other two of its four caches already serve this way:
@@ -23,7 +24,9 @@ import graft.embed.Embedder
   * caches are keyed by full content. 100 TB shape: the cache is a table
   * like any other — hits are one equi-join against it (broadcastable while
   * small, shuffle-join when not), misses are one anti-join, and appends
-  * are the returned `newCacheRows`; nothing is resident driver state.
+  * are the returned `newCacheRows`; nothing is resident driver state. The
+  * single-query form ([[embedQueryCached]]) alone keeps a resident map in
+  * front of its table, under the budget the vector rungs use.
   */
 object QueryCache {
 
@@ -62,14 +65,38 @@ object QueryCache {
       misses.select(col("query_key"), col(idCol), col("rscore")))
   }
 
-  /** Single-query serving form of the query-embedding cache: hit = one
-    * pushdown-filtered read of the at-rest cache table (the scan prunes
-    * on `content_key = <literal>`), miss = one provider call + one
-    * appended row. This is what the `query` CLI verb runs per request —
-    * the reference's in-process dict (`query/embedding.py:47-143`)
-    * re-expressed as a table the whole cluster shares; the batched join
-    * form ([[Embedder.embedWithCache]]) covers bulk paths and m16 proves
-    * hit ≡ recompute value-exactly.
+  /** Single-query serving form of the query-embedding cache, the one the
+    * `query` CLI verb runs per request: the reference's in-process dict
+    * (`query/embedding.py:47-143`) in front of an at-rest table the whole
+    * cluster shares. The batched join form ([[Embedder.embedWithCache]])
+    * covers bulk paths, and m16 proves hit ≡ recompute value-exactly.
+    *
+    * Serving contract, per `(model, dims)` cache directory:
+    *  - resident hit: the directory's `content_key → vector` rows sit in a
+    *    [[graft.operators.SessionMemo]] entry keyed by the directory
+    *    (so `SessionMemo.forget(spark, dir)` evicts it), loaded by one
+    *    collect and stamped with the [[graft.operators.PathFingerprint]]
+    *    read before that collect. A hit returns from the map with no job;
+    *  - fingerprint reload: before each lookup the directory's current
+    *    fingerprint is compared with the stamp, and a difference (a foreign
+    *    append, a rewrite, a deleted directory) reloads the map;
+    *  - at-rest fallback: with no `java.io` view of the directory
+    *    (fingerprint 0, which is also what a missing directory reads) or a
+    *    table over [[graft.operators.VectorSearch.InMemMaxFloats]], a hit
+    *    is one pushdown-filtered read of the table (`content_key =
+    *    <literal>`). The cache only grows by appends, so a table once over
+    *    the budget stays at rest until `forget` evicts its entry;
+    *  - own append: a miss calls the provider once and appends one row
+    *    (one job), then adds the row to the map and re-stamps it with the
+    *    fingerprint after the write, so the engine's own append never
+    *    forces a reload. A foreign row landing between the lookup and that
+    *    re-stamp is missed by the map until its next reload: it costs a
+    *    recompute and a duplicate row, which the cache tolerates, never a
+    *    wrong vector — a row's vector is a function of its key.
+    * A row whose embedding is null or of the wrong length (a corrupt or
+    * hand-migrated cache) is never a hit on either path: the query
+    * recomputes instead of serving a vector the cosine stage would
+    * silently mis-score.
     */
   def embedQueryCached(spark: org.apache.spark.sql.SparkSession,
                        cacheDir: String, text: String,
@@ -87,25 +114,80 @@ object QueryCache {
     val dir = s"$cacheDir/${provider.model.replaceAll("[^A-Za-z0-9_.-]", "_")}" +
       s"_${provider.dims}"
     val key = contentKeyValue(text)
-    val hit =
-      if (graft.sources.KbStorage.pathExists(spark, dir))
-        spark.read.parquet(dir)
-          .filter(col("content_key") === key)
-          .select("embedding").take(1).headOption
-      else None
-    hit match {
-      // belt and braces: a hit of the wrong length (a corrupt or
-      // hand-migrated cache) recomputes instead of serving a vector the
-      // cosine stage would silently mis-score
-      case Some(r) if r.getSeq[Float](0).size == provider.dims =>
-        r.getSeq[Float](0).toArray
-      case _ =>
-        val v = provider.embedBatch(Seq(text)).head
-        import spark.implicits._
-        Seq((key, v)).toDF("content_key", "embedding")
-          .coalesce(1).write.mode("append").parquet(dir)
-        v
+    val fp = graft.operators.PathFingerprint(dir)
+    val memo = if (fp == 0L) None else residentVectors(spark, dir, provider.dims, fp)
+    val hit = memo match {
+      case Some(ref) => ref.get.vecs.get(key).map(_.clone) // callers own it
+      case None =>
+        if (graft.sources.KbStorage.pathExists(spark, dir))
+          spark.read.parquet(dir)
+            .filter(col("content_key") === key &&
+              size(col("embedding")) === provider.dims)
+            .select("embedding").take(1).headOption
+            .map(_.getSeq[Float](0).toArray)
+        else None
     }
+    hit.getOrElse {
+      val v = provider.embedBatch(Seq(text)).head
+      import spark.implicits._
+      Seq((key, v)).toDF("content_key", "embedding")
+        .coalesce(1).write.mode("append").parquet(dir)
+      // re-stamp past the own append. A directory that listed no files
+      // before it (fingerprint 0 with a java.io view after) now holds just
+      // this row, so its map starts here instead of with a reload
+      val stamp = graft.operators.PathFingerprint(dir)
+      if (stamp != 0L) (memo, fp) match {
+        case (Some(ref), _) =>
+          ref.updateAndGet(r => r.copy(fp = stamp, vecs = r.vecs.updated(key, v.clone)))
+        case (None, 0L) =>
+          residentRef(spark, dir).set(Resident(stamp, Map(key -> v.clone)))
+        case _ => // over the budget: stays at rest
+      }
+      v
+    }
+  }
+
+  /** One cache directory's valid rows as loaded (plus own appends), and
+    * the fingerprint they are current for; `overBudget` marks a table
+    * served at rest.
+    */
+  private final case class Resident(fp: Long, vecs: Map[String, Array[Float]],
+                                    overBudget: Boolean = false)
+  private type ResidentRef = java.util.concurrent.atomic.AtomicReference[Resident]
+  private val residentCache = new SessionMemo[ResidentRef]
+
+  private def residentRef(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): ResidentRef =
+    residentCache.getOrBuild(spark, dir)(
+      new java.util.concurrent.atomic.AtomicReference(Resident(0L, Map.empty)))
+
+  /** The directory's resident map at its current (non-zero) fingerprint
+    * `fp`, reloaded when `fp` differs from the stamp; None over the float
+    * budget.
+    */
+  private def residentVectors(spark: org.apache.spark.sql.SparkSession,
+                              dir: String, dims: Int,
+                              fp: Long): Option[ResidentRef] = {
+    val ref = residentRef(spark, dir)
+    if (!ref.get.overBudget && ref.get.fp != fp)
+      ref.set(loadResident(spark, dir, dims, fp))
+    if (ref.get.overBudget) None else Some(ref)
+  }
+
+  /** One job: the explicit schema spares the footer read, and the row
+    * limit over one partition stops the scan one row past the budget.
+    */
+  private def loadResident(spark: org.apache.spark.sql.SparkSession,
+                           dir: String, dims: Int, fp: Long): Resident = {
+    val maxRows = (graft.operators.VectorSearch.InMemMaxFloats /
+      math.max(dims, 1)).toInt
+    val rows = spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>")
+      .parquet(dir)
+      .filter(col("content_key").isNotNull && size(col("embedding")) === dims)
+      .coalesce(1).limit(maxRows + 1).collect()
+    if (rows.length > maxRows) Resident(fp, Map.empty, overBudget = true)
+    else Resident(fp, rows.iterator
+      .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap)
   }
 
   /** Driver-side twin of [[Embedder.contentKey]] (sha2 hex, lowercase). */

@@ -165,8 +165,8 @@ object StreamingIngest {
     */
   private[graft] def dedupIngestStep(spark: SparkSession, batch: DataFrame,
                                      dir: String, batchId: Long = 0L): DataFrame = {
-    val out = dedupSurvivors(spark, batch, dir)
-    appendToLake(out, dir, batchId)
+    val (out, lakeCols) = dedupSurvivors(spark, batch, dir)
+    if (out.head(1).nonEmpty) appendToLake(out, dir, batchId, lakeCols)
     out
   }
 
@@ -175,23 +175,28 @@ object StreamingIngest {
     * (localCheckpoint) but NOT committed — the survivor plan reads the same
     * lake files [[appendToLake]] extends, and [[kbMaintenanceBatch]] needs
     * to run every downstream stage before the lake commit so a crashed
-    * batch can re-derive its work.
+    * batch can re-derive its work. Returned with the lake's columns as its
+    * read saw them (None: no lake yet), so the same batch's commit
+    * ([[appendToLake]]) picks the row shape without a second footer read.
     */
   private[graft] def dedupSurvivors(spark: SparkSession, batch: DataFrame,
-                                    dir: String): DataFrame = {
+                                    dir: String)
+      : (DataFrame, Option[Set[String]]) = {
     import graft.operators.Dedup
     val canonIds = Dedup.exactGroups(batch, "doc_id", "text")
       .filter(col("dup_id") === col("keep_id"))
       .select(col("dup_id").as("doc_id"))
     val canon = batch.join(canonIds, "doc_id")
     val lakeDir = s"$dir/lake"
-    val survivors =
-      // Hadoop FS probe (the appendToLake ADVICE-r17 fix's sibling):
-      // java.io.File answers false for every remote lake, which would
-      // re-admit every already-committed document on a remote kb
-      if (!graft.sources.KbStorage.pathExists(spark, lakeDir)) canon
-      else {
-        val lake = spark.read.parquet(lakeDir)
+    val lakeRead =
+      // Hadoop FS probe (ADVICE r17): java.io.File answers false for
+      // every remote lake, which would re-admit every already-committed
+      // document on a remote kb
+      if (!graft.sources.KbStorage.pathExists(spark, lakeDir)) None
+      else Some(spark.read.parquet(lakeDir))
+    val survivors = lakeRead match {
+      case None => canon
+      case Some(lake) =>
         // lakes written by [[appendToLake]] carry the fingerprint AT REST:
         // the dedup probe then scans only the lake's 8-byte fp column
         // (parquet column pruning) instead of re-cleaning + re-hashing the
@@ -207,8 +212,8 @@ object StreamingIngest {
           .filter(col("keep_id").isNotNull)
           .select(col("batch_id").as("doc_id"))
         canon.join(dups, Seq("doc_id"), "left_anti")
-      }
-    survivors.localCheckpoint(true)
+    }
+    (survivors.localCheckpoint(true), lakeRead.map(_.columns.toSet))
   }
 
   /** The COMMIT half of [[dedupIngestStep]]: append (already-materialized)
@@ -229,38 +234,31 @@ object StreamingIngest {
     * created_at sticky at the FIRST commit, updated_at bumped to the
     * LAST. A content-identical replay never reaches the commit (the
     * fingerprint dedup drops it), matching the reference where no UPDATE
-    * statement fires. Pre-audit lakes keep their shape (same
-    * mixed-schema rule as the fp column).
+    * statement fires.
+    *
+    * `survivors` must be non-empty; `lakeCols` are the lake's columns as
+    * [[dedupSurvivors]] read them in the same batch, None when there is no
+    * lake yet. Schema consistency: a pre-fp or pre-audit lake
+    * keeps its shape (mixed parquet schemas in one directory would corrupt
+    * reads); fresh and fp-carrying lakes store the fingerprint. The lake's
+    * existence comes from the Hadoop FileSystem probe (ADVICE r17):
+    * java.io.File answers false for every remote kb path, which would
+    * audit-stamp appends into a pre-audit remote lake.
     */
   private[graft] def appendToLake(survivors: DataFrame, dir: String,
-                                  changeTime: Long = 0L): Unit =
-    if (survivors.head(1).nonEmpty) {
-      val lakeDir = s"$dir/lake"
-      // schema consistency: a pre-fp lake keeps its shape (mixed parquet
-      // schemas in one directory would corrupt reads); fresh lakes and
-      // fp-carrying lakes store the fingerprint. Existence goes through
-      // the Hadoop FileSystem (ADVICE r17): java.io.File answers false
-      // for every remote kb path, which would audit-stamp appends into a
-      // pre-audit remote lake — exactly the mixed-schema corruption this
-      // guard exists to prevent.
-      val exists =
-        graft.sources.KbStorage.pathExists(survivors.sparkSession, lakeDir)
-      val lakeCols =
-        if (exists) survivors.sparkSession.read.parquet(lakeDir).columns.toSet
-        else Set.empty[String]
-      val withFp = !exists || lakeCols.contains("fp")
-      val withAudit = !exists || lakeCols.contains("created_at")
-      val fpd =
-        if (withFp)
-          survivors.withColumn("fp", TextFunctions.fingerprint(col("text")))
-        else survivors
-      val out =
-        if (withAudit)
-          fpd.withColumn("created_at", lit(changeTime).cast("long"))
-            .withColumn("updated_at", lit(changeTime).cast("long"))
-        else fpd
-      out.write.mode("append").parquet(lakeDir)
-    }
+                                  changeTime: Long,
+                                  lakeCols: Option[Set[String]]): Unit = {
+    val fpd =
+      if (lakeCols.forall(_.contains("fp")))
+        survivors.withColumn("fp", TextFunctions.fingerprint(col("text")))
+      else survivors
+    val out =
+      if (lakeCols.forall(_.contains("created_at")))
+        fpd.withColumn("created_at", lit(changeTime).cast("long"))
+          .withColumn("updated_at", lit(changeTime).cast("long"))
+      else fpd
+    out.write.mode("append").parquet(s"$dir/lake")
+  }
 
   /** The audited CURRENT view of the append-only lake — one row per
     * doc_id carrying the LATEST committed content with the reference's
@@ -350,7 +348,7 @@ object StreamingIngest {
     // FIRST would make the retry's survivors come back empty and the
     // documents would be permanently missing from the embeddings table and
     // the BM25 store.
-    val survivors = dedupSurvivors(spark, gated, dir)
+    val (survivors, lakeCols) = dedupSurvivors(spark, gated, dir)
     if (survivors.head(1).isEmpty) return
     val chunks = survivors
       .select(col("doc_id").as("sourcedoc"),
@@ -361,7 +359,7 @@ object StreamingIngest {
       .localCheckpoint(true)
     embedMaintenanceBatch(spark, chunks, dir, provider)
     maintainIndexBatch(spark, chunks, dir, batchId)
-    appendToLake(survivors, dir, batchId)
+    appendToLake(survivors, dir, batchId, lakeCols)
   }
 
   /** Streaming cache-aware embedding maintenance — the third leg of the

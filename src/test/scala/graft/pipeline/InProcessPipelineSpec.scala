@@ -268,8 +268,12 @@ class InProcessPipelineSpec extends SparkSpec {
   test("a warm keyed query runs zero Spark jobs, formatted included") {
     val (ch, emb) = fmtFrames(fmtRows)
     val ix = Bm25.cachedIndex("inproc-fmt-jobs", ch, "doc_id", "text")
+    // the query vector comes through the query verb's cache, whose repeat
+    // is served from the resident map
+    val qcache = java.nio.file.Files.createTempDirectory("inproc_qcache").toString
     def ask(key: Option[String]) = KbPipeline.query(spark, ch, emb, fmtQuery,
-      fmtCfg, bm25Index = Some(ix), corpusKey = key)
+      fmtCfg, bm25Index = Some(ix), corpusKey = key,
+      queryVecCacheDir = Some(qcache))
     ask(Some("inproc-fmt-jobs")).formatted // fills the serving memos
     val (_, formatJobs) = graft.JobCount(spark)(ask(Some("inproc-fmt-jobs")).formatted)
     assert(formatJobs == 0, s"warm query + formatted ran $formatJobs jobs")

@@ -105,4 +105,118 @@ class QueryCacheSpec extends SparkSpec {
     assert(warm.embedded.count() == 2) // served entirely by the cache join
     assert(warm.newCacheRows.count() == 0)
   }
+
+  /** A provider that counts its calls and embeds deterministically. */
+  private final class Counting(val model: String = "counting-8") extends Embedder.Provider {
+    val dims = 8
+    var calls = 0
+    def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+      calls += texts.size
+      Embedder.Deterministic(8).embedBatch(texts)
+    }
+  }
+  private def expected(text: String): Seq[Float] =
+    Embedder.Deterministic(8).embedBatch(Seq(text)).head.toSeq
+  private def localDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/qcache"
+  private def refusing = QueryCache.refusingProvider(8, mirrorModel = "counting-8")
+  /** Append one `(content_key, embedding)` row for `text` to the
+    * `counting-8` table under `cacheDir`, as a foreign writer would.
+    */
+  private def appendRow(cacheDir: String, text: String, vec: Array[Float]): Unit =
+    Seq((QueryCache.contentKeyValue(text), vec)).toDF("content_key", "embedding")
+      .write.mode("append").parquet(s"$cacheDir/counting-8_8")
+
+  test("embedQueryCached: a null embedding row recomputes, resident and at rest") {
+    Seq(localDir("graft_qcache_null"),
+        graft.NoJavaIoFileSystem.tempDir(spark, "graft_qcache_null_noio") + "/qcache")
+      .foreach { dir =>
+        appendRow(dir, "null row", null)
+        val p = new Counting
+        val v = QueryCache.embedQueryCached(spark, dir, "null row", p)
+        assert(p.calls == 1, dir)
+        assert(v.toSeq == expected("null row"), dir)
+        // the recomputed row is a hit from now on, the null row beside it
+        assert(QueryCache.embedQueryCached(spark, dir, "null row", refusing)
+          .toSeq == expected("null row"), dir)
+      }
+  }
+
+  test("embedQueryCached: a wrong-length row recomputes, resident and at rest") {
+    Seq(localDir("graft_qcache_len"),
+        graft.NoJavaIoFileSystem.tempDir(spark, "graft_qcache_len_noio") + "/qcache")
+      .foreach { dir =>
+        appendRow(dir, "short row", Array(1f, 2f, 3f))
+        val p = new Counting
+        val v = QueryCache.embedQueryCached(spark, dir, "short row", p)
+        assert(p.calls == 1, dir)
+        assert(v.toSeq == expected("short row"), dir)
+        assert(QueryCache.embedQueryCached(spark, dir, "short row", refusing)
+          .toSeq == expected("short row"), dir)
+      }
+  }
+
+  test("embedQueryCached: a warm hit runs no job, a miss one (its append), a load one") {
+    val dir = localDir("graft_qcache_jobs")
+    val p = new Counting
+    def ask(text: String, provider: Embedder.Provider = refusing,
+            session: org.apache.spark.sql.SparkSession = spark) =
+      graft.JobCount(session)(
+        QueryCache.embedQueryCached(session, dir, text, provider).toSeq)
+    assert(ask("spark join", p) == ((expected("spark join"), 1)))
+    // the first append starts the resident map: no reload follows it
+    assert(ask("spark join") == ((expected("spark join"), 0)))
+    assert(ask("pasta", p) == ((expected("pasta"), 1)))
+    assert(ask("pasta") == ((expected("pasta"), 0)))
+    assert(ask("spark join") == ((expected("spark join"), 0)))
+    assert(p.calls == 2)
+    // a fresh session pays one load job, then serves from its own map
+    val other = spark.newSession()
+    assert(ask("pasta", session = other) == ((expected("pasta"), 1)))
+    assert(ask("spark join", session = other) == ((expected("spark join"), 0)))
+  }
+
+  test("embedQueryCached: another session's append is served without a provider call") {
+    val dir = localDir("graft_qcache_foreign")
+    val p = new Counting
+    QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    QueryCache.embedQueryCached(spark, dir, "spark join", refusing) // resident
+    val other = new Counting
+    QueryCache.embedQueryCached(spark.newSession(), dir, "window ranking", other)
+    assert(other.calls == 1)
+    assert(QueryCache.embedQueryCached(spark, dir, "window ranking", refusing)
+      .toSeq == expected("window ranking"))
+    assert(QueryCache.embedQueryCached(spark, dir, "spark join", refusing)
+      .toSeq == expected("spark join"))
+    assert(p.calls == 1)
+  }
+
+  test("embedQueryCached: a deleted cache directory misses and re-appends") {
+    val dir = localDir("graft_qcache_deleted")
+    val p = new Counting
+    QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    QueryCache.embedQueryCached(spark, dir, "pasta", p)
+    QueryCache.embedQueryCached(spark, dir, "pasta", refusing) // resident
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    assert(QueryCache.embedQueryCached(spark, dir, "pasta", p).toSeq == expected("pasta"))
+    assert(p.calls == 3)
+    assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
+    // the rows deleted with the directory are gone from the map as well
+    QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    assert(p.calls == 4)
+  }
+
+  test("embedQueryCached: with no java.io view the lookup stays at rest and sees foreign appends") {
+    val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_qcache_noio") + "/qcache"
+    val p = new Counting
+    QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    val (v, jobs) = graft.JobCount(spark)(
+      QueryCache.embedQueryCached(spark, dir, "spark join", refusing).toSeq)
+    assert(v == expected("spark join"))
+    assert(jobs > 0, "the hit did not read the table")
+    appendRow(dir, "window ranking", expected("window ranking").toArray)
+    assert(QueryCache.embedQueryCached(spark, dir, "window ranking", refusing)
+      .toSeq == expected("window ranking"))
+    assert(p.calls == 1)
+  }
 }

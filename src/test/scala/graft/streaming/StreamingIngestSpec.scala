@@ -362,7 +362,7 @@ class StreamingIngestSpec extends SparkSpec {
     spark.read.parquet(s"$kb/lake2").write.mode("overwrite").parquet(s"$kb/lake")
     spark.catalog.refreshByPath(s"$kb/lake")
     val b2 = Seq(("b.txt", "alpha beta gamma delta")).toDF("doc_id", "text")
-    val survivors = StreamingIngest.dedupSurvivors(spark, b2, kb)
+    val (survivors, _) = StreamingIngest.dedupSurvivors(spark, b2, kb)
     assert(survivors.count() == 1,
       "a doctored stored fp must change the dedup decision — the stored column is the identity")
   }
@@ -385,7 +385,7 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // crashed attempt: all pre-commit stages, NO lake append
     locally {
-      val survivors = StreamingIngest.dedupSurvivors(spark, batch, kb)
+      val (survivors, _) = StreamingIngest.dedupSurvivors(spark, batch, kb)
       val chunks = survivors
         .select(col("doc_id").as("sourcedoc"),
           explode(graft.ingest.Chunker.chunks(col("text"), 200, 50)).as("c"))
