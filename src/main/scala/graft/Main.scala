@@ -395,7 +395,7 @@ object Main {
           case _ => cfg0
         }
         // BM25 store: the batch-built artifact wins; otherwise fall back to
-        // the CURRENT pointer of a `maintain`-built versioned store, so a
+        // the newest committed version of a `maintain`-built store, so a
         // stream-maintained kb serves without a separate batch `bm25` run
         val ix =
           if (graft.sources.KbStorage.pathExists(spark, s"$kb/bm25"))
@@ -633,10 +633,12 @@ object Main {
              // created_at sticky / updated_at bumped (F16 lifecycle)
              graft.streaming.StreamingIngest.lakeCurrent(spark, kb).count())
           else (0L, 0L)
-        val ixPath = graft.streaming.StreamingIngest.currentIndexPath(kb)
+        // the store's committed version and its live segments
+        val bm25 = graft.operators.Bm25.Version.base(spark, kb)
+          .fold("version=none")(v => s"version=${v.number} segments=${v.segments.size}")
         println(s"[graft] maintain: lake=$lakeN version rows / $curN current docs, " +
-          s"index=${ixPath.getOrElse("(none)")}")
-        println(s"[graft] maintain: the `query` verb serves this CURRENT index " +
+          s"bm25 $bm25")
+        println(s"[graft] maintain: the `query` verb serves this version " +
           s"automatically when no batch-built $kb/bm25 exists")
 
       case "select" =>

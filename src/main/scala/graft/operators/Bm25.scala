@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions
 
 /** Okapi BM25 as DataFrame programs (SURVEY §2.4 A1/A2, §2.1 S8).
@@ -49,8 +51,21 @@ object Bm25 {
   def idf(postings: DataFrame, corpusSize: Long): DataFrame =
     postings.groupBy("term")
       .agg(count(lit(1)).as("df"))
-      .withColumn("idf",
-        log((lit(corpusSize.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+      .withColumn("idf", okapiIdf(corpusSize, col("df")))
+
+  private def okapiIdf(corpusSize: Long, df: Column): Column =
+    log((lit(corpusSize.toDouble) - df + 0.5) / (df + 0.5) + 1.0)
+
+  /** The one-row stats table over a lengths table: avgdl over the
+    * token-bearing rows, with the exact integer `sum_dl` and its
+    * denominator `n_len` (so an append can update avgdl bit-identically to
+    * a rebuild), and `n`, the corpus size idf counts.
+    */
+  private def statsOf(lens: DataFrame, n: Long): DataFrame =
+    lens.agg(avg(col("doc_len").cast("double")).as("avgdl"),
+        sum(col("doc_len").cast("long")).as("sum_dl"),
+        count(lit(1)).as("n_len"))
+      .withColumn("n", lit(n))
 
   /** The BM25 per-(doc,term) score expression. */
   def termScore(tf: Column, docLen: Column, avgdl: Column, idf: Column,
@@ -147,18 +162,9 @@ object Bm25 {
     val p = if (persist) post.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else post
     val idfDf = idf(p, n)
     val i = if (persist) idfDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) else idfDf
-    // corpus size rides in stats so an index can be incrementally MERGED
-    // later (idf needs N; avgdl consumers ignore the extra columns), and
-    // the EXACT integer doc_len sum so an at-rest APPEND can update avgdl
-    // bit-identically to a rebuild ([[appendIndexStore]])
     // n counts ALL docs (idf's N) while avgdl averages over the
-    // TOKEN-BEARING lengths rows only — n_len records that denominator so
-    // an append can reproduce both exactly even when docs tokenize empty
-    val stats = l.agg(avg(col("doc_len").cast("double")).as("avgdl"),
-        sum(col("doc_len").cast("long")).as("sum_dl"),
-        count(lit(1)).as("n_len"))
-      .withColumn("n", lit(n))
-    Index(p, l, i, stats)
+    // TOKEN-BEARING lengths rows only
+    Index(p, l, i, statsOf(l, n))
   }
 
   /** Incremental index maintenance (S8 at 100 TB: never rebuild the whole
@@ -192,12 +198,7 @@ object Bm25 {
       oldPost0.drop("term_bucket") else oldPost0
     val post = oldPost.unionByName(np)
     val lens = old.lengths.unionByName(npLens)
-    val idfDf = idf(post, oldN + newN)
-    val stats = lens.agg(avg(col("doc_len").cast("double")).as("avgdl"),
-        sum(col("doc_len").cast("long")).as("sum_dl"),
-        count(lit(1)).as("n_len"))
-      .withColumn("n", lit(oldN + newN))
-    Index(post, lens, idfDf, stats)
+    Index(post, lens, idf(post, oldN + newN), statsOf(lens, oldN + newN))
   }
 
   /** Incremental index maintenance, delete side: drop a set of doc ids from
@@ -213,12 +214,7 @@ object Bm25 {
     val oldN = old.nDocs // shared statsRow snapshot (see mergeIndex)
     val removedN = old.lengths.join(rm, Seq("doc_id"), "left_semi").count()
     val n = oldN - removedN
-    val idfDf = idf(post, n)
-    val stats = lens.agg(avg(col("doc_len").cast("double")).as("avgdl"),
-        sum(col("doc_len").cast("long")).as("sum_dl"),
-        count(lit(1)).as("n_len"))
-      .withColumn("n", lit(n))
-    Index(post, lens, idfDf, stats)
+    Index(post, lens, idf(post, n), statsOf(lens, n))
   }
 
   /** S8 index persistence: the reference writes NPZ + JSON sidecars
@@ -236,31 +232,11 @@ object Bm25 {
                  termBuckets: Int = DefaultTermBuckets): Unit = {
     // lengths/idf/stats all derive from postings: persist it for the span
     // of the four writes or the full corpus aggregation re-runs per sink
-    val alreadyPersisted =
-      ix.postings.storageLevel != org.apache.spark.storage.StorageLevel.NONE
+    val alreadyPersisted = ix.postings.storageLevel != StorageLevel.NONE
     val post = if (alreadyPersisted) ix.postings
-      else ix.postings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      else ix.postings.persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // postings are SORTED BY TERM within each bucket file, so parquet
-      // page/row-group min-max statistics line up with the term IN (…)
-      // pushdown [[prunedPostings]] emits: a query's scan skips to its
-      // terms' page runs instead of decoding the whole bucket. The
-      // repartition also consolidates each bucket to one file per task
-      // instead of one per (writer task × bucket) — on the small-vocab
-      // test corpus (where buckets resolve to 1-2 terms and page pruning
-      // has little left to skip) the measured rm3-batch win (30.8 →
-      // 21.6 s at 100×, same-day A/B) is substantially this footer/open
-      // amplification disappearing; on real vocabularies the page
-      // pruning is the operative half
-      if (termBuckets > 0)
-        post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
-          .repartition(col("term_bucket"))
-          .sortWithinPartitions("term_bucket", "term", "doc_id")
-          .write.mode("overwrite").partitionBy("term_bucket")
-          .parquet(s"$dir/postings")
-      else
-        post.sortWithinPartitions("term", "doc_id")
-          .write.mode("overwrite").parquet(s"$dir/postings")
+      writePostings(post, s"$dir/postings", termBuckets, "overwrite")
       ix.lengths.write.mode("overwrite").parquet(s"$dir/lengths")
       ix.idf.write.mode("overwrite").parquet(s"$dir/idf")
       ix.stats.withColumn("term_buckets", lit(termBuckets))
@@ -271,173 +247,416 @@ object Bm25 {
     }
   }
 
-  // r19: the Index PLANS are memoized per (session, dir@fingerprint) too —
-  // every spark.read.parquet schedules a footer/listing job, so each
-  // readIndex call was four sequential driver jobs plus a fresh one-row
-  // statsRow head on first scalar access (t13_rm3_served/_batch20 and
-  // t15_boolean_served paid all five per invocation). The fingerprint in
-  // the key is the SAME staleness contract the in-process memo already
-  // rides: every store mutation (writeIndex, appendIndexStore) rewrites
-  // stats last, so a rewritten store reads fresh and an unchanged store
-  // serves the memoized plans (and its already-snapshotted statsRow).
+  /** Write a postings table: partitioned by `term_bucket` and SORTED BY
+    * TERM within each bucket file, so parquet page/row-group min-max
+    * statistics line up with the term IN (…) pushdown [[prunedPostings]]
+    * emits, and a query's scan skips to its terms' page runs instead of
+    * decoding the whole bucket. The repartition also consolidates each
+    * bucket to one file per task instead of one per (writer task ×
+    * bucket) — on the small-vocab test corpus the measured rm3-batch win
+    * (30.8 → 21.6 s at 100×, same-day A/B) is substantially this
+    * footer/open amplification disappearing; on real vocabularies the page
+    * pruning is the operative half. `termBuckets = 0` writes flat,
+    * term-sorted postings.
+    */
+  private def writePostings(post: DataFrame, path: String, termBuckets: Int,
+                            mode: String): Unit =
+    if (termBuckets > 0)
+      post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
+        .repartition(col("term_bucket"))
+        .sortWithinPartitions("term_bucket", "term", "doc_id")
+        .write.mode(mode).partitionBy("term_bucket").parquet(path)
+    else post.sortWithinPartitions("term", "doc_id").write.mode(mode).parquet(path)
+
+  // r19: the Index PLANS are memoized per (session, key) too — every
+  // spark.read.parquet schedules a footer/listing job, so each readIndex
+  // call was four sequential driver jobs plus a fresh one-row statsRow head
+  // on first scalar access. A stored index has a natural identity — the
+  // serving fast path ([[indexInProcess]]) memoizes its in-memory term
+  // arrays under it, the reference's load-NPZ-arrays-once regime. A
+  // committed [[Version]] never changes, so its key is `dir@v<N>`. An
+  // in-place store's key carries a cheap fingerprint of its stats files
+  // (every mutation — writeIndex, appendIndexStore — rewrites stats last);
+  // filesystems with no java.io view fingerprint as 0, and there the
+  // writers keep the key coherent by evicting the store
+  // ([[SessionMemo.forget]]).
   private val storedIndexCache = new SessionMemo[Index]
-  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
-    // a stored index has a natural identity — the serving fast path
-    // ([[indexInProcess]]) memoizes its in-memory term arrays under it,
-    // the reference's load-NPZ-arrays-once regime. The key carries a
-    // cheap directory fingerprint (stats file mtimes+sizes) so a
-    // REWRITTEN index read in the same session gets a fresh snapshot
-    // instead of the stale memoized arrays; non-local filesystems
-    // (no java.io view) fingerprint as 0 and fall back to dir-only
-    // identity, which the writers ([[writeIndex]], [[appendIndexStore]])
-    // keep coherent by evicting the store ([[SessionMemo.forget]])
-    val key = s"stored:$dir@${PathFingerprint(s"$dir/stats")}"
-    storedIndexCache.getOrBuild(spark, key)(Index(
-      spark.read.parquet(s"$dir/postings"),
-      spark.read.parquet(s"$dir/lengths"),
-      spark.read.parquet(s"$dir/idf"),
-      spark.read.parquet(s"$dir/stats"),
-      cacheKey = Some(key)))
+  def readIndex(spark: SparkSession, dir: String): Index =
+    Version.at(spark, dir) match {
+      case Some(v) => storedIndexCache.getOrBuild(spark, v.key)(v.index(spark))
+      case None =>
+        val key = s"stored:$dir@${PathFingerprint(s"$dir/stats")}"
+        storedIndexCache.getOrBuild(spark, key)(Index(
+          spark.read.parquet(s"$dir/postings"),
+          spark.read.parquet(s"$dir/lengths"),
+          spark.read.parquet(s"$dir/idf"),
+          spark.read.parquet(s"$dir/stats"),
+          cacheKey = Some(key)))
+    }
+
+  /** A store's corpus totals as driver values, the row of its `stats`
+    * table: `n` counts every document (idf's N); `sumDl` is the exact
+    * integer doc_len sum and `nLen` the token-bearing row count that avgdl
+    * averages over.
+    */
+  private[graft] final case class Totals(n: Long, sumDl: Long, nLen: Long,
+                                         termBuckets: Int) {
+    def toDF(spark: SparkSession): DataFrame = {
+      import spark.implicits._
+      Seq((sumDl.toDouble / nLen, sumDl, nLen, n, termBuckets))
+        .toDF("avgdl", "sum_dl", "n_len", "n", "term_buckets")
+    }
   }
 
-  /** Incremental append to an AT-REST BM25 store — [[mergeIndex]]'s
-    * economics on the persisted artifact (the [[graft.operators.VectorSearch.appendIvfStore]]
+  /** The [[Totals]] of a stored index, off its one statsRow snapshot;
+    * stores written before `sum_dl`/`n_len` pay one slim lengths scan.
+    */
+  private def totalsOf(ix: Index): Totals = {
+    val r = ix.statsRow
+    val has = ix.stats.columns.toSet
+    def long(c: String) = r.getLong(r.fieldIndex(c))
+    val (sumDl, nLen) =
+      if (has("sum_dl") && has("n_len")) (long("sum_dl"), long("n_len"))
+      else {
+        val s = ix.lengths.agg(coalesce(sum(col("doc_len").cast("long")), lit(0L)),
+          count(lit(1))).head()
+        (s.getLong(0), s.getLong(1))
+      }
+    Totals(ix.nDocs, sumDl, nLen,
+      if (has("term_buckets")) r.getInt(r.fieldIndex("term_buckets")) else 0)
+  }
+
+  /** The O(batch) update both at-rest appends commit ([[appendIndexStore]]
+    * in place, [[commitVersion]] as a new version) — the new idf table and
+    * totals, from the STORED df counts plus the batch's, never by
+    * rescanning the stored postings. Equal to a rebuild over old ∪ batch:
+    * `df' = df + df_batch` in integers and `N' = N + |batch|`, so every
+    * term's idf double recomputes from identical inputs; avgdl =
+    * `sum_dl / n_len` over the exact integer sums, which equals the
+    * rebuild's avg aggregation bit-for-bit (integer-valued doubles sum
+    * exactly below 2^53). `batch` holds the batch's own totals: `n` counts
+    * every batch doc, also those that tokenize to nothing, as a rebuild's
+    * n does. No stored idf (a first version) means the batch's df alone.
+    */
+  private def appendDelta(storedIdf: Option[DataFrame], old: Totals, batch: Totals,
+                          batchPostings: DataFrame): (DataFrame, Totals) = {
+    // batchPostings: one row per (doc, term) pair of the batch
+    val totals = old.copy(n = old.n + batch.n, sumDl = old.sumDl + batch.sumDl,
+      nLen = old.nLen + batch.nLen)
+    val batchDf = batchPostings.groupBy("term").agg(count(lit(1)).as("df"))
+    val df = storedIdf.fold(batchDf)(_.select(col("term"), col("df"))
+      .join(batchDf.withColumnRenamed("df", "df_b"), Seq("term"), "full_outer")
+      .select(col("term"),
+        (coalesce(col("df"), lit(0L)) + coalesce(col("df_b"), lit(0L))).as("df")))
+    (df.withColumn("idf", okapiIdf(totals.n, col("df"))), totals)
+  }
+
+  /** Incremental append to an AT-REST BM25 store, in place — the `bm25`
+    * verb's store (the [[graft.operators.VectorSearch.appendIvfStore]]
     * analogue; reference: the NPZ sidecar is rebuilt whole on every
-    * change, `embedding/bm25_manager.py:71-112`): the batch's postings
+    * change, `embedding/bm25_manager.py:71-112`). The batch's postings
     * and lengths APPEND partition-wise into the bucketed directories
     * (existing files never read or rewritten), and only the VOCAB-sized
-    * idf table and the one-row stats are rewritten — from the STORED df
-    * counts plus the batch's, never by rescanning the postings.
-    * Equivalent to `writeIndex(buildIndex(old ∪ batch))` scoring-value-
-    * exactly:
-    *  - postings/lengths rows are per-doc independent — identical;
-    *  - `df' = df_stored + df_batch` in integers and `N' = N + |batch|`,
-    *    so every term's idf double recomputes from identical inputs;
-    *  - avgdl derives from the EXACT integer doc_len sum (integer-valued
-    *    doubles sum exactly below 2^53, so the rebuild's avg aggregation
-    *    equals `sum/count` bit-for-bit) — the stored `sum_dl` plus the
-    *    batch's; stores written before `sum_dl` pay one slim scan of the
-    *    stored lengths table instead.
-    * The stats rewrite changes the store's [[PathFingerprint]], so the
-    * in-process serving memo can never serve the pre-append snapshot on a
-    * filesystem with a `java.io` view. On any filesystem the append
-    * evicts the store from every session memo ([[SessionMemo.forget]])
-    * before its read and after its commit, so its stats and listings, the
-    * later readers' plans and the in-process term arrays stay fresh.
+    * idf table and the one-row stats are rewritten ([[appendDelta]]), so
+    * the result equals `writeIndex(buildIndex(old ∪ batch))`
+    * scoring-value-exactly.
+    *
+    * Commit order: lengths, postings, idf, then stats — the stats rewrite
+    * is the commit point. It changes the store's [[PathFingerprint]], and
+    * the append also evicts the store from every session memo
+    * ([[SessionMemo.forget]]) before its read and after its commit, so no
+    * reader serves the pre-append snapshot on any filesystem.
     * Contract (as [[mergeIndex]]): batch doc ids are disjoint from the
     * store's — ENFORCED here (one slim semi-join against the stored
     * lengths), which also makes a crashed append retry-SAFE: lengths are
-    * appended before postings, so a retry after any partial failure sees
-    * the overlap and aborts with a rebuild instruction instead of
-    * silently double-counting tf/df.
+    * appended first, so a retry after any partial failure sees the overlap
+    * (or a lengths count ahead of the committed `n_len`) and aborts with a
+    * rebuild instruction instead of silently double-counting tf/df.
     */
-  def appendIndexStore(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def appendIndexStore(spark: SparkSession, dir: String,
                        newDocs: DataFrame, idCol: String,
                        textCol: String): Unit = {
-    import spark.implicits._
     SessionMemo.forget(spark, dir)
     val stored = readIndex(spark, dir)
-    // ONE one-row head for every stats scalar this append needs (r18: n,
-    // term_buckets, n_len and sum_dl each ran their own job — four
-    // sequential one-row jobs on the same one-row table)
-    val statsCols = stored.stats.columns.toSet
-    val statsRow = stored.statsRow // shared snapshot; one head per store read
-    def statL(c: String): Long = statsRow.getLong(statsRow.fieldIndex(c))
-    val oldN = statL("n")
-    val storedBuckets =
-      if (statsCols.contains("term_buckets"))
-        statsRow.getInt(statsRow.fieldIndex("term_buckets"))
-      else 0
+    val old = totalsOf(stored)
     // consistency sentinel (ADVICE r15): stats is written LAST, so its
     // n_len is the committed lengths row count — a crash between the
     // postings append and the idf/stats rewrite leaves actual lengths
-    // (appended FIRST) ahead of the committed count, and the store would
-    // otherwise serve with stale idf/avgdl/n without complaint. One slim
-    // lengths scan per append catches it even when the NEXT batch's ids
-    // are disjoint (the overlap require below only catches a same-batch
-    // retry).
-    // ONE scan of the stored lengths serves BOTH stored-side checks (r18:
-    // the sentinel count and the overlap semi-join each scanned lengths in
-    // their own job): total row count (vs the committed n_len) and overlap
-    // with the batch ids. The semi-join direction keeps the same scale
-    // shape as before — lengths-side rows survive at most once per row, so
-    // count(matched doc_id) ≡ the old left_semi count.
+    // ahead of it. ONE scan of the stored lengths serves both stored-side
+    // checks: the total row count and the overlap with the batch ids
+    // (lengths-side rows survive the left outer join at most once, so
+    // count(hit) is the semi-join count).
     val batchIds = newDocs.select(col(idCol).as("doc_id")).distinct()
     val chkRow = stored.lengths.select("doc_id")
       .join(batchIds.withColumn("hit", lit(1)), Seq("doc_id"), "left_outer")
       .agg(count(lit(1)).as("actual"), count(col("hit")).as("overlap"))
       .head()
     val (actual, overlap) = (chkRow.getLong(0), chkRow.getLong(1))
-    if (statsCols.contains("n_len")) {
-      val committed = statL("n_len")
-      require(actual == committed,
+    if (stored.stats.columns.contains("n_len"))
+      require(actual == old.nLen,
         s"appendIndexStore: store at $dir is inconsistent (lengths rows " +
-          s"$actual != committed n_len $committed) — a previous append " +
+          s"$actual != committed n_len ${old.nLen}) — a previous append " +
           "crashed between the data appends and the stats commit; rebuild " +
           "the store (writeIndex) before appending")
-    }
-    val batchDocs = newDocs.count() // ALL batch docs — idf's N counts
-    // docs that tokenize to nothing too, exactly as buildIndex's n does
+    val batchDocs = newDocs.count()
     require(overlap == 0L,
       s"appendIndexStore: $overlap batch doc ids already in the store at " +
         s"$dir — route re-ingests through the S5 anti-join; if a previous " +
         "append crashed mid-write, rebuild the store (writeIndex) instead " +
         "of retrying")
     val post0 = postings(newDocs, idCol, textCol)
-    val lens = docLengths(post0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val lens = docLengths(post0).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // lengths FIRST: they are the overlap sentinel a retry checks
       lens.write.mode("append").parquet(s"$dir/lengths")
       val post = if (stored.postings.columns.contains("doc_len"))
         post0.join(lens, "doc_id") else post0
-      // appended files keep the store's term-sorted-within-bucket layout
-      // (batch-sized sort) so page-level term pruning covers them too
-      if (storedBuckets > 0)
-        post.withColumn("term_bucket", termBucket(col("term"), storedBuckets))
-          .repartition(col("term_bucket"))
-          .sortWithinPartitions("term_bucket", "term", "doc_id")
-          .write.mode("append").partitionBy("term_bucket")
-          .parquet(s"$dir/postings")
-      else post.sortWithinPartitions("term", "doc_id")
-        .write.mode("append").parquet(s"$dir/postings")
-      val bRow = lens.agg(count(lit(1)),
+      writePostings(post, s"$dir/postings", old.termBuckets, "append")
+      val b = lens.agg(count(lit(1)),
         coalesce(sum(col("doc_len").cast("long")), lit(0L))).head()
-      val (batchLenRows, batchSum) = (bRow.getLong(0), bRow.getLong(1))
-      // avgdl's denominator is the TOKEN-BEARING row count (buildIndex
-      // averages over lengths rows), tracked separately from idf's n;
-      // stores written before sum_dl/n_len pay one slim lengths scan
-      val (oldSum, oldLenRows) =
-        if (statsCols.contains("sum_dl") && statsCols.contains("n_len"))
-          (statL("sum_dl"), statL("n_len"))
-        else {
-          val r = stored.lengths
-            .agg(coalesce(sum(col("doc_len").cast("long")), lit(0L)),
-              count(lit(1))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-      val n2 = oldN + batchDocs
-      val sum2 = oldSum + batchSum
-      val nLen2 = oldLenRows + batchLenRows
-      // vocab-sized df merge → idf rewrite; the eager localCheckpoint
-      // severs lineage from the files being overwritten
-      stored.idf.select(col("term"), col("df"))
-        .join(post0.groupBy("term").agg(count(lit(1)).as("df_b")),
-          Seq("term"), "full_outer")
-        .select(col("term"),
-          (coalesce(col("df"), lit(0L)) + coalesce(col("df_b"), lit(0L)))
-            .as("df"))
-        .withColumn("idf",
-          log((lit(n2.toDouble) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-        .localCheckpoint(true)
-        .write.mode("overwrite").parquet(s"$dir/idf")
-      Seq((sum2.toDouble / nLen2, sum2, nLen2, n2, storedBuckets))
-        .toDF("avgdl", "sum_dl", "n_len", "n", "term_buckets")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+      val (idf2, totals) = appendDelta(Some(stored.idf), old,
+        Totals(batchDocs, b.getLong(1), b.getLong(0), 0), post0)
+      // the eager localCheckpoint severs lineage from the files being
+      // overwritten
+      idf2.localCheckpoint(true).write.mode("overwrite").parquet(s"$dir/idf")
+      totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
     } finally {
       lens.unpersist()
       SessionMemo.forget(spark, dir)
     }
+  }
+
+  /** Segments a [[Version]] lists at most: a commit that would list more
+    * writes one merged segment instead.
+    */
+  private[graft] val MaxSegments = 8
+
+  private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT, idf DOUBLE")
+
+  /** One committed version of a versioned BM25 store — the `maintain`
+    * store — rooted at `root`. Commit N writes `root/v<N>/`: one immutable
+    * segment (the batch's `postings`, term-bucketed and term-sorted within
+    * each bucket, its `lengths`, and `_files`, the list of their data
+    * files) plus the version's vocab-sized `idf` and one-row `stats`. It
+    * then creates `root/_manifest/v<N>` with overwrite = false — the
+    * commit point, through the Hadoop FileSystem API only, with no rename.
+    * The manifest names the live segments, their schemas and the
+    * [[Totals]], so a reader opens exactly the segments' listed files with
+    * no schema inference and no directory listing, and a version never
+    * changes once committed. A manifest without its closing `end` line is
+    * a crashed commit and reads as absent.
+    *
+    * A store written before manifests has a `CURRENT` pointer to a full
+    * store `v<K>`; it reads as one segment (its files listed from its
+    * directories), which the next commit extends.
+    */
+  private[graft] final case class Version(root: String, number: Long,
+                                          totals: Totals,
+                                          postingsSchema: StructType,
+                                          lengthsSchema: StructType,
+                                          segments: Seq[String]) {
+    def path: String = s"$root/v$number"
+    def key: String = s"stored:$root@v$number"
+
+    private def table(spark: SparkSession, t: String) =
+      segments.flatMap(seg => Version.segmentFiles(spark, root, seg)
+        .filter(_.startsWith(s"$t/")).map(f => s"$root/$seg/$f"))
+    def lengths(spark: SparkSession): DataFrame =
+      Version.read(spark, lengthsSchema, table(spark, "lengths"), root)
+    def idf(spark: SparkSession): DataFrame =
+      spark.read.schema(IdfSchema).parquet(s"$path/idf")
+    def index(spark: SparkSession): Index =
+      Index(Version.read(spark, postingsSchema, table(spark, "postings"), root),
+        lengths(spark), idf(spark), totals.toDF(spark), cacheKey = Some(key))
+
+    private[Bm25] def render: String =
+      (Seq(s"version $number",
+        s"totals ${totals.n} ${totals.sumDl} ${totals.nLen} ${totals.termBuckets}",
+        s"postings_schema ${postingsSchema.json}",
+        s"lengths_schema ${lengthsSchema.json}") ++
+        segments.map(seg => s"segment $seg") :+ "end").mkString("", "\n", "\n")
+  }
+
+  private[graft] object Version {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    private val Name = "v(\\d+)".r
+
+    private def fs(spark: SparkSession, root: String): FileSystem =
+      new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+    private def readText(spark: SparkSession, path: String): Option[String] =
+      try {
+        val in = fs(spark, path).open(new Path(path))
+        try Some(new String(in.readAllBytes(),
+          java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+
+    private def writeText(spark: SparkSession, path: String, text: String,
+                          overwrite: Boolean): Unit = {
+      val out = fs(spark, path).create(new Path(path), overwrite)
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
+    private def numbers(spark: SparkSession, root: String): Seq[Long] =
+      try fs(spark, root).listStatus(new Path(s"$root/_manifest")).toSeq
+        .map(_.getPath.getName).collect { case Name(n) => n.toLong }
+      catch { case _: java.io.FileNotFoundException => Nil }
+
+    /** The committed version `dir` names: `<root>/v<N>` with a complete
+      * manifest `<root>/_manifest/v<N>`.
+      */
+    def at(spark: SparkSession, dir: String): Option[Version] = {
+      val (root, name) = dir.stripSuffix("/").splitAt(dir.stripSuffix("/").lastIndexOf('/'))
+      name.drop(1) match {
+        case Name(n) if root.nonEmpty => load(spark, root, n.toLong)
+        case _ => None
+      }
+    }
+
+    private def load(spark: SparkSession, root: String, n: Long): Option[Version] =
+      readText(spark, s"$root/_manifest/v$n").map(_.split("\n").toSeq)
+        .filter(_.lastOption.contains("end")).map { lines =>
+          val kv = lines.init.map(l => l.splitAt(l.indexOf(' '))).map {
+            case (k, v) => (k, v.drop(1)) }
+          def one(k: String) = kv.collectFirst { case (`k`, v) => v }.get
+          def schema(k: String) = org.apache.spark.sql.types.DataType
+            .fromJson(one(k)).asInstanceOf[StructType]
+          val Seq(docs, sumDl, nLen, buckets) = one("totals").split(' ').toSeq
+          Version(root, n, Totals(docs.toLong, sumDl.toLong, nLen.toLong, buckets.toInt),
+            schema("postings_schema"), schema("lengths_schema"),
+            kv.collect { case ("segment", seg) => seg })
+        }
+
+    private def latest(spark: SparkSession, root: String): Option[Version] =
+      numbers(spark, root).sorted.reverseIterator
+        .flatMap(load(spark, root, _)).nextOption()
+
+    /** The `v<K>` a pre-manifest store's `CURRENT` pointer names. */
+    private def legacyName(spark: SparkSession, root: String): Option[String] =
+      readText(spark, s"$root/CURRENT").map(_.trim)
+
+    /** A pre-manifest full store as a one-segment version. */
+    private def legacy(spark: SparkSession, root: String): Option[Version] =
+      legacyName(spark, root).collect { case name @ Name(n) =>
+        val ix = readIndex(spark, s"$root/$name")
+        Version(root, n.toLong, totalsOf(ix), ix.postings.schema,
+          ix.lengths.schema, Seq(name))
+      }
+
+    /** The current version: the newest manifest, else a pre-manifest
+      * store — the version a commit extends.
+      */
+    def base(spark: SparkSession, root: String): Option[Version] =
+      latest(spark, root).orElse(legacy(spark, root))
+
+    /** The number the next commit takes: one past every manifest, complete
+      * or not, and past a pre-manifest store's version.
+      */
+    private[Bm25] def next(spark: SparkSession, root: String): Long =
+      (numbers(spark, root) ++ legacyName(spark, root).collect {
+        case Name(n) => n.toLong }).maxOption.getOrElse(0L) + 1
+
+    /** The data files of segment `seg`, relative to its directory: its
+      * `_files` list, else (a pre-manifest store) its directories' files
+      * that are not `_`/`.` hidden.
+      */
+    private def segmentFiles(spark: SparkSession, root: String, seg: String): Seq[String] =
+      readText(spark, s"$root/$seg/_files").fold(listFiles(spark, s"$root/$seg"))(
+        _.split("\n").toSeq.filter(_.nonEmpty))
+
+    private def listFiles(spark: SparkSession, dir: String): Seq[String] = {
+      val f = fs(spark, dir)
+      def walk(d: Path, rel: String): Seq[String] =
+        f.listStatus(d).toSeq.map(st => (st, st.getPath.getName))
+          .filterNot { case (_, n) => n.startsWith("_") || n.startsWith(".") }
+          .sortBy(_._2).flatMap { case (st, n) =>
+            if (st.isDirectory) walk(st.getPath, s"$rel/$n") else Seq(s"$rel/$n") }
+      Seq("postings", "lengths").flatMap(t => walk(new Path(s"$dir/$t"), t))
+    }
+
+    /** Exact files under one reader, partition columns discovered below
+      * `root`: the segments' `term_bucket=K` directories sit under
+      * different `v<N>/postings` parents, which Spark's one-base-path rule
+      * would reject.
+      */
+    private def read(spark: SparkSession, schema: StructType, files: Seq[String],
+                     root: String): DataFrame =
+      if (files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      else spark.read.schema(schema).option("basePath", root)
+        .option("ignoreInvalidPartitionPaths", "true").parquet(files: _*)
+
+    /** Commit `v`, whose own segment `v<N>` is written: list that
+      * segment's files, then create the manifest, failing if that version
+      * exists.
+      */
+    private[Bm25] def create(spark: SparkSession, v: Version): Unit = {
+      writeText(spark, s"${v.path}/_files",
+        listFiles(spark, v.path).mkString("", "\n", "\n"), overwrite = true)
+      writeText(spark, s"${v.root}/_manifest/v${v.number}", v.render, overwrite = false)
+    }
+  }
+
+  /** Commit `docs` to the versioned store at `root` as one new [[Version]],
+    * O(batch): the batch's docs not yet in the store (the replay guard, an
+    * anti-join on the stored lengths) become one new segment, and the idf
+    * and totals advance by [[appendDelta]] — the arithmetic of
+    * [[appendIndexStore]]. A commit that would list more than
+    * [[MaxSegments]] segments, or extend a store of another layout, writes
+    * one merged segment of the whole store instead. The version number is
+    * the manifest's latest + 1. Every write lands in the new `v<N>`
+    * directory (a crashed attempt's leftovers there are overwritten), and
+    * the manifest create is the commit point. Returns None, and commits
+    * nothing, when every batch doc is already in the store.
+    */
+  private[graft] def commitVersion(spark: SparkSession, root: String, docs: DataFrame,
+                                   idCol: String, textCol: String): Option[Version] = {
+    val prev = Version.base(spark, root)
+    val batch = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
+    val tokens = TextFunctions.tokenizeBm25(col("text"))
+    val docLen = greatest(size(tokens), lit(0)).cast("long")
+    // the batch's totals ride the one job that materializes its new docs
+    val observed = org.apache.spark.sql.Observation()
+    val fresh = prev.fold(batch)(p =>
+        batch.join(p.lengths(spark).select("doc_id"), Seq("doc_id"), "left_anti"))
+      .observe(observed, count(lit(1)).as("n"),
+        coalesce(sum(docLen), lit(0L)).as("sum_dl"),
+        count(when(docLen > 0, true)).as("n_len"))
+      .localCheckpoint(true)
+    val m = observed.get
+    val batchTotals = Totals(m("n").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long],
+      m("n_len").asInstanceOf[Long], 0)
+    if (batchTotals.n == 0L) return None
+    // batch doc ids are unique (chunk ids), so a doc's length is its token
+    // count: postings carry it with no lengths join, and lengths and df
+    // need no postings aggregation
+    val post = fresh.select(col("doc_id"), explode(tokens).as("term"), docLen.as("doc_len"))
+      .groupBy("doc_id", "term", "doc_len").agg(count(lit(1)).as("tf"))
+      .select("doc_id", "term", "tf", "doc_len")
+    val lens = fresh.select(col("doc_id"), docLen.as("doc_len")).filter(col("doc_len") > 0)
+    val number = Version.next(spark, root)
+    val dir = s"$root/v$number"
+    def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
+    val postingsSchema = nullable(post.schema.add("term_bucket", IntegerType))
+    val lengthsSchema = nullable(lens.schema)
+    val merge = prev.filter(p => p.segments.size >= MaxSegments ||
+      p.postingsSchema != postingsSchema || p.lengthsSchema != lengthsSchema)
+    val (segPostings, segLens) = merge.fold((post, lens)) { p =>
+      val ix = p.index(spark)
+      (withDocLen(ix).drop("term_bucket").unionByName(post),
+        ix.lengths.unionByName(lens))
+    }
+    writePostings(segPostings, s"$dir/postings", DefaultTermBuckets, "overwrite")
+    segLens.write.mode("overwrite").parquet(s"$dir/lengths")
+    val (idf2, totals) = appendDelta(prev.map(_.idf(spark)),
+      prev.fold(Totals(0L, 0L, 0L, 0))(_.totals).copy(termBuckets = DefaultTermBuckets),
+      batchTotals, fresh.select(col("doc_id"), explode(array_distinct(tokens)).as("term")))
+    idf2.write.mode("overwrite").parquet(s"$dir/idf")
+    totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    val kept = if (merge.isDefined) Nil else prev.fold(Seq.empty[String])(_.segments)
+    val v = Version(root, number, totals, postingsSchema, lengthsSchema, kept :+ s"v$number")
+    Version.create(spark, v)
+    Some(v)
   }
 
   /** Memoized per-corpus index — the "load the persisted index" path the

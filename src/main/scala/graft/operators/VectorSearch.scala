@@ -1018,21 +1018,23 @@ object VectorSearch {
     */
   def writeIvf(ix: IvfIndex, dir: String,
                sourceFingerprint: Option[Long] = None): Unit = {
-    ix.assigned.write.mode("overwrite").partitionBy("cluster_id")
-      .parquet(s"$dir/assigned")
     val spark = ix.assigned.sparkSession
     import spark.implicits._
-    ix.centroids.toSeq.zipWithIndex
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cluster_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    // staleness sidecar: the fingerprint of the SOURCE embeddings the
-    // index was built from — query-time loads compare it to the current
-    // embeddings and fall back to a rebuild on mismatch, instead of
-    // silently missing vectors appended after the build
-    sourceFingerprint.foreach(fp =>
-      Seq(Tuple1(fp)).toDF("source_fp")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))
+    try {
+      ix.assigned.write.mode("overwrite").partitionBy("cluster_id")
+        .parquet(s"$dir/assigned")
+      ix.centroids.toSeq.zipWithIndex
+        .map { case (c, i) => (i, c.toSeq) }
+        .toDF("cluster_id", "centroid")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+      // staleness sidecar: the fingerprint of the SOURCE embeddings the
+      // index was built from — query-time loads compare it to the current
+      // embeddings and fall back to a rebuild on mismatch, instead of
+      // silently missing vectors appended after the build
+      sourceFingerprint.foreach(fp =>
+        Seq(Tuple1(fp)).toDF("source_fp")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))
+    } finally SessionMemo.forget(spark, dir) // see readIvf's key
   }
 
   /** The `source_fp` recorded by [[writeIvf]], if the store has one. */
@@ -1046,7 +1048,9 @@ object VectorSearch {
     * stored `assigned` schema (the vector is the array column); the
     * cacheKey fingerprints the store so in-process rungs never serve a
     * stale memo across a rewrite (the [[graft.operators.Bm25.readIndex]]
-    * contract).
+    * contract). The fingerprint reads 0 on a filesystem with no `java.io`
+    * view, so the writers ([[writeIvf]], [[appendIvfStore]]) also evict
+    * the store from every session memo ([[SessionMemo.forget]]).
     */
   def readIvf(spark: org.apache.spark.sql.SparkSession,
               dir: String): IvfIndex = {
@@ -1145,12 +1149,13 @@ object VectorSearch {
         "does); rebuild the store if a previous append crashed mid-write")
     val cents = ix.centroids.zipWithIndex
       .map { case (cv, cid) => (cid, cv.toSeq) }.toSeq
-    seededIvfAssign(newVectors.select(col(ix.idCol), col(ix.vecCol)),
+    try seededIvfAssign(newVectors.select(col(ix.idCol), col(ix.vecCol)),
         ix.idCol, ix.vecCol, cents)
       .withColumn("cluster_id", col("cluster_id").cast(
         ix.assigned.schema("cluster_id").dataType))
       .write.mode("append").partitionBy("cluster_id")
       .parquet(s"$dir/assigned")
+    finally SessionMemo.forget(spark, dir)
   }
 
   def appendIvf(index: IvfIndex, newVectors: DataFrame): IvfIndex = {

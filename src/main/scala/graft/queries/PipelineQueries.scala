@@ -2374,9 +2374,9 @@ object PipelineQueries {
     //    the stream-side analogue of e2e_incremental: documents land in TWO
     //    micro-batches (evens then odds) through the REAL foreachBatch body
     //    (kbMaintenanceBatch: exact dedup within batch → bloom dedup vs the
-    //    lake → chunk → embed through the cache → BM25 merge into a fresh
-    //    VERSIONED store → atomic CURRENT swap → lake commit), then the
-    //    post-swap CURRENT index serves the standard query. The oracle is
+    //    lake → chunk → embed through the cache → the BM25 store's next
+    //    version, committed by its manifest → lake commit), then the newest
+    //    committed version serves the standard query. The oracle is
     //    the FULL-REBUILD formulation over the stream's keep-first-arrival
     //    survivor set: per content fingerprint the lowest FIRST-BATCH doc
     //    wins, else the lowest second-batch doc (exact-dedup keeps min-id
@@ -2429,7 +2429,7 @@ object PipelineQueries {
       // once, serve many (the same build-vs-serve attribution as the other
       // stored-artifact rows: first invocation pays the full two-batch
       // lifecycle from an empty store, later invocations query the
-      // maintained CURRENT index). Verify's one invocation therefore
+      // maintained index version). Verify's one invocation therefore
       // always exercises the full lifecycle under the oracle gate.
       MaintainMemo.memo.getOrBuild(s, kb) {
         def rm(f: java.io.File): Unit = {
@@ -2449,7 +2449,7 @@ object PipelineQueries {
         true
       }
       val current = StreamingIngest.currentIndexPath(kb)
-        .getOrElse(sys.error("maintain produced no CURRENT index"))
+        .getOrElse(sys.error("maintain committed no index version"))
       val ix = graft.operators.Bm25.readIndex(s, current)
       graft.operators.Bm25.topK(
         graft.operators.Bm25.scoreWithIndex(ix, s, OracleSql.QueryText)

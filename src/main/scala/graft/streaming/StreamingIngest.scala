@@ -59,21 +59,19 @@ object StreamingIngest {
       .start()
 
   /** Streaming BM25 index maintenance — the streaming twin of the
-    * `bm25` + incremental-merge verbs: each micro-batch of newly landed
-    * files chunks exactly like [[chunkStream]] and MERGES into the stored
-    * index ([[graft.operators.Bm25.mergeIndex]] — postings append + term
-    * stats recompute, never a full rebuild).
+    * `bm25` + incremental-append verbs: each micro-batch of newly landed
+    * files chunks exactly like [[chunkStream]] and commits to the
+    * versioned store under `dir` ([[maintainIndexBatch]]).
     *
-    * Consistency model: every batch writes a fresh VERSIONED store
-    * (`dir/v<batchId>`) and then atomically swaps the `CURRENT` pointer
-    * (write-temp + rename) — readers never observe a half-written index,
-    * and the merge never reads the files it is overwriting. foreachBatch
-    * is at-least-once, so a replayed batch is made idempotent by the S5
-    * anti-join: chunk ids already in the stored lengths table drop out,
-    * and an all-duplicate replay leaves the pointer untouched. Old
-    * versions are retained for GC by the caller (the pointer file is the
-    * source of truth) — at 100 TB this is the standard
-    * snapshot-and-swap index deployment shape.
+    * Commit order: the batch's segment, idf and stats land in a fresh
+    * `dir/v<N>`, then the manifest `dir/_manifest/v<N>` is created with
+    * overwrite = false — the commit point ([[graft.operators.Bm25.Version]]).
+    * Readers open the newest manifest's files, so they never observe a
+    * half-written version, and the commit never reads the files it writes.
+    * foreachBatch is at-least-once, so a replayed batch is made idempotent
+    * by the S5 anti-join: chunk ids already in the stored lengths drop
+    * out, and an all-duplicate replay commits no version. Old versions
+    * stay on disk; nothing collects them yet.
     */
   def startIndexMaintenance(spark: SparkSession, glob: String, dir: String,
                             trigger: org.apache.spark.sql.streaming.Trigger =
@@ -81,52 +79,32 @@ object StreamingIngest {
       : org.apache.spark.sql.streaming.StreamingQuery =
     chunkStream(spark, glob).writeStream
       .option("checkpointLocation", s"$dir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainIndexBatch(spark, batch, dir, batchId)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        maintainIndexBatch(spark, batch, dir); ()
       }
       .trigger(trigger)
       .start()
 
   /** The per-micro-batch maintenance step of [[startIndexMaintenance]] —
-    * factored out so specs (and replay-idempotence tests) can drive it
-    * directly with a deterministic batch.
+    * an O(batch) commit of the batch's chunks as the store's next version
+    * ([[graft.operators.Bm25.commitVersion]]); None when the batch holds
+    * no new chunk. Factored out so specs (and replay-idempotence tests)
+    * can drive it directly with a deterministic batch.
     */
   private[graft] def maintainIndexBatch(spark: SparkSession, batch: DataFrame,
-                                        dir: String, batchId: Long): Unit = {
-    import graft.operators.Bm25
-    val docs = batch.select(
-      concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"),
-      col("chunk_text").as("text"))
-    val next = s"$dir/v$batchId"
-    currentIndexPath(dir) match {
-      case None =>
-        Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), next)
-      case Some(prev) =>
-        val old = Bm25.readIndex(spark, prev)
-        val fresh = docs.join(old.lengths.select("doc_id"), Seq("doc_id"), "left_anti")
-        if (fresh.head(1).isEmpty) return // full replay: nothing new, keep pointer
-        Bm25.writeIndex(Bm25.mergeIndex(old, fresh, "doc_id", "text"), next)
-    }
-    swapPointer(dir, s"v$batchId")
-  }
+                                        dir: String)
+      : Option[graft.operators.Bm25.Version] =
+    graft.operators.Bm25.commitVersion(spark, dir,
+      batch.select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"),
+        col("chunk_text").as("text")), "doc_id", "text")
 
-  /** The CURRENT index store under a maintenance root, if any. */
-  def currentIndexPath(dir: String): Option[String] = {
-    val f = new java.io.File(dir, "CURRENT")
-    if (!f.exists()) None
-    else Some(new java.io.File(dir,
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim).getPath)
-  }
-
-  private def swapPointer(dir: String, version: String): Unit = {
-    val tmp = java.nio.file.Paths.get(dir, "CURRENT.tmp")
-    java.nio.file.Files.write(tmp,
-      version.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "CURRENT"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  /** The current index store under a maintenance root, if any: the newest
+    * committed version, else a pre-manifest store's `CURRENT` pointer. Its
+    * `stats` is the one-row table of the current totals. Read through the
+    * Hadoop FileSystem API of the active session.
+    */
+  def currentIndexPath(dir: String): Option[String] =
+    graft.operators.Bm25.Version.base(SparkSession.active, dir).map(_.path)
 
   /** Streaming dedup-at-ingest — the shape a 100 TB/day training pipeline
     * runs at the front door: each micro-batch of landed documents is
@@ -297,14 +275,18 @@ object StreamingIngest {
     * micro-batch of landed files is deduplicated against the lake
     * ([[dedupIngestStep]]), the survivors chunk exactly like the batch
     * path, new content keys embed through the cache anti-join
-    * ([[embedMaintenanceBatch]]), and the chunks merge into the versioned
-    * BM25 store ([[maintainIndexBatch]]). Every stage is
-    * replay-idempotent on its own artifact (chunk-id anti-join,
-    * all-duplicate pointer freeze), and the lake append runs LAST — the
-    * batch's commit point — so a crash anywhere mid-batch leaves the lake
-    * unchanged and the retry re-derives the same survivors instead of
-    * finding them "already ingested" with the embed/index work missing.
-    * The at-least-once foreachBatch contract therefore holds end to end.
+    * ([[embedMaintenanceBatch]]), and the chunks commit as the next
+    * version of the BM25 store ([[maintainIndexBatch]]).
+    *
+    * Commit order: embeddings, then the BM25 version (its manifest create
+    * commits it), then the lake append — the batch's commit point. Every
+    * stage is replay-idempotent on its own artifact (chunk-id anti-joins;
+    * an all-duplicate batch commits no BM25 version), so a crash anywhere
+    * mid-batch leaves the lake unchanged and the retry re-derives the same
+    * survivors instead of finding them "already ingested" with the
+    * embed/index work missing. The at-least-once foreachBatch contract
+    * therefore holds end to end, also after a lost checkpoint restarts the
+    * batch ids: BM25 version numbers come from the store's manifests.
     */
   def startKbMaintenance(spark: SparkSession, glob: String, dir: String,
                          provider: graft.embed.Embedder.Provider,
@@ -344,7 +326,7 @@ object StreamingIngest {
     // driver dies after any downstream stage, the retry re-derives the same
     // survivors (the lake is unchanged), and each stage drops already-done
     // work on ITS OWN artifact's anti-join (embeddings chunk ids, index
-    // lengths doc_ids, all-duplicate pointer freeze). Appending the lake
+    // lengths doc_ids). Appending the lake
     // FIRST would make the retry's survivors come back empty and the
     // documents would be permanently missing from the embeddings table and
     // the BM25 store.
@@ -358,7 +340,7 @@ object StreamingIngest {
       .withColumn("embedtext", TextFunctions.cleanText(col("chunk_text")))
       .localCheckpoint(true)
     embedMaintenanceBatch(spark, chunks, dir, provider)
-    maintainIndexBatch(spark, chunks, dir, batchId)
+    maintainIndexBatch(spark, chunks, dir)
     appendToLake(survivors, dir, batchId, lakeCols)
   }
 

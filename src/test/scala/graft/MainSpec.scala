@@ -494,16 +494,29 @@ class MainSpec extends SparkSpec {
     val in = Files.createTempDirectory("graft_cli_maintain_in").toString
     Files.writeString(Paths.get(in, "a.txt"), (1 to 60).map(i => s"word$i").mkString(" "))
     Files.writeString(Paths.get(in, "b.txt"), (1 to 60).map(i => s"word$i").mkString(" "))
-    Main.run(Array("maintain", kb, s"$in/*.txt"), spark)
+    def maintain(): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(out)) {
+        Main.run(Array("maintain", kb, s"$in/*.txt"), spark)
+      }
+      out.toString
+    }
+    // the summary reports the store's committed version and its segments
+    assert(maintain().contains(
+      "[graft] maintain: lake=1 version rows / 1 current docs, bm25 version=1 segments=1"))
     assert(spark.read.parquet(s"$kb/lake").count() == 1, "duplicate file deduped")
     val ix = graft.streaming.StreamingIngest.currentIndexPath(kb)
-    assert(ix.nonEmpty)
+    assert(ix.contains(s"$kb/v1"))
     val n1 = spark.read.parquet(s"$kb/embeddings").count()
     assert(n1 > 0)
     // re-run with nothing new: checkpointed source processes zero files
-    Main.run(Array("maintain", kb, s"$in/*.txt"), spark)
+    assert(maintain().contains("bm25 version=1 segments=1"))
     assert(spark.read.parquet(s"$kb/lake").count() == 1)
     assert(spark.read.parquet(s"$kb/embeddings").count() == n1)
+    // a new file commits the next version as a second segment
+    Files.writeString(Paths.get(in, "c.txt"), (1 to 60).map(i => s"other$i").mkString(" "))
+    assert(maintain().contains(
+      "[graft] maintain: lake=2 version rows / 2 current docs, bm25 version=2 segments=2"))
   }
 
   test("maintained kb: query serves the LATEST committed text with sticky created_at") {

@@ -218,6 +218,30 @@ class VectorSearchSpec extends SparkSpec {
     assert(rd.assigned.columns.contains("cluster_id"))
   }
 
+  test("IVF store writes keep the in-process rung fresh on a filesystem with no java.io view") {
+    val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_ivf_noio")
+    val cents = Array(corpus(0)._2, corpus(1)._2)
+    val seeded = cents.toSeq.zipWithIndex.map { case (cv, cid) => (cid, cv.toSeq) }
+    def write(rows: Seq[(Long, Array[Float])]): Unit =
+      VectorSearch.writeIvf(VectorSearch.IvfIndex(
+        VectorSearch.seededIvfAssign(rows.toDF("vec_id", "embedding"),
+          "vec_id", "embedding", seeded), cents, "vec_id", "embedding"), dir)
+    // served in process from a stored index, whose memo key is
+    // `stored:<dir>@0` here (no java.io view, fingerprint 0)
+    def top1(): Long =
+      VectorSearch.roundedIvfTopKInProcess(VectorSearch.readIvf(spark, dir),
+          Seq((0L, query, Seq(0, 1))), k = 1, scale = 6)
+        .getOrElse(fail("the stored index must serve in process"))
+        .select("doc_id").as[Long].head()
+    write(corpus)
+    assert(PathFingerprint(s"$dir/assigned") == 0L)
+    assert(top1() != 500L)
+    VectorSearch.appendIvfStore(spark, dir, Seq((500L, query)).toDF("vec_id", "embedding"))
+    assert(top1() == 500L, "an append must reach the in-process rung")
+    write(corpus :+ (600L -> query))
+    assert(top1() == 600L, "a rewrite must reach the in-process rung")
+  }
+
   test("PQ: driver LUT is bit-identical to the l2Sq column expression") {
     val emb = corpus.toDF("vec_id", "embedding")
     val cb = VectorSearch.seededPqCodebook(emb, "vec_id", "embedding",

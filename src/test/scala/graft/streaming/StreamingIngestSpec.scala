@@ -198,9 +198,112 @@ class StreamingIngestSpec extends SparkSpec {
         explode(graft.ingest.Chunker.chunks(col("text"), 200, 50)).as("c"))
       .select(col("sourcedoc"), col("c.sid").as("sid"),
         col("c.chunk_text").as("chunk_text"))
-    StreamingIngest.maintainIndexBatch(spark, replay, ixd, batchId = 99L)
+    assert(StreamingIngest.maintainIndexBatch(spark, replay, ixd).isEmpty)
     assert(StreamingIngest.currentIndexPath(ixd).get == v2,
-      "all-duplicate replay must not advance the pointer")
+      "all-duplicate replay must not commit a version")
+
+    // more commits, one new chunk each, until the store compacts: the
+    // commit that would list MaxSegments + 1 segments writes one merged
+    // segment, and the next one extends it again
+    val extra = (1 to Bm25.MaxSegments).map(i =>
+      (s"extra$i.txt", 0, (1 to 30).map(j => s"x${i}w$j common").mkString(" ")))
+    val segments = extra.map { e =>
+      StreamingIngest.maintainIndexBatch(spark,
+        Seq(e).toDF("sourcedoc", "sid", "chunk_text"), ixd).get.segments.size
+    }
+    assert(segments == (3 to Bm25.MaxSegments) ++ Seq(1, 2), segments)
+    val current = StreamingIngest.currentIndexPath(ixd).get
+    assert(current.endsWith(s"/v${2 + extra.size}"), current)
+    // append == rebuild after compaction too: the served version equals
+    // writeIndex(buildIndex(all chunks)) read back
+    val ref = Files.createTempDirectory("graft_stream_ix_ref").toString
+    Bm25.writeIndex(Bm25.buildIndex(rebuiltDocs.unionByName(extra.toDF("sourcedoc", "sid", "text")
+      .select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"), col("text"))),
+      "doc_id", "text"), ref)
+    val (got, exp) = (Bm25.readIndex(spark, current), Bm25.readIndex(spark, ref))
+    assert(rows(got.postings, Seq("doc_id", "term", "tf", "doc_len", "term_bucket")) ==
+      rows(exp.postings, Seq("doc_id", "term", "tf", "doc_len", "term_bucket")))
+    assert(rows(got.lengths, Seq("doc_id", "doc_len")) == rows(exp.lengths, Seq("doc_id", "doc_len")))
+    assert(rows(got.idf, Seq("term", "df", "idf")) == rows(exp.idf, Seq("term", "df", "idf")))
+    assert(got.nDocs == exp.nDocs && got.avgdl == exp.avgdl && got.termBuckets == exp.termBuckets)
+    assert(spark.read.parquet(s"$current/stats").select("n").head().getLong(0) == exp.nDocs)
+  }
+
+  test("a pre-manifest maintained store reads as one segment the next commit extends") {
+    import graft.operators.Bm25
+    val kb = Files.createTempDirectory("graft_stream_legacy").toString
+    def chunk(f: String, w: String) =
+      (f, 0, (1 to 40).map(i => s"$w$i shared").mkString(" "))
+    val old = Seq(chunk("a.txt", "alpha"), chunk("b.txt", "beta"))
+    val docs = (rows: Seq[(String, Int, String)]) => rows.toDF("sourcedoc", "sid", "text")
+      .select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"), col("text"))
+    // the layout maintain wrote before manifests: a full store + CURRENT
+    Bm25.writeIndex(Bm25.buildIndex(docs(old), "doc_id", "text"), s"$kb/v3")
+    Files.write(Paths.get(kb, "CURRENT"), "v3".getBytes(StandardCharsets.UTF_8))
+    assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v3"))
+    val fresh = Seq(chunk("c.txt", "gamma"))
+    val v = StreamingIngest.maintainIndexBatch(spark,
+      (old ++ fresh).toDF("sourcedoc", "sid", "chunk_text"), kb).get
+    assert(v.number == 4L && v.segments == Seq("v3", "v4"))
+    assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v4"))
+    val got = Bm25.readIndex(spark, s"$kb/v4")
+    val exp = Bm25.buildIndex(docs(old ++ fresh), "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+    assert(rows(got.postings, "doc_id", "term", "tf", "doc_len") ==
+      rows(exp.postings, "doc_id", "term", "tf", "doc_len"))
+    assert(rows(got.idf, "term", "df", "idf") == rows(exp.idf, "term", "df", "idf"))
+    assert(got.nDocs == 3L && got.avgdl == exp.avgdl)
+  }
+
+  test("maintenance commits on a filesystem with no java.io view") {
+    import graft.operators.Bm25
+    val kb = graft.NoJavaIoFileSystem.tempDir(spark, "graft_stream_noio")
+    val provider = graft.embed.Embedder.Deterministic(8)
+    val w1 = Seq(("a.txt", (1 to 60).map(i => s"alpha$i").mkString(" ")),
+      ("b.txt", (1 to 60).map(i => s"beta$i").mkString(" "))).toDF("doc_id", "text")
+    val w2 = Seq(("c.txt", (1 to 60).map(i => s"gamma$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    StreamingIngest.kbMaintenanceBatch(spark, w1, kb, provider, batchId = 0L)
+    val v1 = StreamingIngest.currentIndexPath(kb)
+    StreamingIngest.kbMaintenanceBatch(spark, w2, kb, provider, batchId = 1L)
+    val v2 = StreamingIngest.currentIndexPath(kb)
+    assert(v1.nonEmpty && v2.nonEmpty && v1 != v2, s"$v1 -> $v2")
+    assert(spark.read.parquet(s"$kb/lake").select("doc_id").as[String].collect().toSet ==
+      Set("a.txt", "b.txt", "c.txt"))
+    val chunks = spark.read.parquet(s"$kb/embeddings").count()
+    val ix = Bm25.readIndex(spark, v2.get)
+    assert(ix.nDocs == chunks && ix.lengths.count() == chunks)
+    assert(Bm25.scoreWithIndex(ix, spark, "gamma7").head().getString(0).startsWith("c.txt"))
+  }
+
+  test("maintenance restarted after its checkpoint was lost commits a new version") {
+    import graft.operators.Bm25
+    val in = Files.createTempDirectory("graft_stream_lostck_in").toString
+    val kb = Files.createTempDirectory("graft_stream_lostck").toString
+    val provider = graft.embed.Embedder.Deterministic(8)
+    Files.write(Paths.get(in, "a.txt"),
+      (1 to 60).map(i => s"alpha$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
+    StreamingIngest.startKbMaintenance(spark, s"$in/*.txt", kb, provider).awaitTermination()
+    val v1 = StreamingIngest.currentIndexPath(kb).get
+    // the checkpoint is lost: the restarted stream re-reads every file and
+    // numbers its batches from 0 again
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new java.io.File(kb, "_checkpoint"))
+    Files.write(Paths.get(in, "b.txt"),
+      (1 to 60).map(i => s"beta$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
+    StreamingIngest.startKbMaintenance(spark, s"$in/*.txt", kb, provider).awaitTermination()
+    val v2 = StreamingIngest.currentIndexPath(kb).get
+    assert(v2 != v1, "the restart must commit a new version, not rewrite the one it reads")
+    val lake = spark.read.parquet(s"$kb/lake").select("doc_id").as[String].collect()
+    assert(lake.length == 2 && lake.exists(_.endsWith("a.txt")) && lake.exists(_.endsWith("b.txt")))
+    val chunks = spark.read.parquet(s"$kb/embeddings").count()
+    assert(spark.read.parquet(s"$kb/embeddings").select("chunk_id").distinct().count() == chunks)
+    val ix = Bm25.readIndex(spark, v2)
+    assert(ix.nDocs == chunks && ix.lengths.count() == chunks)
+    assert(spark.read.parquet(s"$v2/stats").select("n").head().getLong(0) == chunks)
   }
 
   test("streaming dedup-at-ingest: in-batch + vs-lake dedup, replay appends nothing") {
@@ -395,7 +498,7 @@ class StreamingIngestSpec extends SparkSpec {
           graft.functions.TextFunctions.cleanText(col("chunk_text")))
         .localCheckpoint(true)
       StreamingIngest.embedMaintenanceBatch(spark, chunks, kb, provider)
-      StreamingIngest.maintainIndexBatch(spark, chunks, kb, batchId = 5L)
+      StreamingIngest.maintainIndexBatch(spark, chunks, kb)
       // crash here: appendToLake never runs
     }
     assert(!new java.io.File(s"$kb/lake").exists(), "lake must not have advanced")
