@@ -257,15 +257,19 @@ object Bm25 {
     * (30.8 → 21.6 s at 100×, same-day A/B) is substantially this
     * footer/open amplification disappearing; on real vocabularies the page
     * pruning is the operative half. `termBuckets = 0` writes flat,
-    * term-sorted postings.
+    * term-sorted postings; `partitioned = false` keeps `term_bucket` as a
+    * column of flat files (a [[Version]] segment), pruned by row-group
+    * statistics instead of by directory.
     */
   private def writePostings(post: DataFrame, path: String, termBuckets: Int,
-                            mode: String): Unit =
-    if (termBuckets > 0)
-      post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
+                            mode: String, partitioned: Boolean = true): Unit =
+    if (termBuckets > 0) {
+      val w = post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
         .repartition(col("term_bucket"))
         .sortWithinPartitions("term_bucket", "term", "doc_id")
-        .write.mode(mode).partitionBy("term_bucket").parquet(path)
+        .write.mode(mode)
+      (if (partitioned) w.partitionBy("term_bucket") else w).parquet(path)
+    }
     else post.sortWithinPartitions("term", "doc_id").write.mode(mode).parquet(path)
 
   // r19: the Index PLANS are memoized per (session, key) too — every
@@ -434,20 +438,23 @@ object Bm25 {
 
   /** One committed version of a versioned BM25 store — the `maintain`
     * store — rooted at `root`. Commit N writes `root/v<N>/`: one immutable
-    * segment (the batch's `postings`, term-bucketed and term-sorted within
-    * each bucket, its `lengths`, and `_files`, the list of their data
-    * files) plus the version's vocab-sized `idf` and one-row `stats`. It
-    * then creates `root/_manifest/v<N>` with overwrite = false — the
-    * commit point, through the Hadoop FileSystem API only, with no rename.
-    * The manifest names the live segments, their schemas and the
-    * [[Totals]], so a reader opens exactly the segments' listed files with
-    * no schema inference and no directory listing, and a version never
-    * changes once committed. A manifest without its closing `end` line is
-    * a crashed commit and reads as absent.
+    * segment (the batch's `postings`, flat files that carry `term_bucket`
+    * as a column, sorted by bucket and term, and its `lengths`) plus the
+    * version's vocab-sized `idf` and one-row `stats`. It then creates
+    * `root/_manifest/v<N>` with overwrite = false — the commit point,
+    * through the Hadoop FileSystem API only, with no rename. The manifest
+    * names the live segments, their schemas and the [[Totals]], so a
+    * reader opens one flat directory per segment and table with no schema
+    * inference. Spark's driver lists them itself, so opening a version
+    * runs no Spark job (a directory of 64 bucket directories would list
+    * in a job of its own). A version never changes once committed. A
+    * manifest without its closing `end` line is a crashed commit and reads
+    * as absent.
     *
     * A store written before manifests has a `CURRENT` pointer to a full
-    * store `v<K>`; it reads as one segment (its files listed from its
-    * directories), which the next commit extends.
+    * store `v<K>`; it reads as one segment, which the next commit extends
+    * (its bucket directories list in that one job until a compaction
+    * merges it).
     */
   private[graft] final case class Version(root: String, number: Long,
                                           totals: Totals,
@@ -457,16 +464,15 @@ object Bm25 {
     def path: String = s"$root/v$number"
     def key: String = s"stored:$root@v$number"
 
-    private def table(spark: SparkSession, t: String) =
-      segments.flatMap(seg => Version.segmentFiles(spark, root, seg)
-        .filter(_.startsWith(s"$t/")).map(f => s"$root/$seg/$f"))
-    def lengths(spark: SparkSession): DataFrame =
-      Version.read(spark, lengthsSchema, table(spark, "lengths"), root)
+    private def table(spark: SparkSession, t: String, schema: StructType): DataFrame =
+      segments.map(seg => spark.read.schema(schema).parquet(s"$root/$seg/$t"))
+        .reduce(_ unionByName _)
+    def lengths(spark: SparkSession): DataFrame = table(spark, "lengths", lengthsSchema)
     def idf(spark: SparkSession): DataFrame =
       spark.read.schema(IdfSchema).parquet(s"$path/idf")
     def index(spark: SparkSession): Index =
-      Index(Version.read(spark, postingsSchema, table(spark, "postings"), root),
-        lengths(spark), idf(spark), totals.toDF(spark), cacheKey = Some(key))
+      Index(table(spark, "postings", postingsSchema), lengths(spark), idf(spark),
+        totals.toDF(spark), cacheKey = Some(key))
 
     private[Bm25] def render: String =
       (Seq(s"version $number",
@@ -489,13 +495,6 @@ object Bm25 {
         try Some(new String(in.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
       } catch { case _: java.io.FileNotFoundException => None }
-
-    private def writeText(spark: SparkSession, path: String, text: String,
-                          overwrite: Boolean): Unit = {
-      val out = fs(spark, path).create(new Path(path), overwrite)
-      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
 
     private def numbers(spark: SparkSession, root: String): Seq[Long] =
       try fs(spark, root).listStatus(new Path(s"$root/_manifest")).toSeq
@@ -556,58 +555,35 @@ object Bm25 {
       (numbers(spark, root) ++ legacyName(spark, root).collect {
         case Name(n) => n.toLong }).maxOption.getOrElse(0L) + 1
 
-    /** The data files of segment `seg`, relative to its directory: its
-      * `_files` list, else (a pre-manifest store) its directories' files
-      * that are not `_`/`.` hidden.
-      */
-    private def segmentFiles(spark: SparkSession, root: String, seg: String): Seq[String] =
-      readText(spark, s"$root/$seg/_files").fold(listFiles(spark, s"$root/$seg"))(
-        _.split("\n").toSeq.filter(_.nonEmpty))
-
-    private def listFiles(spark: SparkSession, dir: String): Seq[String] = {
-      val f = fs(spark, dir)
-      def walk(d: Path, rel: String): Seq[String] =
-        f.listStatus(d).toSeq.map(st => (st, st.getPath.getName))
-          .filterNot { case (_, n) => n.startsWith("_") || n.startsWith(".") }
-          .sortBy(_._2).flatMap { case (st, n) =>
-            if (st.isDirectory) walk(st.getPath, s"$rel/$n") else Seq(s"$rel/$n") }
-      Seq("postings", "lengths").flatMap(t => walk(new Path(s"$dir/$t"), t))
-    }
-
-    /** Exact files under one reader, partition columns discovered below
-      * `root`: the segments' `term_bucket=K` directories sit under
-      * different `v<N>/postings` parents, which Spark's one-base-path rule
-      * would reject.
-      */
-    private def read(spark: SparkSession, schema: StructType, files: Seq[String],
-                     root: String): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      else spark.read.schema(schema).option("basePath", root)
-        .option("ignoreInvalidPartitionPaths", "true").parquet(files: _*)
-
-    /** Commit `v`, whose own segment `v<N>` is written: list that
-      * segment's files, then create the manifest, failing if that version
-      * exists.
+    /** Commit `v`, whose own segment is written: create its manifest,
+      * failing if that version exists.
       */
     private[Bm25] def create(spark: SparkSession, v: Version): Unit = {
-      writeText(spark, s"${v.path}/_files",
-        listFiles(spark, v.path).mkString("", "\n", "\n"), overwrite = true)
-      writeText(spark, s"${v.root}/_manifest/v${v.number}", v.render, overwrite = false)
+      val out = fs(spark, v.root).create(new Path(s"${v.root}/_manifest/v${v.number}"), false)
+      try out.write(v.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
     }
   }
 
-  /** Commit `docs` to the versioned store at `root` as one new [[Version]],
-    * O(batch): the batch's docs not yet in the store (the replay guard, an
-    * anti-join on the stored lengths) become one new segment, and the idf
-    * and totals advance by [[appendDelta]] — the arithmetic of
-    * [[appendIndexStore]]. A commit that would list more than
-    * [[MaxSegments]] segments, or extend a store of another layout, writes
-    * one merged segment of the whole store instead. The version number is
-    * the manifest's latest + 1. Every write lands in the new `v<N>`
-    * directory (a crashed attempt's leftovers there are overwritten), and
-    * the manifest create is the commit point. Returns None, and commits
+  /** Commit `docs` to the versioned store at `root` as one new [[Version]].
+    * The batch's docs not yet in the store become one new segment, and the
+    * idf and totals advance by [[appendDelta]], the arithmetic of
+    * [[appendIndexStore]]. A commit so writes the batch's segment, a
+    * vocab-sized idf and the one-row stats, and reads every live segment's
+    * lengths once for the replay guard (the anti-join that drops docs
+    * already stored). A commit that would list more than [[MaxSegments]]
+    * segments, or extend a store of another layout, instead rewrites the
+    * whole store as one merged segment. The version number is the
+    * manifest's latest + 1. Every write lands in the new `v<N>` directory
+    * (a crashed attempt's leftovers there are overwritten), and the
+    * manifest create is the commit point. Returns None, and commits
     * nothing, when every batch doc is already in the store.
+    *
+    * Contract: doc ids are unique within `docs` (maintain's chunk ids
+    * are). A doc's length is then its token count, so the segment derives
+    * from the batch rows directly; building it through [[postings]] and
+    * [[docLengths]] instead costs two more aggregations and a lengths join,
+    * 18 Spark jobs a commit where this takes 10.
     */
   private[graft] def commitVersion(spark: SparkSession, root: String, docs: DataFrame,
                                    idCol: String, textCol: String): Option[Version] = {
@@ -627,9 +603,8 @@ object Bm25 {
     val batchTotals = Totals(m("n").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long],
       m("n_len").asInstanceOf[Long], 0)
     if (batchTotals.n == 0L) return None
-    // batch doc ids are unique (chunk ids), so a doc's length is its token
-    // count: postings carry it with no lengths join, and lengths and df
-    // need no postings aggregation
+    // unique doc ids: postings carry doc_len with no lengths join, and
+    // lengths and df need no postings aggregation
     val post = fresh.select(col("doc_id"), explode(tokens).as("term"), docLen.as("doc_len"))
       .groupBy("doc_id", "term", "doc_len").agg(count(lit(1)).as("tf"))
       .select("doc_id", "term", "tf", "doc_len")
@@ -646,7 +621,8 @@ object Bm25 {
       (withDocLen(ix).drop("term_bucket").unionByName(post),
         ix.lengths.unionByName(lens))
     }
-    writePostings(segPostings, s"$dir/postings", DefaultTermBuckets, "overwrite")
+    writePostings(segPostings, s"$dir/postings", DefaultTermBuckets, "overwrite",
+      partitioned = false)
     segLens.write.mode("overwrite").parquet(s"$dir/lengths")
     val (idf2, totals) = appendDelta(prev.map(_.idf(spark)),
       prev.fold(Totals(0L, 0L, 0L, 0))(_.totals).copy(termBuckets = DefaultTermBuckets),

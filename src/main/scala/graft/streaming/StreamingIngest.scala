@@ -66,8 +66,12 @@ object StreamingIngest {
     * Commit order: the batch's segment, idf and stats land in a fresh
     * `dir/v<N>`, then the manifest `dir/_manifest/v<N>` is created with
     * overwrite = false — the commit point ([[graft.operators.Bm25.Version]]).
-    * Readers open the newest manifest's files, so they never observe a
-    * half-written version, and the commit never reads the files it writes.
+    * Readers open the segments the newest manifest names, so they never
+    * observe a half-written version, and the commit never reads the files
+    * it writes. A commit writes the batch's segment and the vocab-sized
+    * idf and reads the stored lengths once (the replay guard below); one
+    * commit in every [[graft.operators.Bm25.MaxSegments]] rewrites the
+    * whole store as one merged segment instead.
     * foreachBatch is at-least-once, so a replayed batch is made idempotent
     * by the S5 anti-join: chunk ids already in the stored lengths drop
     * out, and an all-duplicate replay commits no version. Old versions
@@ -86,7 +90,7 @@ object StreamingIngest {
       .start()
 
   /** The per-micro-batch maintenance step of [[startIndexMaintenance]] —
-    * an O(batch) commit of the batch's chunks as the store's next version
+    * a commit of the batch's chunks as the store's next version
     * ([[graft.operators.Bm25.commitVersion]]); None when the batch holds
     * no new chunk. Factored out so specs (and replay-idempotence tests)
     * can drive it directly with a deterministic batch.

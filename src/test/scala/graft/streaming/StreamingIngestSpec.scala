@@ -208,8 +208,15 @@ class StreamingIngestSpec extends SparkSpec {
     val extra = (1 to Bm25.MaxSegments).map(i =>
       (s"extra$i.txt", 0, (1 to 30).map(j => s"x${i}w$j common").mkString(" ")))
     val segments = extra.map { e =>
-      StreamingIngest.maintainIndexBatch(spark,
-        Seq(e).toDF("sourcedoc", "sid", "chunk_text"), ixd).get.segments.size
+      val v = StreamingIngest.maintainIndexBatch(spark,
+        Seq(e).toDF("sourcedoc", "sid", "chunk_text"), ixd).get
+      // Spark lists a version's flat segment directories without a job,
+      // and the manifest holds the schemas: opening it runs no job at any
+      // segment count
+      val (ix, jobs) = graft.JobCount(spark)(Bm25.readIndex(spark, v.path))
+      assert(jobs == 0, s"opening ${v.segments.size} segments ran $jobs jobs")
+      assert(ix.lengths.count() == v.totals.nLen)
+      v.segments.size
     }
     assert(segments == (3 to Bm25.MaxSegments) ++ Seq(1, 2), segments)
     val current = StreamingIngest.currentIndexPath(ixd).get
