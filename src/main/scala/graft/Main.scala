@@ -113,6 +113,17 @@ object Main {
           col("created_at"), col("updated_at")))
     else None
 
+  /** The stored BM25 index the serving verbs read: the batch-built
+    * `kb/bm25` store wins; otherwise the current version of a
+    * `maintain`-built store, so a stream-maintained kb serves without a
+    * separate batch `bm25` run.
+    */
+  private def storedBm25(spark: SparkSession,
+                         kb: String): Option[graft.operators.Bm25.Index] =
+    (if (graft.sources.KbStorage.pathExists(spark, s"$kb/bm25")) Some(s"$kb/bm25")
+     else graft.streaming.StreamingIngest.currentIndexPath(kb))
+      .map(graft.operators.Bm25.readIndex(spark, _))
+
   /** The serving embeddings table: maintained kbs key vectors by
     * `chunk_id` (the lifecycle's append-only artifact) — adapt to the
     * pipeline's `doc_id` convention.
@@ -317,13 +328,8 @@ object Main {
         val chunks = servingChunks(spark, kb, loadCfg(Array.empty, 99, kb))
           .getOrElse(sys.error(s"search: no $kb/chunks and no $kb/lake — " +
             "run the database or maintain verb first"))
-        def loadIx() =
-          if (graft.sources.KbStorage.pathExists(spark, s"$kb/bm25"))
-            graft.operators.Bm25.readIndex(spark, s"$kb/bm25")
-          else graft.streaming.StreamingIngest.currentIndexPath(kb)
-            .map(p => graft.operators.Bm25.readIndex(spark, p))
-            .getOrElse(graft.operators.Bm25.buildIndex(
-              chunks, "doc_id", "text"))
+        def loadIx() = storedBm25(spark, kb).getOrElse(
+          graft.operators.Bm25.buildIndex(chunks, "doc_id", "text"))
         val hits =
           if (args.contains("--phrase")) {
             if (graft.sources.KbStorage.pathExists(spark, s"$kb/posindex")) {
@@ -394,14 +400,7 @@ object Main {
             cfg0.copy(vectorDimensions = d)
           case _ => cfg0
         }
-        // BM25 store: the batch-built artifact wins; otherwise fall back to
-        // the newest committed version of a `maintain`-built store, so a
-        // stream-maintained kb serves without a separate batch `bm25` run
-        val ix =
-          if (graft.sources.KbStorage.pathExists(spark, s"$kb/bm25"))
-            Some(graft.operators.Bm25.readIndex(spark, s"$kb/bm25"))
-          else graft.streaming.StreamingIngest.currentIndexPath(kb)
-            .map(p => graft.operators.Bm25.readIndex(spark, p))
+        val ix = storedBm25(spark, kb)
         // ANN opt-in (config `index_type` = ivf/auto): build/reuse the
         // serving index for whatever tier the auto-selection policy picks —
         // the policy output IS the serving index (query/search.py:207-231);
@@ -445,8 +444,8 @@ object Main {
         val t0 = System.nanoTime()
         val res = KbPipeline.query(spark, chunks, emb, args(2), cfg,
           bm25Index = ix, serving = serving,
-          // fingerprinted like Bm25.readIndex's key: a corpus rewrite in
-          // the SAME session must never serve the stale memoized broadcast
+          // fingerprinted: a corpus rewrite in the SAME session must
+          // never serve the stale memoized broadcast
           corpusKey = Some(s"$kb/embeddings@" +
             graft.operators.PathFingerprint(s"$kb/embeddings")),
           // query-embedding cache: a repeated query is served from its
@@ -552,13 +551,20 @@ object Main {
         val findings = Tuning.verifyLayout(spark, s"`$kb`.chunks",
           Some(s"$kb/embeddings_ivf")) // catalog-registered KBs only
         val pathFindings = Seq(
-          s"$kb/chunks" -> "chunk table", s"$kb/embeddings" -> "embeddings",
-          s"$kb/bm25/postings" -> "bm25 postings").flatMap { case (p, what) =>
-          if (!graft.sources.KbStorage.pathExists(spark, p))
-            Some(s"$what missing at $p")
-          else None
-        }
-        val all = pathFindings // layout findings need catalog tables
+          s"$kb/chunks" -> "chunk table", s"$kb/embeddings" -> "embeddings")
+          .flatMap { case (p, what) =>
+            if (!graft.sources.KbStorage.pathExists(spark, p))
+              Some(s"$what missing at $p")
+            else None
+          }
+        // the BM25 store: a committed version of the `bm25` verb's store,
+        // else of a `maintain`-built one
+        val bm25 = Seq(s"$kb/bm25", kb).view
+          .flatMap(graft.operators.Bm25.Version.latest(spark, _)).headOption
+        bm25.foreach(v => println(
+          s"[graft] verify-indexes: bm25 version ${v.number} at ${v.root}"))
+        val all = pathFindings ++ // layout findings need catalog tables
+          Option.when(bm25.isEmpty)(s"bm25 store missing: no committed version under $kb/bm25 or $kb")
         if (all.isEmpty) println("[graft] verify-indexes: healthy")
         else all.foreach(f => println(s"[graft] verify-indexes: $f"))
 
@@ -634,7 +640,7 @@ object Main {
              graft.streaming.StreamingIngest.lakeCurrent(spark, kb).count())
           else (0L, 0L)
         // the store's committed version and its live segments
-        val bm25 = graft.operators.Bm25.Version.base(spark, kb)
+        val bm25 = graft.operators.Bm25.Version.latest(spark, kb)
           .fold("version=none")(v => s"version=${v.number} segments=${v.segments.size}")
         println(s"[graft] maintain: lake=$lakeN version rows / $curN current docs, " +
           s"bm25 $bm25")
@@ -706,13 +712,8 @@ object Main {
         val chunks = spark.read.parquet(s"$kb/chunks")
           .withColumnRenamed("chunk_text", "text")
         val emb = spark.read.parquet(s"$kb/embeddings")
-        val ix =
-          if (graft.sources.KbStorage.pathExists(spark, s"$kb/bm25"))
-            graft.operators.Bm25.readIndex(spark, s"$kb/bm25")
-          else graft.streaming.StreamingIngest.currentIndexPath(kb)
-            .map(p => graft.operators.Bm25.readIndex(spark, p))
-            .getOrElse(graft.operators.Bm25.buildIndex(
-              chunks, "doc_id", "text"))
+        val ix = storedBm25(spark, kb).getOrElse(
+          graft.operators.Bm25.buildIndex(chunks, "doc_id", "text"))
         val provider = graft.embed.Embedder.Retrying(
           graft.models.ModelRegistry.embedderFor(cfg.vectorModel,
             cfg.vectorDimensions), cfg.apiMaxRetries)

@@ -276,9 +276,8 @@ object Scale {
     // The round-10 caveat was that e2e serving growth is dominated by the
     // shared BM25 build (2.5× at 20×). Splitting the rows: store-write is
     // the one-time linear indexing cost; the SCORE stage against the
-    // stored index partition-prunes to the query terms' buckets, so its
-    // growth tracks matching postings, not corpus bytes. The -flat row is
-    // the same query against an unbucketed store (the pruning A/B).
+    // stored index bucket-prunes to the query terms' buckets, so its
+    // growth tracks matching postings, not corpus bytes.
     def bm25StoreWrite(d: DataFrame, path: String, buckets: Int): Unit = {
       val ix = operators.Bm25.buildIndex(d, "doc_id", "text", persist = true)
       try operators.Bm25.writeIndex(ix, path, termBuckets = buckets)
@@ -292,12 +291,10 @@ object Scale {
     }
     secs(s"bm25-store-write 1x")(bm25StoreWrite(docs, s"$base/bm25_1x", operators.Bm25.DefaultTermBuckets))
     secs(s"bm25-store-write ${kDocs}x")(bm25StoreWrite(bigDocs, s"$base/bm25_${kDocs}x", operators.Bm25.DefaultTermBuckets))
-    secs(s"bm25-store-write-flat ${kDocs}x")(bm25StoreWrite(bigDocs, s"$base/bm25_flat_${kDocs}x", 0))
     // lazy: a filtered run that skips the store-write rows must not load
     // (or fail on) stores it never references
     lazy val ix1 = bm25StoredProbe(s"$base/bm25_1x")
     lazy val ixK = bm25StoredProbe(s"$base/bm25_${kDocs}x")
-    lazy val ixFlatK = bm25StoredProbe(s"$base/bm25_flat_${kDocs}x")
     // inProcessLimit = 0: these rows are the DISTRIBUTED pruned-scan scale
     // evidence (the 100 TB path); the -inproc rows measure the guarded
     // in-process serving tier the same stored index takes by default
@@ -305,8 +302,6 @@ object Scale {
       operators.Bm25.scoreWithIndex(ix1, spark, scaleQ, inProcessLimit = 0).count())
     secs(s"bm25-stored-score-1q ${kDocs}x")(
       operators.Bm25.scoreWithIndex(ixK, spark, scaleQ, inProcessLimit = 0).count())
-    secs(s"bm25-stored-score-1q-flat ${kDocs}x")(
-      operators.Bm25.scoreWithIndex(ixFlatK, spark, scaleQ, inProcessLimit = 0).count())
     secs(s"bm25-stored-score-1q-inproc 1x")(
       operators.Bm25.scoreWithIndex(ix1, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc ${kDocs}x")(
@@ -1713,10 +1708,12 @@ object Scale {
     }
 
     // ── r15: at-rest BM25 store APPEND — a FIXED 500-doc batch against
-    //    the 1x/20x/100x stores. Claim: cost tracks the BATCH (postings/
-    //    lengths partition-wise append + vocab-sized idf rewrite), not
-    //    the store. Runs LAST because it mutates the stores the serving
-    //    rows above read; a filtered run must include bm25-store-write. ──
+    //    the 1x/20x/100x stores. Claim: cost tracks the BATCH (one new
+    //    segment + vocab-sized idf rewrite), not the store. Each append
+    //    commits a new version, so the serving rows above keep the
+    //    one-segment version they opened; the rows run last so they time
+    //    the append onto the store the write rows made, and a filtered
+    //    run must include bm25-store-write. ──
     def bm25StoreAppend(tag: String): Long = {
       val batch = docs.limit(500).select(
         (col("doc_id") + lit(1950000000L)).as("doc_id"), col("text"))

@@ -12,10 +12,13 @@ import graft.functions.TextFunctions
   * (`/root/reference/embedding/bm25_manager.py:64-99`) and scores queries by
   * materializing a dense score per document
   * (`bm25_manager.py:284-287`). Here the "index" is two DataFrames —
-  * postings `(doc_id, term, tf)` and per-document lengths — that in
-  * production would be written as parquet bucketed by `term`, so query-side
-  * scoring is a semi-join that touches only the postings of the query's
-  * terms (partition-pruned at 100 TB instead of a full dense pass).
+  * postings `(doc_id, term, tf)` and per-document lengths — written at
+  * rest as versions of one store ([[Version]]): flat postings files that
+  * carry `crc32(term) mod n` as a `term_bucket` column and are sorted by
+  * bucket, term and doc id, so query-side scoring is a semi-join whose
+  * `term_bucket IN (…)` and `term IN (…)` filters parquet row-group and
+  * page statistics skip down to the postings of the query's terms
+  * instead of a full dense pass.
   *
   * Okapi parameters k1=1.2, b=0.75 match the reference defaults
   * (`/root/reference/config/models.py:162-163`).
@@ -76,8 +79,8 @@ object Bm25 {
   /** The prebuilt BM25 index (S8): postings + lengths + idf + corpus
     * stats. The reference persists this as NPZ and loads it per query
     * (`/root/reference/embedding/bm25_manager.py:115-211`); here the
-    * DataFrames are persisted (memory/disk) and — at cluster scale —
-    * written as parquet bucketed by `term`.
+    * DataFrames are persisted (memory/disk) and written at rest as a
+    * [[Version]] of a store ([[writeIndex]], [[readIndex]]).
     */
   final case class Index(postings: DataFrame, lengths: DataFrame,
                          idf: DataFrame, stats: DataFrame,
@@ -118,11 +121,12 @@ object Bm25 {
       else None
   }
 
-  /** Default term-bucket count for at-rest postings. At 100 TB each bucket
-    * is a partition directory; a query's handful of terms touches a handful
-    * of directories out of 64 — the NPZ-loads-only-term-arrays regime
-    * (`/root/reference/embedding/bm25_manager.py:115-211`) as file-level
-    * partition pruning.
+  /** Default term-bucket count for at-rest postings. A query's handful of
+    * terms touches a handful of buckets out of 64, and the bucket-sorted
+    * files let parquet statistics skip the rest — the
+    * NPZ-loads-only-term-arrays regime
+    * (`/root/reference/embedding/bm25_manager.py:115-211`) as row-group and
+    * page pruning.
     */
   val DefaultTermBuckets = 64
 
@@ -135,7 +139,7 @@ object Bm25 {
     pmod(crc32(term.cast("binary")), lit(n.toLong)).cast("int")
 
   /** Driver twin of [[termBucket]], for turning a query's (driver-held)
-    * term list into a partition-pruning `isin` literal with no Spark job.
+    * term list into a bucket-pruning `isin` literal with no Spark job.
     * Twin≡expression is spec-asserted over the full test vocabulary.
     */
   def termBucketValue(term: String, n: Int): Int = {
@@ -188,7 +192,7 @@ object Bm25 {
     val np0 = postings(newDocs, idCol, textCol)
     val npLens = docLengths(np0)
     val np = np0.join(npLens, "doc_id")
-    // a term-bucketed STORED index carries the term_bucket partition
+    // a term-bucketed STORED index carries the term_bucket
     // column the fresh batch lacks — drop it before the union (the merged
     // in-memory index is not bucket-complete anyway; Index.termBuckets
     // goes None so no pruning is attempted, and writeIndex re-derives the
@@ -203,7 +207,7 @@ object Bm25 {
 
   /** Incremental index maintenance, delete side: drop a set of doc ids from
     * the index without touching other postings — an anti-join on `doc_id`
-    * (at rest: partition/bucket-pruned rewrite of only the affected files)
+    * (at rest: bucket-pruned rewrite of only the affected files)
     * plus a stats/idf recompute from the surviving postings. Equivalent to a
     * full rebuild over corpus ∖ removed (spec-asserted).
     */
@@ -217,79 +221,64 @@ object Bm25 {
     Index(post, lens, idf(post, n), statsOf(lens, n))
   }
 
-  /** S8 index persistence: the reference writes NPZ + JSON sidecars
-    * (`bm25_manager.py:71-112`); here the index IS tables — written as
-    * parquet with postings PARTITIONED by `term_bucket` (crc32(term) mod
-    * `termBuckets`), so a query's semi-join scans only its terms' bucket
-    * directories (PartitionFilters in the served plan — Bm25Spec asserts
-    * it). `termBuckets = 0` writes flat postings (the pre-r11 layout; reads
-    * of either layout keep working). A rewrite in place keeps the store's
-    * memo key on a filesystem with no `java.io` view (fingerprint 0), so
-    * the write evicts `dir` from every session memo
-    * ([[SessionMemo.forget]]).
+  /** S8 index persistence: the reference writes NPZ + JSON sidecars and
+    * rewrites them whole on every change (`bm25_manager.py:71-112`); here
+    * the index IS tables, committed as the next [[Version]] of the store at
+    * `dir` — one segment holding every posting (bucketed into
+    * `termBuckets` term buckets) and length, plus the idf and the stats.
+    * The version replaces what the store served before; the commit keeps
+    * the previous version and collects older ones ([[Version.collect]]).
     */
   def writeIndex(ix: Index, dir: String,
                  termBuckets: Int = DefaultTermBuckets): Unit = {
-    // lengths/idf/stats all derive from postings: persist it for the span
-    // of the four writes or the full corpus aggregation re-runs per sink
+    require(termBuckets > 0, s"writeIndex: termBuckets must be positive, got $termBuckets")
+    val spark = ix.postings.sparkSession
+    // lengths/idf/stats derive from the postings' corpus aggregation:
+    // persist postings for the span of the writes or it re-runs per sink
     val alreadyPersisted = ix.postings.storageLevel != StorageLevel.NONE
     val post = if (alreadyPersisted) ix.postings
       else ix.postings.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      writePostings(post, s"$dir/postings", termBuckets, "overwrite")
-      ix.lengths.write.mode("overwrite").parquet(s"$dir/lengths")
-      ix.idf.write.mode("overwrite").parquet(s"$dir/idf")
-      ix.stats.withColumn("term_buckets", lit(termBuckets))
-        .write.mode("overwrite").parquet(s"$dir/stats")
-    } finally {
-      if (!alreadyPersisted) post.unpersist()
-      SessionMemo.forget(ix.postings.sparkSession, dir)
-    }
+    try commit(spark, dir, Version.latest(spark, dir), Nil,
+      withDocLen(ix.copy(postings = post)), ix.lengths, ix.idf,
+      totalsOf(ix).copy(termBuckets = termBuckets))
+    finally if (!alreadyPersisted) post.unpersist()
   }
 
-  /** Write a postings table: partitioned by `term_bucket` and SORTED BY
-    * TERM within each bucket file, so parquet page/row-group min-max
-    * statistics line up with the term IN (…) pushdown [[prunedPostings]]
-    * emits, and a query's scan skips to its terms' page runs instead of
-    * decoding the whole bucket. The repartition also consolidates each
-    * bucket to one file per task instead of one per (writer task ×
-    * bucket) — on the small-vocab test corpus the measured rm3-batch win
-    * (30.8 → 21.6 s at 100×, same-day A/B) is substantially this
-    * footer/open amplification disappearing; on real vocabularies the page
-    * pruning is the operative half. `termBuckets = 0` writes flat,
-    * term-sorted postings; `partitioned = false` keeps `term_bucket` as a
-    * column of flat files (a [[Version]] segment), pruned by row-group
-    * statistics instead of by directory.
+  /** Write a segment's postings: flat files that carry the `term_bucket`
+    * column, SORTED BY bucket, term and doc id, so parquet row-group and
+    * page min-max statistics line up with the `term_bucket IN (…)` and
+    * `term IN (…)` pushdown [[prunedPostings]] emits, and a query's scan
+    * skips to its terms' page runs instead of decoding whole files. The
+    * repartition on the bucket keeps each bucket in one file instead of
+    * one per writer task — on the small-vocab test corpus the measured
+    * rm3-batch win (30.8 → 21.6 s at 100×, same-day A/B) is substantially
+    * this footer/open amplification disappearing.
     */
-  private def writePostings(post: DataFrame, path: String, termBuckets: Int,
-                            mode: String, partitioned: Boolean = true): Unit =
-    if (termBuckets > 0) {
-      val w = post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
-        .repartition(col("term_bucket"))
-        .sortWithinPartitions("term_bucket", "term", "doc_id")
-        .write.mode(mode)
-      (if (partitioned) w.partitionBy("term_bucket") else w).parquet(path)
-    }
-    else post.sortWithinPartitions("term", "doc_id").write.mode(mode).parquet(path)
+  private def writePostings(post: DataFrame, path: String, termBuckets: Int): Unit =
+    post.withColumn("term_bucket", termBucket(col("term"), termBuckets))
+      .repartition(col("term_bucket"))
+      .sortWithinPartitions("term_bucket", "term", "doc_id")
+      .write.mode("overwrite").parquet(path)
 
   // r19: the Index PLANS are memoized per (session, key) too — every
-  // spark.read.parquet schedules a footer/listing job, so each readIndex
-  // call was four sequential driver jobs plus a fresh one-row statsRow head
-  // on first scalar access. A stored index has a natural identity — the
-  // serving fast path ([[indexInProcess]]) memoizes its in-memory term
-  // arrays under it, the reference's load-NPZ-arrays-once regime. A
-  // committed [[Version]] never changes, so its key is `dir@v<N>`. An
-  // in-place store's key carries a cheap fingerprint of its stats files
-  // (every mutation — writeIndex, appendIndexStore — rewrites stats last);
-  // filesystems with no java.io view fingerprint as 0, and there the
-  // writers keep the key coherent by evicting the store
-  // ([[SessionMemo.forget]]).
+  // spark.read.parquet that infers a schema schedules a footer/listing
+  // job. A stored index has a natural identity — the serving fast path
+  // ([[indexInProcess]]) memoizes its in-memory term arrays under it, the
+  // reference's load-NPZ-arrays-once regime. A committed [[Version]] never
+  // changes, so its key is its manifest path, and finding it costs one
+  // manifest listing. Nothing writes the pre-manifest layout any more, so
+  // such a directory is keyed by its path alone.
   private val storedIndexCache = new SessionMemo[Index]
+
+  /** The index stored at `dir`: the version `dir` names (`<root>/v<N>`),
+    * else the newest version of the store rooted at `dir`, else `dir` read
+    * as a pre-manifest store — one legacy segment.
+    */
   def readIndex(spark: SparkSession, dir: String): Index =
-    Version.at(spark, dir) match {
+    Version.at(spark, dir).orElse(Version.latest(spark, dir)) match {
       case Some(v) => storedIndexCache.getOrBuild(spark, v.key)(v.index(spark))
       case None =>
-        val key = s"stored:$dir@${PathFingerprint(s"$dir/stats")}"
+        val key = s"stored:$dir@legacy"
         storedIndexCache.getOrBuild(spark, key)(Index(
           spark.read.parquet(s"$dir/postings"),
           spark.read.parquet(s"$dir/lengths"),
@@ -312,13 +301,14 @@ object Bm25 {
     }
   }
 
-  /** The [[Totals]] of a stored index, off its one statsRow snapshot;
-    * stores written before `sum_dl`/`n_len` pay one slim lengths scan.
+  /** The [[Totals]] of an index, off its one statsRow snapshot; stats
+    * written before `sum_dl`/`n_len` pay one slim lengths scan.
     */
   private def totalsOf(ix: Index): Totals = {
     val r = ix.statsRow
     val has = ix.stats.columns.toSet
-    def long(c: String) = r.getLong(r.fieldIndex(c))
+    // an index with no token-bearing row sums to null
+    def long(c: String) = if (r.isNullAt(r.fieldIndex(c))) 0L else r.getLong(r.fieldIndex(c))
     val (sumDl, nLen) =
       if (has("sum_dl") && has("n_len")) (long("sum_dl"), long("n_len"))
       else {
@@ -330,9 +320,8 @@ object Bm25 {
       if (has("term_buckets")) r.getInt(r.fieldIndex("term_buckets")) else 0)
   }
 
-  /** The O(batch) update both at-rest appends commit ([[appendIndexStore]]
-    * in place, [[commitVersion]] as a new version) — the new idf table and
-    * totals, from the STORED df counts plus the batch's, never by
+  /** The O(batch) update a commit makes ([[commitVersion]]) — the new idf
+    * table and totals, from the STORED df counts plus the batch's, never by
     * rescanning the stored postings. Equal to a rebuild over old ∪ batch:
     * `df' = df + df_batch` in integers and `N' = N + |batch|`, so every
     * term's idf double recomputes from identical inputs; avgdl =
@@ -355,79 +344,21 @@ object Bm25 {
     (df.withColumn("idf", okapiIdf(totals.n, col("df"))), totals)
   }
 
-  /** Incremental append to an AT-REST BM25 store, in place — the `bm25`
-    * verb's store (the [[graft.operators.VectorSearch.appendIvfStore]]
-    * analogue; reference: the NPZ sidecar is rebuilt whole on every
-    * change, `embedding/bm25_manager.py:71-112`). The batch's postings
-    * and lengths APPEND partition-wise into the bucketed directories
-    * (existing files never read or rewritten), and only the VOCAB-sized
-    * idf table and the one-row stats are rewritten ([[appendDelta]]), so
-    * the result equals `writeIndex(buildIndex(old ∪ batch))`
-    * scoring-value-exactly.
-    *
-    * Commit order: lengths, postings, idf, then stats — the stats rewrite
-    * is the commit point. It changes the store's [[PathFingerprint]], and
-    * the append also evicts the store from every session memo
-    * ([[SessionMemo.forget]]) before its read and after its commit, so no
-    * reader serves the pre-append snapshot on any filesystem.
-    * Contract (as [[mergeIndex]]): batch doc ids are disjoint from the
-    * store's — ENFORCED here (one slim semi-join against the stored
-    * lengths), which also makes a crashed append retry-SAFE: lengths are
-    * appended first, so a retry after any partial failure sees the overlap
-    * (or a lengths count ahead of the committed `n_len`) and aborts with a
-    * rebuild instruction instead of silently double-counting tf/df.
+  /** Incremental append to an AT-REST BM25 store — the `bm25` verb's store
+    * (the [[graft.operators.VectorSearch.appendIvfStore]] analogue;
+    * reference: the NPZ sidecar is rebuilt whole on every change,
+    * `embedding/bm25_manager.py:71-112`). The batch commits as the store's
+    * next version ([[commitVersion]]), which equals
+    * `writeIndex(buildIndex(old ∪ batch))` scoring-value-exactly.
+    * Contract (as [[mergeIndex]]): batch doc ids are unique and disjoint
+    * from the store's — ENFORCED: a batch holding a stored id is refused
+    * before anything is written. A crashed append commits nothing, so a
+    * retry is safe.
     */
   def appendIndexStore(spark: SparkSession, dir: String,
                        newDocs: DataFrame, idCol: String,
-                       textCol: String): Unit = {
-    SessionMemo.forget(spark, dir)
-    val stored = readIndex(spark, dir)
-    val old = totalsOf(stored)
-    // consistency sentinel (ADVICE r15): stats is written LAST, so its
-    // n_len is the committed lengths row count — a crash between the
-    // postings append and the idf/stats rewrite leaves actual lengths
-    // ahead of it. ONE scan of the stored lengths serves both stored-side
-    // checks: the total row count and the overlap with the batch ids
-    // (lengths-side rows survive the left outer join at most once, so
-    // count(hit) is the semi-join count).
-    val batchIds = newDocs.select(col(idCol).as("doc_id")).distinct()
-    val chkRow = stored.lengths.select("doc_id")
-      .join(batchIds.withColumn("hit", lit(1)), Seq("doc_id"), "left_outer")
-      .agg(count(lit(1)).as("actual"), count(col("hit")).as("overlap"))
-      .head()
-    val (actual, overlap) = (chkRow.getLong(0), chkRow.getLong(1))
-    if (stored.stats.columns.contains("n_len"))
-      require(actual == old.nLen,
-        s"appendIndexStore: store at $dir is inconsistent (lengths rows " +
-          s"$actual != committed n_len ${old.nLen}) — a previous append " +
-          "crashed between the data appends and the stats commit; rebuild " +
-          "the store (writeIndex) before appending")
-    val batchDocs = newDocs.count()
-    require(overlap == 0L,
-      s"appendIndexStore: $overlap batch doc ids already in the store at " +
-        s"$dir — route re-ingests through the S5 anti-join; if a previous " +
-        "append crashed mid-write, rebuild the store (writeIndex) instead " +
-        "of retrying")
-    val post0 = postings(newDocs, idCol, textCol)
-    val lens = docLengths(post0).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      lens.write.mode("append").parquet(s"$dir/lengths")
-      val post = if (stored.postings.columns.contains("doc_len"))
-        post0.join(lens, "doc_id") else post0
-      writePostings(post, s"$dir/postings", old.termBuckets, "append")
-      val b = lens.agg(count(lit(1)),
-        coalesce(sum(col("doc_len").cast("long")), lit(0L))).head()
-      val (idf2, totals) = appendDelta(Some(stored.idf), old,
-        Totals(batchDocs, b.getLong(1), b.getLong(0), 0), post0)
-      // the eager localCheckpoint severs lineage from the files being
-      // overwritten
-      idf2.localCheckpoint(true).write.mode("overwrite").parquet(s"$dir/idf")
-      totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    } finally {
-      lens.unpersist()
-      SessionMemo.forget(spark, dir)
-    }
-  }
+                       textCol: String): Unit =
+    commitVersion(spark, dir, newDocs, idCol, textCol, refuseStored = true)
 
   /** Segments a [[Version]] lists at most: a commit that would list more
     * writes one merged segment instead.
@@ -435,26 +366,30 @@ object Bm25 {
   private[graft] val MaxSegments = 8
 
   private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT, idf DOUBLE")
+  private val PostingsCols = Seq("doc_id", "term", "tf", "doc_len")
+  private def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** One committed version of a versioned BM25 store — the `maintain`
-    * store — rooted at `root`. Commit N writes `root/v<N>/`: one immutable
-    * segment (the batch's `postings`, flat files that carry `term_bucket`
-    * as a column, sorted by bucket and term, and its `lengths`) plus the
-    * version's vocab-sized `idf` and one-row `stats`. It then creates
-    * `root/_manifest/v<N>` with overwrite = false — the commit point,
-    * through the Hadoop FileSystem API only, with no rename. The manifest
-    * names the live segments, their schemas and the [[Totals]], so a
-    * reader opens one flat directory per segment and table with no schema
-    * inference. Spark's driver lists them itself, so opening a version
-    * runs no Spark job (a directory of 64 bucket directories would list
-    * in a job of its own). A version never changes once committed. A
-    * manifest without its closing `end` line is a crashed commit and reads
-    * as absent.
+  /** The schema a segment's postings files have ([[writePostings]]). */
+  private def segmentSchema(post: DataFrame): StructType =
+    nullable(post.select(PostingsCols.map(col): _*).schema.add("term_bucket", IntegerType))
+
+  /** One committed version of a BM25 store rooted at `root` — the only
+    * at-rest format. Commit N writes `root/v<N>/`: one immutable segment
+    * (`postings`, flat files that carry `term_bucket` as a column, sorted
+    * by bucket and term, and `lengths`) plus the version's vocab-sized
+    * `idf` and one-row `stats`. It then creates `root/_manifest/v<N>` with
+    * overwrite = false — the commit point, through the Hadoop FileSystem
+    * API only, with no rename. The manifest names the live segments, their
+    * schemas and the [[Totals]], so a reader opens one flat directory per
+    * segment and table with no schema inference: Spark's driver lists them
+    * itself, and opening a version runs no Spark job. A version never
+    * changes once committed. A manifest without its closing `end` line is
+    * a crashed commit and reads as absent. A commit keeps its own version
+    * and the one before it, and deletes the rest ([[Version.collect]]).
     *
-    * A store written before manifests has a `CURRENT` pointer to a full
-    * store `v<K>`; it reads as one segment, which the next commit extends
-    * (its bucket directories list in that one job until a compaction
-    * merges it).
+    * A store written before manifests — a `CURRENT` pointer to a full
+    * store `v<K>`, or the tables directly under the root — reads as one
+    * legacy segment, which the next commit merges into its own.
     */
   private[graft] final case class Version(root: String, number: Long,
                                           totals: Totals,
@@ -462,17 +397,18 @@ object Bm25 {
                                           lengthsSchema: StructType,
                                           segments: Seq[String]) {
     def path: String = s"$root/v$number"
-    def key: String = s"stored:$root@v$number"
+    /** The memo key: the manifest path, so a commit evicts every version
+      * of its store with one [[SessionMemo.forget]] of `root/_manifest`.
+      */
+    def key: String = s"stored:$root/_manifest/v$number"
 
     private def table(spark: SparkSession, t: String, schema: StructType): DataFrame =
       segments.map(seg => spark.read.schema(schema).parquet(s"$root/$seg/$t"))
         .reduce(_ unionByName _)
-    def lengths(spark: SparkSession): DataFrame = table(spark, "lengths", lengthsSchema)
-    def idf(spark: SparkSession): DataFrame =
-      spark.read.schema(IdfSchema).parquet(s"$path/idf")
     def index(spark: SparkSession): Index =
-      Index(table(spark, "postings", postingsSchema), lengths(spark), idf(spark),
-        totals.toDF(spark), cacheKey = Some(key))
+      Index(table(spark, "postings", postingsSchema), table(spark, "lengths", lengthsSchema),
+        spark.read.schema(IdfSchema).parquet(s"$path/idf"), totals.toDF(spark),
+        cacheKey = Some(key))
 
     private[Bm25] def render: String =
       (Seq(s"version $number",
@@ -485,6 +421,8 @@ object Bm25 {
   private[graft] object Version {
     import org.apache.hadoop.fs.{FileSystem, Path}
     private val Name = "v(\\d+)".r
+    /** What a pre-manifest store keeps directly under its root. */
+    private val LegacyNames = Set("CURRENT", "postings", "lengths", "idf", "stats")
 
     private def fs(spark: SparkSession, root: String): FileSystem =
       new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
@@ -512,7 +450,13 @@ object Bm25 {
       }
     }
 
+    // a complete manifest never changes, so it is parsed once per session;
+    // an incomplete one is not memoized (a null build records nothing)
+    private val manifests = new SessionMemo[Version]
     private def load(spark: SparkSession, root: String, n: Long): Option[Version] =
+      Option(manifests.getOrBuild(spark, s"manifest:$root/_manifest/v$n")(parse(spark, root, n).orNull))
+
+    private def parse(spark: SparkSession, root: String, n: Long): Option[Version] =
       readText(spark, s"$root/_manifest/v$n").map(_.split("\n").toSeq)
         .filter(_.lastOption.contains("end")).map { lines =>
           val kv = lines.init.map(l => l.splitAt(l.indexOf(' '))).map {
@@ -526,33 +470,29 @@ object Bm25 {
             kv.collect { case ("segment", seg) => seg })
         }
 
-    private def latest(spark: SparkSession, root: String): Option[Version] =
+    /** The newest committed version of the store at `root`. */
+    def latest(spark: SparkSession, root: String): Option[Version] =
       numbers(spark, root).sorted.reverseIterator
         .flatMap(load(spark, root, _)).nextOption()
 
-    /** The `v<K>` a pre-manifest store's `CURRENT` pointer names. */
-    private def legacyName(spark: SparkSession, root: String): Option[String] =
-      readText(spark, s"$root/CURRENT").map(_.trim)
-
-    /** A pre-manifest full store as a one-segment version. */
-    private def legacy(spark: SparkSession, root: String): Option[Version] =
-      legacyName(spark, root).collect { case name @ Name(n) =>
-        val ix = readIndex(spark, s"$root/$name")
-        Version(root, n.toLong, totalsOf(ix), ix.postings.schema,
-          ix.lengths.schema, Seq(name))
-      }
-
-    /** The current version: the newest manifest, else a pre-manifest
-      * store — the version a commit extends.
+    /** A pre-manifest store at `root`: the full store its `CURRENT`
+      * pointer names, else `root` itself when it holds the tables.
       */
-    def base(spark: SparkSession, root: String): Option[Version] =
-      latest(spark, root).orElse(legacy(spark, root))
+    private[Bm25] def legacyDir(spark: SparkSession, root: String): Option[String] =
+      readText(spark, s"$root/CURRENT").map(name => s"$root/${name.trim}")
+        .orElse(Some(root).filter(r => fs(spark, r).exists(new Path(s"$r/stats"))))
+
+    /** The directory [[readIndex]] serves for the store at `root`: its
+      * newest version, else a pre-manifest store.
+      */
+    def currentPath(spark: SparkSession, root: String): Option[String] =
+      latest(spark, root).map(_.path).orElse(legacyDir(spark, root))
 
     /** The number the next commit takes: one past every manifest, complete
       * or not, and past a pre-manifest store's version.
       */
     private[Bm25] def next(spark: SparkSession, root: String): Long =
-      (numbers(spark, root) ++ legacyName(spark, root).collect {
+      (numbers(spark, root) ++ readText(spark, s"$root/CURRENT").map(_.trim).collect {
         case Name(n) => n.toLong }).maxOption.getOrElse(0L) + 1
 
     /** Commit `v`, whose own segment is written: create its manifest,
@@ -563,21 +503,69 @@ object Bm25 {
       try out.write(v.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
+
+    /** Retention: delete everything that neither `v` nor `prev`, the
+      * version it follows, references — older manifests, their `idf` and
+      * `stats`, merged-away segments, uncommitted `v<N>` directories below
+      * `v`, and a pre-manifest store (a commit merged it into `prev` or
+      * earlier). Directories above `v` belong to a commit in flight.
+      */
+    private[Bm25] def collect(spark: SparkSession, v: Version, prev: Version): Unit = {
+      val fs = this.fs(spark, v.root)
+      val kept = Set(v.number, prev.number)
+      val live = (v.segments ++ prev.segments).toSet
+      def rm(rel: String): Unit = { fs.delete(new Path(s"${v.root}/$rel"), true); () }
+      numbers(spark, v.root).filter(n => n < v.number && !kept(n)).foreach(n => rm(s"_manifest/v$n"))
+      fs.listStatus(new Path(v.root)).map(_.getPath.getName).foreach {
+        case name @ Name(n) if n.toLong < v.number && !kept(n.toLong) =>
+          if (live(name)) { rm(s"$name/idf"); rm(s"$name/stats") } else rm(name)
+        case name if LegacyNames(name) => rm(name)
+        case _ => ()
+      }
+    }
   }
 
-  /** Commit `docs` to the versioned store at `root` as one new [[Version]].
-    * The batch's docs not yet in the store become one new segment, and the
-    * idf and totals advance by [[appendDelta]], the arithmetic of
-    * [[appendIndexStore]]. A commit so writes the batch's segment, a
+  /** Write and commit the version of the store at `root` that follows
+    * `prev`: a new segment from `post` and `lens`, listed after the `kept`
+    * segments, with `idf` and `totals`. The manifest create is the commit
+    * point; the commit then collects what neither version references and
+    * evicts the store's versions from every session memo.
+    */
+  private def commit(spark: SparkSession, root: String, prev: Option[Version],
+                     kept: Seq[String], post: DataFrame, lens: DataFrame,
+                     idf: DataFrame, totals: Totals): Version = {
+    val number = Version.next(spark, root)
+    val dir = s"$root/v$number"
+    val seg = post.select(PostingsCols.map(col): _*)
+    val segLens = lens.select("doc_id", "doc_len")
+    writePostings(seg, s"$dir/postings", totals.termBuckets)
+    segLens.write.mode("overwrite").parquet(s"$dir/lengths")
+    idf.select("term", "df", "idf").write.mode("overwrite").parquet(s"$dir/idf")
+    totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    val v = Version(root, number, totals, segmentSchema(seg), nullable(segLens.schema),
+      kept :+ s"v$number")
+    Version.create(spark, v)
+    prev.foreach(Version.collect(spark, v, _))
+    SessionMemo.forget(spark, s"$root/_manifest")
+    v
+  }
+
+  /** Commit `docs` to the store at `root` as one new [[Version]]. The
+    * batch's docs not yet in the store become one new segment, bucketed
+    * with the store's own term-bucket count, and the idf and totals
+    * advance by [[appendDelta]]. A commit so writes the batch's segment, a
     * vocab-sized idf and the one-row stats, and reads every live segment's
-    * lengths once for the replay guard (the anti-join that drops docs
-    * already stored). A commit that would list more than [[MaxSegments]]
-    * segments, or extend a store of another layout, instead rewrites the
-    * whole store as one merged segment. The version number is the
-    * manifest's latest + 1. Every write lands in the new `v<N>` directory
-    * (a crashed attempt's leftovers there are overwritten), and the
-    * manifest create is the commit point. Returns None, and commits
-    * nothing, when every batch doc is already in the store.
+    * lengths once, for the anti-join that finds the batch docs already
+    * stored. With `refuseStored` (the store append) a batch holding any is
+    * refused before anything is written; otherwise (`maintain`'s replay
+    * guard) they are dropped. A commit that would list more than
+    * [[MaxSegments]] segments, or extend a store of another layout or a
+    * pre-manifest store, instead rewrites the whole store as one merged
+    * segment. The version number is the manifest's latest + 1. Every write
+    * lands in the new `v<N>` directory (a crashed attempt's leftovers there
+    * are overwritten), and the manifest create is the commit point.
+    * Returns None, and commits nothing, when every batch doc is already in
+    * the store.
     *
     * Contract: doc ids are unique within `docs` (maintain's chunk ids
     * are). A doc's length is then its token count, so the segment derives
@@ -586,15 +574,19 @@ object Bm25 {
     * 18 Spark jobs a commit where this takes 10.
     */
   private[graft] def commitVersion(spark: SparkSession, root: String, docs: DataFrame,
-                                   idCol: String, textCol: String): Option[Version] = {
-    val prev = Version.base(spark, root)
+                                   idCol: String, textCol: String,
+                                   refuseStored: Boolean = false): Option[Version] = {
+    val prev = Version.latest(spark, root)
+    val stored = prev.map(_.path).orElse(Version.legacyDir(spark, root))
+      .map(readIndex(spark, _))
     val batch = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val tokens = TextFunctions.tokenizeBm25(col("text"))
     val docLen = greatest(size(tokens), lit(0)).cast("long")
-    // the batch's totals ride the one job that materializes its new docs
-    val observed = org.apache.spark.sql.Observation()
-    val fresh = prev.fold(batch)(p =>
-        batch.join(p.lengths(spark).select("doc_id"), Seq("doc_id"), "left_anti"))
+    // the batch's input count and its new docs' totals ride the one job
+    // that materializes the new docs: the difference is the stored docs
+    val input, observed = org.apache.spark.sql.Observation()
+    val fresh = stored.fold(batch)(s => batch.observe(input, count(lit(1)).as("n"))
+        .join(s.lengths.select("doc_id"), Seq("doc_id"), "left_anti"))
       .observe(observed, count(lit(1)).as("n"),
         coalesce(sum(docLen), lit(0L)).as("sum_dl"),
         count(when(docLen > 0, true)).as("n_len"))
@@ -602,37 +594,29 @@ object Bm25 {
     val m = observed.get
     val batchTotals = Totals(m("n").asInstanceOf[Long], m("sum_dl").asInstanceOf[Long],
       m("n_len").asInstanceOf[Long], 0)
+    if (refuseStored && stored.isDefined) {
+      val dup = input.get("n").asInstanceOf[Long] - batchTotals.n
+      require(dup == 0L, s"appendIndexStore: $dup batch doc ids already in the store " +
+        s"at $root — route re-ingests through the S5 anti-join")
+    }
     if (batchTotals.n == 0L) return None
     // unique doc ids: postings carry doc_len with no lengths join, and
     // lengths and df need no postings aggregation
     val post = fresh.select(col("doc_id"), explode(tokens).as("term"), docLen.as("doc_len"))
       .groupBy("doc_id", "term", "doc_len").agg(count(lit(1)).as("tf"))
-      .select("doc_id", "term", "tf", "doc_len")
     val lens = fresh.select(col("doc_id"), docLen.as("doc_len")).filter(col("doc_len") > 0)
-    val number = Version.next(spark, root)
-    val dir = s"$root/v$number"
-    def nullable(s: StructType) = StructType(s.fields.map(_.copy(nullable = true)))
-    val postingsSchema = nullable(post.schema.add("term_bucket", IntegerType))
-    val lengthsSchema = nullable(lens.schema)
-    val merge = prev.filter(p => p.segments.size >= MaxSegments ||
-      p.postingsSchema != postingsSchema || p.lengthsSchema != lengthsSchema)
-    val (segPostings, segLens) = merge.fold((post, lens)) { p =>
-      val ix = p.index(spark)
-      (withDocLen(ix).drop("term_bucket").unionByName(post),
-        ix.lengths.unionByName(lens))
-    }
-    writePostings(segPostings, s"$dir/postings", DefaultTermBuckets, "overwrite",
-      partitioned = false)
-    segLens.write.mode("overwrite").parquet(s"$dir/lengths")
-    val (idf2, totals) = appendDelta(prev.map(_.idf(spark)),
-      prev.fold(Totals(0L, 0L, 0L, 0))(_.totals).copy(termBuckets = DefaultTermBuckets),
-      batchTotals, fresh.select(col("doc_id"), explode(array_distinct(tokens)).as("term")))
-    idf2.write.mode("overwrite").parquet(s"$dir/idf")
-    totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    val kept = if (merge.isDefined) Nil else prev.fold(Seq.empty[String])(_.segments)
-    val v = Version(root, number, totals, postingsSchema, lengthsSchema, kept :+ s"v$number")
-    Version.create(spark, v)
-    Some(v)
+    val merge = stored.filter(_ => prev.forall(p => p.segments.size >= MaxSegments ||
+      p.postingsSchema != segmentSchema(post) || p.lengthsSchema != nullable(lens.schema)))
+    val (segPostings, segLens) = merge.fold((post, lens))(ix =>
+      (withDocLen(ix).drop("term_bucket").unionByName(post), ix.lengths.unionByName(lens)))
+    val old = prev.map(_.totals).orElse(stored.map(totalsOf))
+    val buckets = old.map(_.termBuckets).filter(_ > 0).getOrElse(DefaultTermBuckets)
+    val (idf2, totals) = appendDelta(stored.map(_.idf),
+      old.getOrElse(Totals(0L, 0L, 0L, 0)).copy(termBuckets = buckets), batchTotals,
+      fresh.select(col("doc_id"), explode(array_distinct(tokens)).as("term")))
+    Some(commit(spark, root, prev,
+      if (merge.isDefined) Nil else prev.fold(Seq.empty[String])(_.segments),
+      segPostings, segLens, idf2, totals))
   }
 
   /** Memoized per-corpus index — the "load the persisted index" path the
@@ -763,7 +747,7 @@ object Bm25 {
     val qStats = ix.idf.select("term", "idf")
       .filter(col("term").isin(termSet: _*))
       .join(broadcast(qDf), "term")
-    prunedPostings(ix, termSet) // bucket dirs + term IN pushdown
+    prunedPostings(ix, termSet) // term_bucket + term IN pushdown
       .join(broadcast(qStats), "term")
       .groupBy("doc_id")
       .agg(sum(col("qtf") * termScore(col("tf"), col("doc_len"), lit(ix.avgdl), col("idf"), k1, b)).as("score"))
@@ -815,17 +799,18 @@ object Bm25 {
     if (ix.postings.columns.contains("doc_len")) ix.postings
     else ix.postings.join(ix.lengths, "doc_id")
 
-  /** [[withDocLen]] plus the at-rest scan prune, two levels deep:
-    *  - when the index is term-bucketed on disk, a literal
-    *    `term_bucket IN (…)` restricts the scan to the query terms' bucket
-    *    directories — file-level PartitionFilters, no job to plan it
-    *    (buckets computed driver-side by the crc32 twin);
-    *  - a literal `term IN (…)` rides along as a parquet data filter
-    *    (PushedFilters) — [[writeIndex]] sorts postings by term WITHIN
-    *    each bucket, so parquet page/row-group statistics skip everything
-    *    but the query terms' page runs even inside a touched bucket (the
-    *    r16 fix for the rm3-batch pass-1 growth: a 20-query batch's term
-    *    union touches most bucket DIRECTORIES, but only slivers of them).
+  /** [[withDocLen]] plus the at-rest scan prune, two filters deep, both
+    * literal and planned with no job (buckets computed driver-side by the
+    * crc32 twin):
+    *  - when the index is term-bucketed, `term_bucket IN (…)` keeps the
+    *    query terms' buckets — a PushedFilter that row-group and page
+    *    statistics of the bucket-sorted segment files ([[writePostings]])
+    *    answer, skipping the other buckets' runs;
+    *  - `term IN (…)` rides along as a second PushedFilter — postings are
+    *    sorted by term WITHIN each bucket, so the statistics skip
+    *    everything but the query terms' page runs even inside a touched
+    *    bucket (the r16 fix for the rm3-batch pass-1 growth: a 20-query
+    *    batch's term union touches most buckets, but only slivers of them).
     * Semantically a no-op either way: every removed row would have been
     * dropped by the `term` equi-join anyway (identity spec-asserted).
     */
@@ -903,7 +888,7 @@ object Bm25 {
     val qStats = qTerms.join(ix.idf.select("term", "idf"), "term")
     // callers holding the query strings driver-side (the pipeline batch
     // path does) pass their tokenized union so a bucketed at-rest index
-    // partition-prunes exactly like the single-query path; without it the
+    // bucket-prunes exactly like the single-query path; without it the
     // batch scans all buckets (the term equi-join still bounds the work).
     // postingsOverride lets a caller hand in an already-pruned (and
     // possibly persisted) postings slice covering its terms — Rm3's

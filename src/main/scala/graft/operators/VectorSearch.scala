@@ -1047,10 +1047,10 @@ object VectorSearch {
   /** Read a persisted IVF index. The id/vector column names come from the
     * stored `assigned` schema (the vector is the array column); the
     * cacheKey fingerprints the store so in-process rungs never serve a
-    * stale memo across a rewrite (the [[graft.operators.Bm25.readIndex]]
-    * contract). The fingerprint reads 0 on a filesystem with no `java.io`
-    * view, so the writers ([[writeIvf]], [[appendIvfStore]]) also evict
-    * the store from every session memo ([[SessionMemo.forget]]).
+    * stale memo across a rewrite. The fingerprint reads 0 on a filesystem
+    * with no `java.io` view, so the writers ([[writeIvf]],
+    * [[appendIvfStore]]) also evict the store from every session memo
+    * ([[SessionMemo.forget]]).
     */
   def readIvf(spark: org.apache.spark.sql.SparkSession,
               dir: String): IvfIndex = {

@@ -712,9 +712,9 @@ object EngineQueries {
   }
 
   /** The corpus key of the late-interaction vocab memo: the directory at
-    * the documents table's [[graft.operators.PathFingerprint]] (the
-    * [[graft.operators.Bm25.readIndex]] rule), so a rewrite of the
-    * documents misses the memo instead of serving the old vocabulary.
+    * the documents table's [[graft.operators.PathFingerprint]], so a
+    * rewrite of the documents misses the memo instead of serving the old
+    * vocabulary.
     */
   private def lateVocabKey(dir: String): String =
     s"$dir@${graft.operators.PathFingerprint(s"$dir/documents.parquet")}"

@@ -103,12 +103,12 @@ object StreamingIngest {
         col("chunk_text").as("text")), "doc_id", "text")
 
   /** The current index store under a maintenance root, if any: the newest
-    * committed version, else a pre-manifest store's `CURRENT` pointer. Its
-    * `stats` is the one-row table of the current totals. Read through the
-    * Hadoop FileSystem API of the active session.
+    * committed version, else a pre-manifest store. Its `stats` is the
+    * one-row table of the current totals. Read through the Hadoop
+    * FileSystem API of the active session.
     */
   def currentIndexPath(dir: String): Option[String] =
-    graft.operators.Bm25.Version.base(SparkSession.active, dir).map(_.path)
+    graft.operators.Bm25.Version.currentPath(SparkSession.active, dir)
 
   /** Streaming dedup-at-ingest — the shape a 100 TB/day training pipeline
     * runs at the front door: each micro-batch of landed documents is

@@ -9,19 +9,29 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CommitPathSourceSpec extends AnyFunSuite {
 
-  test("no java.io.File or java.nio.file in the code of the BM25 commit path") {
-    val guarded = Set("StreamingIngest.scala", "Bm25.scala")
-    val files = MainSources.files.filter(f => guarded(f.getName))
-    assert(files.map(_.getName).toSet == guarded, "main sources not found")
-    val pattern = "\\bjava\\.io\\.File\\b|\\bjava\\.nio\\.file\\b".r
-    val offenders = for {
+  private def offenders(names: Set[String], pattern: scala.util.matching.Regex): Seq[String] = {
+    val files = MainSources.files.filter(f => names(f.getName))
+    assert(files.map(_.getName).toSet == names, "main sources not found")
+    for {
       f <- files
       (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        .split("\n").zipWithIndex
+        .split("\n").toSeq.zipWithIndex
       t = line.trim
       if !(t.startsWith("//") || t.startsWith("/*") || t.startsWith("*"))
       if pattern.findFirstIn(line).isDefined
     } yield s"${f.getName}:${i + 1}: $t"
-    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no java.io.File or java.nio.file in the code of the BM25 commit path") {
+    val found = offenders(Set("StreamingIngest.scala", "Bm25.scala"),
+      "\\bjava\\.io\\.File\\b|\\bjava\\.nio\\.file\\b".r)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  // a BM25 version is keyed by its manifest: a file fingerprint in the
+  // store's memo key would bring back the in-place store it served
+  test("no PathFingerprint in the code of the BM25 store") {
+    val found = offenders(Set("Bm25.scala"), "PathFingerprint".r)
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

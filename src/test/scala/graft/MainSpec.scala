@@ -29,7 +29,13 @@ class MainSpec extends SparkSpec {
     assert(emb.count() == spark.read.parquet(s"$kb/chunks").count())
 
     Main.run(Array("bm25", kb), spark)
-    assert(spark.read.parquet(s"$kb/bm25/postings").count() > 0)
+    assert(operators.Bm25.readIndex(spark, s"$kb/bm25").postings.count() > 0)
+    val verified = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(verified)) {
+      Main.run(Array("verify-indexes", kb), spark)
+    }
+    assert(verified.toString.contains(s"bm25 version 1 at $kb/bm25"), verified.toString)
+    assert(verified.toString.contains("[graft] verify-indexes: healthy"), verified.toString)
 
     Main.run(Array("dedup", kb), spark)
     // a.txt and b.txt are identical → their chunks form exact-dup pairs

@@ -192,15 +192,15 @@ class Bm25Spec extends SparkSpec {
     // test below)
     val got = Bm25.scoreWithIndex(stored, spark, q, inProcessLimit = 0)
     val plan = got.queryExecution.executedPlan.toString
-    // the postings scan must carry the query terms' bucket partition filter
-    assert(plan.contains("PartitionFilters"), plan.take(1500))
-    assert(plan.split("PartitionFilters").exists(s =>
-      s.take(400).contains("term_bucket")), plan.take(1500))
+    // the postings scan must push the query terms' bucket filter to
+    // parquet: the bucket-sorted segment files prune on its statistics
+    assert(plan.split("PushedFilters").exists(s =>
+      s.take(400).contains("In(term_bucket")), plan.take(2000))
     // r16: AND the literal term IN (…) DATA filter pushed to parquet —
     // with the term-sorted bucket layout this is what page/row-group
     // statistics prune on inside a touched bucket
     assert(plan.split("PushedFilters").exists(s =>
-      s.take(400).contains("In(term")), plan.take(2000))
+      s.take(400).contains("In(term,")), plan.take(2000))
     val gotMap = got.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val memMap = Bm25.scoreWithIndex(mem, spark, q)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -215,9 +215,9 @@ class Bm25Spec extends SparkSpec {
     val ipMap = inProc.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ipMap.keySet == gotMap.keySet)
     ipMap.foreach { case (id, s) => assert(math.abs(s - gotMap(id)) < 1e-9) }
-    // flat-layout (termBuckets=0) indexes keep reading and never prune
+    // pre-manifest flat-layout stores keep reading and never prune
     val flatDir = java.nio.file.Files.createTempDirectory("graft_bm25_flat").toString
-    Bm25.writeIndex(mem, flatDir, termBuckets = 0)
+    LegacyBm25Store.write(mem, flatDir, termBuckets = 0)
     val flat = Bm25.readIndex(spark, flatDir)
     assert(flat.termBuckets.isEmpty)
     assert(Bm25.scoreWithIndex(flat, spark, q)
@@ -249,11 +249,12 @@ class Bm25Spec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_app").toString
     val ref = java.nio.file.Files.createTempDirectory("graft_bm25_ref").toString
     Bm25.writeIndex(Bm25.buildIndex(base, "doc_id", "text"), dir, termBuckets = 4)
-    val baseFiles = new java.io.File(s"$dir/postings").listFiles().flatMap(d =>
-      Option(d.listFiles()).getOrElse(Array())).map(f => f.getPath -> f.lastModified).toMap
+    val baseFiles = new java.io.File(s"$dir/v1/postings").listFiles()
+      .map(f => f.getPath -> f.lastModified).toMap
+    assert(baseFiles.nonEmpty)
     val preKey = Bm25.readIndex(spark, dir).cacheKey
     Bm25.appendIndexStore(spark, dir, delta, "doc_id", "text")
-    // append-only: every pre-append postings file survives untouched
+    // append-only: every pre-append segment file survives untouched
     baseFiles.foreach { case (p, mtime) =>
       val f = new java.io.File(p)
       assert(f.exists && f.lastModified == mtime, s"rewritten: $p")
@@ -275,7 +276,7 @@ class Bm25Spec extends SparkSpec {
     assert(key(appended) == key(rebuilt))
     // the appended store keeps its bucket pruning contract
     assert(appended.termBuckets.contains(4))
-    // the stats rewrite changed the fingerprint: no stale in-proc memo
+    // the append is a new version under a new key: no stale in-proc memo
     assert(appended.cacheKey != preKey)
   }
 
@@ -288,10 +289,10 @@ class Bm25Spec extends SparkSpec {
     val ref = java.nio.file.Files.createTempDirectory("graft_bm25_noioref").toString
     Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"),
       dir, termBuckets = 4)
-    assert(PathFingerprint(s"$dir/stats") == 0L)
+    assert(PathFingerprint(s"$dir/v1/stats") == 0L)
     // a serving reader memoizes the store's plans first, as a session does
     assert(Bm25.readIndex(spark, dir).nDocs == 2L)
-    // ... and its in-process term arrays, under `stored:<dir>@0|lim=…`
+    // ... and its in-process term arrays, under its version's key
     val q = "quick fox"
     assert(scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, dir), spark, q))
       .keySet == Set(1L, 2L))
@@ -308,7 +309,7 @@ class Bm25Spec extends SparkSpec {
     assert(idfKey(appended) == idfKey(rebuilt))
     assert(appended.lengths.count() == 5L)
     // the in-process rung serves the appended store, not the snapshot it
-    // memoized before the appends under the same fingerprint-0 key
+    // memoized before the appends
     val served = scores(Bm25.scoreWithIndex(appended, spark, q))
     val reference = scores(Bm25.scoreWithIndex(rebuilt, spark, q, inProcessLimit = 0))
     assert(served.keySet == reference.keySet)
@@ -326,8 +327,7 @@ class Bm25Spec extends SparkSpec {
     assert(Bm25.readIndex(spark, dir).nDocs == 2L)
     assert(scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, dir), spark, q))
       .keySet == Set(1L, 2L))
-    // the `bm25` verb's rebuild: the same dir rewritten in place, so the
-    // fingerprint-0 key does not change
+    // the `bm25` verb's rebuild over the same dir: a new version
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), dir, termBuckets = 4)
     Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 4)
     val rewritten = Bm25.readIndex(spark, dir)
@@ -368,7 +368,10 @@ class Bm25Spec extends SparkSpec {
     val e = intercept[IllegalArgumentException](
       Bm25.appendIndexStore(spark, dir,
         docs.filter(col("doc_id") === 1), "doc_id", "text"))
-    assert(e.getMessage.contains("already in the store"))
+    assert(e.getMessage.contains("1 batch doc ids already in the store"), e.getMessage)
+    // refused before any write: no new version and no new directory
+    assert(Bm25.Version.latest(spark, dir).map(_.number).contains(1L))
+    assert(!new java.io.File(s"$dir/v2").exists())
   }
 
   test("appendIndexStore accepts a legacy store whose stats lack sum_dl") {
@@ -376,12 +379,10 @@ class Bm25Spec extends SparkSpec {
     val base = docs.filter(col("doc_id") <= 2)
     val delta = docs.filter(col("doc_id") > 2)
     val dir = java.nio.file.Files.createTempDirectory("graft_bm25_leg").toString
-    Bm25.writeIndex(Bm25.buildIndex(base, "doc_id", "text"), dir, termBuckets = 4)
-    // strip sum_dl: rewrite the stats sidecar the way a pre-r15 store
-    // looks — append must fall back to the slim lengths scan
-    val legacy = spark.read.parquet(s"$dir/stats").drop("sum_dl")
-      .localCheckpoint(true)
-    legacy.coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+    // a pre-manifest store whose stats lack sum_dl, the way a pre-r15
+    // store looks — the append must fall back to the slim lengths scan
+    val built = Bm25.buildIndex(base, "doc_id", "text")
+    LegacyBm25Store.write(built.copy(stats = built.stats.drop("sum_dl")), dir, termBuckets = 4)
     Bm25.appendIndexStore(spark, dir, delta, "doc_id", "text")
     val appended = Bm25.readIndex(spark, dir)
     val rebuilt = Bm25.buildIndex(docs, "doc_id", "text")
@@ -389,6 +390,9 @@ class Bm25Spec extends SparkSpec {
     assert(appended.stats.select("n").head().getLong(0) == docs.count())
     // and the upgraded stats now carry sum_dl for the NEXT append
     assert(appended.stats.columns.contains("sum_dl"))
+    // the commit merged the pre-manifest store into its one segment
+    assert(Bm25.Version.latest(spark, dir).map(_.segments).contains(Seq("v1")))
+    assert(appended.termBuckets.contains(4))
   }
 
   test("topKBatchInProcess == the distributed rounded-rank window, ties included") {
@@ -444,13 +448,130 @@ class Bm25Spec extends SparkSpec {
     val pruned = Bm25.scoreBatch(stored, queries, "query_id", "qtext",
       knownTerms = Some(terms))
     val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters"), plan.take(1500))
-    assert(plan.split("PartitionFilters").exists(s =>
-      s.take(400).contains("term_bucket")), plan.take(1500))
+    assert(plan.split("PushedFilters").exists(s =>
+      s.take(400).contains("In(term_bucket")), plan.take(2000))
+    assert(plan.split("PushedFilters").exists(s =>
+      s.take(400).contains("In(term,")), plan.take(2000))
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), math.rint(r.getDouble(2) * 1e9)))
       .toSet
     assert(key(pruned) ==
       key(Bm25.scoreBatch(stored, queries, "query_id", "qtext")))
+  }
+
+  // a corpus large enough for a store to reach compaction: the base docs
+  // plus one-doc batches over a spread of terms
+  private def growth(n: Int): Seq[(Long, String)] = (1 to n).map(i =>
+    (100L + i, (0 until 12).map(j => s"w${(i * 7 + j * 13) % 40}").mkString(" ") + " quick fox"))
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+
+  /** `got` equals `exp` value for value: postings, lengths, idf, n, avgdl. */
+  private def assertSameIndex(got: Bm25.Index, exp: Bm25.Index): Unit = {
+    assert(rowsOf(got.postings, "doc_id", "term", "tf", "doc_len", "term_bucket") ==
+      rowsOf(exp.postings, "doc_id", "term", "tf", "doc_len", "term_bucket"))
+    assert(rowsOf(got.lengths, "doc_id", "doc_len") == rowsOf(exp.lengths, "doc_id", "doc_len"))
+    assert(rowsOf(got.idf, "term", "df", "idf") == rowsOf(exp.idf, "term", "df", "idf"))
+    assert(got.nDocs == exp.nDocs && got.avgdl == exp.avgdl && got.termBuckets == exp.termBuckets)
+  }
+
+  /** At most two manifests remain under `dir`, and every data file left
+    * belongs to a table one of them references.
+    */
+  private def assertRetained(dir: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val manifests = new java.io.File(s"$dir/_manifest").list().filter(_.matches("v\\d+")).toSeq
+    assert(manifests.nonEmpty && manifests.size <= 2, manifests)
+    val tables = manifests.flatMap(m => Bm25.Version.at(spark, s"$dir/$m")).flatMap(v =>
+      v.segments.flatMap(seg => Seq(s"$seg/postings", s"$seg/lengths")) ++
+        Seq(s"v${v.number}/idf", s"v${v.number}/stats"))
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(root.relativize(_).toString).filterNot(_.startsWith("_manifest/")).toSeq
+      finally walk.close()
+    val strays = files.filterNot(f => tables.exists(t => f.startsWith(s"$t/")))
+    assert(strays.isEmpty, strays)
+    tables.foreach(t => assert(new java.io.File(s"$dir/$t").isDirectory, t))
+  }
+
+  test("store appends keep the store's own term-bucket count") {
+    val docs = (corpus ++ growth(6)).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_b8").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_bm25_b8ref").toString
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 103), "doc_id", "text"),
+      dir, termBuckets = 8)
+    Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id").between(104, 105)),
+      "doc_id", "text")
+    Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") > 105), "doc_id", "text")
+    Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 8)
+    val appended = Bm25.readIndex(spark, dir)
+    val rebuilt = Bm25.readIndex(spark, ref)
+    assert(Bm25.Version.latest(spark, dir).map(_.segments.size).contains(3))
+    assert(appended.termBuckets.contains(8) && rebuilt.termBuckets.contains(8))
+    // every segment is bucketed mod 8, as the stats say
+    assert(appended.postings.agg(max("term_bucket")).head().getInt(0) < 8)
+    assertSameIndex(appended, rebuilt)
+    // the distributed bucket-pruned scan finds every posting a rebuild does
+    for (q <- Seq("quick fox", "w1 w5 w9 w13 w22 w31 lorem", "w3 w17 w29 dog")) {
+      def key(ix: Bm25.Index) = scores(Bm25.scoreWithIndex(ix, spark, q, inProcessLimit = 0))
+        .map { case (d, sc) => (d, math.rint(sc * 1e9)) }
+      assert(key(appended) == key(rebuilt), q)
+    }
+  }
+
+  test("opening a writeIndex store runs no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_open").toString
+    Bm25.writeIndex(Bm25.buildIndex(corpus.toDF("doc_id", "text"), "doc_id", "text"),
+      dir, termBuckets = 4)
+    SessionMemo.forget(spark, dir)
+    val (ix, jobs) = graft.JobCount(spark) {
+      val ix = Bm25.readIndex(spark, dir)
+      (ix.avgdl, ix.nDocs, ix.termBuckets)
+      ix
+    }
+    assert(jobs == 0, s"opening the store ran $jobs jobs")
+    assert(ix.termBuckets.contains(4) && ix.nDocs == corpus.size.toLong)
+  }
+
+  test("retention: rewrites and appends on one root keep two manifests and only their files") {
+    val all = corpus ++ growth(3)
+    val docs = all.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_gc").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_bm25_gcref").toString
+    // three rewrites of the store, the last one over the base corpus
+    for (upTo <- Seq(2L, 4L, 5L))
+      Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= upTo), "doc_id", "text"),
+        dir, termBuckets = 4)
+    assertRetained(dir)
+    // then three appends, one growth doc each
+    (101L to 103L).foreach(id =>
+      Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") === id), "doc_id", "text"))
+    assertRetained(dir)
+    val latest = Bm25.Version.latest(spark, dir).get
+    assert(latest.number == 6L && latest.segments == Seq("v3", "v4", "v5", "v6"))
+    Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = 4)
+    assertSameIndex(Bm25.readIndex(spark, dir), Bm25.readIndex(spark, ref))
+  }
+
+  test("ten commits on one root, compaction included, equal a rebuild and keep two manifests") {
+    val extra = growth(10)
+    val docs = (corpus ++ extra).toDF("doc_id", "text")
+    for (buckets <- Seq(4, 8)) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft_bm25_n$buckets").toString
+      val ref = java.nio.file.Files.createTempDirectory(s"graft_bm25_nref$buckets").toString
+      Bm25.writeIndex(Bm25.buildIndex(corpus.toDF("doc_id", "text"), "doc_id", "text"),
+        dir, termBuckets = buckets)
+      val sizes = extra.map { case (id, _) =>
+        Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") === id), "doc_id", "text")
+        assertRetained(dir)
+        Bm25.Version.latest(spark, dir).get.segments.size
+      }
+      // the commit that would list a ninth segment merges the store
+      assert(sizes == (2 to Bm25.MaxSegments) ++ Seq(1, 2, 3), sizes)
+      Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = buckets)
+      assertSameIndex(Bm25.readIndex(spark, dir), Bm25.readIndex(spark, ref))
+    }
   }
 }

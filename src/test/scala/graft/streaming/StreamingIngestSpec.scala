@@ -234,6 +234,12 @@ class StreamingIngestSpec extends SparkSpec {
     assert(rows(got.idf, Seq("term", "df", "idf")) == rows(exp.idf, Seq("term", "df", "idf")))
     assert(got.nDocs == exp.nDocs && got.avgdl == exp.avgdl && got.termBuckets == exp.termBuckets)
     assert(spark.read.parquet(s"$current/stats").select("n").head().getLong(0) == exp.nDocs)
+    // retention: ten commits leave the two newest manifests, and the
+    // segments the compaction merged away are gone
+    assert(new java.io.File(s"$ixd/_manifest").list().filter(_.matches("v\\d+")).toSet ==
+      Set(s"v${1 + extra.size}", s"v${2 + extra.size}"))
+    assert(new java.io.File(ixd).list().filter(_.matches("v\\d+")).toSet ==
+      Set(s"v${1 + extra.size}", s"v${2 + extra.size}"))
   }
 
   test("a pre-manifest maintained store reads as one segment the next commit extends") {
@@ -245,13 +251,14 @@ class StreamingIngestSpec extends SparkSpec {
     val docs = (rows: Seq[(String, Int, String)]) => rows.toDF("sourcedoc", "sid", "text")
       .select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"), col("text"))
     // the layout maintain wrote before manifests: a full store + CURRENT
-    Bm25.writeIndex(Bm25.buildIndex(docs(old), "doc_id", "text"), s"$kb/v3")
+    graft.operators.LegacyBm25Store.write(Bm25.buildIndex(docs(old), "doc_id", "text"), s"$kb/v3")
     Files.write(Paths.get(kb, "CURRENT"), "v3".getBytes(StandardCharsets.UTF_8))
     assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v3"))
     val fresh = Seq(chunk("c.txt", "gamma"))
     val v = StreamingIngest.maintainIndexBatch(spark,
       (old ++ fresh).toDF("sourcedoc", "sid", "chunk_text"), kb).get
-    assert(v.number == 4L && v.segments == Seq("v3", "v4"))
+    // the commit merges the pre-manifest store into its own segment
+    assert(v.number == 4L && v.segments == Seq("v4"))
     assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v4"))
     val got = Bm25.readIndex(spark, s"$kb/v4")
     val exp = Bm25.buildIndex(docs(old ++ fresh), "doc_id", "text")
