@@ -136,6 +136,20 @@ object Main {
     else emb
   }
 
+  /** The per-file inventory of `embeddings` ([[graft.operators.PathInventory]])
+    * that the `ivf` verb recorded when it last built or extended the store
+    * at `storeDir`. None when the store records none, or an empty one: such
+    * a store is unattested, and both the `ivf` and the `query` verb rebuild
+    * instead of serving it.
+    */
+  private def ivfSource(spark: SparkSession,
+                        storeDir: String): Option[Set[(String, Long, Long)]] =
+    scala.util.Try(
+      spark.read.parquet(s"$storeDir/meta_inventory")
+        .select("file", "mtime", "length").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
+      .toOption.filter(_.nonEmpty)
+
   private[graft] val Version = "0.9.0"
 
   private[graft] val Usage: String =
@@ -401,6 +415,9 @@ object Main {
           case _ => cfg0
         }
         val ix = storedBm25(spark, kb)
+        // one listing of the embeddings per call: the corpus key's stamp and
+        // the stored IVF's freshness check both read it
+        val embInv = graft.operators.PathInventory(spark, s"$kb/embeddings")
         // ANN opt-in (config `index_type` = ivf/auto): build/reuse the
         // serving index for whatever tier the auto-selection policy picks —
         // the policy output IS the serving index (query/search.py:207-231);
@@ -409,19 +426,16 @@ object Main {
           import graft.operators.VectorSearch
           // an `ivf`-verb store wins over a per-session rebuild (the
           // reference loads whatever .faiss sidecar exists the same way) —
-          // but ONLY while its recorded source fingerprint still matches
-          // the embeddings table: after a re-embed/maintain rewrote or
-          // appended vectors, a stale index silently misses them (or
-          // serves deleted ids), so staleness falls back to the rebuild
-          // path below. Pre-fingerprint stores (no meta) keep the old
-          // trust-the-artifact behavior.
+          // but ONLY while the embeddings file inventory it recorded equals
+          // the current one: after a re-embed/maintain rewrote or appended
+          // vectors, a stale index silently misses them (or serves deleted
+          // ids), so a stale store, or one that records no inventory, falls
+          // back to the rebuild path below.
           def storedIvfFresh: Boolean =
             graft.sources.KbStorage.pathExists(spark, s"$kb/ivf/assigned") && {
-              val ok = VectorSearch.readIvfSourceFp(spark, s"$kb/ivf").forall {
-                fp => fp == graft.operators.PathFingerprint(s"$kb/embeddings")
-              }
-              if (!ok) println(s"[graft] query: WARNING $kb/ivf was built " +
-                "from different embeddings (stale fingerprint); rebuilding " +
+              val ok = ivfSource(spark, s"$kb/ivf").contains(embInv.toSet)
+              if (!ok) println(s"[graft] query: WARNING $kb/ivf was not " +
+                "recorded as built from the current embeddings; rebuilding " +
                 "the serving index — re-run the ivf verb to refresh the store")
               ok
             }
@@ -444,10 +458,9 @@ object Main {
         val t0 = System.nanoTime()
         val res = KbPipeline.query(spark, chunks, emb, args(2), cfg,
           bm25Index = ix, serving = serving,
-          // fingerprinted: a corpus rewrite in the SAME session must
-          // never serve the stale memoized broadcast
-          corpusKey = Some(s"$kb/embeddings@" +
-            graft.operators.PathFingerprint(s"$kb/embeddings")),
+          // stamped: a corpus rewrite in the SAME session must never
+          // serve the stale memoized broadcast
+          corpusKey = Some(s"$kb/embeddings@${graft.operators.PathInventory.stamp(embInv)}"),
           // query-embedding cache: a repeated query is served from its
           // resident map instead of re-calling the provider
           queryVecCacheDir = Some(s"$kb/qcache"))
@@ -949,7 +962,6 @@ object Main {
         // assigned + appended partition-wise — FAISS add_with_ids, not a
         // re-cluster. `--rebuild` (or no store) takes the full build path.
         val storeDir = s"$kb/ivf"
-        val curFp = graft.operators.PathFingerprint(s"$kb/embeddings")
         // the append-only refresh is sound ONLY for id-disjoint growth.
         // A re-embed (model/dims change, chunk edit) rewrites vectors IN
         // PLACE — blessing the store then serves vectors from the wrong
@@ -959,24 +971,16 @@ object Main {
         // inventory of the embeddings dir recorded when the store was
         // last blessed: append-only parquet growth adds part files
         // without touching old ones, so every recorded file must still be
-        // present with the same mtime+length. A changed/missing recorded
-        // file, or a store with no recorded inventory, takes the rebuild.
+        // present with the same mtime+length. An equal inventory is an
+        // untouched source. A changed/missing recorded file, or a store
+        // with no recorded inventory, takes the rebuild.
         import spark.implicits._
         val curInv = graft.operators.PathInventory(spark, s"$kb/embeddings")
-        def stampMeta(): Unit = {
-          Seq(Tuple1(curFp)).toDF("source_fp")
-            .coalesce(1).write.mode("overwrite").parquet(s"$storeDir/meta")
+        def recordSource(): Unit =
           curInv.toDF("file", "mtime", "length")
             .coalesce(1).write.mode("overwrite")
             .parquet(s"$storeDir/meta_inventory")
-        }
-        val storedFp = VectorSearch.readIvfSourceFp(spark, storeDir)
-        val recordedInv: Option[Set[(String, Long, Long)]] =
-          scala.util.Try(
-            spark.read.parquet(s"$storeDir/meta_inventory")
-              .select("file", "mtime", "length").collect()
-              .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet)
-            .toOption
+        val recordedInv = ivfSource(spark, storeDir)
         val hasStore = !args.contains("--rebuild") &&
           graft.sources.KbStorage.pathExists(spark, s"$storeDir/assigned")
         val (nFreshOpt, appendSound, soundnessNote) =
@@ -1002,14 +1006,12 @@ object Main {
                 c.getLong(1) ==
                   spark.read.parquet(s"$storeDir/assigned").count() + n
             }
-            val invAttested = recordedInv.exists(_.nonEmpty)
-            val sound = storedFp.contains(curFp) || // untouched: no-op ok
-              (n > 0 && invAttested &&
-                recordedInv.get.subsetOf(curSet) && // attested pure growth
+            val sound = recordedInv.contains(curSet) || // untouched: no-op ok
+              (n > 0 && recordedInv.exists(_.subsetOf(curSet)) && // attested pure growth
                 balanced)
             val note =
               if (sound) ""
-              else if (!invAttested)
+              else if (recordedInv.isEmpty)
                 "no attestable file inventory for the embeddings dir " +
                   "(none recorded, or the store path has no listable view)"
               else if (!recordedInv.get.subsetOf(curSet))
@@ -1017,23 +1019,22 @@ object Main {
               else if (n > 0 && !balanced)
                 "embeddings row count disagrees with assigned + fresh " +
                   "(duplicate doc_ids — re-embed via append-mode write)"
-              else "no new vectors but the source fingerprint changed"
+              else "no new vectors but the embedding files changed"
             if (sound && n > 0)
               VectorSearch.appendIvfStore(spark, storeDir, fresh)
             (Some(n), sound, note)
           }
         if (hasStore && appendSound) {
-          // refresh the staleness sidecars: the store now covers the
-          // current embeddings table AND its per-file inventory
-          stampMeta()
+          // refresh the staleness sidecar: the store now covers the
+          // current embeddings table's per-file inventory
+          recordSource()
           println(s"[graft] ivf: appended ${nFreshOpt.get} new vectors -> $storeDir")
         } else {
           if (hasStore)
             println(s"[graft] ivf: store is stale beyond append — $soundnessNote — rebuilding")
           VectorSearch.writeIvf(
-            VectorSearch.buildIvf(emb, "doc_id", "embedding", nc), storeDir,
-            sourceFingerprint = Some(curFp))
-          stampMeta()
+            VectorSearch.buildIvf(emb, "doc_id", "embedding", nc), storeDir)
+          recordSource()
           println(s"[graft] ivf: ${spark.read.parquet(s"$storeDir/assigned").count()} " +
             s"vectors in $nc clusters -> $storeDir")
         }

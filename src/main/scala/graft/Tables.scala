@@ -36,6 +36,13 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame =
     apply(spark, dir, "documents")
 
+  /** The corpus key of a memo built from [[documents]]: the directory at
+    * the documents table's [[operators.PathInventory.stamp]], so a rewrite
+    * of the documents misses the memo instead of serving the old result.
+    */
+  def documentsKey(spark: SparkSession, dir: String): String =
+    s"$dir@${operators.PathInventory.stamp(spark, s"$dir/documents.parquet")}"
+
   /** Guarded round-robin spread to session parallelism for CPU-DENSE maps
     * over narrow scans (r18 optimization, guide §2.5 "unsplittable input:
     * repartition immediately after the read"): the sf parquet files carry

@@ -425,7 +425,7 @@ object Bm25 {
     private val LegacyNames = Set("CURRENT", "postings", "lengths", "idf", "stats")
 
     private def fs(spark: SparkSession, root: String): FileSystem =
-      new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+      graft.sources.KbStorage.fileSystem(spark, new Path(root))
 
     private def readText(spark: SparkSession, path: String): Option[String] =
       try {

@@ -129,7 +129,7 @@ object QualityClassifier {
     * materialized once (`localCheckpoint`) — the train-once / audit-many
     * regime: the per-doc argmax query and the accuracy report read the
     * same held-out classification instead of re-training per consumer.
-    * `cacheKey` should carry the table directory + a change fingerprint
+    * `cacheKey` should carry the table directory + a change stamp
     * (the same staleness contract as `Bm25.cachedIndex`).
     */
   def cachedTrainAndClassify(docs: DataFrame, idCol: String, textCol: String,

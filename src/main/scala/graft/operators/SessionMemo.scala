@@ -1,69 +1,61 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Cheap driver-side change marker for a locally-stored table directory
-  * (or a single-file table): CRC32 over the sorted (name, mtime, length)
-  * tuples of its files — 0 when the path
-  * has no local java.io view (non-local filesystems fall back to
-  * path-only identity, the pre-existing cachedIndex staleness contract).
-  * A plain mtime+length SUM collides on rewrites inside the mtime
-  * granularity with equal sizes; the tuple hash does not.
-  */
-private[graft] object PathFingerprint {
-  def apply(path: String): Long =
-    scala.util.Try {
-      val d = new java.io.File(path)
-      val fs =
-        if (d.isFile) Array(d)
-        else Option(d.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-      val crc = new java.util.zip.CRC32()
-      fs.foreach { f =>
-        crc.update(s"${f.getName}:${f.lastModified()}:${f.length()};"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      crc.getValue
-    }.getOrElse(0L)
-}
-
-/** Per-FILE inventory of a stored table directory — sorted
-  * `(relative path, mtime, length)` rows over the DATA files
-  * (Spark-hidden `_`/`.` metadata like `_SUCCESS` is excluded at every
-  * path level: a legitimate append rewrites the success marker). Where
-  * [[PathFingerprint]] answers "did ANYTHING change", the inventory
-  * answers the append-soundness question (ADVICE r15): append-only
-  * parquet growth adds new part files without touching old ones, so
-  * `recorded ⊆ current` discriminates pure id growth from an in-place
-  * re-embed that also added files in the same step.
+/** Per-FILE inventory of a stored table — sorted `(relative path, mtime,
+  * length)` rows over the DATA files under a directory, or the one row of
+  * a single-file table. Spark-hidden `_`/`.` metadata like `_SUCCESS` is
+  * excluded at every path level: a legitimate append rewrites the success
+  * marker. The engine's one change detector: [[stamp]] answers "did
+  * anything change" for a memo key, and the rows answer the
+  * append-soundness question — append-only parquet growth adds new part
+  * files without touching old ones, so `recorded ⊆ current` discriminates
+  * pure id growth from an in-place re-embed that also added files in the
+  * same step.
   *
-  * Routed through the Hadoop FileSystem API with RECURSIVE listing
-  * (ADVICE r16): the previous `java.io.File` top-level view returned
-  * empty on remote kbs AND on subdirectory-partitioned layouts, silently
-  * degrading every incremental run there to a full rebuild. Keys are
+  * Walked with `FileSystem.listStatus`, recursively, so a remote store and
+  * a `cluster_id=`-partitioned layout list like a local flat one; keys are
   * base-relative paths so a partitioned layout's files stay distinct.
-  * Empty when the path is absent or unlistable — callers treat empty as
-  * UNATTESTABLE (not merely stale) and take the rebuild path; note
-  * name+mtime+length is change detection, not content attestation (a
-  * same-size rewrite with preserved mtime evades it — the documented
-  * limit of fingerprint-level staleness everywhere in this engine).
+  * (`listFiles` would build a `LocatedFileStatus` per file, which loads
+  * each file's permissions — milliseconds a file on the local FS.) Empty
+  * when the path is absent or unlistable; callers treat empty as
+  * UNATTESTABLE (not merely stale). Name+mtime+length is change detection,
+  * not content attestation: a same-size rewrite with preserved mtime
+  * evades it, the documented limit of staleness keys in this engine.
   */
 private[graft] object PathInventory {
   def apply(spark: SparkSession, path: String): Seq[(String, Long, Long)] =
     scala.util.Try {
-      val base = new org.apache.hadoop.fs.Path(path)
-      val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
-      val baseUri = fs.makeQualified(base).toUri
+      val base = new Path(path)
+      val fs = graft.sources.KbStorage.fileSystem(spark, base)
       val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-      val it = fs.listFiles(base, true) // recursive
-      while (it.hasNext) {
-        val st = it.next()
-        val rel = baseUri.relativize(st.getPath.toUri).getPath
-        val hidden = rel.split('/')
-          .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-        if (!hidden) out += ((rel, st.getModificationTime, st.getLen))
-      }
+      def walk(dir: Path, rel: String): Unit =
+        fs.listStatus(dir).foreach { st =>
+          val name = st.getPath.getName
+          if (!name.startsWith("_") && !name.startsWith(".")) {
+            val r = if (rel.isEmpty) name else s"$rel/$name"
+            if (st.isDirectory) walk(st.getPath, r)
+            else out += ((r, st.getModificationTime, st.getLen))
+          }
+        }
+      walk(base, "")
       out.sortBy(_._1).toSeq
     }.getOrElse(Seq.empty)
+
+  /** CRC32 over the sorted rows — a memo key's change marker, 0 for an
+    * empty inventory. A plain mtime+length SUM collides on rewrites inside
+    * the mtime granularity with equal sizes; the row hash does not.
+    */
+  def stamp(rows: Seq[(String, Long, Long)]): Long = {
+    val crc = new java.util.zip.CRC32()
+    rows.foreach { case (f, mtime, length) =>
+      crc.update(s"$f:$mtime:$length;".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    crc.getValue
+  }
+
+  def stamp(spark: SparkSession, path: String): Long = stamp(apply(spark, path))
 }
 
 /** Per-(session, key) memoization — the one shape of every per-session
@@ -79,15 +71,16 @@ private[graft] object PathInventory {
   * which throws.
   *
   * Keys name the store they memoize by its path — `dir`,
-  * `dir/table.parquet`, `tag:dir@fingerprint|knobs`. A fingerprint in the
-  * key keeps an entry coherent with rewrites on a filesystem with a
-  * `java.io` view; [[SessionMemo.forget]] is the one eviction, for writers
-  * and for filesystems without that view. `forget(spark, dir)` drops, from
-  * every instance, the session's entries whose key holds `dir` as a whole
-  * path: at the start of the key or right after a `:`, and followed by the
-  * end of the key, `/`, `@` or `|`. So `/a/b` evicts `/a/b`,
-  * `/a/b/x.parquet` and `stored:/a/b@7|lim=5`, but not `/a/bc`. `release`
-  * runs on each evicted value (an unpersist, for a persisted plan).
+  * `dir/table.parquet`, `tag:dir@stamp|knobs`. A [[PathInventory.stamp]]
+  * in the key keeps an entry coherent with a rewrite by any writer, on any
+  * Hadoop filesystem; [[SessionMemo.forget]] is the one eviction, for the
+  * engine's own writers and for keys with no stamp. `forget(spark, dir)`
+  * drops, from every instance, the session's entries whose key holds `dir`
+  * as a whole path: at the start of the key or right after a `:`, and
+  * followed by the end of the key, `/`, `@` or `|`. So `/a/b` evicts
+  * `/a/b`, `/a/b/x.parquet` and `stored:/a/b@7|lim=5`, but not `/a/bc`.
+  * `release` runs on each evicted value (an unpersist, for a persisted
+  * plan).
   */
 private[graft] final class SessionMemo[V](release: V => Unit = (_: V) => ()) {
   private val cache =

@@ -1016,8 +1016,7 @@ object VectorSearch {
     * the artifact is a table any executor can scan, built once by the
     * `ivf` CLI verb and served by `query` without re-clustering.
     */
-  def writeIvf(ix: IvfIndex, dir: String,
-               sourceFingerprint: Option[Long] = None): Unit = {
+  def writeIvf(ix: IvfIndex, dir: String): Unit = {
     val spark = ix.assigned.sparkSession
     import spark.implicits._
     try {
@@ -1027,30 +1026,15 @@ object VectorSearch {
         .map { case (c, i) => (i, c.toSeq) }
         .toDF("cluster_id", "centroid")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-      // staleness sidecar: the fingerprint of the SOURCE embeddings the
-      // index was built from — query-time loads compare it to the current
-      // embeddings and fall back to a rebuild on mismatch, instead of
-      // silently missing vectors appended after the build
-      sourceFingerprint.foreach(fp =>
-        Seq(Tuple1(fp)).toDF("source_fp")
-          .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))
     } finally SessionMemo.forget(spark, dir) // see readIvf's key
   }
 
-  /** The `source_fp` recorded by [[writeIvf]], if the store has one. */
-  def readIvfSourceFp(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Option[Long] =
-    scala.util.Try(
-      spark.read.parquet(s"$dir/meta").select("source_fp")
-        .head().getLong(0)).toOption
-
   /** Read a persisted IVF index. The id/vector column names come from the
     * stored `assigned` schema (the vector is the array column); the
-    * cacheKey fingerprints the store so in-process rungs never serve a
-    * stale memo across a rewrite. The fingerprint reads 0 on a filesystem
-    * with no `java.io` view, so the writers ([[writeIvf]],
-    * [[appendIvfStore]]) also evict the store from every session memo
-    * ([[SessionMemo.forget]]).
+    * cacheKey carries the [[PathInventory.stamp]] of `assigned`, so
+    * in-process rungs never serve a stale memo across a foreign rewrite,
+    * and the engine's own writers ([[writeIvf]], [[appendIvfStore]]) also
+    * evict the store from every session memo ([[SessionMemo.forget]]).
     */
   def readIvf(spark: org.apache.spark.sql.SparkSession,
               dir: String): IvfIndex = {
@@ -1067,7 +1051,7 @@ object VectorSearch {
       .select("cluster_id", "centroid").orderBy("cluster_id")
       .collect().map(_.getSeq[Float](1).toArray)
     IvfIndex(assigned, cents, idCol, vecCol,
-      cacheKey = Some(s"stored:$dir@${PathFingerprint(s"$dir/assigned")}"))
+      cacheKey = Some(s"stored:$dir@${PathInventory.stamp(spark, s"$dir/assigned")}"))
   }
 
   /** Memoized IVF index per corpus (the reference loads its FAISS index

@@ -84,7 +84,7 @@ object Tuning {
       // remote kb's healthy layout would read as a finding
       val names = scala.util.Try {
         val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(spark.sessionState.newHadoopConf())
+        graft.sources.KbStorage.fileSystem(spark, hp)
           .listStatus(hp).map(_.getPath.getName)
       }.getOrElse(Array.empty[String])
       if (!names.exists(_.startsWith("cluster_id=")))

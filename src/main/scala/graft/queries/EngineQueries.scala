@@ -711,14 +711,6 @@ object EngineQueries {
     s"concat_ws(';', ${parts.mkString(", ")})"
   }
 
-  /** The corpus key of the late-interaction vocab memo: the directory at
-    * the documents table's [[graft.operators.PathFingerprint]], so a
-    * rewrite of the documents misses the memo instead of serving the old
-    * vocabulary.
-    */
-  private def lateVocabKey(dir: String): String =
-    s"$dir@${graft.operators.PathFingerprint(s"$dir/documents.parquet")}"
-
   /** Seeded IVFPQ serving artifacts (centroids = vec_id < 8, codebook from
     * the subvectors of vec_id < 16, m = 8), memoized per (session, corpus)
     * with the encoded table persisted — an index: built once, served many
@@ -1389,7 +1381,7 @@ object EngineQueries {
     }) { (s, dir) =>
       graft.operators.LateInteraction.maxSimTopKPruned(
         Tables.documents(s, dir), "doc_id", "text", QueryText, 20,
-        dims = 8, candPerTok = 50, cacheKey = Some(lateVocabKey(dir)))
+        dims = 8, candPerTok = 50, cacheKey = Some(Tables.documentsKey(s, dir)))
     },
 
     // ── Batched late interaction: top-10 MaxSim per query for the 20-query
@@ -1488,7 +1480,7 @@ object EngineQueries {
       graft.operators.LateInteraction.maxSimTopKBatchPruned(
           Tables.documents(s, dir), "doc_id", "text",
           E2eBatch20.zipWithIndex.map { case ((raw, _), i) => (i + 1).toLong -> raw },
-          k = 10, dims = 8, candPerTok = 50, cacheKey = Some(lateVocabKey(dir)))
+          k = 10, dims = 8, candPerTok = 50, cacheKey = Some(Tables.documentsKey(s, dir)))
         .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
         .orderBy("query_id", "rank")
     },

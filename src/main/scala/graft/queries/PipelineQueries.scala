@@ -2968,8 +2968,7 @@ object PipelineQueries {
          |FROM win w JOIN test t USING (doc_id)
          |WHERE rk = 1 ORDER BY w.doc_id""".stripMargin) { (s, dir) =>
       QualityClassifier.cachedTrainAndClassify(Tables.documents(s, dir),
-          "doc_id", "text", "source",
-          s"$dir|${graft.operators.PathFingerprint(dir)}")
+          "doc_id", "text", "source", Tables.documentsKey(s, dir))
         .orderBy("doc_id")
     },
 
@@ -2985,8 +2984,7 @@ object PipelineQueries {
          |       sum(CASE WHEN label = actual THEN 1 ELSE 0 END)::BIGINT AS n_correct
          |FROM pred GROUP BY actual ORDER BY actual""".stripMargin) { (s, dir) =>
       QualityClassifier.cachedTrainAndClassify(Tables.documents(s, dir),
-          "doc_id", "text", "source",
-          s"$dir|${graft.operators.PathFingerprint(dir)}")
+          "doc_id", "text", "source", Tables.documentsKey(s, dir))
         .groupBy("actual")
         .agg(count(lit(1)).as("n"),
           sum(when(col("label") === col("actual"), 1L).otherwise(0L)).as("n_correct"))

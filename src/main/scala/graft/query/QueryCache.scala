@@ -75,24 +75,28 @@ object QueryCache {
     *  - resident hit: the directory's `content_key → vector` rows sit in a
     *    [[graft.operators.SessionMemo]] entry keyed by the directory
     *    (so `SessionMemo.forget(spark, dir)` evicts it), loaded by one
-    *    collect and stamped with the [[graft.operators.PathFingerprint]]
-    *    read before that collect. A hit returns from the map with no job;
-    *  - fingerprint reload: before each lookup the directory's current
-    *    fingerprint is compared with the stamp, and a difference (a foreign
-    *    append, a rewrite, a deleted directory) reloads the map;
-    *  - at-rest fallback: with no `java.io` view of the directory
-    *    (fingerprint 0, which is also what a missing directory reads) or a
-    *    table over [[graft.operators.VectorSearch.InMemMaxFloats]], a hit
-    *    is one pushdown-filtered read of the table (`content_key =
+    *    collect and stamped with the [[graft.operators.PathInventory]]
+    *    stamp read before that collect. A hit returns a copy from the map
+    *    with no listing and no job: a row's vector is a function of its
+    *    key, so a map that missed a rewrite still serves correct vectors
+    *    (a session keeps serving the keys it holds even after the
+    *    directory is deleted);
+    *  - miss reload: a key the map lacks stamps the directory, and a stamp
+    *    that differs from the map's (the first load, a foreign append, a
+    *    rewrite, a deleted directory) reloads the map before the key is
+    *    looked up again;
+    *  - at rest over the budget: a table over
+    *    [[graft.operators.VectorSearch.InMemMaxFloats]] is served by one
+    *    pushdown-filtered read of the table per lookup (`content_key =
     *    <literal>`). The cache only grows by appends, so a table once over
     *    the budget stays at rest until `forget` evicts its entry;
-    *  - own append: a miss calls the provider once and appends one row
-    *    (one job), then adds the row to the map and re-stamps it with the
-    *    fingerprint after the write, so the engine's own append never
+    *  - own append: a key still missing calls the provider once and
+    *    appends one row (one job), then adds the row to the map and
+    *    re-stamps it after the write, so the engine's own append never
     *    forces a reload. A foreign row landing between the lookup and that
     *    re-stamp is missed by the map until its next reload: it costs a
     *    recompute and a duplicate row, which the cache tolerates, never a
-    *    wrong vector — a row's vector is a function of its key.
+    *    wrong vector.
     * A row whose embedding is null or of the wrong length (a corrupt or
     * hand-migrated cache) is never a hit on either path: the query
     * recomputes instead of serving a vector the cosine stage would
@@ -114,44 +118,42 @@ object QueryCache {
     val dir = s"$cacheDir/${provider.model.replaceAll("[^A-Za-z0-9_.-]", "_")}" +
       s"_${provider.dims}"
     val key = contentKeyValue(text)
-    val fp = graft.operators.PathFingerprint(dir)
-    val memo = if (fp == 0L) None else residentVectors(spark, dir, provider.dims, fp)
-    val hit = memo match {
-      case Some(ref) => ref.get.vecs.get(key).map(_.clone) // callers own it
-      case None =>
-        if (graft.sources.KbStorage.pathExists(spark, dir))
-          spark.read.parquet(dir)
-            .filter(col("content_key") === key &&
-              size(col("embedding")) === provider.dims)
-            .select("embedding").take(1).headOption
-            .map(_.getSeq[Float](0).toArray)
-        else None
+    val ref = residentRef(spark, dir)
+    def lookup(r: Resident): Option[Array[Float]] =
+      if (!r.overBudget) r.vecs.get(key).map(_.clone) // callers own it
+      else if (!graft.sources.KbStorage.pathExists(spark, dir)) None
+      else spark.read.parquet(dir)
+        .filter(col("content_key") === key &&
+          size(col("embedding")) === provider.dims)
+        .select("embedding").take(1).headOption
+        .map(_.getSeq[Float](0).toArray)
+    val hit = lookup(ref.get).orElse {
+      lazy val stamp = graft.operators.PathInventory.stamp(spark, dir)
+      if (ref.get.overBudget || stamp == ref.get.stamp) None
+      else {
+        val loaded = loadResident(spark, dir, provider.dims, stamp)
+        ref.set(loaded)
+        lookup(loaded)
+      }
     }
     hit.getOrElse {
       val v = provider.embedBatch(Seq(text)).head
       import spark.implicits._
       Seq((key, v)).toDF("content_key", "embedding")
         .coalesce(1).write.mode("append").parquet(dir)
-      // re-stamp past the own append. A directory that listed no files
-      // before it (fingerprint 0 with a java.io view after) now holds just
-      // this row, so its map starts here instead of with a reload
-      val stamp = graft.operators.PathFingerprint(dir)
-      if (stamp != 0L) (memo, fp) match {
-        case (Some(ref), _) =>
-          ref.updateAndGet(r => r.copy(fp = stamp, vecs = r.vecs.updated(key, v.clone)))
-        case (None, 0L) =>
-          residentRef(spark, dir).set(Resident(stamp, Map(key -> v.clone)))
-        case _ => // over the budget: stays at rest
+      if (!ref.get.overBudget) {
+        val stamp = graft.operators.PathInventory.stamp(spark, dir)
+        ref.updateAndGet(r => r.copy(stamp = stamp, vecs = r.vecs.updated(key, v.clone)))
       }
       v
     }
   }
 
   /** One cache directory's valid rows as loaded (plus own appends), and
-    * the fingerprint they are current for; `overBudget` marks a table
-    * served at rest.
+    * the [[graft.operators.PathInventory.stamp]] they are current for;
+    * `overBudget` marks a table served at rest.
     */
-  private final case class Resident(fp: Long, vecs: Map[String, Array[Float]],
+  private final case class Resident(stamp: Long, vecs: Map[String, Array[Float]],
                                     overBudget: Boolean = false)
   private type ResidentRef = java.util.concurrent.atomic.AtomicReference[Resident]
   private val residentCache = new SessionMemo[ResidentRef]
@@ -161,34 +163,25 @@ object QueryCache {
     residentCache.getOrBuild(spark, dir)(
       new java.util.concurrent.atomic.AtomicReference(Resident(0L, Map.empty)))
 
-  /** The directory's resident map at its current (non-zero) fingerprint
-    * `fp`, reloaded when `fp` differs from the stamp; None over the float
-    * budget.
-    */
-  private def residentVectors(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, dims: Int,
-                              fp: Long): Option[ResidentRef] = {
-    val ref = residentRef(spark, dir)
-    if (!ref.get.overBudget && ref.get.fp != fp)
-      ref.set(loadResident(spark, dir, dims, fp))
-    if (ref.get.overBudget) None else Some(ref)
-  }
-
-  /** One job: the explicit schema spares the footer read, and the row
-    * limit over one partition stops the scan one row past the budget.
+  /** The directory's rows at `stamp`, by one job: the explicit schema
+    * spares the footer read, and the row limit over one partition stops
+    * the scan one row past the budget. No job for a missing or empty
+    * directory (stamp 0).
     */
   private def loadResident(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, dims: Int, fp: Long): Resident = {
-    val maxRows = (graft.operators.VectorSearch.InMemMaxFloats /
-      math.max(dims, 1)).toInt
-    val rows = spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>")
-      .parquet(dir)
-      .filter(col("content_key").isNotNull && size(col("embedding")) === dims)
-      .coalesce(1).limit(maxRows + 1).collect()
-    if (rows.length > maxRows) Resident(fp, Map.empty, overBudget = true)
-    else Resident(fp, rows.iterator
-      .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap)
-  }
+                           dir: String, dims: Int, stamp: Long): Resident =
+    if (stamp == 0L) Resident(0L, Map.empty)
+    else {
+      val maxRows = (graft.operators.VectorSearch.InMemMaxFloats /
+        math.max(dims, 1)).toInt
+      val rows = spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>")
+        .parquet(dir)
+        .filter(col("content_key").isNotNull && size(col("embedding")) === dims)
+        .coalesce(1).limit(maxRows + 1).collect()
+      if (rows.length > maxRows) Resident(stamp, Map.empty, overBudget = true)
+      else Resident(stamp, rows.iterator
+        .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap)
+    }
 
   /** Driver-side twin of [[Embedder.contentKey]] (sha2 hex, lowercase). */
   private[graft] def contentKeyValue(text: String): String =

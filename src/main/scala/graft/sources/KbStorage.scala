@@ -19,6 +19,15 @@ import org.apache.spark.sql.functions._
   */
 object KbStorage {
 
+  /** The Hadoop FileSystem that serves `path`, from a fresh copy of the
+    * session's Hadoop configuration. The copy is per call, not per
+    * session: a scheme or setting added to the SparkContext's Hadoop
+    * configuration after the session exists must reach the next call.
+    */
+  private[graft] def fileSystem(spark: SparkSession,
+                                path: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+    path.getFileSystem(spark.sessionState.newHadoopConf())
+
   /** Existence probe through the Hadoop FileSystem API — `java.io.File`
     * is local-filesystem-only and silently answers false for an HDFS/S3
     * kb dir, which would make store/cache detection skip artifacts the
@@ -27,9 +36,7 @@ object KbStorage {
     */
   def pathExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
-    scala.util.Try(
-      p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-      .getOrElse(false)
+    scala.util.Try(fileSystem(spark, p).exists(p)).getOrElse(false)
   }
 
   /** Total bytes under a directory through the Hadoop FileSystem API —
@@ -39,9 +46,7 @@ object KbStorage {
     */
   def dirBytes(spark: SparkSession, path: String): Option[Long] = {
     val p = new org.apache.hadoop.fs.Path(path)
-    scala.util.Try(
-      p.getFileSystem(spark.sessionState.newHadoopConf())
-        .getContentSummary(p).getLength).toOption
+    scala.util.Try(fileSystem(spark, p).getContentSummary(p).getLength).toOption
   }
 
   /** Write the chunk table bucketed for context-join locality. Bucketing

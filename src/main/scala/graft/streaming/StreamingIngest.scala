@@ -74,8 +74,10 @@ object StreamingIngest {
     * whole store as one merged segment instead.
     * foreachBatch is at-least-once, so a replayed batch is made idempotent
     * by the S5 anti-join: chunk ids already in the stored lengths drop
-    * out, and an all-duplicate replay commits no version. Old versions
-    * stay on disk; nothing collects them yet.
+    * out, and an all-duplicate replay commits no version. After its
+    * manifest lands, a commit keeps its own version and the one before it
+    * and deletes every older manifest, idf, stats and merged-away segment
+    * ([[graft.operators.Bm25.Version]] retention).
     */
   def startIndexMaintenance(spark: SparkSession, glob: String, dir: String,
                             trigger: org.apache.spark.sql.streaming.Trigger =

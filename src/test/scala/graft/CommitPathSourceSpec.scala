@@ -2,10 +2,11 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The BM25 commit path goes through the Hadoop FileSystem API only: a
-  * `java.io.File` or `java.nio.file` call sees nothing on a store with no
-  * local view (HDFS, S3, the `graftnoio` test scheme), so a commit or
-  * pointer read through one fails or reads stale there.
+/** The BM25 commit path, the change detector and the query-vector cache
+  * go through the Hadoop FileSystem API only: a `java.io.File` or
+  * `java.nio.file` call sees nothing on a store with no local view (HDFS,
+  * S3, the `graftnoio` test scheme), so a commit, a pointer read or a
+  * change check through one fails or reads stale there.
   */
 class CommitPathSourceSpec extends AnyFunSuite {
 
@@ -28,10 +29,19 @@ class CommitPathSourceSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
-  // a BM25 version is keyed by its manifest: a file fingerprint in the
-  // store's memo key would bring back the in-place store it served
+  // the change detector and the query-vector cache serve stores on any
+  // Hadoop filesystem: a java.io stat reads nothing on a remote one, and a
+  // memo keyed by it goes stale there without an error
+  test("no java.io.File in the code of the change detector and the query cache") {
+    val found = offenders(Set("SessionMemo.scala", "QueryCache.scala"),
+      "\\bjava\\.io\\.File\\b".r)
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  // a BM25 version is keyed by its manifest: a file stamp in the store's
+  // memo key would bring back the in-place store it served
   test("no PathFingerprint in the code of the BM25 store") {
-    val found = offenders(Set("Bm25.scala"), "PathFingerprint".r)
+    val found = offenders(Set("Bm25.scala"), "PathFingerprint|PathInventory".r)
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

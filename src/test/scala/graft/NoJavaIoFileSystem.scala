@@ -3,8 +3,8 @@ package graft
 /** The local filesystem under the `graftnoio` scheme: a Hadoop
   * [[org.apache.hadoop.fs.FileSystem]] with no `java.io` view of its paths,
   * as a remote store has — `new java.io.File("graftnoio:///…")` lists
-  * nothing, so `PathFingerprint` reads 0 there. [[register]] installs it in
-  * the session's Hadoop configuration.
+  * nothing, so code that reads a store through `java.io` sees it empty
+  * there. [[tempDir]] installs it in the Hadoop configuration.
   */
 class NoJavaIoFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${NoJavaIoFileSystem.Scheme}:///")
@@ -13,6 +13,9 @@ class NoJavaIoFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 
 object NoJavaIoFileSystem {
   val Scheme = "graftnoio"
+
+  /** True when `java.io` sees `path` — never for a path on the scheme. */
+  def javaIoSees(path: String): Boolean = new java.io.File(path).exists()
 
   /** A fresh empty directory on the scheme. */
   def tempDir(spark: org.apache.spark.sql.SparkSession, prefix: String): String = {

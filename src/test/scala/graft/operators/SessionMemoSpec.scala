@@ -67,13 +67,4 @@ class SessionMemoSpec extends SparkSpec {
     assert(a.getOrBuild(spark, "/kb/two/x.parquet")("y") == "y")
     assert(b.getOrBuild(spark, "stored:/kb/two@1")(2) == 2)
   }
-
-  test("PathFingerprint notices a rewrite of a single-file table") {
-    val f = java.nio.file.Files.createTempFile("graft_fp", ".parquet")
-    java.nio.file.Files.write(f, Array[Byte](1, 2, 3))
-    val before = PathFingerprint(f.toString)
-    java.nio.file.Files.write(f, Array[Byte](1, 2, 3, 4))
-    assert(before != 0L)
-    assert(PathFingerprint(f.toString) != before)
-  }
 }

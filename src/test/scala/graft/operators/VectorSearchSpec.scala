@@ -227,19 +227,36 @@ class VectorSearchSpec extends SparkSpec {
         VectorSearch.seededIvfAssign(rows.toDF("vec_id", "embedding"),
           "vec_id", "embedding", seeded), cents, "vec_id", "embedding"), dir)
     // served in process from a stored index, whose memo key is
-    // `stored:<dir>@0` here (no java.io view, fingerprint 0)
+    // `stored:<dir>@<stamp of assigned>`
     def top1(): Long =
       VectorSearch.roundedIvfTopKInProcess(VectorSearch.readIvf(spark, dir),
           Seq((0L, query, Seq(0, 1))), k = 1, scale = 6)
         .getOrElse(fail("the stored index must serve in process"))
         .select("doc_id").as[Long].head()
     write(corpus)
-    assert(PathFingerprint(s"$dir/assigned") == 0L)
+    assert(!graft.NoJavaIoFileSystem.javaIoSees(s"$dir/assigned"))
     assert(top1() != 500L)
     VectorSearch.appendIvfStore(spark, dir, Seq((500L, query)).toDF("vec_id", "embedding"))
     assert(top1() == 500L, "an append must reach the in-process rung")
     write(corpus :+ (600L -> query))
     assert(top1() == 600L, "a rewrite must reach the in-process rung")
+  }
+
+  test("a keyed flat rung sees a vector appended in the same session with no java.io view") {
+    val emb = graft.NoJavaIoFileSystem.tempDir(spark, "graft_flat_noio") + "/embeddings"
+    corpus.toDF("doc_id", "embedding").write.parquet(emb)
+    assert(!graft.NoJavaIoFileSystem.javaIoSees(emb))
+    // keyed as the `query` verb keys its corpus: the embeddings path at
+    // the stamp of its file inventory
+    def top1(): Long =
+      VectorSearch.roundedTopKValues(spark.read.parquet(emb), "doc_id", "embedding",
+          query, k = 1, scale = 6,
+          cacheKey = Some(s"$emb@${PathInventory.stamp(spark, emb)}"))
+        .getOrElse(fail("the flat corpus must serve in process"))
+        .head._1
+    assert(top1() != 500L)
+    Seq((500L, query)).toDF("doc_id", "embedding").write.mode("append").parquet(emb)
+    assert(top1() == 500L, "an append must reach the memoized corpus")
   }
 
   test("PQ: driver LUT is bit-identical to the l2Sq column expression") {

@@ -198,7 +198,12 @@ class QueryCacheSpec extends SparkSpec {
     QueryCache.embedQueryCached(spark, dir, "pasta", p)
     QueryCache.embedQueryCached(spark, dir, "pasta", refusing) // resident
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-    assert(QueryCache.embedQueryCached(spark, dir, "pasta", p).toSeq == expected("pasta"))
+    // a hit needs no listing: the session keeps serving the vectors it
+    // holds, which are still correct (a vector is a function of its key)
+    assert(QueryCache.embedQueryCached(spark, dir, "pasta", refusing).toSeq == expected("pasta"))
+    // a miss stamps the directory, finds it gone and re-appends
+    assert(QueryCache.embedQueryCached(spark, dir, "window ranking", p).toSeq ==
+      expected("window ranking"))
     assert(p.calls == 3)
     assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
     // the rows deleted with the directory are gone from the map as well
@@ -206,14 +211,15 @@ class QueryCacheSpec extends SparkSpec {
     assert(p.calls == 4)
   }
 
-  test("embedQueryCached: with no java.io view the lookup stays at rest and sees foreign appends") {
+  test("embedQueryCached: with no java.io view the lookup is resident and sees foreign appends") {
     val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_qcache_noio") + "/qcache"
     val p = new Counting
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    assert(!graft.NoJavaIoFileSystem.javaIoSees(s"$dir/counting-8_8"))
     val (v, jobs) = graft.JobCount(spark)(
       QueryCache.embedQueryCached(spark, dir, "spark join", refusing).toSeq)
     assert(v == expected("spark join"))
-    assert(jobs > 0, "the hit did not read the table")
+    assert(jobs == 0, "the hit read the table instead of the resident map")
     appendRow(dir, "window ranking", expected("window ranking").toArray)
     assert(QueryCache.embedQueryCached(spark, dir, "window ranking", refusing)
       .toSeq == expected("window ranking"))
