@@ -52,7 +52,7 @@ object Main {
     * one row, not a scan).
     */
   private def storedDims(spark: SparkSession, path: String): Option[Int] =
-    if (!new java.io.File(path).exists()) None
+    if (!graft.sources.KbStorage.pathExists(spark, path)) None
     else spark.read.parquet(path).select(size(col("embedding")))
       .take(1).headOption.map(_.getInt(0))
 
@@ -204,8 +204,8 @@ object Main {
         val registryPath = s"$kb/registry"
         val chunksPath = s"$kb/chunks"
         val incremental = !force &&
-          new java.io.File(registryPath).exists() &&
-          new java.io.File(chunksPath).exists()
+          graft.sources.KbStorage.pathExists(spark, registryPath) &&
+          graft.sources.KbStorage.pathExists(spark, chunksPath)
         if (!incremental) {
           val chunks = graft.ingest.Ingest.ingestFiles(spark, pos(2),
               chunkSize = cfg.dbMaxTokens, overlap = cfg.dbMaxTokens / 4)

@@ -133,7 +133,7 @@ object Scale {
     }
     def knn50(e: DataFrame): Long =
       operators.VectorSearch.bruteTopKBatchAgg(e, "vec_id", "embedding",
-        queries50(e), "query_id", "qvec", 20, inMemoryLimit = 0).count()
+        queries50(e), "query_id", "qvec", 20).count()
     def knn50InProc(e: DataFrame, key: String): Long =
       operators.VectorSearch.bruteTopKBatchAgg(e, "vec_id", "embedding",
         queries50(e), "query_id", "qvec", 20,
@@ -295,13 +295,13 @@ object Scale {
     // (or fail on) stores it never references
     lazy val ix1 = bm25StoredProbe(s"$base/bm25_1x")
     lazy val ixK = bm25StoredProbe(s"$base/bm25_${kDocs}x")
-    // inProcessLimit = 0: these rows are the DISTRIBUTED pruned-scan scale
-    // evidence (the 100 TB path); the -inproc rows measure the guarded
-    // in-process serving tier the same stored index takes by default
-    secs(s"bm25-stored-score-1q 1x")(
-      operators.Bm25.scoreWithIndex(ix1, spark, scaleQ, inProcessLimit = 0).count())
-    secs(s"bm25-stored-score-1q ${kDocs}x")(
-      operators.Bm25.scoreWithIndex(ixK, spark, scaleQ, inProcessLimit = 0).count())
+    // keyless: these rows are the DISTRIBUTED pruned-scan scale evidence
+    // (the 100 TB path); the -inproc rows measure the guarded in-process
+    // serving tier the same keyed stored index takes
+    secs(s"bm25-stored-score-1q 1x")(operators.Bm25.scoreWithIndex(
+      ix1.copy(cacheKey = None), spark, scaleQ).count())
+    secs(s"bm25-stored-score-1q ${kDocs}x")(operators.Bm25.scoreWithIndex(
+      ixK.copy(cacheKey = None), spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc 1x")(
       operators.Bm25.scoreWithIndex(ix1, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc ${kDocs}x")(
@@ -1189,8 +1189,8 @@ object Scale {
     secs(s"bm25-store-write ${k100}x")(
       bm25StoreWrite(docs100, s"$base/bm25_${k100}x", operators.Bm25.DefaultTermBuckets))
     lazy val ix100 = bm25StoredProbe(s"$base/bm25_${k100}x")
-    secs(s"bm25-stored-score-1q ${k100}x")(
-      operators.Bm25.scoreWithIndex(ix100, spark, scaleQ, inProcessLimit = 0).count())
+    secs(s"bm25-stored-score-1q ${k100}x")(operators.Bm25.scoreWithIndex(
+      ix100.copy(cacheKey = None), spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc ${k100}x")(
       operators.Bm25.scoreWithIndex(ix100, spark, scaleQ).count())
     // incremental dedup vs a 100× lake: stored bucket table built once

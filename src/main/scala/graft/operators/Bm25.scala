@@ -632,41 +632,32 @@ object Bm25 {
   /** Driver-side snapshot of a keyed index for IN-PROCESS query scoring —
     * the reference's serving shape exactly: `bm25_manager.py:115-211` loads
     * the NPZ term arrays into process memory once and scores queries
-    * against them with no I/O. Guarded by a LIMIT-bounded postings count
-    * (the [[graft.operators.Dedup]] broadcast-guard pattern) and memoized
-    * per (session, cacheKey); an unkeyed index, an over-limit index, or a
-    * non-integral doc_id never takes the fast path — at 100 TB the
-    * bucket-pruned distributed scan is unchanged.
+    * against them with no I/O. Admitted through the [[Resident]] guard
+    * (postings rows against [[Resident.PostingsRows]], no float budget)
+    * and memoized per (session, cacheKey); an unkeyed index, an over-limit
+    * index, or a doc_id outside the id rule never takes the fast path — at
+    * 100 TB the bucket-pruned distributed scan is unchanged.
     */
   private final case class InProcIndex(
     postings: Map[String, Array[(Long, Long, Long)]], // term -> (doc_id, tf, doc_len)
     idf: Map[String, Double], avgdl: Double)
   private val inProcCache = new SessionMemo[Option[InProcIndex]]
-  private def indexInProcess(ix: Index, spark: org.apache.spark.sql.SparkSession,
-                             limit: Int): Option[InProcIndex] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    if (limit <= 0) return None
-    ix.cacheKey.flatMap { k0 =>
-      def integral(df: DataFrame, c: String): Boolean =
-        df.schema(c).dataType == LongType || df.schema(c).dataType == IntegerType
-      if (!integral(ix.postings, "doc_id")) return None
-      def build(): Option[InProcIndex] = {
-        val post = withDocLen(ix)
-        if (post.limit(limit + 1).count() > limit) None
-        else {
-          import spark.implicits._
-          val rows = post.select(col("term"),
-              col("doc_id").cast("long"), col("tf").cast("long"),
-              col("doc_len").cast("long"))
-            .as[(String, Long, Long, Long)].collect()
-          val byTerm = rows.groupBy(_._1).map { case (t, xs) =>
-            t -> xs.map(x => (x._2, x._3, x._4)) }
-          val idfM = ix.idf.select(col("term"), col("idf").cast("double"))
-            .as[(String, Double)].collect().toMap
-          Some(InProcIndex(byTerm, idfM, ix.avgdl))
-        }
+  private def indexInProcess(ix: Index, spark: SparkSession): Option[InProcIndex] = {
+    if (!Resident.ids(ix.postings, "doc_id")) return None
+    Resident.memo(inProcCache, spark, ix.cacheKey, "bm25") {
+      val post = withDocLen(ix)
+      Option.when(Resident.fits(post, Resident.PostingsRows)) {
+        import spark.implicits._
+        val rows = post.select(col("term"),
+            col("doc_id").cast("long"), col("tf").cast("long"),
+            col("doc_len").cast("long"))
+          .as[(String, Long, Long, Long)].collect()
+        val byTerm = rows.groupBy(_._1).map { case (t, xs) =>
+          t -> xs.map(x => (x._2, x._3, x._4)) }
+        val idfM = ix.idf.select(col("term"), col("idf").cast("double"))
+          .as[(String, Double)].collect().toMap
+        InProcIndex(byTerm, idfM, ix.avgdl)
       }
-      inProcCache.getOrBuild(spark, s"$k0|lim=$limit")(build())
     }
   }
 
@@ -700,14 +691,6 @@ object Bm25 {
     acc.asScala.toSeq.filter(_._2 > 0).sortBy(_._1)
   }
 
-  /** Score a single query string against a prebuilt index.
-    *
-    * Serving shape: a KEYED index under `inProcessLimit` postings rows
-    * scores entirely in process ([[indexInProcess]]) and returns a
-    * LocalRelation — zero jobs warm, the reference's loaded-NPZ regime.
-    * `inProcessLimit = 0` (or an unkeyed/over-limit index) keeps the
-    * bucket-pruned distributed scan unchanged.
-    */
   /** The in-process branch of [[scoreWithIndex]] as VALUES — the raw
     * `(doc_id, score)` list (positive scores only, same driver replay of
     * the distributed sum) for callers composing further driver-side stages.
@@ -715,16 +698,23 @@ object Bm25 {
     * distributed plan.
     */
   def scoreWithIndexValues(ix: Index, spark: org.apache.spark.sql.SparkSession,
-                           query: String, k1: Double = K1, b: Double = B,
-                           inProcessLimit: Int = 2000000): Option[Seq[(Long, Double)]] =
-    indexInProcess(ix, spark, inProcessLimit).map(ip =>
+                           query: String, k1: Double = K1,
+                           b: Double = B): Option[Seq[(Long, Double)]] =
+    indexInProcess(ix, spark).map(ip =>
       scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, query), k1, b))
 
+  /** Score a single query string against a prebuilt index.
+    *
+    * Serving shape: a KEYED index under the [[Resident]] guard scores
+    * entirely in process ([[indexInProcess]]) and returns a LocalRelation —
+    * zero jobs warm, the reference's loaded-NPZ regime. An unkeyed index
+    * (`ix.copy(cacheKey = None)`) or one over the guard keeps the
+    * bucket-pruned distributed scan unchanged.
+    */
   def scoreWithIndex(ix: Index, spark: org.apache.spark.sql.SparkSession,
-                     query: String, k1: Double = K1, b: Double = B,
-                     inProcessLimit: Int = 2000000): DataFrame = {
+                     query: String, k1: Double = K1, b: Double = B): DataFrame = {
     import spark.implicits._
-    indexInProcess(ix, spark, inProcessLimit) match {
+    indexInProcess(ix, spark) match {
       case Some(ip) =>
         // native doc_id type preserved — the rung must not widen the schema
         // relative to the distributed plan it replaces
@@ -769,14 +759,13 @@ object Bm25 {
   def topKBatchInProcess(ix: Index, spark: org.apache.spark.sql.SparkSession,
                          queries: Seq[(Long, String)], k: Int,
                          k1: Double = K1, b: Double = B,
-                         inProcessLimit: Int = 2000000,
                          maxQueries: Int = 1024): Option[DataFrame] = {
     if (k <= 0 || queries.size > maxQueries) return None
     // a duplicated query_id would MERGE in the distributed plan (its
     // groupBy(query_id, term) sums qtf across the duplicate rows) but score
     // independently here — decline rather than diverge
     if (queries.map(_._1).distinct.size != queries.size) return None
-    indexInProcess(ix, spark, inProcessLimit).map { ip =>
+    indexInProcess(ix, spark).map { ip =>
       import spark.implicits._
       val rows = queries.flatMap { case (qid, q) =>
         TopK.roundedHead(

@@ -62,9 +62,9 @@ private[graft] object PathInventory {
   * cache in the engine (in-process serving rungs, stored-index plans, table
   * reads, bound expressions): weak-keyed by SparkSession so a stopped
   * session's entries (and their broadcasts) can be collected,
-  * ConcurrentHashMap inside for compute-once semantics. The guard policies
-  * in front of these memos (LIMIT-bounded counts, byte budgets) are easier
-  * to audit when the memo itself has exactly one shape.
+  * ConcurrentHashMap inside for compute-once semantics. The serving rungs
+  * decide what may become resident through one guard in front of their
+  * memos, [[Resident]].
   *
   * Keep one instance per kind of value: a build that reads another entry
   * of the SAME instance re-enters `ConcurrentHashMap.computeIfAbsent`,
@@ -78,7 +78,7 @@ private[graft] object PathInventory {
   * drops, from every instance, the session's entries whose key holds `dir`
   * as a whole path: at the start of the key or right after a `:`, and
   * followed by the end of the key, `/`, `@` or `|`. So `/a/b` evicts
-  * `/a/b`, `/a/b/x.parquet` and `stored:/a/b@7|lim=5`, but not `/a/bc`.
+  * `/a/b`, `/a/b/x.parquet` and `stored:/a/b@7|flat`, but not `/a/bc`.
   * `release` runs on each evicted value (an unpersist, for a persisted
   * plan).
   */

@@ -423,73 +423,31 @@ object VectorSearch {
         }
     }
 
-  /** (id BIGINT, vec ARRAY&lt;FLOAT&gt;) — the schema the in-memory serving
-    * fast paths require; anything else falls through to the distributed
-    * plan unchanged.
-    */
-  private def isLongArrayF32(df: DataFrame, id: String, vec: String): Boolean = {
-    import org.apache.spark.sql.types.{ArrayType, FloatType, LongType}
-    df.schema(id).dataType == LongType &&
-      (df.schema(vec).dataType match {
-        case ArrayType(FloatType, _) => true
-        case _ => false
-      })
-  }
-
-  /** Hard byte budget for any in-memory vector collect: rows × dim must
-    * stay under this many floats (64M ≈ 256 MB of payload) regardless of
-    * the row limit — a 1536-d corpus under 200k ROWS would otherwise
-    * collect ~1 GB to the driver that the distributed plan never
-    * materializes. The dim probe is one `take(1)` inside the memoized
-    * build. The query-vector cache's resident map
-    * ([[graft.query.QueryCache.embedQueryCached]]) shares it.
-    */
-  private[graft] val InMemMaxFloats = 64L * 1024 * 1024
-
-  /** The residency guard in front of every in-memory build: at most
-    * `limit` rows (LIMIT-bounded count) AND rows × dim under
-    * [[InMemMaxFloats]]. Always two jobs in this order — the row count,
-    * then the `take(1)` dimension probe.
-    */
-  private def fitsInMemory(rows: DataFrame, vecCol: String, limit: Int): Boolean = {
-    val n = rows.limit(limit + 1).count()
-    val dim = rows.select(size(col(vecCol))).take(1)
-      .headOption.map(_.getInt(0).toLong).getOrElse(0L)
-    n <= limit && n * math.max(dim, 1L) <= InMemMaxFloats
-  }
-
   /** Guarded in-memory corpus for the flat-tier serving fast path: when the
-    * embeddings table fits under `inMemoryLimit` rows (LIMIT-bounded count,
-    * the [[graft.operators.Dedup]] broadcast-guard pattern) AND under the
-    * [[InMemMaxFloats]] byte budget, its (id, vec) pairs are collected ONCE
-    * and broadcast — the reference's in-process FAISS `IndexFlat` serving
-    * regime (`embed_manager.py:163-213` picks flat exactly when the corpus
-    * is small). REQUIRES a `cacheKey` (build-once serve-many is the whole
-    * economics; a keyless caller would pay count+collect+broadcast per
-    * call with zero reuse — the distributed plan is strictly better
-    * there). Null-vector rows are dropped at collect: they can never rank
-    * (the window plan sorts null scores last, under any real top-k), and
-    * the in-memory loop must not NPE where the plan degrades. Above
-    * either limit — the 100 TB regime — `None`, and callers keep their
-    * distributed plan unchanged.
+    * embeddings table passes the [[Resident]] guard (row limit and float
+    * budget), its (id, vec) pairs are collected ONCE and broadcast — the
+    * reference's in-process FAISS `IndexFlat` serving regime
+    * (`embed_manager.py:163-213` picks flat exactly when the corpus is
+    * small). Keyed or distributed ([[Resident.memo]]): a keyless caller
+    * would pay count+collect+broadcast per call with zero reuse. Null-vector
+    * rows are dropped at collect: they can never rank (the window plan
+    * sorts null scores last, under any real top-k), and the in-memory loop
+    * must not NPE where the plan degrades. Above the guard — the 100 TB
+    * regime — `None`, and callers keep their distributed plan unchanged.
     */
   private type InMemCorpus =
     org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]
   private val inMemCorpusCache = new SessionMemo[Option[InMemCorpus]]
-  private def corpusInMemory(embeddings: DataFrame, idCol: String,
-                             vecCol: String, inMemoryLimit: Int,
+  private def corpusInMemory(embeddings: DataFrame, idCol: String, vecCol: String,
                              cacheKey: Option[String]): Option[InMemCorpus] = {
-    if (inMemoryLimit <= 0) return None
-    if (!isLongArrayF32(embeddings, idCol, vecCol)) return None
+    if (!Resident.vectors(embeddings, idCol, vecCol)) return None
     val spark = embeddings.sparkSession
     import spark.implicits._
-    cacheKey.flatMap { k0 =>
-      inMemCorpusCache.getOrBuild(spark, s"$k0|lim=$inMemoryLimit") {
-        val emb = embeddings.select(col(idCol), col(vecCol))
-          .filter(col(vecCol).isNotNull)
-        if (!fitsInMemory(emb, vecCol, inMemoryLimit)) None
-        else Some(spark.sparkContext.broadcast(emb.as[(Long, Array[Float])].collect()))
-      }
+    Resident.memo(inMemCorpusCache, spark, cacheKey, "flat") {
+      val emb = embeddings.select(col(idCol), col(vecCol))
+        .filter(col(vecCol).isNotNull)
+      Option.when(Resident.fits(emb, Resident.VectorRows, Some(vecCol)))(
+        spark.sparkContext.broadcast(emb.as[(Long, Array[Float])].collect()))
     }
   }
 
@@ -512,9 +470,8 @@ object VectorSearch {
                             vecCol: String, pred: Long => Boolean,
                             qidCol: String, qvecCol: String,
                             maxQueries: Int = 1024,
-                            inMemoryLimit: Int = 200000,
                             cacheKey: Option[String] = None): Option[DataFrame] =
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey).flatMap { bc =>
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey).flatMap { bc =>
       val spark = embeddings.sparkSession
       import spark.implicits._
       val qs = bc.value.iterator.filter { case (id, _) => pred(id) }.toArray
@@ -530,9 +487,8 @@ object VectorSearch {
   def corpusVectorsInMemory(embeddings: DataFrame, idCol: String,
                             vecCol: String, pred: Long => Boolean,
                             maxRows: Int = 1024,
-                            inMemoryLimit: Int = 200000,
                             cacheKey: Option[String] = None): Option[Seq[(Long, Seq[Float])]] =
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey).flatMap { bc =>
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey).flatMap { bc =>
       val xs = bc.value.iterator.filter { case (id, _) => pred(id) }.toArray
       if (xs.length > maxRows) None
       else Some(xs.sortBy(_._1).toSeq.map { case (id, v) =>
@@ -546,11 +502,9 @@ object VectorSearch {
     */
   def corpusVectorInMemory(embeddings: DataFrame, idCol: String,
                            vecCol: String, id: Long,
-                           inMemoryLimit: Int = 200000,
                            cacheKey: Option[String] = None): Option[Seq[Float]] =
     corpusVectorsInMemory(embeddings, idCol, vecCol, _ == id, maxRows = 1,
-      inMemoryLimit = inMemoryLimit, cacheKey = cacheKey)
-      .flatMap(_.headOption.map(_._2))
+      cacheKey = cacheKey).flatMap(_.headOption.map(_._2))
 
   /** Replay the [[TopKAggregator]] over an in-memory corpus for one query —
     * the SAME insertion/ordering semantics (score desc, doc_id asc,
@@ -605,20 +559,20 @@ object VectorSearch {
 
   /** Exact top-k for one literal query vector.
     *
-    * Serving shape: under `inMemoryLimit` rows (see [[corpusInMemory]]) the
-    * scan + heap run driver-side over the memoized broadcast value and the
-    * result is a LocalRelation — with a `cacheKey` a warm single-vector
-    * search issues ZERO scan jobs, the reference's in-process `IndexFlat`
-    * latency regime (BASELINE.md's 1.24 ms/query is FAISS in-process; the
-    * distributed plan pays a per-job scheduling floor ~100× that). Results
-    * are identical on either path (spec-proved); `inMemoryLimit = 0`
-    * forces the distributed `TakeOrderedAndProject` plan, which is also
-    * what any corpus above the limit uses — at 100 TB nothing changes.
+    * Serving shape: a keyed corpus under the [[Resident]] guard (see
+    * [[corpusInMemory]]) runs the scan + heap driver-side over the
+    * memoized broadcast value and the result is a LocalRelation — a warm
+    * single-vector search issues ZERO scan jobs, the reference's
+    * in-process `IndexFlat` latency regime (BASELINE.md's 1.24 ms/query is
+    * FAISS in-process; the distributed plan pays a per-job scheduling
+    * floor ~100× that). Results are identical on either path
+    * (spec-proved); a keyless call is the distributed
+    * `TakeOrderedAndProject` plan, which is also what any corpus above the
+    * guard uses — at 100 TB nothing changes.
     */
   def bruteTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-                query: Seq[Float], k: Int, inMemoryLimit: Int = 200000,
-                cacheKey: Option[String] = None): DataFrame =
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey) match {
+                query: Seq[Float], k: Int, cacheKey: Option[String] = None): DataFrame =
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey) match {
       case Some(bc) =>
         val spark = embeddings.sparkSession
         import spark.implicits._
@@ -640,10 +594,9 @@ object VectorSearch {
   private def bruteTopKBatchInMemory(embeddings: DataFrame, idCol: String,
                                      vecCol: String, queries: DataFrame,
                                      qidCol: String, qvecCol: String, k: Int,
-                                     inMemoryLimit: Int,
                                      cacheKey: Option[String]): Option[DataFrame] = {
-    if (!isLongArrayF32(queries, qidCol, qvecCol)) return None
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey).flatMap { bc =>
+    if (!Resident.vectors(queries, qidCol, qvecCol)) return None
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey).flatMap { bc =>
       val kk = k
       // a LARGE in-memory corpus makes each query's scan the unit of work;
       // a storage-resident query set often lands in 1-2 input partitions,
@@ -716,9 +669,8 @@ object VectorSearch {
     */
   def roundedTopKInProcess(embeddings: DataFrame, idCol: String, vecCol: String,
                            queries: Seq[(Long, Array[Float])], k: Int,
-                           scale: Int, inMemoryLimit: Int = 200000,
-                           cacheKey: Option[String] = None): Option[DataFrame] =
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey).map { bc =>
+                           scale: Int, cacheKey: Option[String] = None): Option[DataFrame] =
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey).map { bc =>
       val spark = embeddings.sparkSession
       import spark.implicits._
       queries.flatMap { case (qid, qv) =>
@@ -735,9 +687,8 @@ object VectorSearch {
     */
   def roundedTopKValues(embeddings: DataFrame, idCol: String, vecCol: String,
                         qv: Array[Float], k: Int, scale: Int,
-                        inMemoryLimit: Int = 200000,
                         cacheKey: Option[String] = None): Option[Seq[(Long, Double)]] =
-    corpusInMemory(embeddings, idCol, vecCol, inMemoryLimit, cacheKey).map { bc =>
+    corpusInMemory(embeddings, idCol, vecCol, cacheKey).map { bc =>
       roundedTopKOverCorpus(bc.value, qv, k, scale)
         .map(sd => (sd.doc_id, sd.score))
     }
@@ -746,21 +697,20 @@ object VectorSearch {
     * Broadcast the (small) query set; per-partition partial top-k via the
     * rank window happens after one shuffle on query_id.
     *
-    * Serving shape: under `inMemoryLimit` corpus rows the whole batch runs
-    * as ONE mapPartitions over the queries against the broadcast corpus
-    * ([[corpusInMemory]]) — the reference's in-process flat-index regime
-    * (50 queries × top-20 in ~62 ms, BASELINE.md), which the multi-stage
-    * distributed plan can never reach through its per-stage scheduling
-    * floor. Identical results on either path (spec-proved);
-    * `inMemoryLimit = 0` forces the distributed plan, which corpora above
-    * the limit use unconditionally — the 100 TB path is unchanged.
+    * Serving shape: a keyed corpus under the [[Resident]] guard runs the
+    * whole batch as ONE mapPartitions over the queries against the
+    * broadcast corpus ([[corpusInMemory]]) — the reference's in-process
+    * flat-index regime (50 queries × top-20 in ~62 ms, BASELINE.md), which
+    * the multi-stage distributed plan can never reach through its
+    * per-stage scheduling floor. Identical results on either path
+    * (spec-proved); a keyless call is the distributed plan, which corpora
+    * above the guard use unconditionally — the 100 TB path is unchanged.
     */
   def bruteTopKBatch(embeddings: DataFrame, idCol: String, vecCol: String,
                      queries: DataFrame, qidCol: String, qvecCol: String,
-                     k: Int, inMemoryLimit: Int = 200000,
-                     cacheKey: Option[String] = None): DataFrame =
+                     k: Int, cacheKey: Option[String] = None): DataFrame =
     bruteTopKBatchInMemory(embeddings, idCol, vecCol, queries, qidCol,
-      qvecCol, k, inMemoryLimit, cacheKey).getOrElse {
+      qvecCol, k, cacheKey).getOrElse {
       val scored = embeddings.crossJoin(broadcast(queries))
         .select(col(qidCol).as("query_id"), col(idCol).as("doc_id"),
           cosine(col(vecCol), col(qvecCol)).as("score"))
@@ -777,10 +727,9 @@ object VectorSearch {
     */
   def bruteTopKBatchAgg(embeddings: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, qidCol: String, qvecCol: String,
-                        k: Int, inMemoryLimit: Int = 200000,
-                        cacheKey: Option[String] = None): DataFrame =
+                        k: Int, cacheKey: Option[String] = None): DataFrame =
     bruteTopKBatchInMemory(embeddings, idCol, vecCol, queries, qidCol,
-      qvecCol, k, inMemoryLimit, cacheKey).getOrElse {
+      qvecCol, k, cacheKey).getOrElse {
       val scored = embeddings.crossJoin(broadcast(queries))
         .select(col(qidCol).as("query_id"), col(idCol).as("doc_id"),
           cosine(col(vecCol), col(qvecCol)).as("score"))
@@ -801,41 +750,32 @@ object VectorSearch {
                             cacheKey: Option[String] = None)
 
   /** Guarded in-memory IVF corpus for the serving fast path: the cluster
-    * assignment collected ONCE (LIMIT-bounded count, memoized per
+    * assignment collected ONCE under the [[Resident]] guard (memoized per
     * (session, key)) and grouped by cluster_id — FAISS IVFFlat's resident
-    * serving layout. None over the limit or off-schema; the partition-
-    * pruned distributed scan is the 100 TB path either way.
+    * serving layout. None keyless, over the guard or off-schema; the
+    * partition-pruned distributed scan is the 100 TB path either way.
     */
   private type InMemIvf = org.apache.spark.broadcast.Broadcast[
     (Array[(Int, Array[Float])], Map[Int, Array[(Long, Array[Float])]])]
   private val inMemIvfCache = new SessionMemo[Option[InMemIvf]]
   private def ivfInMemory(assigned: DataFrame, idCol: String, vecCol: String,
                           cents: => Array[(Int, Array[Float])],
-                          inMemoryLimit: Int,
                           cacheKey: Option[String]): Option[InMemIvf] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    if (inMemoryLimit <= 0) return None
-    if (!isLongArrayF32(assigned, idCol, vecCol)) return None
-    val cidType = assigned.schema("cluster_id").dataType
-    if (cidType != IntegerType && cidType != LongType) return None
+    if (!Resident.vectors(assigned, idCol, vecCol) ||
+        !Resident.integral(assigned, "cluster_id")) return None
     val spark = assigned.sparkSession
     import spark.implicits._
     // `cents` is by-name and only forced inside the memoized build, so a
     // warm call (or an over-limit index memoized to None) never pays the
     // centroid collect; a failing collect degrades to the distributed plan
-    cacheKey.flatMap { k0 =>
-      inMemIvfCache.getOrBuild(spark, s"$k0|lim=$inMemoryLimit") {
-        scala.util.Try {
-          val a = assigned.select(col(idCol), col(vecCol),
-              col("cluster_id").cast("int"))
-            .filter(col(vecCol).isNotNull)
-          if (!fitsInMemory(a, vecCol, inMemoryLimit)) None
-          else {
-            val byCluster = a.as[(Long, Array[Float], Int)].collect()
-              .groupBy(_._3).map { case (cid, xs) => cid -> xs.map(x => (x._1, x._2)) }
-            Some(spark.sparkContext.broadcast((cents, byCluster)))
-          }
-        }.toOption.flatten
+    Resident.memo(inMemIvfCache, spark, cacheKey, "ivf") {
+      val a = assigned.select(col(idCol), col(vecCol),
+          col("cluster_id").cast("int"))
+        .filter(col(vecCol).isNotNull)
+      Option.when(Resident.fits(a, Resident.VectorRows, Some(vecCol))) {
+        val byCluster = a.as[(Long, Array[Float], Int)].collect()
+          .groupBy(_._3).map { case (cid, xs) => cid -> xs.map(x => (x._1, x._2)) }
+        spark.sparkContext.broadcast((cents, byCluster))
       }
     }
   }
@@ -878,12 +818,9 @@ object VectorSearch {
     */
   def roundedIvfTopKInProcess(ix: IvfIndex,
                               queries: Seq[(Long, Array[Float], Seq[Int])],
-                              k: Int, scale: Int,
-                              inMemoryLimit: Int = 200000): Option[DataFrame] =
-    ix.cacheKey.flatMap(_ =>
-      ivfInMemory(ix.assigned, ix.idCol, ix.vecCol,
-        ix.centroids.zipWithIndex.map { case (cv, cid) => (cid, cv) },
-        inMemoryLimit, ix.cacheKey))
+                              k: Int, scale: Int): Option[DataFrame] =
+    ivfInMemory(ix.assigned, ix.idCol, ix.vecCol,
+        ix.centroids.zipWithIndex.map { case (cv, cid) => (cid, cv) }, ix.cacheKey)
       .map { bc =>
         val spark = ix.assigned.sparkSession
         import spark.implicits._
@@ -913,29 +850,21 @@ object VectorSearch {
     org.apache.spark.broadcast.Broadcast[Map[Int, Array[(Long, Array[Int], Array[Float])]]]
   private val inMemPqCache = new SessionMemo[Option[InMemPq]]
   private def pqInMemory(encoded: DataFrame, idCol: String, vecCol: String,
-                         inMemoryLimit: Int,
                          cacheKey: Option[String]): Option[InMemPq] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    if (inMemoryLimit <= 0) return None
-    if (!isLongArrayF32(encoded, idCol, vecCol)) return None
-    val cidType = encoded.schema("cluster_id").dataType
-    if (cidType != IntegerType && cidType != LongType) return None
+    if (!Resident.vectors(encoded, idCol, vecCol) ||
+        !Resident.integral(encoded, "cluster_id")) return None
     val spark = encoded.sparkSession
     import spark.implicits._
-    cacheKey.flatMap { k0 =>
-      inMemPqCache.getOrBuild(spark, s"$k0|pq|lim=$inMemoryLimit") {
-        scala.util.Try {
-          val sel = encoded.select(col(idCol), col("cluster_id").cast("int"),
-              col("codes"), col(vecCol))
-            .filter(col(vecCol).isNotNull && col("codes").isNotNull)
-          if (!fitsInMemory(sel, vecCol, inMemoryLimit)) None
-          else Some(spark.sparkContext.broadcast(
-            sel.as[(Long, Int, Array[Int], Array[Float])].collect()
-              .groupBy(_._2)
-              .map { case (cid, xs) =>
-                cid -> xs.sortBy(_._1).map(x => (x._1, x._3, x._4)) }))
-        }.toOption.flatten
-      }
+    Resident.memo(inMemPqCache, spark, cacheKey, "pq") {
+      val sel = encoded.select(col(idCol), col("cluster_id").cast("int"),
+          col("codes"), col(vecCol))
+        .filter(col(vecCol).isNotNull && col("codes").isNotNull)
+      Option.when(Resident.fits(sel, Resident.VectorRows, Some(vecCol)))(
+        spark.sparkContext.broadcast(
+          sel.as[(Long, Int, Array[Int], Array[Float])].collect()
+            .groupBy(_._2)
+            .map { case (cid, xs) =>
+              cid -> xs.sortBy(_._1).map(x => (x._1, x._3, x._4)) }))
     }
   }
 
@@ -951,9 +880,8 @@ object VectorSearch {
   def ivfPqTopKValues(encoded: DataFrame, idCol: String, vecCol: String,
                       cb: PqCodebook, qv: Array[Float], probes: Seq[Int],
                       k: Int, shortlist: Int, scale: Int = 6,
-                      inMemoryLimit: Int = 200000,
                       cacheKey: Option[String] = None): Option[Seq[(Long, Double)]] =
-    pqInMemory(encoded, idCol, vecCol, inMemoryLimit, cacheKey).map { bc =>
+    pqInMemory(encoded, idCol, vecCol, cacheKey).map { bc =>
       val lut = pqLut(cb, qv.toSeq)
       val kSub = cb.head.length
       // ADC stage: same accumulation order as PqAdcDistColsExpr (sequential
@@ -1166,14 +1094,13 @@ object VectorSearch {
   def ivfTopKBatch(assigned: DataFrame, idCol: String, vecCol: String,
                    centroids: DataFrame,
                    queries: DataFrame, qidCol: String, qvecCol: String,
-                   k: Int, nprobe: Int, inMemoryLimit: Int = 200000,
-                   cacheKey: Option[String] = None): DataFrame = {
+                   k: Int, nprobe: Int, cacheKey: Option[String] = None): DataFrame = {
     // keyed + under the guard: probe and score in process over the
     // memoized cluster-grouped broadcast — same probe ranking (raw cosine
     // desc, cid asc) and TopKAggregator order as the distributed plan
-    // below (spec-proved identical); over the limit or keyless, the
+    // below (spec-proved identical); over the guard or keyless, the
     // partition-pruned distributed plan is unchanged
-    if (cacheKey.isDefined && isLongArrayF32(queries, qidCol, qvecCol)) {
+    if (cacheKey.isDefined && Resident.vectors(queries, qidCol, qvecCol)) {
       // centroid collect rides the by-name `cents` parameter: forced only
       // inside ivfInMemory's memoized build, so warm calls (and over-limit
       // indexes memoized to None) pay no per-call job for it
@@ -1183,8 +1110,7 @@ object VectorSearch {
           .as[(Int, Array[Float])].collect()
       }
       val inMem = for {
-        bc <- ivfInMemory(assigned, idCol, vecCol, collectCents,
-          inMemoryLimit, cacheKey)
+        bc <- ivfInMemory(assigned, idCol, vecCol, collectCents, cacheKey)
         df <- searchQuerySet(queries, qidCol, qvecCol) { (qid, qv) =>
           val (cs, clusters) = bc.value
           val agg = new TopKAggregator(k)
@@ -1863,35 +1789,36 @@ object VectorSearch {
     * each hop is one join keyed on the graph's `src` plus one id-keyed
     * score join — corpus-sized state never accumulates per query.
     *
-    * Serving shape: when the indexed corpus fits under `inMemoryLimit`
-    * rows (LIMIT-bounded count, the [[graft.operators.Dedup]] broadcast-
-    * guard pattern), vectors + adjacency are broadcast ONCE and the whole
-    * beam search runs inside a single mapPartitions over the queries —
+    * Serving shape: when the indexed corpus passes the [[Resident]] guard
+    * (row limit and float budget), vectors + adjacency are broadcast ONCE
+    * and the whole beam search runs inside a single mapPartitions over the
+    * queries —
     * the reference's in-process HNSW serving regime, one stage instead of
     * ~2 exchanges per hop. The in-memory loop replays the distributed
     * semantics operation-for-operation (same [[HashAlgos.cosineF32]]
     * arithmetic order, same (score desc, id asc) beam selection, same
     * HALF_UP 6dp rounding), so results are identical on either path
-    * (spec-proved); `inMemoryLimit = 0` forces the distributed plan.
-    * Above the limit — the 100 TB regime — nothing changes: hop joins
-    * against the partitioned edge table. `cacheKey` memoizes the
+    * (spec-proved against [[graphSearchDistributed]]). Above the guard —
+    * the 100 TB regime — nothing changes: hop joins against the
+    * partitioned edge table. Unlike the other vector rungs, a keyless
+    * call still builds in memory, per call; `cacheKey` memoizes the
     * broadcast per session so build-once serve-many callers skip the
     * re-collect.
     */
   def graphSearch(graph: DataFrame, embeddings: DataFrame, idCol: String,
                   vecCol: String, queries: DataFrame, qidCol: String,
                   qvecCol: String, k: Int, beam: Int, hops: Int,
-                  entryIds: Seq[Long], inMemoryLimit: Int = 200000,
+                  entryIds: Seq[Long],
                   cacheKey: Option[String] = None): DataFrame = {
     require(beam >= k, s"beam ($beam) must be >= k ($k)")
     graphSearchInMemory(graph, embeddings, idCol, vecCol, queries, qidCol,
-      qvecCol, k, beam, hops, entryIds, inMemoryLimit, cacheKey)
+      qvecCol, k, beam, hops, entryIds, cacheKey)
       .getOrElse(graphSearchDistributed(graph, embeddings, idCol, vecCol,
         queries, qidCol, qvecCol, k, beam, hops, entryIds))
   }
 
-  /** The broadcast one-stage serving path; None when the corpus exceeds
-    * the limit or the id/vector column types don't fit the fast path.
+  /** The broadcast one-stage serving path; None when the corpus is over
+    * the [[Resident]] guard or the id/vector column types don't fit it.
     */
   private type InMemGraph =
     org.apache.spark.broadcast.Broadcast[(Map[Long, Array[Float]], Map[Long, Array[Long]])]
@@ -1901,35 +1828,30 @@ object VectorSearch {
                                   queries: DataFrame, qidCol: String,
                                   qvecCol: String, k: Int, beam: Int,
                                   hops: Int, entryIds: Seq[Long],
-                                  inMemoryLimit: Int,
                                   cacheKey: Option[String]): Option[DataFrame] = {
-    if (inMemoryLimit <= 0) return None
-    if (!isLongArrayF32(embeddings, idCol, vecCol) ||
-        !isLongArrayF32(queries, qidCol, qvecCol)) return None
+    if (!Resident.vectors(embeddings, idCol, vecCol) ||
+        !Resident.vectors(queries, qidCol, qvecCol)) return None
     val spark = embeddings.sparkSession
     import spark.implicits._
     // unlike the flat tier, a KEYLESS graph search still builds in memory:
     // the distributed alternative is ~2 exchanges × hops of scheduling,
-    // so even a per-call build wins (−69% measured); the byte budget and
-    // null filter guard the collect the same way as corpusInMemory
+    // so even a per-call build wins (−69% measured); the same guard and
+    // null filter cover the collect as in corpusInMemory
     def build(): Option[InMemGraph] = {
       val emb = embeddings.select(col(idCol), col(vecCol))
         .filter(col(vecCol).isNotNull)
-      if (!fitsInMemory(emb, vecCol, inMemoryLimit)) None
-      else {
+      Option.when(Resident.fits(emb, Resident.VectorRows, Some(vecCol))) {
         val vectors = emb.as[(Long, Array[Float])].collect().toMap
         val adj = undirectedEdges(graph)
           .select(col("doc_id").cast("long"), col("dst").cast("long"))
           .as[(Long, Long)].collect()
           .groupBy(_._1).map { case (s, ds) => s -> ds.map(_._2) }
-        Some(spark.sparkContext.broadcast((vectors, adj)))
+        spark.sparkContext.broadcast((vectors, adj))
       }
     }
-    val built = cacheKey match {
-      case Some(k0) =>
-        inMemGraphCache.getOrBuild(spark, s"$k0|lim=$inMemoryLimit")(build())
-      case None => build()
-    }
+    val built =
+      if (cacheKey.isEmpty) build()
+      else Resident.memo(inMemGraphCache, spark, cacheKey, "graph")(build())
     built.map { bc =>
       val entrySeq = entryIds.distinct
       val (kk, bb, hh) = (k, beam, hops)
@@ -1973,7 +1895,10 @@ object VectorSearch {
     }
   }
 
-  private def graphSearchDistributed(graph: DataFrame, embeddings: DataFrame,
+  /** The hop-join plan of [[graphSearch]] — the 100 TB path, and the
+    * reference the in-memory rung is proved against.
+    */
+  private[graft] def graphSearchDistributed(graph: DataFrame, embeddings: DataFrame,
                                      idCol: String, vecCol: String,
                                      queries: DataFrame, qidCol: String,
                                      qvecCol: String, k: Int, beam: Int,

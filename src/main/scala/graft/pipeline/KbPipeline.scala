@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.config.KbConfig
 import graft.embed.Embedder
 import graft.functions.TextFunctions
-import graft.operators.{Bm25, ContextWindow, Fusion, VectorSearch}
+import graft.operators.{Bm25, ContextWindow, Fusion, Resident, VectorSearch}
 import graft.query.{Enhancement, Rerank}
 
 /** The reference's three CLI verbs as Spark jobs (SURVEY §3, Appendix).
@@ -86,16 +86,15 @@ object KbPipeline {
     * @param categoryFilter  P3: restrict hits to chunks tagged with any of
     *                        these categories (exact `array_contains`, the
     *                        deliberate upgrade over the reference's LIKE)
-    */
-  /** @param serving  the vector-stage serving index — the artifacts for
-    *                  whatever tier [[VectorSearch.chooseIndex]] selected
-    *                  (flat scan / IVF probe / IVFPQ ADC+re-rank / graph
-    *                  beam), honored iff `cfg.indexType != "exact"` (the
-    *                  reference's policy output IS its serving index,
-    *                  `query/search.py:207-231`; `index_type=exact` is the
-    *                  kill-switch back to the full scan). Every tier keeps
-    *                  the SAME rounded ranking contract, so exactness is
-    *                  the only thing traded (nprobe from `cfg.ivfNprobe`).
+    * @param serving  the vector-stage serving index — the artifacts for
+    *                 whatever tier [[VectorSearch.chooseIndex]] selected
+    *                 (flat scan / IVF probe / IVFPQ ADC+re-rank / graph
+    *                 beam), honored iff `cfg.indexType != "exact"` (the
+    *                 reference's policy output IS its serving index,
+    *                 `query/search.py:207-231`; `index_type=exact` is the
+    *                 kill-switch back to the full scan). Every tier keeps
+    *                 the SAME rounded ranking contract, so exactness is
+    *                 the only thing traded (nprobe from `cfg.ivfNprobe`).
     */
   def query(spark: SparkSession, chunks: DataFrame, embeddings: DataFrame,
             queryText: String, cfg: KbConfig = KbConfig(),
@@ -347,26 +346,23 @@ object KbPipeline {
   /** Guarded in-memory chunk rows for the serving fast path — the
     * reference's resident SQLite chunk store (`query/search.py:207-231`
     * fetches hit text by id and context by `(sourcedoc, sid)` range from
-    * the open connection, not a table scan). LIMIT-bounded row guard,
-    * memoized per (session, key); None over the limit or when a sid is
-    * null (a hit row cannot carry it) — the broadcast joins are the
-    * 100 TB path either way.
+    * the open connection, not a table scan). Admitted through the
+    * [[Resident]] guard, memoized per (session, key); None over the limit,
+    * for ids outside the id rule, or when a sid is null (a hit row cannot
+    * carry it) — the broadcast joins are the 100 TB path either way.
     */
   private val chunkMapMemo = new graft.operators.SessionMemo[Option[ResidentChunks]]
-  private def chunksInMemory(chunks: DataFrame, key: String,
-                             maxRows: Int = 200000): Option[ResidentChunks] = {
+  private def chunksInMemory(chunks: DataFrame, key: String): Option[ResidentChunks] = {
+    // maintained kbs key chunks by STRING ids (sourcedoc#sid) — the
+    // Long-keyed resident map can't hold them (and the ANSI cast would
+    // throw); those serve through the distributed text-fetch join
+    if (!Resident.ids(chunks, "doc_id")) return None
     val spark = chunks.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    chunkMapMemo.getOrBuild(spark, s"$key|lim=$maxRows") {
-      // maintained kbs key chunks by STRING ids (sourcedoc#sid) — the
-      // Long-keyed resident map can't hold them (and the ANSI cast would
-      // throw); those serve through the distributed text-fetch join
-      val idType = chunks.schema("doc_id").dataType
+    Resident.memo(chunkMapMemo, spark, Some(key), "chunks") {
       val sel = chunks.select(col("doc_id").cast("long"), col("text"),
         col("sourcedoc"), col("sid").cast("int"))
-      if ((idType != LongType && idType != IntegerType) ||
-          sel.limit(maxRows + 1).count() > maxRows) None
+      if (!Resident.fits(sel, Resident.ChunkRows)) None
       else {
         val rows = sel.as[(Option[Long], String, String, Option[Int])].collect()
         if (rows.exists(_._4.isEmpty)) None
@@ -375,8 +371,8 @@ object KbPipeline {
           // still lies in a context band
           val byId = rows.collect { case (Some(id), t, sd, Some(si)) =>
             id -> ((t, sd, si)) }.toMap
-          val keyTypes = chunks.schema("sourcedoc").dataType == StringType &&
-            Seq(IntegerType, LongType).contains(chunks.schema("sid").dataType)
+          val keyTypes = chunks.schema("sourcedoc").dataType ==
+            org.apache.spark.sql.types.StringType && Resident.integral(chunks, "sid")
           val bySource =
             if (!keyTypes || rows.exists(r => r._2 == null || r._3 == null) ||
                 rows.map(r => (r._3, r._4)).distinct.length != rows.length) None

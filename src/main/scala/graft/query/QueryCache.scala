@@ -86,7 +86,7 @@ object QueryCache {
     *    rewrite, a deleted directory) reloads the map before the key is
     *    looked up again;
     *  - at rest over the budget: a table over
-    *    [[graft.operators.VectorSearch.InMemMaxFloats]] is served by one
+    *    [[graft.operators.Resident.MaxFloats]] is served by one
     *    pushdown-filtered read of the table per lookup (`content_key =
     *    <literal>`). The cache only grows by appends, so a table once over
     *    the budget stays at rest until `forget` evicts its entry;
@@ -172,7 +172,7 @@ object QueryCache {
                            dir: String, dims: Int, stamp: Long): Resident =
     if (stamp == 0L) Resident(0L, Map.empty)
     else {
-      val maxRows = (graft.operators.VectorSearch.InMemMaxFloats /
+      val maxRows = (graft.operators.Resident.MaxFloats /
         math.max(dims, 1)).toInt
       val rows = spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>")
         .parquet(dir)
@@ -193,8 +193,8 @@ object QueryCache {
     * "the cache served every row" from an assumption into a property the
     * run itself enforces (any miss crashes instead of silently
     * recomputing). The m16_query_cache oracle's second pass runs on this.
-    */
-  /** @param mirrorModel the REAL provider's model name to impersonate —
+    *
+    * @param mirrorModel the REAL provider's model name to impersonate —
     *   [[embedQueryCached]] keys its at-rest cache by (model, dims), so a
     *   warm-pass refuser must look up the same cache the real provider
     *   filled (empty = the standalone `cache-only-<dims>` identity).

@@ -218,6 +218,30 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("CLI database and embed verbs probe a KB with no java.io view") {
+    val in = Files.createTempDirectory("graft_noio_in").toString
+    val kb = NoJavaIoFileSystem.tempDir(spark, "graft_noio_kb")
+    val words = (1 to 150).map(i => s"w$i").mkString(" ")
+    Files.write(Paths.get(in, "a.txt"), s"alpha $words".getBytes(StandardCharsets.UTF_8))
+    def out(args: String*): String = {
+      val buf = new java.io.ByteArrayOutputStream()
+      Console.withOut(new java.io.PrintStream(buf))(Main.run(args.toArray, spark))
+      buf.toString
+    }
+    out("database", kb, s"$in/*.txt")
+    assert(!NoJavaIoFileSystem.javaIoSees(s"$kb/chunks"))
+    // the registry and chunks tables are seen: a new file appends
+    Files.write(Paths.get(in, "b.txt"), s"beta $words".getBytes(StandardCharsets.UTF_8))
+    val second = out("database", kb, s"$in/*.txt")
+    assert(second.contains("(incremental"), second)
+    // the stored embeddings are seen: a config that disagrees is warned about
+    out("embed", kb) // default 64-dim embeddings
+    val ini = Files.createTempFile("graft_noio_cfg", ".ini")
+    Files.write(ini, "[DEFAULT]\nvector_dimensions = 32\n".getBytes(StandardCharsets.UTF_8))
+    val embed = out("embed", kb, ini.toString)
+    assert(embed.contains("WARNING config vector_dimensions=32"), embed)
+  }
+
   test("M6: stale vector_dimensions config is auto-synced from stored embeddings") {
     val in = Files.createTempDirectory("graft_dims_in").toString
     val kb = Files.createTempDirectory("graft_dims_kb").toString

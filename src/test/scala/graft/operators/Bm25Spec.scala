@@ -187,10 +187,9 @@ class Bm25Spec extends SparkSpec {
     assert(stored.termBuckets.contains(4))
     val mem = Bm25.buildIndex(docs, "doc_id", "text")
     val q = "quick fox"
-    // inProcessLimit = 0 forces the DISTRIBUTED pruned scan whose plan
-    // shape this test asserts (the in-process path has its own identity
-    // test below)
-    val got = Bm25.scoreWithIndex(stored, spark, q, inProcessLimit = 0)
+    // a keyless index takes the DISTRIBUTED pruned scan whose plan shape
+    // this test asserts (the keyed in-process path is checked below)
+    val got = Bm25.scoreWithIndex(keyless(stored), spark, q)
     val plan = got.queryExecution.executedPlan.toString
     // the postings scan must push the query terms' bucket filter to
     // parquet: the bucket-sorted segment files prune on its statistics
@@ -206,7 +205,7 @@ class Bm25Spec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(gotMap.keySet == memMap.keySet)
     gotMap.foreach { case (id, s) => assert(math.abs(s - memMap(id)) < 1e-9) }
-    // the stored index is KEYED, so the default limit serves IN PROCESS:
+    // the stored index is KEYED, so it serves IN PROCESS:
     // same docs, same scores (to the rounded contract), LocalRelation plan
     val inProc = Bm25.scoreWithIndex(stored, spark, q)
     assert(inProc.queryExecution.optimizedPlan.isInstanceOf[
@@ -235,7 +234,7 @@ class Bm25Spec extends SparkSpec {
     val merged = Bm25.mergeIndex(Bm25.readIndex(spark, dir), delta, "doc_id", "text")
     val rebuilt = Bm25.buildIndex(docs, "doc_id", "text")
     val q = "quick fox"
-    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(ix, spark, q, inProcessLimit = 0)
+    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(keyless(ix), spark, q)
       .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSet
     assert(key(merged) == key(rebuilt))
     // the merged in-memory index is not bucket-complete: no pruning claimed
@@ -271,7 +270,7 @@ class Bm25Spec extends SparkSpec {
       rebuilt.stats.select("n", "sum_dl").head())
     // scores identical through the distributed pruned path
     val q = "quick fox"
-    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(ix, spark, q, inProcessLimit = 0)
+    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(keyless(ix), spark, q)
       .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSet
     assert(key(appended) == key(rebuilt))
     // the appended store keeps its bucket pruning contract
@@ -282,6 +281,9 @@ class Bm25Spec extends SparkSpec {
 
   private def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** The index without its key: the distributed plan, never the rung. */
+  private def keyless(ix: Bm25.Index): Bm25.Index = ix.copy(cacheKey = None)
 
   test("two appends in one session stay fresh on a filesystem with no java.io view") {
     val docs = corpus.toDF("doc_id", "text")
@@ -311,7 +313,7 @@ class Bm25Spec extends SparkSpec {
     // the in-process rung serves the appended store, not the snapshot it
     // memoized before the appends
     val served = scores(Bm25.scoreWithIndex(appended, spark, q))
-    val reference = scores(Bm25.scoreWithIndex(rebuilt, spark, q, inProcessLimit = 0))
+    val reference = scores(Bm25.scoreWithIndex(keyless(rebuilt), spark, q))
     assert(served.keySet == reference.keySet)
     reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
@@ -333,8 +335,7 @@ class Bm25Spec extends SparkSpec {
     val rewritten = Bm25.readIndex(spark, dir)
     assert(rewritten.nDocs == 5L)
     val served = scores(Bm25.scoreWithIndex(rewritten, spark, q))
-    val reference = scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, ref), spark, q,
-      inProcessLimit = 0))
+    val reference = scores(Bm25.scoreWithIndex(keyless(Bm25.readIndex(spark, ref)), spark, q))
     assert(served.keySet == reference.keySet)
     reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
@@ -515,7 +516,7 @@ class Bm25Spec extends SparkSpec {
     assertSameIndex(appended, rebuilt)
     // the distributed bucket-pruned scan finds every posting a rebuild does
     for (q <- Seq("quick fox", "w1 w5 w9 w13 w22 w31 lorem", "w3 w17 w29 dog")) {
-      def key(ix: Bm25.Index) = scores(Bm25.scoreWithIndex(ix, spark, q, inProcessLimit = 0))
+      def key(ix: Bm25.Index) = scores(Bm25.scoreWithIndex(keyless(ix), spark, q))
         .map { case (d, sc) => (d, math.rint(sc * 1e9)) }
       assert(key(appended) == key(rebuilt), q)
     }

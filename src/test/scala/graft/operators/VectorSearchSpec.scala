@@ -131,19 +131,19 @@ class VectorSearchSpec extends SparkSpec {
     val emb = corpus.toDF("vec_id", "embedding")
     val q2 = randVec(rnd, 32)
     val queries = Seq((1L, query), (2L, q2)).toDF("query_id", "qvec")
-    // inMemoryLimit = 0 forces the DISTRIBUTED formulations this spec
-    // compares (the in-memory serving path has its own identity spec)
+    // keyless calls take the DISTRIBUTED formulations this spec compares
+    // (the keyed in-memory serving path has its own identity spec)
     val viaAgg = VectorSearch.bruteTopKBatchAgg(emb, "vec_id", "embedding",
-        queries, "query_id", "qvec", 7, inMemoryLimit = 0)
+        queries, "query_id", "qvec", 7)
       .select("query_id", "rank", "doc_id").as[(Long, Int, Long)].collect().toSet
     val viaWindow = VectorSearch.bruteTopKBatch(emb, "vec_id", "embedding",
-        queries, "query_id", "qvec", 7, inMemoryLimit = 0)
+        queries, "query_id", "qvec", 7)
       .select("query_id", "rank", "doc_id").as[(Long, Int, Long)].collect().toSet
     assert(viaAgg == viaWindow)
     // the plan must do partial (map-side) aggregation — only k rows per
     // partition reach the shuffle
     val plan = VectorSearch.bruteTopKBatchAgg(emb, "vec_id", "embedding",
-      queries, "query_id", "qvec", 7, inMemoryLimit = 0)
+      queries, "query_id", "qvec", 7)
       .queryExecution.executedPlan.toString
     assert(plan.contains("partial_topkaggregator") ||
       plan.toLowerCase.contains("partial"), plan.take(1000))
@@ -433,13 +433,20 @@ class VectorSearchSpec extends SparkSpec {
     val g = VectorSearch.knnGraph(emb, "vec_id", "embedding", k = 8)
     val queries = emb.filter(col("vec_id").isin(3L, 77L, 212L))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    def run(limit: Int) = VectorSearch.graphSearch(g, emb, "vec_id", "embedding",
-        queries, "query_id", "qvec", k = 10, beam = 48, hops = 3,
-        entryIds = Seq(0L, 100L, 200L, 300L), inMemoryLimit = limit)
+    def rows(df: org.apache.spark.sql.DataFrame) = df
       .select("query_id", "doc_id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    // default limit → broadcast one-stage path; 0 → distributed hop joins
-    assert(run(200000) == run(0))
+    val entries = Seq(0L, 100L, 200L, 300L)
+    // graphSearch → broadcast one-stage path (keyless too); the reference
+    // is the distributed hop joins
+    val dist = rows(VectorSearch.graphSearchDistributed(g, emb, "vec_id",
+      "embedding", queries, "query_id", "qvec", 10, 48, 3, entries))
+    assert(rows(VectorSearch.graphSearch(g, emb, "vec_id", "embedding",
+      queries, "query_id", "qvec", k = 10, beam = 48, hops = 3,
+      entryIds = entries)) == dist)
+    assert(rows(VectorSearch.graphSearch(g, emb, "vec_id", "embedding",
+      queries, "query_id", "qvec", k = 10, beam = 48, hops = 3,
+      entryIds = entries, cacheKey = Some("spec|graph-inmem"))) == dist)
   }
 
   test("bruteTopKBatch/Agg: in-memory broadcast serving equals the distributed plans row-for-row") {
@@ -458,15 +465,13 @@ class VectorSearchSpec extends SparkSpec {
       emb, "vec_id", "embedding", queries, "query_id", "qvec", 10,
       cacheKey = ck))
     val distW = collectSorted(VectorSearch.bruteTopKBatch(
-      emb, "vec_id", "embedding", queries, "query_id", "qvec", 10,
-      inMemoryLimit = 0))
+      emb, "vec_id", "embedding", queries, "query_id", "qvec", 10))
     assert(inMemW == distW)
     val inMemA = collectSorted(VectorSearch.bruteTopKBatchAgg(
       emb, "vec_id", "embedding", queries, "query_id", "qvec", 10,
       cacheKey = ck))
     val distA = collectSorted(VectorSearch.bruteTopKBatchAgg(
-      emb, "vec_id", "embedding", queries, "query_id", "qvec", 10,
-      inMemoryLimit = 0))
+      emb, "vec_id", "embedding", queries, "query_id", "qvec", 10))
     assert(inMemA == distA)
     assert(inMemW == inMemA) // window and agg formulations agree too
     // a driver-built (LocalRelation) query batch takes the zero-job
@@ -478,9 +483,10 @@ class VectorSearchSpec extends SparkSpec {
       cacheKey = ck))
     assert(inMemL == distA)
     // keyless calls never take the fast path (they would re-collect per
-    // call with zero reuse) — still identical results via the plan
-    assert(collectSorted(VectorSearch.bruteTopKBatchAgg(
-      emb, "vec_id", "embedding", queries, "query_id", "qvec", 10)) == distA)
+    // call with zero reuse): distA is the bounded-aggregation plan
+    assert(VectorSearch.bruteTopKBatchAgg(emb, "vec_id", "embedding", queries,
+        "query_id", "qvec", 10).queryExecution.executedPlan.toString
+      .toLowerCase.contains("topkaggregator"))
     // a LARGE in-memory corpus (>= the spread threshold) repartitions the
     // query set for parallelism — results must stay identical
     val big = (0 until 20).map(r => graphCorpus.select(
@@ -490,8 +496,7 @@ class VectorSearchSpec extends SparkSpec {
       big, "vec_id", "embedding", queries, "query_id", "qvec", 10,
       cacheKey = Some("spec|flat-big")))
     val bigDist = collectSorted(VectorSearch.bruteTopKBatchAgg(
-      big, "vec_id", "embedding", queries, "query_id", "qvec", 10,
-      inMemoryLimit = 0))
+      big, "vec_id", "embedding", queries, "query_id", "qvec", 10))
     assert(bigInMem == bigDist)
   }
 
@@ -506,15 +511,13 @@ class VectorSearchSpec extends SparkSpec {
     val assigned = VectorSearch.seededIvfAssign(emb, "vec_id", "embedding", centSeq)
     val queries = graphCorpus.filter(col("vec_id").isin(3L, 77L, 212L))
       .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
-    def run(ck: Option[String], lim: Int) = VectorSearch.ivfTopKBatch(
+    def run(ck: Option[String]) = VectorSearch.ivfTopKBatch(
         assigned, "vec_id", "embedding", cents, queries, "query_id", "qvec",
-        k = 10, nprobe = 3, inMemoryLimit = lim, cacheKey = ck)
+        k = 10, nprobe = 3, cacheKey = ck)
       .select("query_id", "doc_id", "score", "rank")
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4)).toSeq
-    val inMem = run(Some("spec|ivf-inmem"), 200000)
-    val dist = run(Some("spec|ivf-inmem"), 0) // limit 0 forces distributed
-    assert(inMem == dist)
-    assert(run(None, 200000) == dist) // keyless never takes the fast path
+    // keyless never takes the fast path: the distributed probe/scan plan
+    assert(run(Some("spec|ivf-inmem")) == run(None))
   }
 
   test("bruteTopK: in-memory single-query serving equals the distributed TakeOrdered plan") {
@@ -522,13 +525,12 @@ class VectorSearchSpec extends SparkSpec {
       (col("vec_id") + lit(5000L)).as("vec_id"), col("embedding")))
     val qv = graphCorpus.filter(col("vec_id") === 3L)
       .select("embedding").as[Array[Float]].head().toSeq
-    def run(limit: Int) = VectorSearch.bruteTopK(
-        emb, "vec_id", "embedding", qv, 10, inMemoryLimit = limit,
-        cacheKey = Some("spec|flat-single"))
+    def run(key: Option[String]) = VectorSearch.bruteTopK(
+        emb, "vec_id", "embedding", qv, 10, cacheKey = key)
       .select("doc_id", "score").as[(Long, Double)].collect().toSeq
-    assert(run(200000) == run(0))
-    // a corpus over the limit falls back to the distributed plan
-    assert(run(5) == run(0))
+    // keyed → the resident rung; keyless → the distributed plan (a corpus
+    // over the guard declines the same way: ResidentSpec)
+    assert(run(Some("spec|flat-single")) == run(None))
   }
 
   test("graphSearchDeduped: duplicate-saturated corpus keeps exact-grade recall") {

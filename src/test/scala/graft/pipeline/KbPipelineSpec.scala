@@ -146,7 +146,7 @@ class KbPipelineSpec extends SparkSpec {
     val gServing = Serving.Graph(g, beam = 8, hops = 2, entryIds = Seq(1L))
     val viaGraph = KbPipeline.query(spark, corpus, embeddings, q,
       cfg.copy(indexType = "graph"), serving = gServing)
-    // under the in-memory serving guard (corpus < inMemoryLimit) the beam
+    // under the in-memory serving guard (graft.operators.Resident) the beam
     // search runs inside a MapPartitions closure — the edges don't appear
     // as plan columns; above the guard the distributed hop joins carry
     // the `dst` edge column. Either marker proves the graph tier served.
