@@ -496,6 +496,8 @@ object Main {
           graft.sources.KbStorage.logQuery(spark, s"$kb/logs", kb, args(2),
             answer = ans, latencyMs = (System.nanoTime() - t0) / 1000000)
         }
+        // a one-shot verb persists its query vector before the session ends
+        graft.query.QueryCache.flush(spark)
 
       case "tune" =>
         // Serving-knob calibration (VectorSearch.tuneServing): measure the

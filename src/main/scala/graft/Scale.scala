@@ -299,9 +299,9 @@ object Scale {
     // (the 100 TB path); the -inproc rows measure the guarded in-process
     // serving tier the same keyed stored index takes
     secs(s"bm25-stored-score-1q 1x")(operators.Bm25.scoreWithIndex(
-      ix1.copy(cacheKey = None), spark, scaleQ).count())
+      ix1.keyless, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q ${kDocs}x")(operators.Bm25.scoreWithIndex(
-      ixK.copy(cacheKey = None), spark, scaleQ).count())
+      ixK.keyless, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc 1x")(
       operators.Bm25.scoreWithIndex(ix1, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc ${kDocs}x")(
@@ -1190,7 +1190,7 @@ object Scale {
       bm25StoreWrite(docs100, s"$base/bm25_${k100}x", operators.Bm25.DefaultTermBuckets))
     lazy val ix100 = bm25StoredProbe(s"$base/bm25_${k100}x")
     secs(s"bm25-stored-score-1q ${k100}x")(operators.Bm25.scoreWithIndex(
-      ix100.copy(cacheKey = None), spark, scaleQ).count())
+      ix100.keyless, spark, scaleQ).count())
     secs(s"bm25-stored-score-1q-inproc ${k100}x")(
       operators.Bm25.scoreWithIndex(ix100, spark, scaleQ).count())
     // incremental dedup vs a 100× lake: stored bucket table built once

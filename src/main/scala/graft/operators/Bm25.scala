@@ -90,7 +90,18 @@ object Bm25 {
       * one-row head — two sequential jobs per served index; every scalar
       * now reads from this shared snapshot).
       */
-    private[operators] lazy val statsRow: org.apache.spark.sql.Row = stats.head()
+    private[operators] def statsRow: org.apache.spark.sql.Row = snapshot.row
+    private var snapshot = new Index.StatsSnapshot(stats)
+
+    /** This index with no cache key, the distributed plan of every rung,
+      * sharing this index's [[statsRow]] snapshot: a snapshot already taken
+      * is not taken again (a `copy` would run its job anew).
+      */
+    def keyless: Index = {
+      val k = copy(cacheKey = None)
+      k.snapshot = snapshot
+      k
+    }
 
     /** Corpus avgdl — served from [[statsRow]]; serving queries inline it
       * as a literal instead of re-running the stats aggregation (or a
@@ -119,6 +130,12 @@ object Bm25 {
         Some(statsRow.getInt(statsRow.fieldIndex("term_buckets")))
           .filter(_ > 0)
       else None
+  }
+
+  object Index {
+    private final class StatsSnapshot(stats: DataFrame) {
+      lazy val row: org.apache.spark.sql.Row = stats.head()
+    }
   }
 
   /** Default term-bucket count for at-rest postings. A query's handful of
@@ -708,7 +725,7 @@ object Bm25 {
     * Serving shape: a KEYED index under the [[Resident]] guard scores
     * entirely in process ([[indexInProcess]]) and returns a LocalRelation —
     * zero jobs warm, the reference's loaded-NPZ regime. An unkeyed index
-    * (`ix.copy(cacheKey = None)`) or one over the guard keeps the
+    * ([[Index.keyless]]) or one over the guard keeps the
     * bucket-pruned distributed scan unchanged.
     */
   def scoreWithIndex(ix: Index, spark: org.apache.spark.sql.SparkSession,

@@ -44,14 +44,17 @@ private[graft] object Resident {
 
   /** The guard: at most `maxRows` rows by a LIMIT-bounded count, and with
     * a `vecCol`, rows × dim within `maxFloats` by a `take(1)` dimension
-    * probe. Always both jobs, in that order; the rung's collect follows.
+    * probe. The probe runs only when the count admits, so a table over the
+    * row limit declines in one job; the rung's collect follows an admit.
     */
   def fits(rows: DataFrame, maxRows: Int, vecCol: Option[String] = None,
            maxFloats: Long = MaxFloats): Boolean = {
     val n = rows.limit(maxRows + 1).count()
-    val dim = vecCol.map(v => rows.select(size(col(v))).take(1)
-      .headOption.map(_.getInt(0).toLong).getOrElse(0L))
-    n <= maxRows && dim.forall(d => n * math.max(d, 1L) <= maxFloats)
+    n <= maxRows && vecCol.forall { v =>
+      val dim = rows.select(size(col(v))).take(1)
+        .headOption.map(_.getInt(0).toLong).getOrElse(0L)
+      n * math.max(dim, 1L) <= maxFloats
+    }
   }
 
   /** The memo step: `build` once per (session, `key|tag`) in the rung's

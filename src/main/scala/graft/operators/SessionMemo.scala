@@ -96,6 +96,13 @@ private[graft] final class SessionMemo[V](release: V => Unit = (_: V) => ()) {
     perSession.computeIfAbsent(key, _ => build)
   }
 
+  /** A snapshot of the session's `(key, value)` entries. */
+  def entries(spark: SparkSession): Seq[(String, V)] = {
+    import scala.jdk.CollectionConverters._
+    Option(cache.synchronized(cache.get(spark)))
+      .fold(Seq.empty[(String, V)])(_.asScala.toSeq)
+  }
+
   private def evict(spark: SparkSession, dir: String): Unit = {
     val perSession = cache.synchronized(cache.get(spark))
     if (perSession != null) {

@@ -463,7 +463,7 @@ object KbQueries {
       Bm25.appendIndexStore(s, root,
         docs.filter(col("doc_id") % 5 === 3), "doc_id", "text")
       val ix = Bm25.readIndex(s, root)
-      Bm25.topK(Bm25.scoreWithIndex(ix.copy(cacheKey = None), s, QueryText)
+      Bm25.topK(Bm25.scoreWithIndex(ix.keyless, s, QueryText)
         .select(col("doc_id"), round(col("score"), 4).as("score")), 20)
     },
 

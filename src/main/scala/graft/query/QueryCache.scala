@@ -26,7 +26,8 @@ import graft.operators.SessionMemo
   * small, shuffle-join when not), misses are one anti-join, and appends
   * are the returned `newCacheRows`; nothing is resident driver state. The
   * single-query form ([[embedQueryCached]]) alone keeps a resident map in
-  * front of its table, under the budget the vector rungs use.
+  * front of its table, under the budget the vector rungs use, and writes
+  * its misses to the table behind the request.
   */
 object QueryCache {
 
@@ -90,13 +91,20 @@ object QueryCache {
     *    pushdown-filtered read of the table per lookup (`content_key =
     *    <literal>`). The cache only grows by appends, so a table once over
     *    the budget stays at rest until `forget` evicts its entry;
-    *  - own append: a key still missing calls the provider once and
-    *    appends one row (one job), then adds the row to the map and
-    *    re-stamps it after the write, so the engine's own append never
-    *    forces a reload. A foreign row landing between the lookup and that
-    *    re-stamp is missed by the map until its next reload: it costs a
-    *    recompute and a duplicate row, which the cache tolerates, never a
-    *    wrong vector.
+    *  - write-behind miss: a key still missing calls the provider once
+    *    and adds the row to the map and to its pending rows, with no job.
+    *    When a directory holds 32 pending rows, the miss that adds the
+    *    32nd appends them all as one parquet file and re-stamps the map,
+    *    so the engine's own append never forces a reload. [[flush]]
+    *    writes a session's pending rows at any time; the `query` verb
+    *    calls it before it exits. A reload keeps the pending rows. A
+    *    table over the budget appends each miss's row at once instead;
+    *  - lost rows: pending rows that never reach the table (a crash, a
+    *    failed flush, a `SessionMemo.forget` of the directory, a library
+    *    session that never calls [[flush]]) and a foreign row landing between a flush
+    *    and its re-stamp cost a recompute, and a duplicate row the cache
+    *    tolerates, never a wrong vector: a vector is a function of its
+    *    key.
     * A row whose embedding is null or of the wrong length (a corrupt or
     * hand-migrated cache) is never a hit on either path: the query
     * recomputes instead of serving a vector the cosine stage would
@@ -131,29 +139,44 @@ object QueryCache {
       lazy val stamp = graft.operators.PathInventory.stamp(spark, dir)
       if (ref.get.overBudget || stamp == ref.get.stamp) None
       else {
+        // the reload keeps this session's pending rows, resident and
+        // pending; a table now over the budget gets them written at once
         val loaded = loadResident(spark, dir, provider.dims, stamp)
-        ref.set(loaded)
-        lookup(loaded)
+        val r = ref.updateAndGet(r =>
+          if (loaded.overBudget) loaded.copy(pending = r.pending)
+          else loaded.copy(vecs = loaded.vecs ++ r.pending, pending = r.pending))
+        if (r.overBudget) flushDir(spark, dir, ref)
+        lookup(r)
       }
     }
     hit.getOrElse {
       val v = provider.embedBatch(Seq(text)).head
-      import spark.implicits._
-      Seq((key, v)).toDF("content_key", "embedding")
-        .coalesce(1).write.mode("append").parquet(dir)
-      if (!ref.get.overBudget) {
-        val stamp = graft.operators.PathInventory.stamp(spark, dir)
-        ref.updateAndGet(r => r.copy(stamp = stamp, vecs = r.vecs.updated(key, v.clone)))
-      }
+      val held = v.clone
+      val r = ref.updateAndGet(r => r.copy(
+        vecs = if (r.overBudget) r.vecs else r.vecs.updated(key, held),
+        pending = r.pending.updated(key, held)))
+      if (r.overBudget || r.pending.size >= FlushRows) flushDir(spark, dir, ref)
       v
     }
   }
 
-  /** One cache directory's valid rows as loaded (plus own appends), and
-    * the [[graft.operators.PathInventory.stamp]] they are current for;
-    * `overBudget` marks a table served at rest.
+  /** Write every pending row of this session's cache directories, one
+    * parquet file per directory that has any. The `query` verb calls it
+    * before it exits; a long-lived caller may call it at any time.
+    */
+  def flush(spark: org.apache.spark.sql.SparkSession): Unit =
+    residentCache.entries(spark).foreach { case (dir, ref) => flushDir(spark, dir, ref) }
+
+  /** Pending rows per directory that one miss writes behind together. */
+  private val FlushRows = 32
+
+  /** One cache directory's valid rows as loaded plus this session's own
+    * misses, and the [[graft.operators.PathInventory.stamp]] the loaded
+    * rows are current for; `pending` = the misses not yet written (each
+    * also in `vecs`); `overBudget` marks a table served at rest.
     */
   private final case class Resident(stamp: Long, vecs: Map[String, Array[Float]],
+                                    pending: Map[String, Array[Float]] = Map.empty,
                                     overBudget: Boolean = false)
   private type ResidentRef = java.util.concurrent.atomic.AtomicReference[Resident]
   private val residentCache = new SessionMemo[ResidentRef]
@@ -162,6 +185,27 @@ object QueryCache {
                           dir: String): ResidentRef =
     residentCache.getOrBuild(spark, dir)(
       new java.util.concurrent.atomic.AtomicReference(Resident(0L, Map.empty)))
+
+  /** Swap `dir`'s pending rows out and append them as one file, then
+    * re-stamp the map — unless a reload replaced the stamp meanwhile, in
+    * which case the next miss reloads and finds the written rows. The
+    * session's flushes of a directory run one at a time: two appends in
+    * flight share the output committer's `_temporary` directory, and the
+    * first to finish deletes it under the other.
+    */
+  private def flushDir(spark: org.apache.spark.sql.SparkSession, dir: String,
+                       ref: ResidentRef): Unit = ref.synchronized {
+    val taken = ref.getAndUpdate(_.copy(pending = Map.empty))
+    if (taken.pending.nonEmpty) {
+      import spark.implicits._
+      taken.pending.toSeq.toDF("content_key", "embedding")
+        .coalesce(1).write.mode("append").parquet(dir)
+      if (!taken.overBudget) {
+        val stamp = graft.operators.PathInventory.stamp(spark, dir)
+        ref.updateAndGet(r => if (r.stamp == taken.stamp) r.copy(stamp = stamp) else r)
+      }
+    }
+  }
 
   /** The directory's rows at `stamp`, by one job: the explicit schema
     * spares the footer read, and the row limit over one partition stops

@@ -242,6 +242,28 @@ class MainSpec extends SparkSpec {
     assert(embed.contains("WARNING config vector_dimensions=32"), embed)
   }
 
+  test("CLI query verb flushes its query vector: a new session serves it with no provider call") {
+    val in = Files.createTempDirectory("graft_qflush_in").toString
+    Files.write(Paths.get(in, "a.txt"),
+      ("spark joins and filters " + (1 to 150).map(i => s"w$i").mkString(" "))
+        .getBytes(StandardCharsets.UTF_8))
+    val cfg = graft.config.KbConfig()
+    val model = graft.models.ModelRegistry.embedderFor(cfg.vectorModel, cfg.vectorDimensions)
+    Seq(Files.createTempDirectory("graft_qflush_kb").toString,
+        NoJavaIoFileSystem.tempDir(spark, "graft_qflush_noio_kb")).foreach { kb =>
+      Main.run(Array("database", kb, s"$in/*.txt"), spark)
+      Main.run(Array("embed", kb), spark)
+      val q = "which filters do spark joins run"
+      Console.withOut(new java.io.ByteArrayOutputStream())(
+        Main.run(Array("query", kb, q, "--context-only"), spark))
+      val text = graft.query.Enhancement.enhanceValue(spark, q)
+      val served = graft.query.QueryCache.embedQueryCached(spark.newSession(),
+        s"$kb/qcache", text,
+        graft.query.QueryCache.refusingProvider(model.dims, mirrorModel = model.model))
+      assert(served.toSeq == model.embedBatch(Seq(text)).head.toSeq, kb)
+    }
+  }
+
   test("M6: stale vector_dimensions config is auto-synced from stored embeddings") {
     val in = Files.createTempDirectory("graft_dims_in").toString
     val kb = Files.createTempDirectory("graft_dims_kb").toString

@@ -189,7 +189,7 @@ class Bm25Spec extends SparkSpec {
     val q = "quick fox"
     // a keyless index takes the DISTRIBUTED pruned scan whose plan shape
     // this test asserts (the keyed in-process path is checked below)
-    val got = Bm25.scoreWithIndex(keyless(stored), spark, q)
+    val got = Bm25.scoreWithIndex(stored.keyless, spark, q)
     val plan = got.queryExecution.executedPlan.toString
     // the postings scan must push the query terms' bucket filter to
     // parquet: the bucket-sorted segment files prune on its statistics
@@ -234,7 +234,7 @@ class Bm25Spec extends SparkSpec {
     val merged = Bm25.mergeIndex(Bm25.readIndex(spark, dir), delta, "doc_id", "text")
     val rebuilt = Bm25.buildIndex(docs, "doc_id", "text")
     val q = "quick fox"
-    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(keyless(ix), spark, q)
+    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(ix.keyless, spark, q)
       .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSet
     assert(key(merged) == key(rebuilt))
     // the merged in-memory index is not bucket-complete: no pruning claimed
@@ -270,7 +270,7 @@ class Bm25Spec extends SparkSpec {
       rebuilt.stats.select("n", "sum_dl").head())
     // scores identical through the distributed pruned path
     val q = "quick fox"
-    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(keyless(ix), spark, q)
+    def key(ix: Bm25.Index) = Bm25.scoreWithIndex(ix.keyless, spark, q)
       .collect().map(r => (r.getLong(0), math.rint(r.getDouble(1) * 1e9))).toSet
     assert(key(appended) == key(rebuilt))
     // the appended store keeps its bucket pruning contract
@@ -281,9 +281,6 @@ class Bm25Spec extends SparkSpec {
 
   private def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
     df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-
-  /** The index without its key: the distributed plan, never the rung. */
-  private def keyless(ix: Bm25.Index): Bm25.Index = ix.copy(cacheKey = None)
 
   test("two appends in one session stay fresh on a filesystem with no java.io view") {
     val docs = corpus.toDF("doc_id", "text")
@@ -313,7 +310,7 @@ class Bm25Spec extends SparkSpec {
     // the in-process rung serves the appended store, not the snapshot it
     // memoized before the appends
     val served = scores(Bm25.scoreWithIndex(appended, spark, q))
-    val reference = scores(Bm25.scoreWithIndex(keyless(rebuilt), spark, q))
+    val reference = scores(Bm25.scoreWithIndex(rebuilt.keyless, spark, q))
     assert(served.keySet == reference.keySet)
     reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
@@ -335,7 +332,7 @@ class Bm25Spec extends SparkSpec {
     val rewritten = Bm25.readIndex(spark, dir)
     assert(rewritten.nDocs == 5L)
     val served = scores(Bm25.scoreWithIndex(rewritten, spark, q))
-    val reference = scores(Bm25.scoreWithIndex(keyless(Bm25.readIndex(spark, ref)), spark, q))
+    val reference = scores(Bm25.scoreWithIndex(Bm25.readIndex(spark, ref).keyless, spark, q))
     assert(served.keySet == reference.keySet)
     reference.foreach { case (id, s) => assert(math.abs(served(id) - s) < 1e-9, s"doc $id") }
   }
@@ -516,7 +513,7 @@ class Bm25Spec extends SparkSpec {
     assertSameIndex(appended, rebuilt)
     // the distributed bucket-pruned scan finds every posting a rebuild does
     for (q <- Seq("quick fox", "w1 w5 w9 w13 w22 w31 lorem", "w3 w17 w29 dog")) {
-      def key(ix: Bm25.Index) = scores(Bm25.scoreWithIndex(keyless(ix), spark, q))
+      def key(ix: Bm25.Index) = scores(Bm25.scoreWithIndex(ix.keyless, spark, q))
         .map { case (d, sc) => (d, math.rint(sc * 1e9)) }
       assert(key(appended) == key(rebuilt), q)
     }
@@ -534,6 +531,19 @@ class Bm25Spec extends SparkSpec {
     }
     assert(jobs == 0, s"opening the store ran $jobs jobs")
     assert(ix.termBuckets.contains(4) && ix.nDocs == corpus.size.toLong)
+  }
+
+  test("a keyless copy reuses the stats snapshot: its avgdl runs no job") {
+    val ix = Bm25.buildIndex(corpus.toDF("doc_id", "text"), "doc_id", "text")
+      .copy(cacheKey = Some("spec|keyless-stats"))
+    val (avgdl, snapshotJobs) = graft.JobCount(spark)(ix.avgdl)
+    assert(snapshotJobs > 0, "a built index's stats are a Spark aggregation")
+    val (keyless, jobs) = graft.JobCount(spark) {
+      val k = ix.keyless
+      (k.cacheKey, k.avgdl, k.nDocs)
+    }
+    assert(jobs == 0, s"the keyless copy ran $jobs jobs")
+    assert(keyless == ((None, avgdl, corpus.size.toLong)))
   }
 
   test("retention: rewrites and appends on one root keep two manifests and only their files") {

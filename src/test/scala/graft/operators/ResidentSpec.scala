@@ -1,5 +1,7 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.{array_repeat, col}
+
 import graft.{JobCount, SparkSpec}
 
 /** The residency guard every in-process serving rung admits its table
@@ -17,6 +19,15 @@ class ResidentSpec extends SparkSpec {
     assert(!Resident.fits(vectors, maxRows = 4))
     assert(Resident.fits(vectors, maxRows = 5, vecCol = Some("vec")))
     assert(!Resident.fits(vectors, maxRows = 4, vecCol = Some("vec")))
+    // the count alone declines: no dimension probe follows it. A range
+    // (not a local table) makes the probe a job of its own.
+    val ranged = spark.range(1, 6).select(col("id"),
+      array_repeat(col("id").cast("float"), 4).as("vec"))
+    def jobs(maxRows: Int, vecCol: Option[String]) =
+      JobCount(spark)(Resident.fits(ranged, maxRows, vecCol))
+    val (_, countJobs) = jobs(4, None)
+    assert(jobs(4, Some("vec")) == ((false, countJobs)))
+    assert(jobs(5, Some("vec")) == ((true, jobs(5, None)._2 + 1)))
   }
 
   test("declines a vector table over the float budget") {

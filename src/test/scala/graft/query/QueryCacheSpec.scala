@@ -71,6 +71,7 @@ class QueryCacheSpec extends SparkSpec {
     // a different query misses and appends alongside
     QueryCache.embedQueryCached(spark, dir, "pasta", counting)
     assert(calls == 2)
+    QueryCache.flush(spark)
     assert(spark.read.parquet(s"$dir/counting-8_8").count() == 2)
     // a DIFFERENT model (or dims) never hits the first model's rows: the
     // at-rest cache separates by (model, dims) subdirectory
@@ -120,6 +121,13 @@ class QueryCacheSpec extends SparkSpec {
   private def localDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/qcache"
   private def refusing = QueryCache.refusingProvider(8, mirrorModel = "counting-8")
+  private def parquetFiles(cacheDir: String): Seq[String] =
+    Option(new java.io.File(s"$cacheDir/counting-8_8").list()).toSeq.flatten
+      .filter(_.endsWith(".parquet"))
+  /** `(content_key, count)` of the rows on disk under `cacheDir`. */
+  private def onDisk(cacheDir: String): Map[String, Long] =
+    spark.read.parquet(s"$cacheDir/counting-8_8").groupBy("content_key").count()
+      .as[(String, Long)].collect().toMap
   /** Append one `(content_key, embedding)` row for `text` to the
     * `counting-8` table under `cacheDir`, as a foreign writer would.
     */
@@ -156,20 +164,28 @@ class QueryCacheSpec extends SparkSpec {
       }
   }
 
-  test("embedQueryCached: a warm hit runs no job, a miss one (its append), a load one") {
+  test("embedQueryCached: a warm hit runs no job, a miss below the flush threshold none, a load one") {
     val dir = localDir("graft_qcache_jobs")
     val p = new Counting
+    // a session of its own: `flush` writes every directory of the session
+    val own = spark.newSession()
     def ask(text: String, provider: Embedder.Provider = refusing,
-            session: org.apache.spark.sql.SparkSession = spark) =
+            session: org.apache.spark.sql.SparkSession = own) =
       graft.JobCount(session)(
         QueryCache.embedQueryCached(session, dir, text, provider).toSeq)
-    assert(ask("spark join", p) == ((expected("spark join"), 1)))
-    // the first append starts the resident map: no reload follows it
+    assert(ask("spark join", p) == ((expected("spark join"), 0)))
     assert(ask("spark join") == ((expected("spark join"), 0)))
-    assert(ask("pasta", p) == ((expected("pasta"), 1)))
+    assert(ask("pasta", p) == ((expected("pasta"), 0)))
     assert(ask("pasta") == ((expected("pasta"), 0)))
     assert(ask("spark join") == ((expected("spark join"), 0)))
     assert(p.calls == 2)
+    assert(parquetFiles(dir).isEmpty, "a miss below the threshold wrote a file")
+    // the flush writes both rows as one file and re-stamps the map: the
+    // session's next lookups reload nothing
+    assert(graft.JobCount(own)(QueryCache.flush(own))._2 == 1)
+    assert(parquetFiles(dir).size == 1)
+    assert(ask("window ranking", p) == ((expected("window ranking"), 0)))
+    assert(p.calls == 3)
     // a fresh session pays one load job, then serves from its own map
     val other = spark.newSession()
     assert(ask("pasta", session = other) == ((expected("pasta"), 1)))
@@ -182,7 +198,9 @@ class QueryCacheSpec extends SparkSpec {
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
     QueryCache.embedQueryCached(spark, dir, "spark join", refusing) // resident
     val other = new Counting
-    QueryCache.embedQueryCached(spark.newSession(), dir, "window ranking", other)
+    val foreign = spark.newSession()
+    QueryCache.embedQueryCached(foreign, dir, "window ranking", other)
+    QueryCache.flush(foreign)
     assert(other.calls == 1)
     assert(QueryCache.embedQueryCached(spark, dir, "window ranking", refusing)
       .toSeq == expected("window ranking"))
@@ -197,6 +215,7 @@ class QueryCacheSpec extends SparkSpec {
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
     QueryCache.embedQueryCached(spark, dir, "pasta", p)
     QueryCache.embedQueryCached(spark, dir, "pasta", refusing) // resident
+    QueryCache.flush(spark)
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
     // a hit needs no listing: the session keeps serving the vectors it
     // holds, which are still correct (a vector is a function of its key)
@@ -205,6 +224,7 @@ class QueryCacheSpec extends SparkSpec {
     assert(QueryCache.embedQueryCached(spark, dir, "window ranking", p).toSeq ==
       expected("window ranking"))
     assert(p.calls == 3)
+    QueryCache.flush(spark)
     assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
     // the rows deleted with the directory are gone from the map as well
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
@@ -215,6 +235,8 @@ class QueryCacheSpec extends SparkSpec {
     val dir = graft.NoJavaIoFileSystem.tempDir(spark, "graft_qcache_noio") + "/qcache"
     val p = new Counting
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
+    QueryCache.flush(spark)
+    assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
     assert(!graft.NoJavaIoFileSystem.javaIoSees(s"$dir/counting-8_8"))
     val (v, jobs) = graft.JobCount(spark)(
       QueryCache.embedQueryCached(spark, dir, "spark join", refusing).toSeq)
@@ -224,5 +246,66 @@ class QueryCacheSpec extends SparkSpec {
     assert(QueryCache.embedQueryCached(spark, dir, "window ranking", refusing)
       .toSeq == expected("window ranking"))
     assert(p.calls == 1)
+  }
+
+  test("embedQueryCached: 50 misses and a flush leave at most 2 files; a fresh session loads them in one job") {
+    val dir = localDir("graft_qcache_behind")
+    val p = new Counting
+    val texts = (1 to 50).map(i => s"question $i")
+    texts.foreach(t => QueryCache.embedQueryCached(spark, dir, t, p))
+    assert(p.calls == 50)
+    // the 32nd miss wrote the first 32 rows as one file
+    assert(parquetFiles(dir).size == 1)
+    QueryCache.flush(spark)
+    assert(parquetFiles(dir).size == 2)
+    assert(onDisk(dir) == texts.map(t => QueryCache.contentKeyValue(t) -> 1L).toMap)
+    val fresh = spark.newSession()
+    val (first, loadJobs) = graft.JobCount(fresh)(
+      QueryCache.embedQueryCached(fresh, dir, texts.head, refusing).toSeq)
+    assert(first == expected(texts.head) && loadJobs == 1)
+    val (rest, jobs) = graft.JobCount(fresh)(
+      texts.map(t => QueryCache.embedQueryCached(fresh, dir, t, refusing).toSeq))
+    assert(rest == texts.map(expected) && jobs == 0)
+  }
+
+  test("embedQueryCached: a reload on a foreign append keeps the pending rows") {
+    val dir = localDir("graft_qcache_keep")
+    val p = new Counting
+    QueryCache.embedQueryCached(spark, dir, "a", p)
+    appendRow(dir, "b", expected("b").toArray)
+    // "c" misses, stamps the directory, finds the foreign file and reloads
+    QueryCache.embedQueryCached(spark, dir, "c", p)
+    assert(QueryCache.embedQueryCached(spark, dir, "b", refusing).toSeq == expected("b"))
+    assert(QueryCache.embedQueryCached(spark, dir, "a", refusing).toSeq == expected("a"))
+    assert(p.calls == 2)
+    QueryCache.flush(spark)
+    assert(onDisk(dir) == Seq("a", "b", "c").map(t => QueryCache.contentKeyValue(t) -> 1L).toMap)
+  }
+
+  test("embedQueryCached: concurrent misses lose no row and the flush writes each key once") {
+    val dir = localDir("graft_qcache_threads")
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val provider = new Embedder.Provider {
+      val model = "counting-8"; val dims = 8
+      def embedBatch(texts: Seq[String]): Seq[Array[Float]] = {
+        calls.addAndGet(texts.size)
+        Embedder.Deterministic(8).embedBatch(texts)
+      }
+    }
+    val texts = (0 until 4).map(t => (1 to 25).map(i => s"thread $t question $i"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val done = texts.map(ts => pool.submit(new java.util.concurrent.Callable[Seq[Seq[Float]]] {
+        def call(): Seq[Seq[Float]] =
+          ts.map(t => QueryCache.embedQueryCached(spark, dir, t, provider).toSeq)
+      }))
+      done.zip(texts).foreach { case (f, ts) => assert(f.get() == ts.map(expected)) }
+    } finally pool.shutdown()
+    assert(calls.get == 100)
+    QueryCache.flush(spark)
+    val all = texts.flatten
+    assert(onDisk(dir) == all.map(t => QueryCache.contentKeyValue(t) -> 1L).toMap)
+    assert(all.map(t => QueryCache.embedQueryCached(spark, dir, t, refusing).toSeq) ==
+      all.map(expected))
   }
 }
