@@ -590,6 +590,36 @@ object HashAlgos {
     if (denom > 0) dot / denom else 0.0
   }
 
+  /** sqrt(Σa²) in [[cosineF32]]'s accumulation order. */
+  def normF32(a: Array[Float]): Double = {
+    var na = 0.0
+    var i = 0
+    while (i < a.length) {
+      val x = a(i).toDouble
+      na += x * x
+      i += 1
+    }
+    math.sqrt(na)
+  }
+
+  /** [[cosineF32]] with both norms already known ([[normF32]]): one dot
+    * loop in the same order and denom = aNorm·bNorm, so equal-length inputs
+    * give the same bits. Unequal lengths truncate the norms to the shorter
+    * vector, so they take [[cosineF32]] itself.
+    */
+  def cosineF32(a: Array[Float], aNorm: Double, b: Array[Float], bNorm: Double): Double =
+    if (a.length != b.length) cosineF32(a, b)
+    else {
+      var dot = 0.0
+      var i = 0
+      while (i < a.length) {
+        dot += a(i).toDouble * b(i).toDouble
+        i += 1
+      }
+      val denom = aNorm * bNorm
+      if (denom > 0) dot / denom else 0.0
+    }
+
   /** Spark `round(col, scale)`'s exact double semantics (BigDecimal
     * HALF_UP) — the single implementation of the pipeline's rounded-ranking
     * contract, shared by every in-process serving twin.

@@ -2,7 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.GraftShims
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions
 
@@ -720,6 +723,13 @@ object Bm25 {
     indexInProcess(ix, spark).map(ip =>
       scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, query), k1, b))
 
+  /** The query side of [[scoreWithIndex]]'s distributed plan: one
+    * `(term, qtf)` row per distinct query term, as `Seq[(String, Long)].toDF`
+    * would type it.
+    */
+  private val TermQtf = StructType(Seq(StructField("term", StringType),
+    StructField("qtf", LongType, nullable = false)))
+
   /** Score a single query string against a prebuilt index.
     *
     * Serving shape: a KEYED index under the [[Resident]] guard scores
@@ -730,13 +740,13 @@ object Bm25 {
     */
   def scoreWithIndex(ix: Index, spark: org.apache.spark.sql.SparkSession,
                      query: String, k1: Double = K1, b: Double = B): DataFrame = {
-    import spark.implicits._
     indexInProcess(ix, spark) match {
       case Some(ip) =>
         // native doc_id type preserved — the rung must not widen the schema
         // relative to the distributed plan it replaces
-        return scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, query),
-          k1, b).toDF("doc_id", "score")
+        return GraftShims.localFrame(spark, TopK.DocScore,
+            scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, query), k1, b)
+              .map { case (d, s) => InternalRow(d, s) })
           .withColumn("doc_id",
             col("doc_id").cast(ix.postings.schema("doc_id").dataType))
       case None => ()
@@ -749,8 +759,9 @@ object Bm25 {
     // shuffle/broadcast jobs of pure fixed overhead
     val terms = TextFunctions.tokenizeBm25Value(spark, query)
     val termSet = terms.distinct
-    val qDf = terms.groupBy(identity).map { case (t, ts) => (t, ts.size.toLong) }
-      .toSeq.sortBy(_._1).toDF("term", "qtf")
+    val qDf = GraftShims.localFrame(spark, TermQtf,
+      terms.groupBy(identity).toSeq.sortBy(_._1).map { case (t, ts) =>
+        InternalRow(UTF8String.fromString(t), ts.size.toLong) })
     val qStats = ix.idf.select("term", "idf")
       .filter(col("term").isin(termSet: _*))
       .join(broadcast(qDf), "term")
@@ -783,13 +794,13 @@ object Bm25 {
     // independently here — decline rather than diverge
     if (queries.map(_._1).distinct.size != queries.size) return None
     indexInProcess(ix, spark).map { ip =>
-      import spark.implicits._
-      val rows = queries.flatMap { case (qid, q) =>
-        TopK.roundedHead(
-            scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, q), k1, b),
-            k, scale = 4)
-          .map { case (d, s) => (qid, d, s) }
-      }.toDF("query_id", "doc_id", "score")
+      val rows = GraftShims.localFrame(spark, TopK.QueryDocScore,
+        queries.flatMap { case (qid, q) =>
+          TopK.roundedHead(
+              scoreInProcess(ip, TextFunctions.tokenizeBm25Value(spark, q), k1, b),
+              k, scale = 4)
+            .map { case (d, s) => InternalRow(qid, d, s) }
+        })
       // keep the index's native doc_id type: the distributed plan emits it
       // unchanged, and the serving rung must not widen the schema
       rows.withColumn("doc_id",

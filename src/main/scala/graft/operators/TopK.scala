@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Per-group top-k as a typed Aggregator (SURVEY §2.10: "a per-partition
   * top-k Aggregator is an optimization option for T1").
@@ -52,6 +53,20 @@ class TopKAggregator(k: Int, distinct: Boolean = false)
 }
 
 object TopK {
+
+  /** The ranked lists the in-process rungs build on the driver
+    * ([[org.apache.spark.sql.graftshim.GraftShims.localFrame]]), with the
+    * schemas `Seq[(Long, Double)].toDF("doc_id", "score")` and its
+    * `query_id` / `rank` forms produce — the distributed plans they stand in
+    * for see one schema either way.
+    */
+  val DocScore: StructType = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false)))
+  val QueryDocScore: StructType =
+    StructType(StructField("query_id", LongType, nullable = false) +: DocScore.fields)
+  val QueryDocScoreRank: StructType =
+    QueryDocScore.add(StructField("rank", IntegerType, nullable = false))
 
   /** Driver-side rounded head: the top-`k` of `(id, raw score)` rows under
     * the pipeline's (round(score, scale) desc, id asc) ranking, with the
@@ -115,7 +130,6 @@ object TopK {
   def perGroupTopK(df: DataFrame, groupCol: String, idCol: String,
                    scoreCol: String, k: Int,
                    includeRank: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{DoubleType, LongType}
     val fast = df.schema(idCol).dataType == LongType &&
       df.schema(scoreCol).dataType == DoubleType
     val out =

@@ -1,6 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.HashAlgos
@@ -435,8 +437,9 @@ object VectorSearch {
     * must not NPE where the plan degrades. Above the guard — the 100 TB
     * regime — `None`, and callers keep their distributed plan unchanged.
     */
-  private type InMemCorpus =
-    org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]
+  private final case class FlatCorpus(rows: Array[(Long, Array[Float])],
+                                      norms: Array[Double])
+  private type InMemCorpus = org.apache.spark.broadcast.Broadcast[FlatCorpus]
   private val inMemCorpusCache = new SessionMemo[Option[InMemCorpus]]
   private def corpusInMemory(embeddings: DataFrame, idCol: String, vecCol: String,
                              cacheKey: Option[String]): Option[InMemCorpus] = {
@@ -446,8 +449,12 @@ object VectorSearch {
     Resident.memo(inMemCorpusCache, spark, cacheKey, "flat") {
       val emb = embeddings.select(col(idCol), col(vecCol))
         .filter(col(vecCol).isNotNull)
-      Option.when(Resident.fits(emb, Resident.VectorRows, Some(vecCol)))(
-        spark.sparkContext.broadcast(emb.as[(Long, Array[Float])].collect()))
+      Option.when(Resident.fits(emb, Resident.VectorRows, Some(vecCol))) {
+        // each row's sqrt(Σv²) once, at load, not once per row per query
+        val rows = emb.as[(Long, Array[Float])].collect()
+        spark.sparkContext.broadcast(
+          FlatCorpus(rows, rows.map(r => HashAlgos.normF32(r._2))))
+      }
     }
   }
 
@@ -474,7 +481,7 @@ object VectorSearch {
     corpusInMemory(embeddings, idCol, vecCol, cacheKey).flatMap { bc =>
       val spark = embeddings.sparkSession
       import spark.implicits._
-      val qs = bc.value.iterator.filter { case (id, _) => pred(id) }.toArray
+      val qs = bc.value.rows.iterator.filter { case (id, _) => pred(id) }.toArray
       if (qs.length > maxQueries) None
       else Some(qs.sortBy(_._1).toSeq.toDF(qidCol, qvecCol))
     }
@@ -489,7 +496,7 @@ object VectorSearch {
                             maxRows: Int = 1024,
                             cacheKey: Option[String] = None): Option[Seq[(Long, Seq[Float])]] =
     corpusInMemory(embeddings, idCol, vecCol, cacheKey).flatMap { bc =>
-      val xs = bc.value.iterator.filter { case (id, _) => pred(id) }.toArray
+      val xs = bc.value.rows.iterator.filter { case (id, _) => pred(id) }.toArray
       if (xs.length > maxRows) None
       else Some(xs.sortBy(_._1).toSeq.map { case (id, v) =>
         (id, scala.collection.immutable.ArraySeq.unsafeWrapArray(v): Seq[Float]) })
@@ -509,21 +516,23 @@ object VectorSearch {
   /** Replay the [[TopKAggregator]] over an in-memory corpus for one query —
     * the SAME insertion/ordering semantics (score desc, doc_id asc,
     * primitive comparisons) and the SAME [[HashAlgos.cosineF32]] arithmetic
-    * order as the distributed paths, so either path is bit-identical.
+    * order as the distributed paths, so either path is bit-identical. Row
+    * norms come from load time and the query norm is taken once per query.
     * `scoreFn` is the per-score transform hook (identity for the raw
     * ranking contract; [[roundAt]] for the pipeline's rounded contract).
     */
   private def roundAt(scale: Int)(x: Double): Double =
     graft.functions.HashAlgos.roundHalfUp(x, scale)
-  private def topKOverCorpus(corpus: Array[(Long, Array[Float])],
-                             qv: Array[Float], k: Int,
+  private def topKOverCorpus(corpus: FlatCorpus, qv: Array[Float], k: Int,
                              scoreFn: Double => Double = identity): Seq[ScoredDoc] = {
     val agg = new TopKAggregator(k)
     var b = agg.zero
+    val qNorm = HashAlgos.normF32(qv)
     var i = 0
-    while (i < corpus.length) {
-      val (id, v) = corpus(i)
-      b = agg.reduce(b, ScoredDoc(id, scoreFn(HashAlgos.cosineF32(v, qv))))
+    while (i < corpus.rows.length) {
+      val (id, v) = corpus.rows(i)
+      b = agg.reduce(b, ScoredDoc(id,
+        scoreFn(HashAlgos.cosineF32(v, corpus.norms(i), qv, qNorm))))
       i += 1
     }
     b.items
@@ -539,17 +548,17 @@ object VectorSearch {
     * to rounding every row (the prune is a strict under-bound; candidates
     * still go through the exact Spark-round twin).
     */
-  private def roundedTopKOverCorpus(corpus: Array[(Long, Array[Float])],
-                                    qv: Array[Float], k: Int,
-                                    scale: Int): Seq[ScoredDoc] = {
+  private def roundedTopKOverCorpus(corpus: FlatCorpus, qv: Array[Float],
+                                    k: Int, scale: Int): Seq[ScoredDoc] = {
     val agg = new TopKAggregator(k)
     var b = agg.zero
     val band = math.pow(10.0, -scale)
     val round: Double => Double = roundAt(scale)(_)
+    val qNorm = HashAlgos.normF32(qv)
     var i = 0
-    while (i < corpus.length) {
-      val (id, v) = corpus(i)
-      val raw = HashAlgos.cosineF32(v, qv)
+    while (i < corpus.rows.length) {
+      val (id, v) = corpus.rows(i)
+      val raw = HashAlgos.cosineF32(v, corpus.norms(i), qv, qNorm)
       if (b.items.length < k || raw >= b.items.last.score - band)
         b = agg.reduce(b, ScoredDoc(id, round(raw)))
       i += 1
@@ -574,10 +583,9 @@ object VectorSearch {
                 query: Seq[Float], k: Int, cacheKey: Option[String] = None): DataFrame =
     corpusInMemory(embeddings, idCol, vecCol, cacheKey) match {
       case Some(bc) =>
-        val spark = embeddings.sparkSession
-        import spark.implicits._
-        topKOverCorpus(bc.value, query.toArray, k)
-          .map(sd => (sd.doc_id, sd.score)).toDF("doc_id", "score")
+        GraftShims.localFrame(embeddings.sparkSession, TopK.DocScore,
+          topKOverCorpus(bc.value, query.toArray, k)
+            .map(sd => InternalRow(sd.doc_id, sd.score)))
       case None =>
         embeddings
           .select(col(idCol).as("doc_id"),
@@ -603,7 +611,7 @@ object VectorSearch {
       // serializing the whole batch on one core — spread it (per-query
       // search is independent, so repartition changes nothing but
       // parallelism; one tiny shuffle of the ≤1024-row query set)
-      val spreadQueries = bc.value.length >= 8192
+      val spreadQueries = bc.value.rows.length >= 8192
       searchQuerySet(queries, qidCol, qvecCol, spread = spreadQueries) { (qid, qv) =>
         topKOverCorpus(bc.value, qv, kk).iterator.zipWithIndex.map {
           case (sd, i) => (qid, sd.doc_id, sd.score, i + 1)
@@ -642,8 +650,9 @@ object VectorSearch {
       }
     Some(localRows match {
       case Some(qRows) =>
-        qRows.flatMap { case (qid, qv) => search(qid, qv) }
-          .toDF("query_id", "doc_id", "score", "rank")
+        GraftShims.localFrame(spark, TopK.QueryDocScoreRank,
+          qRows.flatMap { case (qid, qv) => search(qid, qv) }
+            .map { case (qid, id, s, rank) => InternalRow(qid, id, s, rank) })
       case None =>
         val ds = sel.as[(Long, Array[Float])]
         val shaped =
@@ -671,12 +680,11 @@ object VectorSearch {
                            queries: Seq[(Long, Array[Float])], k: Int,
                            scale: Int, cacheKey: Option[String] = None): Option[DataFrame] =
     corpusInMemory(embeddings, idCol, vecCol, cacheKey).map { bc =>
-      val spark = embeddings.sparkSession
-      import spark.implicits._
-      queries.flatMap { case (qid, qv) =>
-        roundedTopKOverCorpus(bc.value, qv, k, scale)
-          .map(sd => (qid, sd.doc_id, sd.score))
-      }.toDF("query_id", "doc_id", "score")
+      GraftShims.localFrame(embeddings.sparkSession, TopK.QueryDocScore,
+        queries.flatMap { case (qid, qv) =>
+          roundedTopKOverCorpus(bc.value, qv, k, scale)
+            .map(sd => InternalRow(qid, sd.doc_id, sd.score))
+        })
     }
 
   /** [[roundedTopKInProcess]] as VALUES — the ranked `(doc_id, rounded
@@ -822,21 +830,20 @@ object VectorSearch {
     ivfInMemory(ix.assigned, ix.idCol, ix.vecCol,
         ix.centroids.zipWithIndex.map { case (cv, cid) => (cid, cv) }, ix.cacheKey)
       .map { bc =>
-        val spark = ix.assigned.sparkSession
-        import spark.implicits._
-        queries.flatMap { case (qid, qv, probes) =>
-          val (_, clusters) = bc.value
-          val agg = new TopKAggregator(k)
-          var b = agg.zero
-          probes.foreach { cid =>
-            clusters.getOrElse(cid, Array.empty[(Long, Array[Float])]).foreach {
-              case (id, v) =>
-                b = agg.reduce(b, ScoredDoc(id,
-                  roundAt(scale)(HashAlgos.cosineF32(v, qv))))
+        GraftShims.localFrame(ix.assigned.sparkSession, TopK.QueryDocScore,
+          queries.flatMap { case (qid, qv, probes) =>
+            val (_, clusters) = bc.value
+            val agg = new TopKAggregator(k)
+            var b = agg.zero
+            probes.foreach { cid =>
+              clusters.getOrElse(cid, Array.empty[(Long, Array[Float])]).foreach {
+                case (id, v) =>
+                  b = agg.reduce(b, ScoredDoc(id,
+                    roundAt(scale)(HashAlgos.cosineF32(v, qv))))
+              }
             }
-          }
-          b.items.map(sd => (qid, sd.doc_id, sd.score))
-        }.toDF("query_id", "doc_id", "score")
+            b.items.map(sd => InternalRow(qid, sd.doc_id, sd.score))
+          })
       }
 
   /** Resident PQ serving state: (cluster → sorted array of (id, codes,

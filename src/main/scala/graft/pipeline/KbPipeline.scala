@@ -1,11 +1,15 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftShims
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import graft.config.KbConfig
 import graft.embed.Embedder
 import graft.functions.TextFunctions
-import graft.operators.{Bm25, ContextWindow, Fusion, Resident, VectorSearch}
+import graft.operators.{Bm25, ContextWindow, Fusion, Resident, TopK, VectorSearch}
 import graft.query.{Enhancement, Rerank}
 
 /** The reference's three CLI verbs as Spark jobs (SURVEY §3, Appendix).
@@ -183,10 +187,8 @@ object KbPipeline {
             VectorSearch.ivfPqTopKValues(encoded, ix.idCol, ix.vecCol, cb,
               qvec.toArray, probes, cfg.queryTopK, shortlist,
               cacheKey = Some(ck)))
-          .map { vals =>
-            import spark.implicits._
-            vals.toDF("doc_id", "score")
-          }
+          .map(vals => GraftShims.localFrame(spark, TopK.DocScore,
+            vals.map { case (d, s) => InternalRow(d, s) }))
           .getOrElse {
             val enc = encoded.filter(col("cluster_id").isin(probes: _*))
               .select(col(ix.idCol).as("doc_id"), col(ix.vecCol).as("embedding"), col("codes"))
@@ -323,13 +325,29 @@ object KbPipeline {
   /** A driver-side hit row: `(doc_id, score, text, sourcedoc, sid,
     * rerank_score, final_rank)`, the hit DataFrame's columns.
     */
-  private type HitRow = (Long, Double, String, String, Int, Option[Double], Int)
+  private[pipeline] type HitRow = (Long, Double, String, String, Int, Option[Double], Int)
 
-  private def hitFrame(spark: SparkSession, rows: Seq[HitRow]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("doc_id", "score", "text", "sourcedoc", "sid",
-      "rerank_score", "final_rank")
-  }
+  /** The hit frame's schema, as `Seq[HitRow].toDF` would type it, and the
+    * batch form's with `query_id` in front.
+    */
+  private val HitSchema = StructType(Seq(
+    StructField("doc_id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("text", StringType),
+    StructField("sourcedoc", StringType),
+    StructField("sid", IntegerType, nullable = false),
+    StructField("rerank_score", DoubleType),
+    StructField("final_rank", IntegerType, nullable = false)))
+  private val BatchHitSchema =
+    StructType(StructField("query_id", LongType, nullable = false) +: HitSchema.fields)
+
+  private def hitValues(r: HitRow): Seq[Any] =
+    Seq(r._1, r._2, UTF8String.fromString(r._3), UTF8String.fromString(r._4),
+      r._5, r._6.getOrElse(null), r._7)
+
+  private[pipeline] def hitFrame(spark: SparkSession, rows: Seq[HitRow]): DataFrame =
+    GraftShims.localFrame(spark, HitSchema,
+      rows.map(r => InternalRow.fromSeq(hitValues(r))))
 
   /** The resident chunk table of the serving rung, from ONE guarded
     * collect: `byId` (id → (text, sourcedoc, sid)) serves the hit text
@@ -461,15 +479,11 @@ object KbPipeline {
                       enhanced, cfg.bm25K1, cfg.bm25B)
           } yield hitRowsFor(spark, cfg, enhanced, vtop, kraw, rc.byId)
             .filter(_._7 <= cfg.queryTopK)
-            .map(r => (qid, r._1, r._2, r._3, r._4, r._5, r._6, r._7))
+            .map(r => InternalRow.fromSeq(qid +: hitValues(r)))
         }
         if (rows.forall(_.isDefined)) Some(rows.flatMap(_.get)) else None
       }
-    } yield {
-      import spark.implicits._
-      perQuery.toDF("query_id", "doc_id", "score", "text", "sourcedoc",
-        "sid", "rerank_score", "final_rank")
-    }
+    } yield GraftShims.localFrame(spark, BatchHitSchema, perQuery)
   }
 
   /** The per-query driver hit computation shared by [[hitsInProcess]] and

@@ -176,4 +176,23 @@ class HashExpressionsSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("graft_cosine_f32"))
   }
+
+  test("cosineF32 with precomputed norms is bit-identical to cosineF32") {
+    val rnd = new scala.util.Random(17)
+    def vec(n: Int): Array[Float] = Array.fill(n)(rnd.nextGaussian().toFloat)
+    val pairs =
+      Seq.fill(200)((vec(64), vec(64))) ++
+      Seq.fill(20)((vec(1024), vec(1024))) ++
+      Seq((Array.fill(8)(0f), vec(8)), (vec(8), Array.fill(8)(0f)),
+        (Array.fill(8)(0f), Array.fill(8)(0f)),
+        (Array.emptyFloatArray, Array.emptyFloatArray),
+        (vec(8), vec(5)), (vec(3), vec(9)), (vec(4), Array.emptyFloatArray))
+    pairs.foreach { case (a, b) =>
+      val exact = HashAlgos.cosineF32(a, b)
+      val normed = HashAlgos.cosineF32(a, HashAlgos.normF32(a), b, HashAlgos.normF32(b))
+      assert(java.lang.Double.doubleToRawLongBits(normed) ==
+        java.lang.Double.doubleToRawLongBits(exact),
+        s"${a.length}x${b.length}: $normed vs $exact")
+    }
+  }
 }
