@@ -79,8 +79,8 @@ object Bm25 {
     idf * (tf * (k1 + 1.0)) /
       (tf + lit(k1) * (lit(1.0 - b) + lit(b) * docLen.cast("double") / avgdl))
 
-  /** The prebuilt BM25 index (S8): postings + lengths + idf + corpus
-    * stats. The reference persists this as NPZ and loads it per query
+  /** The prebuilt BM25 index (S8): postings `(doc_id, term, tf, doc_len)`
+    * + lengths + idf + corpus stats. The reference persists this as NPZ and loads it per query
     * (`/root/reference/embedding/bm25_manager.py:115-211`); here the
     * DataFrames are persisted (memory/disk) and written at rest as a
     * [[Version]] of a store ([[writeIndex]], [[readIndex]]).
@@ -116,13 +116,9 @@ object Bm25 {
 
     /** Corpus document count — served from [[statsRow]] like [[avgdl]];
       * the driver-side scale signal adaptive policies key on (r18:
-      * [[Rm3]] gates its pass-1 slice reuse on it). Pre-`n` legacy
-      * stores fall back to counting lengths, the [[mergeIndex]] rule.
+      * [[Rm3]] gates its pass-1 slice reuse on it).
       */
-    lazy val nDocs: Long =
-      if (stats.columns.contains("n"))
-        statsRow.getLong(statsRow.fieldIndex("n"))
-      else lengths.count()
+    lazy val nDocs: Long = statsRow.getLong(statsRow.fieldIndex("n"))
 
     /** Term-bucket count of an at-rest bucketed index (None for in-memory
       * or pre-bucketing indexes). Served from [[statsRow]] like [[avgdl]].
@@ -194,51 +190,31 @@ object Bm25 {
   /** Incremental index maintenance (S8 at 100 TB: never rebuild the whole
     * postings table for a new batch of documents). New docs' postings are
     * UNIONED onto the old postings — an append-only parquet write in
-    * practice — and only the term-level statistics (idf, avgdl) are
-    * recomputed, from the merged postings and the tracked corpus size.
-    * Equivalent to a full rebuild over old ∪ new (spec-asserted).
+    * practice — and the idf and totals advance by the same O(batch)
+    * arithmetic a store commit uses ([[appendDelta]]): df adds in integers
+    * and avgdl is `sum_dl / n_len`, so no idf is re-aggregated over the
+    * merged postings. Equivalent to a full rebuild over old ∪ new
+    * (spec-asserted).
     *
     * Contract: `newDocs` ids are disjoint from the indexed corpus (route
     * re-ingests through the S5 anti-join first).
     */
   def mergeIndex(old: Index, newDocs: DataFrame, idCol: String, textCol: String): Index = {
-    val newN = newDocs.count()
-    // corpus size off the index's one shared statsRow snapshot (r19: this
-    // ran its own one-row head job per merge even when `old` was a
-    // memoized cachedIndex/readIndex instance whose snapshot already
-    // existed — e2e_incremental paid it on every invocation); Index.nDocs
-    // keeps the pre-`n` legacy fallback of counting lengths
-    val oldN = old.nDocs
     val np0 = postings(newDocs, idCol, textCol)
     val npLens = docLengths(np0)
-    val np = np0.join(npLens, "doc_id")
-    // a term-bucketed STORED index carries the term_bucket
-    // column the fresh batch lacks — drop it before the union (the merged
-    // in-memory index is not bucket-complete anyway; Index.termBuckets
-    // goes None so no pruning is attempted, and writeIndex re-derives the
-    // column from scratch on the next store)
-    val oldPost0 = withDocLen(old)
-    val oldPost = if (oldPost0.columns.contains("term_bucket"))
-      oldPost0.drop("term_bucket") else oldPost0
-    val post = oldPost.unionByName(np)
-    val lens = old.lengths.unionByName(npLens)
-    Index(post, lens, idf(post, oldN + newN), statsOf(lens, oldN + newN))
-  }
-
-  /** Incremental index maintenance, delete side: drop a set of doc ids from
-    * the index without touching other postings — an anti-join on `doc_id`
-    * (at rest: bucket-pruned rewrite of only the affected files)
-    * plus a stats/idf recompute from the surviving postings. Equivalent to a
-    * full rebuild over corpus ∖ removed (spec-asserted).
-    */
-  def removeDocs(old: Index, removeIds: DataFrame, idCol: String): Index = {
-    val rm = removeIds.select(col(idCol).as("doc_id"))
-    val post = old.postings.join(rm, Seq("doc_id"), "left_anti")
-    val lens = old.lengths.join(rm, Seq("doc_id"), "left_anti")
-    val oldN = old.nDocs // shared statsRow snapshot (see mergeIndex)
-    val removedN = old.lengths.join(rm, Seq("doc_id"), "left_semi").count()
-    val n = oldN - removedN
-    Index(post, lens, idf(post, n), statsOf(lens, n))
+    // the batch's totals in one job; a doc's length is its token count
+    val docLen = greatest(size(TextFunctions.tokenizeBm25(col(textCol))), lit(0)).cast("long")
+    val b = newDocs.agg(count(lit(1)), coalesce(sum(docLen), lit(0L)),
+      count(when(docLen > 0, true))).head()
+    val (idf2, totals) = appendDelta(Some(old.idf), totalsOf(old),
+      Totals(b.getLong(0), b.getLong(1), b.getLong(2), 0), np0)
+    // a term-bucketed STORED index carries the term_bucket column the
+    // fresh batch lacks — drop it before the union (the merged in-memory
+    // index is not bucket-complete: its totals carry no bucket count, so
+    // Index.termBuckets goes None and no pruning is attempted)
+    Index(old.postings.drop("term_bucket").unionByName(np0.join(npLens, "doc_id")),
+      old.lengths.unionByName(npLens), idf2,
+      totals.copy(termBuckets = 0).toDF(newDocs.sparkSession))
   }
 
   /** S8 index persistence: the reference writes NPZ + JSON sidecars and
@@ -258,8 +234,7 @@ object Bm25 {
     val alreadyPersisted = ix.postings.storageLevel != StorageLevel.NONE
     val post = if (alreadyPersisted) ix.postings
       else ix.postings.persist(StorageLevel.MEMORY_AND_DISK)
-    try commit(spark, dir, Version.latest(spark, dir), Nil,
-      withDocLen(ix.copy(postings = post)), ix.lengths, ix.idf,
+    try commit(spark, dir, Version.latest(spark, dir), Nil, post, ix.lengths, ix.idf,
       totalsOf(ix).copy(termBuckets = termBuckets))
     finally if (!alreadyPersisted) post.unpersist()
   }
@@ -286,26 +261,21 @@ object Bm25 {
   // ([[indexInProcess]]) memoizes its in-memory term arrays under it, the
   // reference's load-NPZ-arrays-once regime. A committed [[Version]] never
   // changes, so its key is its manifest path, and finding it costs one
-  // manifest listing. Nothing writes the pre-manifest layout any more, so
-  // such a directory is keyed by its path alone.
+  // manifest listing.
   private val storedIndexCache = new SessionMemo[Index]
 
-  /** The index stored at `dir`: the version `dir` names (`<root>/v<N>`),
-    * else the newest version of the store rooted at `dir`, else `dir` read
-    * as a pre-manifest store — one legacy segment.
+  /** The index stored at `dir`: the committed version `dir` names
+    * (`<root>/v<N>`), else the newest version of the store rooted at `dir`.
+    * A directory with neither is refused: with [[preManifestRefusal]] when
+    * it holds a store written before manifests, else as not found.
     */
-  def readIndex(spark: SparkSession, dir: String): Index =
-    Version.at(spark, dir).orElse(Version.latest(spark, dir)) match {
-      case Some(v) => storedIndexCache.getOrBuild(spark, v.key)(v.index(spark))
-      case None =>
-        val key = s"stored:$dir@legacy"
-        storedIndexCache.getOrBuild(spark, key)(Index(
-          spark.read.parquet(s"$dir/postings"),
-          spark.read.parquet(s"$dir/lengths"),
-          spark.read.parquet(s"$dir/idf"),
-          spark.read.parquet(s"$dir/stats"),
-          cacheKey = Some(key)))
+  def readIndex(spark: SparkSession, dir: String): Index = {
+    val v = Version.at(spark, dir).orElse(Version.latest(spark, dir)).getOrElse {
+      Version.refusePreManifest(spark, dir)
+      throw new java.io.FileNotFoundException(s"no committed BM25 version at $dir")
     }
+    storedIndexCache.getOrBuild(spark, v.key)(v.index(spark))
+  }
 
   /** A store's corpus totals as driver values, the row of its `stats`
     * table: `n` counts every document (idf's N); `sumDl` is the exact
@@ -321,23 +291,13 @@ object Bm25 {
     }
   }
 
-  /** The [[Totals]] of an index, off its one statsRow snapshot; stats
-    * written before `sum_dl`/`n_len` pay one slim lengths scan.
-    */
+  /** The [[Totals]] of an index, off its one statsRow snapshot. */
   private def totalsOf(ix: Index): Totals = {
     val r = ix.statsRow
-    val has = ix.stats.columns.toSet
     // an index with no token-bearing row sums to null
     def long(c: String) = if (r.isNullAt(r.fieldIndex(c))) 0L else r.getLong(r.fieldIndex(c))
-    val (sumDl, nLen) =
-      if (has("sum_dl") && has("n_len")) (long("sum_dl"), long("n_len"))
-      else {
-        val s = ix.lengths.agg(coalesce(sum(col("doc_len").cast("long")), lit(0L)),
-          count(lit(1))).head()
-        (s.getLong(0), s.getLong(1))
-      }
-    Totals(ix.nDocs, sumDl, nLen,
-      if (has("term_buckets")) r.getInt(r.fieldIndex("term_buckets")) else 0)
+    Totals(ix.nDocs, long("sum_dl"), long("n_len"),
+      if (ix.stats.columns.contains("term_buckets")) r.getInt(r.fieldIndex("term_buckets")) else 0)
   }
 
   /** The O(batch) update a commit makes ([[commitVersion]]) — the new idf
@@ -380,6 +340,14 @@ object Bm25 {
                        textCol: String): Unit =
     commitVersion(spark, dir, newDocs, idCol, textCol, refuseStored = true)
 
+  /** The refusal of a root that holds a BM25 store written before
+    * manifests ([[Version]]), with the instruction that rebuilds it.
+    */
+  private[graft] def preManifestRefusal(root: String): String =
+    s"$root holds a BM25 store written before manifests, which this " +
+      "version no longer reads: delete the directory and rebuild it with " +
+      "`bm25 <kbDir>`, or re-run `maintain` into an empty kb"
+
   /** Segments a [[Version]] lists at most: a commit that would list more
     * writes one merged segment instead.
     */
@@ -407,9 +375,9 @@ object Bm25 {
     * a crashed commit and reads as absent. A commit keeps its own version
     * and the one before it, and deletes the rest ([[Version.collect]]).
     *
-    * A store written before manifests — a `CURRENT` pointer to a full
-    * store `v<K>`, or the tables directly under the root — reads as one
-    * legacy segment, which the next commit merges into its own.
+    * A store written before manifests — a pointer file naming a full store
+    * `v<K>`, or the tables directly under the root — is not read: the
+    * readers and [[commitVersion]] refuse it with [[preManifestRefusal]].
     */
   private[graft] final case class Version(root: String, number: Long,
                                           totals: Totals,
@@ -441,8 +409,6 @@ object Bm25 {
   private[graft] object Version {
     import org.apache.hadoop.fs.{FileSystem, Path}
     private val Name = "v(\\d+)".r
-    /** What a pre-manifest store keeps directly under its root. */
-    private val LegacyNames = Set("CURRENT", "postings", "lengths", "idf", "stats")
 
     private def fs(spark: SparkSession, root: String): FileSystem =
       graft.sources.KbStorage.fileSystem(spark, new Path(root))
@@ -495,25 +461,28 @@ object Bm25 {
       numbers(spark, root).sorted.reverseIterator
         .flatMap(load(spark, root, _)).nextOption()
 
-    /** A pre-manifest store at `root`: the full store its `CURRENT`
-      * pointer names, else `root` itself when it holds the tables.
+    /** Refuse a `root` with no committed version that holds a store
+      * written before manifests: the pointer file that named its full
+      * store, or its tables directly under the root. Called only where no
+      * complete manifest was found, so a committed store never pays it.
       */
-    private[Bm25] def legacyDir(spark: SparkSession, root: String): Option[String] =
-      readText(spark, s"$root/CURRENT").map(name => s"$root/${name.trim}")
-        .orElse(Some(root).filter(r => fs(spark, r).exists(new Path(s"$r/stats"))))
+    private[Bm25] def refusePreManifest(spark: SparkSession, root: String): Unit = {
+      val fs = this.fs(spark, root)
+      if (Seq("CURRENT", "stats").exists(n => fs.exists(new Path(s"$root/$n"))))
+        throw new IllegalStateException(preManifestRefusal(root))
+    }
 
     /** The directory [[readIndex]] serves for the store at `root`: its
-      * newest version, else a pre-manifest store.
+      * newest version, if it has one.
       */
     def currentPath(spark: SparkSession, root: String): Option[String] =
-      latest(spark, root).map(_.path).orElse(legacyDir(spark, root))
+      latest(spark, root).map(_.path).orElse { refusePreManifest(spark, root); None }
 
     /** The number the next commit takes: one past every manifest, complete
-      * or not, and past a pre-manifest store's version.
+      * or not.
       */
     private[Bm25] def next(spark: SparkSession, root: String): Long =
-      (numbers(spark, root) ++ readText(spark, s"$root/CURRENT").map(_.trim).collect {
-        case Name(n) => n.toLong }).maxOption.getOrElse(0L) + 1
+      numbers(spark, root).maxOption.getOrElse(0L) + 1
 
     /** Commit `v`, whose own segment is written: create its manifest,
       * failing if that version exists.
@@ -526,9 +495,8 @@ object Bm25 {
 
     /** Retention: delete everything that neither `v` nor `prev`, the
       * version it follows, references — older manifests, their `idf` and
-      * `stats`, merged-away segments, uncommitted `v<N>` directories below
-      * `v`, and a pre-manifest store (a commit merged it into `prev` or
-      * earlier). Directories above `v` belong to a commit in flight.
+      * `stats`, merged-away segments and uncommitted `v<N>` directories
+      * below `v`. Directories above `v` belong to a commit in flight.
       */
     private[Bm25] def collect(spark: SparkSession, v: Version, prev: Version): Unit = {
       val fs = this.fs(spark, v.root)
@@ -539,7 +507,6 @@ object Bm25 {
       fs.listStatus(new Path(v.root)).map(_.getPath.getName).foreach {
         case name @ Name(n) if n.toLong < v.number && !kept(n.toLong) =>
           if (live(name)) { rm(s"$name/idf"); rm(s"$name/stats") } else rm(name)
-        case name if LegacyNames(name) => rm(name)
         case _ => ()
       }
     }
@@ -579,9 +546,11 @@ object Bm25 {
     * stored. With `refuseStored` (the store append) a batch holding any is
     * refused before anything is written; otherwise (`maintain`'s replay
     * guard) they are dropped. A commit that would list more than
-    * [[MaxSegments]] segments, or extend a store of another layout or a
-    * pre-manifest store, instead rewrites the whole store as one merged
-    * segment. The version number is the manifest's latest + 1. Every write
+    * [[MaxSegments]] segments, or extend segments of another schema,
+    * instead rewrites the whole store as one merged segment. A root with
+    * no committed version that holds a store written before manifests is
+    * refused ([[preManifestRefusal]]) before anything is written. The
+    * version number is the manifest's latest + 1. Every write
     * lands in the new `v<N>` directory (a crashed attempt's leftovers there
     * are overwritten), and the manifest create is the commit point.
     * Returns None, and commits nothing, when every batch doc is already in
@@ -597,8 +566,8 @@ object Bm25 {
                                    idCol: String, textCol: String,
                                    refuseStored: Boolean = false): Option[Version] = {
     val prev = Version.latest(spark, root)
-    val stored = prev.map(_.path).orElse(Version.legacyDir(spark, root))
-      .map(readIndex(spark, _))
+    if (prev.isEmpty) Version.refusePreManifest(spark, root)
+    val stored = prev.map(p => readIndex(spark, p.path))
     val batch = docs.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     val tokens = TextFunctions.tokenizeBm25(col("text"))
     val docLen = greatest(size(tokens), lit(0)).cast("long")
@@ -625,11 +594,11 @@ object Bm25 {
     val post = fresh.select(col("doc_id"), explode(tokens).as("term"), docLen.as("doc_len"))
       .groupBy("doc_id", "term", "doc_len").agg(count(lit(1)).as("tf"))
     val lens = fresh.select(col("doc_id"), docLen.as("doc_len")).filter(col("doc_len") > 0)
-    val merge = stored.filter(_ => prev.forall(p => p.segments.size >= MaxSegments ||
+    val merge = stored.filter(_ => prev.exists(p => p.segments.size >= MaxSegments ||
       p.postingsSchema != segmentSchema(post) || p.lengthsSchema != nullable(lens.schema)))
     val (segPostings, segLens) = merge.fold((post, lens))(ix =>
-      (withDocLen(ix).drop("term_bucket").unionByName(post), ix.lengths.unionByName(lens)))
-    val old = prev.map(_.totals).orElse(stored.map(totalsOf))
+      (ix.postings.drop("term_bucket").unionByName(post), ix.lengths.unionByName(lens)))
+    val old = prev.map(_.totals)
     val buckets = old.map(_.termBuckets).filter(_ > 0).getOrElse(DefaultTermBuckets)
     val (idf2, totals) = appendDelta(stored.map(_.idf),
       old.getOrElse(Totals(0L, 0L, 0L, 0)).copy(termBuckets = buckets), batchTotals,
@@ -665,7 +634,7 @@ object Bm25 {
   private def indexInProcess(ix: Index, spark: SparkSession): Option[InProcIndex] = {
     if (!Resident.ids(ix.postings, "doc_id")) return None
     Resident.memo(inProcCache, spark, ix.cacheKey, "bm25") {
-      val post = withDocLen(ix)
+      val post = ix.postings
       Option.when(Resident.fits(post, Resident.PostingsRows)) {
         import spark.implicits._
         val rows = post.select(col("term"),
@@ -808,17 +777,9 @@ object Bm25 {
     }
   }
 
-  /** Postings with a `doc_len` column: denormalized indexes carry it in the
-    * row (no join); indexes persisted before the denormalization fall back
-    * to the lengths join.
-    */
-  private[operators] def withDocLen(ix: Index): DataFrame =
-    if (ix.postings.columns.contains("doc_len")) ix.postings
-    else ix.postings.join(ix.lengths, "doc_id")
-
-  /** [[withDocLen]] plus the at-rest scan prune, two filters deep, both
-    * literal and planned with no job (buckets computed driver-side by the
-    * crc32 twin):
+  /** An index's postings (they carry `doc_len`) with the at-rest scan
+    * prune, two filters deep, both literal and planned with no job
+    * (buckets computed driver-side by the crc32 twin):
     *  - when the index is term-bucketed, `term_bucket IN (…)` keeps the
     *    query terms' buckets — a PushedFilter that row-group and page
     *    statistics of the bucket-sorted segment files ([[writePostings]])
@@ -835,8 +796,8 @@ object Bm25 {
     val base = ix.termBuckets match {
       case Some(n) =>
         val buckets = termSet.map(termBucketValue(_, n)).distinct
-        withDocLen(ix).filter(col("term_bucket").isin(buckets: _*))
-      case None => withDocLen(ix)
+        ix.postings.filter(col("term_bucket").isin(buckets: _*))
+      case None => ix.postings
     }
     base.filter(col("term").isin(termSet.distinct: _*))
   }
@@ -911,7 +872,7 @@ object Bm25 {
     // possibly persisted) postings slice covering its terms — Rm3's
     // batched two-pass serve shares ONE cached slice across passes
     postingsOverride.getOrElse(
-      knownTerms.fold(withDocLen(ix))(ts => prunedPostings(ix, ts)))
+      knownTerms.fold(ix.postings)(ts => prunedPostings(ix, ts)))
       .join(broadcast(qStats), "term")
       .crossJoin(broadcast(ix.stats))
       .groupBy("query_id", "doc_id")

@@ -11,13 +11,13 @@ import graft.ingest.Chunker
   *
   * Two production shapes a 100 TB training-data pipeline needs:
   *
-  *  1. '''Incremental ingest''' — the streaming twin of
-  *     [[graft.ingest.Ingest.ingestFiles]]: a file-source stream watches a
-  *     landing directory, new files chunk/clean/derive EXACTLY like the
-  *     batch verb (same column functions — one code path, two execution
-  *     modes), and append to the chunk table. Replaces the reference's
-  *     `--force`/anti-join re-scan loop with exactly-once file tracking
-  *     (checkpointed file index).
+  *  1. '''KB maintenance''' — the `maintain` verb's one stream
+  *     ([[startKbMaintenance]]): a file-source stream watches a landing
+  *     directory, and each micro-batch of new files is deduplicated against
+  *     the lake, chunked exactly like the batch verbs, embedded through the
+  *     cache and committed as the next manifest version of the BM25 store,
+  *     with the lake append last. The checkpointed file index replaces the
+  *     reference's `--force`/anti-join re-scan loop.
   *
   *  2. '''Windowed event aggregation''' with watermarking — late events
   *     beyond the watermark are dropped deterministically; output is
@@ -25,43 +25,10 @@ import graft.ingest.Chunker
   */
 object StreamingIngest {
 
-  /** Streaming chunk ingest: text files under `glob` → canonical chunk rows.
-    * Identical derivations to the batch path — the DataFrame program is the
-    * contract, batch/streaming is an execution detail.
-    */
-  def chunkStream(spark: SparkSession, glob: String,
-                  chunkSize: Int = 200, overlap: Int = 50): DataFrame = {
-    val files = spark.readStream
-      .format("text")
-      .option("wholetext", "true")
-      .load(glob)
-      .select(col("value").as("text"))
-      .withColumn("sourcedoc", input_file_name())
-    files
-      .select(col("sourcedoc"),
-        explode(Chunker.chunks(col("text"), chunkSize, overlap)).as("c"))
-      .select(col("sourcedoc"), col("c.sid").as("sid"),
-        col("c.chunk_text").as("chunk_text"))
-      .withColumn("embedtext", TextFunctions.cleanText(col("chunk_text")))
-      .withColumn("bm25_tokens", TextFunctions.tokenizeBm25(col("chunk_text")))
-  }
-
-  /** Start the ingest stream writing parquet + checkpoint under `outDir`. */
-  def startIngest(spark: SparkSession, glob: String, outDir: String,
-                  trigger: org.apache.spark.sql.streaming.Trigger =
-                    org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    chunkStream(spark, glob).writeStream
-      .format("parquet")
-      .option("path", s"$outDir/chunks")
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .trigger(trigger)
-      .start()
-
-  /** Streaming BM25 index maintenance — the streaming twin of the
-    * `bm25` + incremental-append verbs: each micro-batch of newly landed
-    * files chunks exactly like [[chunkStream]] and commits to the
-    * versioned store under `dir` ([[maintainIndexBatch]]).
+  /** The index step of [[kbMaintenanceBatch]]: the batch's chunks commit as
+    * the next version of the BM25 store rooted at `dir`
+    * ([[graft.operators.Bm25.commitVersion]]); None when the batch holds no
+    * new chunk.
     *
     * Commit order: the batch's segment, idf and stats land in a fresh
     * `dir/v<N>`, then the manifest `dir/_manifest/v<N>` is created with
@@ -79,24 +46,6 @@ object StreamingIngest {
     * and deletes every older manifest, idf, stats and merged-away segment
     * ([[graft.operators.Bm25.Version]] retention).
     */
-  def startIndexMaintenance(spark: SparkSession, glob: String, dir: String,
-                            trigger: org.apache.spark.sql.streaming.Trigger =
-                              org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    chunkStream(spark, glob).writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        maintainIndexBatch(spark, batch, dir); ()
-      }
-      .trigger(trigger)
-      .start()
-
-  /** The per-micro-batch maintenance step of [[startIndexMaintenance]] —
-    * a commit of the batch's chunks as the store's next version
-    * ([[graft.operators.Bm25.commitVersion]]); None when the batch holds
-    * no new chunk. Factored out so specs (and replay-idempotence tests)
-    * can drive it directly with a deterministic batch.
-    */
   private[graft] def maintainIndexBatch(spark: SparkSession, batch: DataFrame,
                                         dir: String)
       : Option[graft.operators.Bm25.Version] =
@@ -104,103 +53,77 @@ object StreamingIngest {
       batch.select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"),
         col("chunk_text").as("text")), "doc_id", "text")
 
-  /** The current index store under a maintenance root, if any: the newest
-    * committed version, else a pre-manifest store. Its `stats` is the
-    * one-row table of the current totals. Read through the Hadoop
-    * FileSystem API of the active session.
+  /** The path of the newest committed version of the BM25 store under a
+    * maintenance root, if it has one. Its `stats` is the one-row table of
+    * the current totals. Read through the Hadoop FileSystem API of the
+    * active session; a root holding a store written before manifests is
+    * refused ([[graft.operators.Bm25.preManifestRefusal]]).
     */
   def currentIndexPath(dir: String): Option[String] =
     graft.operators.Bm25.Version.currentPath(SparkSession.active, dir)
 
-  /** Streaming dedup-at-ingest — the shape a 100 TB/day training pipeline
-    * runs at the front door: each micro-batch of landed documents is
-    * exact-deduped WITHIN the batch (canonical min-id survives), checked
+  /** The refusal of a lake written without `column`. Every lake commit
+    * ([[appendToLake]]) stores the fingerprint and the audit stamps, and
+    * the lake readers ([[dedupSurvivors]], [[lakeCurrent]]) read them
+    * as stored.
+    */
+  private[graft] def lakeRefusal(lake: String, column: String): String =
+    s"$lake has no `$column` column: it was written before lakes stored " +
+      "it, and this version no longer reads it. Delete the kb directory " +
+      "and re-run `maintain` into an empty kb"
+
+  private val LakeColumns = Seq("fp", "created_at", "updated_at")
+
+  /** `lake`, the lake under `dir` as its reader opened it, refused when it
+    * lacks a column every commit writes — a check on the frame's own
+    * schema, with no extra job.
+    */
+  private def checkedLake(lake: DataFrame, dir: String): DataFrame = {
+    LakeColumns.find(c => !lake.columns.contains(c)).foreach(c =>
+      throw new IllegalStateException(lakeRefusal(s"$dir/lake", c)))
+    lake
+  }
+
+  /** The dedup step of [[kbMaintenanceBatch]] — the shape a 100 TB/day
+    * training pipeline runs at the front door: the batch's documents are
+    * exact-deduped WITHIN the batch (canonical min-id survives) and checked
     * against the accumulated lake through the bloom-prefiltered
-    * fingerprint join ([[graft.operators.Dedup.incrementalBloom]] — lake
-    * rows drop map-side on the bloom probe before the join), and only
-    * never-seen documents append to the lake. Replay-idempotent without a
-    * pointer: a replayed batch's fingerprints are already IN the lake, so
-    * every row drops and nothing appends. The parquet append itself is
-    * the one non-transactional step — at production scale the lake sits
-    * in a table format with atomic commit (the seam is this function).
-    */
-  def startDedupIngest(spark: SparkSession, glob: String, dir: String,
-                       trigger: org.apache.spark.sql.streaming.Trigger =
-                         org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream.format("text").option("wholetext", "true").load(glob)
-      .select(input_file_name().as("doc_id"), col("value").as("text"))
-      .writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupIngestBatch(spark, batch, dir, batchId)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** The per-micro-batch step of [[startDedupIngest]], spec-drivable. */
-  private[graft] def dedupIngestBatch(spark: SparkSession, batch: DataFrame,
-                                      dir: String, batchId: Long = 0L): Unit = {
-    dedupIngestStep(spark, batch, dir, batchId); ()
-  }
-
-  /** [[dedupIngestBatch]] returning the MATERIALIZED survivor documents —
-    * the composition seam [[kbMaintenanceBatch]] chains further stages on.
-    */
-  private[graft] def dedupIngestStep(spark: SparkSession, batch: DataFrame,
-                                     dir: String, batchId: Long = 0L): DataFrame = {
-    val (out, lakeCols) = dedupSurvivors(spark, batch, dir)
-    if (out.head(1).nonEmpty) appendToLake(out, dir, batchId, lakeCols)
-    out
-  }
-
-  /** The COMPUTE half of [[dedupIngestStep]]: the batch's exact-dedup
-    * survivors checked against the accumulated lake, MATERIALIZED
-    * (localCheckpoint) but NOT committed — the survivor plan reads the same
-    * lake files [[appendToLake]] extends, and [[kbMaintenanceBatch]] needs
-    * to run every downstream stage before the lake commit so a crashed
-    * batch can re-derive its work. Returned with the lake's columns as its
-    * read saw them (None: no lake yet), so the same batch's commit
-    * ([[appendToLake]]) picks the row shape without a second footer read.
+    * fingerprint join ([[graft.operators.Dedup.incrementalBloomPrehashed]]
+    * — lake rows drop map-side on the bloom probe before the join). The
+    * lake carries the fingerprint AT REST, so the probe scans only its
+    * 8-byte fp column (parquet column pruning) instead of re-cleaning and
+    * re-hashing the full accumulated text every micro-batch.
+    *
+    * The survivors are MATERIALIZED (localCheckpoint) but NOT committed:
+    * the survivor plan reads the same lake files [[appendToLake]] extends,
+    * and [[kbMaintenanceBatch]] runs every downstream stage before the lake
+    * commit so a crashed batch can re-derive its work. A replayed batch's
+    * fingerprints are already IN the lake, so every row drops.
     */
   private[graft] def dedupSurvivors(spark: SparkSession, batch: DataFrame,
-                                    dir: String)
-      : (DataFrame, Option[Set[String]]) = {
+                                    dir: String): DataFrame = {
     import graft.operators.Dedup
     val canonIds = Dedup.exactGroups(batch, "doc_id", "text")
       .filter(col("dup_id") === col("keep_id"))
       .select(col("dup_id").as("doc_id"))
     val canon = batch.join(canonIds, "doc_id")
-    val lakeDir = s"$dir/lake"
-    val lakeRead =
+    val survivors =
       // Hadoop FS probe (ADVICE r17): java.io.File answers false for
       // every remote lake, which would re-admit every already-committed
       // document on a remote kb
-      if (!graft.sources.KbStorage.pathExists(spark, lakeDir)) None
-      else Some(spark.read.parquet(lakeDir))
-    val survivors = lakeRead match {
-      case None => canon
-      case Some(lake) =>
-        // lakes written by [[appendToLake]] carry the fingerprint AT REST:
-        // the dedup probe then scans only the lake's 8-byte fp column
-        // (parquet column pruning) instead of re-cleaning + re-hashing the
-        // full accumulated text every micro-batch — the scan that would
-        // otherwise grow with the lake at 100 TB. Pre-fp lakes (or foreign
-        // tables) fall back to computing it.
-        val lakeFp =
-          if (lake.columns.contains("fp"))
-            lake.select(col("doc_id").as("keep_cand"), col("fp"))
-          else lake.select(col("doc_id").as("keep_cand"),
-            TextFunctions.fingerprint(col("text")).as("fp"))
+      if (!graft.sources.KbStorage.pathExists(spark, s"$dir/lake")) canon
+      else {
+        val lakeFp = checkedLake(spark.read.parquet(s"$dir/lake"), dir)
+          .select(col("doc_id").as("keep_cand"), col("fp"))
         val dups = Dedup.incrementalBloomPrehashed(lakeFp, canon, "doc_id", "text")
           .filter(col("keep_id").isNotNull)
           .select(col("batch_id").as("doc_id"))
         canon.join(dups, Seq("doc_id"), "left_anti")
-    }
-    (survivors.localCheckpoint(true), lakeRead.map(_.columns.toSet))
+      }
+    survivors.localCheckpoint(true)
   }
 
-  /** The COMMIT half of [[dedupIngestStep]]: append (already-materialized)
+  /** The COMMIT step of [[kbMaintenanceBatch]]: append (already-materialized)
     * survivor documents to the lake — the step that makes a replayed batch
     * drop out on its fingerprints. The fingerprint is stored AT REST so
     * later batches' dedup probes never re-hash lake text
@@ -218,31 +141,14 @@ object StreamingIngest {
     * created_at sticky at the FIRST commit, updated_at bumped to the
     * LAST. A content-identical replay never reaches the commit (the
     * fingerprint dedup drops it), matching the reference where no UPDATE
-    * statement fires.
-    *
-    * `survivors` must be non-empty; `lakeCols` are the lake's columns as
-    * [[dedupSurvivors]] read them in the same batch, None when there is no
-    * lake yet. Schema consistency: a pre-fp or pre-audit lake
-    * keeps its shape (mixed parquet schemas in one directory would corrupt
-    * reads); fresh and fp-carrying lakes store the fingerprint. The lake's
-    * existence comes from the Hadoop FileSystem probe (ADVICE r17):
-    * java.io.File answers false for every remote kb path, which would
-    * audit-stamp appends into a pre-audit remote lake.
+    * statement fires. `survivors` must be non-empty.
     */
   private[graft] def appendToLake(survivors: DataFrame, dir: String,
-                                  changeTime: Long,
-                                  lakeCols: Option[Set[String]]): Unit = {
-    val fpd =
-      if (lakeCols.forall(_.contains("fp")))
-        survivors.withColumn("fp", TextFunctions.fingerprint(col("text")))
-      else survivors
-    val out =
-      if (lakeCols.forall(_.contains("created_at")))
-        fpd.withColumn("created_at", lit(changeTime).cast("long"))
-          .withColumn("updated_at", lit(changeTime).cast("long"))
-      else fpd
-    out.write.mode("append").parquet(s"$dir/lake")
-  }
+                                  changeTime: Long): Unit =
+    survivors.withColumn("fp", TextFunctions.fingerprint(col("text")))
+      .withColumn("created_at", lit(changeTime).cast("long"))
+      .withColumn("updated_at", lit(changeTime).cast("long"))
+      .write.mode("append").parquet(s"$dir/lake")
 
   /** The audited CURRENT view of the append-only lake — one row per
     * doc_id carrying the LATEST committed content with the reference's
@@ -252,21 +158,13 @@ object StreamingIngest {
     * update). Same one-shuffled-window plan as
     * [[graft.operators.Merge.upsertAudited]] generalized to N waves; ties
     * inside one commit stamp break on the fingerprint so the view is
-    * deterministic. Pre-audit lakes (no stamp columns) get stamp 0 for
-    * every row — the view still collapses to one row per doc_id.
+    * deterministic. A lake without the stamps or the fingerprint is
+    * refused ([[lakeRefusal]]).
     */
   def lakeCurrent(spark: SparkSession, dir: String): DataFrame = {
-    val lake = spark.read.parquet(s"$dir/lake")
-    val stamped =
-      if (lake.columns.contains("created_at")) lake
-      else lake.withColumn("created_at", lit(0L))
-        .withColumn("updated_at", lit(0L))
-    val keyed =
-      if (stamped.columns.contains("fp")) stamped
-      else stamped.withColumn("fp", TextFunctions.fingerprint(col("text")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"))
     val wOrd = w.orderBy(col("updated_at").desc, col("fp").desc)
-    keyed
+    checkedLake(spark.read.parquet(s"$dir/lake"), dir)
       .withColumn("_created", org.apache.spark.sql.functions.min(col("created_at")).over(w))
       .withColumn("_updated", org.apache.spark.sql.functions.max(col("updated_at")).over(w))
       .withColumn("_rn", row_number().over(wOrd))
@@ -277,12 +175,12 @@ object StreamingIngest {
   }
 
   /** The WHOLE incremental lifecycle as one stream — the streaming twin of
-    * the reference's `database → embed → bm25` verb sequence: each
-    * micro-batch of landed files is deduplicated against the lake
-    * ([[dedupIngestStep]]), the survivors chunk exactly like the batch
-    * path, new content keys embed through the cache anti-join
-    * ([[embedMaintenanceBatch]]), and the chunks commit as the next
-    * version of the BM25 store ([[maintainIndexBatch]]).
+    * the reference's `database → embed → bm25` verb sequence, and the
+    * `maintain` verb: each micro-batch of landed files is deduplicated
+    * against the lake ([[dedupSurvivors]]), the survivors chunk exactly
+    * like the batch path, new content keys embed through the cache
+    * anti-join ([[embedMaintenanceBatch]]), and the chunks commit as the
+    * next version of the BM25 store ([[maintainIndexBatch]]).
     *
     * Commit order: embeddings, then the BM25 version (its manifest create
     * commits it), then the lake append — the batch's commit point. Every
@@ -336,7 +234,7 @@ object StreamingIngest {
     // FIRST would make the retry's survivors come back empty and the
     // documents would be permanently missing from the embeddings table and
     // the BM25 store.
-    val (survivors, lakeCols) = dedupSurvivors(spark, gated, dir)
+    val survivors = dedupSurvivors(spark, gated, dir)
     if (survivors.head(1).isEmpty) return
     val chunks = survivors
       .select(col("doc_id").as("sourcedoc"),
@@ -347,34 +245,18 @@ object StreamingIngest {
       .localCheckpoint(true)
     embedMaintenanceBatch(spark, chunks, dir, provider)
     maintainIndexBatch(spark, chunks, dir)
-    appendToLake(survivors, dir, batchId, lakeCols)
+    appendToLake(survivors, dir, batchId)
   }
 
-  /** Streaming cache-aware embedding maintenance — the third leg of the
-    * incremental lifecycle (ingest → dedup → EMBED → index): each
-    * micro-batch of landed files chunks like [[chunkStream]], embeds ONLY
-    * content keys absent from the accumulated cache table
-    * ([[graft.embed.Embedder.embedWithCache]] — the M5 anti-join, so a
-    * re-ingested or duplicated chunk never burns a provider call), appends
-    * the new cache rows, and appends the per-chunk embedding rows.
-    * Replay-idempotent the same way [[startDedupIngest]] is: a replayed
-    * batch's chunk ids are already in the embeddings table and drop on the
-    * id anti-join.
+  /** The embed step of [[kbMaintenanceBatch]] — cache-aware embedding
+    * maintenance (ingest → dedup → EMBED → index): the batch's chunks
+    * (`sourcedoc`, `sid`, `embedtext`) embed ONLY content keys absent from
+    * the accumulated cache table ([[graft.embed.Embedder.embedWithCache]]
+    * — the M5 anti-join, so a re-ingested or duplicated chunk never burns a
+    * provider call); the new cache rows and the per-chunk embedding rows
+    * append. Replay-idempotent: a replayed batch's chunk ids are already in
+    * the embeddings table and drop on the id anti-join.
     */
-  def startEmbedMaintenance(spark: SparkSession, glob: String, dir: String,
-                            provider: graft.embed.Embedder.Provider,
-                            trigger: org.apache.spark.sql.streaming.Trigger =
-                              org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    chunkStream(spark, glob).writeStream
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        embedMaintenanceBatch(spark, batch, dir, provider)
-      }
-      .trigger(trigger)
-      .start()
-
-  /** The per-micro-batch step of [[startEmbedMaintenance]], spec-drivable. */
   private[graft] def embedMaintenanceBatch(spark: SparkSession, batch: DataFrame,
                                            dir: String,
                                            provider: graft.embed.Embedder.Provider): Unit = {

@@ -264,6 +264,34 @@ class MainSpec extends SparkSpec {
     }
   }
 
+  test("CLI query verb refuses a BM25 store written before manifests") {
+    val in = Files.createTempDirectory("graft_premanifest_in").toString
+    Files.write(Paths.get(in, "a.txt"),
+      ("spark joins and filters " + (1 to 150).map(i => s"w$i").mkString(" "))
+        .getBytes(StandardCharsets.UTF_8))
+    Seq(Files.createTempDirectory("graft_premanifest_kb").toString,
+        NoJavaIoFileSystem.tempDir(spark, "graft_premanifest_noio_kb")).foreach { kb =>
+      Main.run(Array("database", kb, s"$in/*.txt"), spark)
+      Main.run(Array("embed", kb), spark)
+      val old = operators.Bm25.buildIndex(spark.read.parquet(s"$kb/chunks")
+        .select("doc_id", "chunk_text"), "doc_id", "chunk_text")
+      def refused(root: String): Unit = {
+        val e = intercept[IllegalStateException](Console.withOut(
+          new java.io.ByteArrayOutputStream())(
+          Main.run(Array("query", kb, "spark joins", "--context-only"), spark)))
+        assert(e.getMessage == operators.Bm25.preManifestRefusal(root), kb)
+      }
+      // a batch-built store with its tables directly under kb/bm25
+      operators.Bm25Spec.writePreManifest(old, s"$kb/bm25", pointer = false)
+      refused(s"$kb/bm25")
+      // a maintained kb whose root holds the pointer file and its store
+      val bm25 = new org.apache.hadoop.fs.Path(s"$kb/bm25")
+      sources.KbStorage.fileSystem(spark, bm25).delete(bm25, true)
+      operators.Bm25Spec.writePreManifest(old, kb, pointer = true)
+      refused(kb)
+    }
+  }
+
   test("M6: stale vector_dimensions config is auto-synced from stored embeddings") {
     val in = Files.createTempDirectory("graft_dims_in").toString
     val kb = Files.createTempDirectory("graft_dims_kb").toString

@@ -121,41 +121,6 @@ class Bm25Spec extends SparkSpec {
     assert(merged.stats.select("n").head().getLong(0) == corpus.size.toLong)
   }
 
-  test("mergeIndex accepts a legacy index whose stats lack the n column") {
-    val oldDocs = corpus.take(3).toDF("doc_id", "text")
-    val newDocs = corpus.drop(3).toDF("doc_id", "text")
-    val built = Bm25.buildIndex(oldDocs, "doc_id", "text")
-    val legacy = built.copy(stats = built.stats.drop("n"))
-    val merged = Bm25.mergeIndex(legacy, newDocs, "doc_id", "text")
-    val rebuilt = Bm25.buildIndex(corpus.toDF("doc_id", "text"), "doc_id", "text")
-    assert(merged.stats.select("n").head().getLong(0) == corpus.size.toLong)
-    val m = Bm25.scoreWithIndex(merged, spark, "quick fox dog")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val r = Bm25.scoreWithIndex(rebuilt, spark, "quick fox dog")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(m.keySet == r.keySet)
-    m.foreach { case (d, s) => assert(math.abs(s - r(d)) < 1e-12, s"doc $d") }
-  }
-
-  test("removeDocs(ids) scores identically to a rebuild over the surviving corpus") {
-    val allDocs = corpus.toDF("doc_id", "text")
-    val removed = Seq(corpus.head._1, corpus.last._1)
-    val shrunk = Bm25.removeDocs(
-      Bm25.buildIndex(allDocs, "doc_id", "text"),
-      removed.toDF("doc_id"), "doc_id")
-    val rebuilt = Bm25.buildIndex(
-      corpus.filterNot(d => removed.contains(d._1)).toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(shrunk.stats.select("n").head().getLong(0) ==
-      (corpus.size - removed.size).toLong)
-    def scores(ix: Bm25.Index): Map[Long, Double] =
-      Bm25.scoreWithIndex(ix, spark, "quick fox dog")
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val m = scores(shrunk); val r = scores(rebuilt)
-    assert(m.keySet == r.keySet && !m.keySet.exists(removed.contains))
-    m.foreach { case (d, s) => assert(math.abs(s - r(d)) < 1e-12, s"doc $d") }
-  }
-
   test("topK returns k best with deterministic tie-break") {
     val docs = corpus.toDF("doc_id", "text")
     val top2 = Bm25.topK(Bm25.scoreQuery(docs, "doc_id", "text", "quick fox"), 2)
@@ -214,13 +179,6 @@ class Bm25Spec extends SparkSpec {
     val ipMap = inProc.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ipMap.keySet == gotMap.keySet)
     ipMap.foreach { case (id, s) => assert(math.abs(s - gotMap(id)) < 1e-9) }
-    // pre-manifest flat-layout stores keep reading and never prune
-    val flatDir = java.nio.file.Files.createTempDirectory("graft_bm25_flat").toString
-    LegacyBm25Store.write(mem, flatDir, termBuckets = 0)
-    val flat = Bm25.readIndex(spark, flatDir)
-    assert(flat.termBuckets.isEmpty)
-    assert(Bm25.scoreWithIndex(flat, spark, q)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap.keySet == memMap.keySet)
   }
 
   test("mergeIndex accepts a bucketed STORED index and equals the full rebuild") {
@@ -372,25 +330,30 @@ class Bm25Spec extends SparkSpec {
     assert(!new java.io.File(s"$dir/v2").exists())
   }
 
-  test("appendIndexStore accepts a legacy store whose stats lack sum_dl") {
+  test("a store written before manifests is refused with the rebuild instruction") {
     val docs = corpus.toDF("doc_id", "text")
-    val base = docs.filter(col("doc_id") <= 2)
+    val base = Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text")
     val delta = docs.filter(col("doc_id") > 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_leg").toString
-    // a pre-manifest store whose stats lack sum_dl, the way a pre-r15
-    // store looks — the append must fall back to the slim lengths scan
-    val built = Bm25.buildIndex(base, "doc_id", "text")
-    LegacyBm25Store.write(built.copy(stats = built.stats.drop("sum_dl")), dir, termBuckets = 4)
-    Bm25.appendIndexStore(spark, dir, delta, "doc_id", "text")
-    val appended = Bm25.readIndex(spark, dir)
-    val rebuilt = Bm25.buildIndex(docs, "doc_id", "text")
-    assert(appended.avgdl == rebuilt.stats.select("avgdl").head().getDouble(0))
-    assert(appended.stats.select("n").head().getLong(0) == docs.count())
-    // and the upgraded stats now carry sum_dl for the NEXT append
-    assert(appended.stats.columns.contains("sum_dl"))
-    // the commit merged the pre-manifest store into its one segment
-    assert(Bm25.Version.latest(spark, dir).map(_.segments).contains(Seq("v1")))
-    assert(appended.termBuckets.contains(4))
+    for (local <- Seq(true, false); pointer <- Seq(false, true)) {
+      val root =
+        if (local) java.nio.file.Files.createTempDirectory("graft_bm25_pre").toString
+        else graft.NoJavaIoFileSystem.tempDir(spark, "graft_bm25_pre_noio")
+      Bm25Spec.writePreManifest(base, root, pointer)
+      val what = s"local=$local pointer=$pointer"
+      def refused(dir: String)(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage == Bm25.preManifestRefusal(dir), what)
+      }
+      refused(root)(Bm25.readIndex(spark, root))
+      if (pointer) refused(s"$root/v3")(Bm25.readIndex(spark, s"$root/v3"))
+      refused(root)(Bm25.Version.currentPath(spark, root))
+      refused(root)(Bm25.appendIndexStore(spark, root, delta, "doc_id", "text"))
+      // refused before any write: no manifest and no new version directory
+      val fs = graft.sources.KbStorage.fileSystem(spark, new org.apache.hadoop.fs.Path(root))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_manifest")), what)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(root)).map(_.getPath.getName)
+        .filter(_.matches("v\\d+")).toSet == (if (pointer) Set("v3") else Set.empty), what)
+    }
   }
 
   test("topKBatchInProcess == the distributed rounded-rank window, ties included") {
@@ -583,6 +546,24 @@ class Bm25Spec extends SparkSpec {
       assert(sizes == (2 to Bm25.MaxSegments) ++ Seq(1, 2, 3), sizes)
       Bm25.writeIndex(Bm25.buildIndex(docs, "doc_id", "text"), ref, termBuckets = buckets)
       assertSameIndex(Bm25.readIndex(spark, dir), Bm25.readIndex(spark, ref))
+    }
+  }
+}
+
+object Bm25Spec {
+  /** Writes `ix` in a layout used before manifests, through the Hadoop
+    * FileSystem API: its four tables directly under `root`, or (`pointer`)
+    * a full store under `root/v3` plus the `CURRENT` file that named it.
+    */
+  def writePreManifest(ix: Bm25.Index, root: String, pointer: Boolean): Unit = {
+    val dir = if (pointer) s"$root/v3" else root
+    Seq("postings" -> ix.postings, "lengths" -> ix.lengths, "idf" -> ix.idf,
+        "stats" -> ix.stats)
+      .foreach { case (t, df) => df.write.mode("overwrite").parquet(s"$dir/$t") }
+    if (pointer) {
+      val p = new org.apache.hadoop.fs.Path(s"$root/CURRENT")
+      val out = graft.sources.KbStorage.fileSystem(ix.postings.sparkSession, p).create(p, true)
+      try out.write("v3".getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
     }
   }
 }

@@ -8,31 +8,17 @@ import java.nio.charset.StandardCharsets
 class StreamingIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  test("incremental file ingest: exactly-once across restarts (checkpointed)") {
-    val in = Files.createTempDirectory("graft_stream_in").toString
-    val out = Files.createTempDirectory("graft_stream_out").toString
-    Files.write(Paths.get(in, "a.txt"),
-      (1 to 60).map(i => s"alpha$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
-
-    StreamingIngest.startIngest(spark, s"$in/*.txt", out).awaitTermination()
-    val first = spark.read.parquet(s"$out/chunks")
-    val n1 = first.count()
-    assert(n1 > 0)
-    assert(first.columns.toSet == Set("sourcedoc", "sid", "chunk_text", "embedtext", "bm25_tokens"))
-
-    // second file lands; restart processes ONLY the new file
-    Files.write(Paths.get(in, "b.txt"),
-      (1 to 60).map(i => s"beta$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startIngest(spark, s"$in/*.txt", out).awaitTermination()
-    val all = spark.read.parquet(s"$out/chunks")
-    assert(all.filter(col("sourcedoc").endsWith("a.txt")).count() == n1,
-      "file a must not be re-ingested on restart")
-    assert(all.filter(col("sourcedoc").endsWith("b.txt")).count() > 0)
-
-    // third restart with nothing new: no duplicates
-    StreamingIngest.startIngest(spark, s"$in/*.txt", out).awaitTermination()
-    assert(spark.read.parquet(s"$out/chunks").count() == all.count())
-  }
+  /** The chunk rows the maintenance steps take — `sourcedoc`, `sid`,
+    * `chunk_text` and `embedtext` — of the text files under `glob`, chunked
+    * as [[StreamingIngest.kbMaintenanceBatch]] chunks its survivors.
+    */
+  private def chunkFrame(glob: String): org.apache.spark.sql.DataFrame =
+    spark.read.option("wholetext", "true").text(glob)
+      .select(input_file_name().as("sourcedoc"),
+        explode(graft.ingest.Chunker.chunks(col("value"), 200, 50)).as("c"))
+      .select(col("sourcedoc"), col("c.sid").as("sid"),
+        col("c.chunk_text").as("chunk_text"))
+      .withColumn("embedtext", graft.functions.TextFunctions.cleanText(col("chunk_text")))
 
   test("windowed event counts: batch semantics (sliding windows, correct counts)") {
     val events = Seq(
@@ -159,16 +145,16 @@ class StreamingIngestSpec extends SparkSpec {
     Files.write(Paths.get(in, "a.txt"),
       (1 to 60).map(i => s"alpha$i common").mkString(" ").getBytes(StandardCharsets.UTF_8))
 
-    StreamingIngest.startIndexMaintenance(spark, s"$in/*.txt", ixd).awaitTermination()
+    StreamingIngest.maintainIndexBatch(spark, chunkFrame(s"$in/a.txt"), ixd)
     val v1 = StreamingIngest.currentIndexPath(ixd).get
     val ix1 = Bm25.readIndex(spark, v1)
     val n1 = ix1.lengths.count()
     assert(n1 > 0)
 
-    // second wave: restart merges ONLY the new file's chunks
+    // second wave: commits ONLY the new file's chunks
     Files.write(Paths.get(in, "b.txt"),
       (1 to 60).map(i => s"beta$i common").mkString(" ").getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startIndexMaintenance(spark, s"$in/*.txt", ixd).awaitTermination()
+    StreamingIngest.maintainIndexBatch(spark, chunkFrame(s"$in/b.txt"), ixd)
     val v2 = StreamingIngest.currentIndexPath(ixd).get
     assert(v2 != v1, "pointer must advance on a merging batch")
     val ix2 = Bm25.readIndex(spark, v2)
@@ -242,32 +228,57 @@ class StreamingIngestSpec extends SparkSpec {
       Set(s"v${1 + extra.size}", s"v${2 + extra.size}"))
   }
 
-  test("a pre-manifest maintained store reads as one segment the next commit extends") {
+  test("maintenance refuses a BM25 store written before manifests, before any write") {
     import graft.operators.Bm25
-    val kb = Files.createTempDirectory("graft_stream_legacy").toString
-    def chunk(f: String, w: String) =
-      (f, 0, (1 to 40).map(i => s"$w$i shared").mkString(" "))
-    val old = Seq(chunk("a.txt", "alpha"), chunk("b.txt", "beta"))
-    val docs = (rows: Seq[(String, Int, String)]) => rows.toDF("sourcedoc", "sid", "text")
-      .select(concat(col("sourcedoc"), lit("#"), col("sid")).as("doc_id"), col("text"))
-    // the layout maintain wrote before manifests: a full store + CURRENT
-    graft.operators.LegacyBm25Store.write(Bm25.buildIndex(docs(old), "doc_id", "text"), s"$kb/v3")
-    Files.write(Paths.get(kb, "CURRENT"), "v3".getBytes(StandardCharsets.UTF_8))
-    assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v3"))
-    val fresh = Seq(chunk("c.txt", "gamma"))
-    val v = StreamingIngest.maintainIndexBatch(spark,
-      (old ++ fresh).toDF("sourcedoc", "sid", "chunk_text"), kb).get
-    // the commit merges the pre-manifest store into its own segment
-    assert(v.number == 4L && v.segments == Seq("v4"))
-    assert(StreamingIngest.currentIndexPath(kb).contains(s"$kb/v4"))
-    val got = Bm25.readIndex(spark, s"$kb/v4")
-    val exp = Bm25.buildIndex(docs(old ++ fresh), "doc_id", "text")
-    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
-      df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
-    assert(rows(got.postings, "doc_id", "term", "tf", "doc_len") ==
-      rows(exp.postings, "doc_id", "term", "tf", "doc_len"))
-    assert(rows(got.idf, "term", "df", "idf") == rows(exp.idf, "term", "df", "idf"))
-    assert(got.nDocs == 3L && got.avgdl == exp.avgdl)
+    val chunks = Seq(("a.txt", 0, (1 to 40).map(i => s"alpha$i shared").mkString(" ")))
+      .toDF("sourcedoc", "sid", "chunk_text")
+    val old = Bm25.buildIndex(Seq(("z.txt#0", "zeta omega")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    for (local <- Seq(true, false); pointer <- Seq(false, true)) {
+      val kb =
+        if (local) Files.createTempDirectory("graft_stream_pre").toString
+        else graft.NoJavaIoFileSystem.tempDir(spark, "graft_stream_pre_noio")
+      graft.operators.Bm25Spec.writePreManifest(old, kb, pointer)
+      val what = s"local=$local pointer=$pointer"
+      def refused(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage == Bm25.preManifestRefusal(kb), what)
+      }
+      refused(StreamingIngest.currentIndexPath(kb))
+      refused(StreamingIngest.maintainIndexBatch(spark, chunks, kb))
+      // nothing written: no manifest and no new version directory
+      val fs = graft.sources.KbStorage.fileSystem(spark, new org.apache.hadoop.fs.Path(kb))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$kb/_manifest")), what)
+      assert(fs.listStatus(new org.apache.hadoop.fs.Path(kb)).map(_.getPath.getName)
+        .filter(_.matches("v\\d+")).toSet == (if (pointer) Set("v3") else Set.empty), what)
+    }
+  }
+
+  test("maintenance refuses a lake written without fp or created_at") {
+    val provider = graft.embed.Embedder.Deterministic(8)
+    val batch = Seq(("n.txt", "a new document about spark")).toDF("doc_id", "text")
+    val lakeRows = Seq(("a.txt", "alpha beta gamma delta")).toDF("doc_id", "text")
+    val shapes = Seq(
+      "fp" -> lakeRows.withColumn("created_at", lit(0L)).withColumn("updated_at", lit(0L)),
+      "created_at" -> lakeRows.withColumn("fp",
+        graft.functions.TextFunctions.fingerprint(col("text"))))
+    for (local <- Seq(true, false); (missing, lake) <- shapes) {
+      val kb =
+        if (local) Files.createTempDirectory("graft_stream_prelake").toString
+        else graft.NoJavaIoFileSystem.tempDir(spark, "graft_stream_prelake_noio")
+      lake.write.parquet(s"$kb/lake")
+      val what = s"local=$local missing=$missing"
+      def refused(f: => Any): Unit = {
+        val e = intercept[IllegalStateException](f)
+        assert(e.getMessage == StreamingIngest.lakeRefusal(s"$kb/lake", missing), what)
+      }
+      refused(StreamingIngest.kbMaintenanceBatch(spark, batch, kb, provider, batchId = 1L))
+      refused(StreamingIngest.lakeCurrent(spark, kb))
+      // refused at the dedup step: no other artifact was written
+      Seq("embeddings", "embcache", "_manifest").foreach(d =>
+        assert(!graft.sources.KbStorage.pathExists(spark, s"$kb/$d"), s"$what: $d"))
+      assert(spark.read.parquet(s"$kb/lake").count() == 1, what)
+    }
   }
 
   test("maintenance commits on a filesystem with no java.io view") {
@@ -321,32 +332,28 @@ class StreamingIngestSpec extends SparkSpec {
   }
 
   test("streaming dedup-at-ingest: in-batch + vs-lake dedup, replay appends nothing") {
-    val in = Files.createTempDirectory("graft_stream_dd_in").toString
     val dd = Files.createTempDirectory("graft_stream_dd").toString
-    // wave 1: two identical files (in-batch dup) + one distinct
-    Files.write(Paths.get(in, "a.txt"), "the quick brown fox".getBytes(StandardCharsets.UTF_8))
-    Files.write(Paths.get(in, "b.txt"), "the quick brown fox".getBytes(StandardCharsets.UTF_8))
-    Files.write(Paths.get(in, "c.txt"), "a completely different document".getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startDedupIngest(spark, s"$in/*.txt", dd).awaitTermination()
+    val provider = graft.embed.Embedder.Deterministic(8)
+    // wave 1: two identical docs (in-batch dup) + one distinct
+    val w1 = Seq(("a.txt", "the quick brown fox"), ("b.txt", "the quick brown fox"),
+      ("c.txt", "a completely different document")).toDF("doc_id", "text")
+    StreamingIngest.kbMaintenanceBatch(spark, w1, dd, provider, batchId = 0L)
     val lake1 = spark.read.parquet(s"$dd/lake")
     assert(lake1.count() == 2, "in-batch duplicate collapses to its canonical member")
     assert(lake1.filter(col("doc_id").endsWith("a.txt")).count() == 1,
       "canonical = lexicographically smallest id")
 
     // wave 2: one lake-duplicate + one new doc -> only the new doc appends
-    Files.write(Paths.get(in, "d.txt"), "the quick brown fox".getBytes(StandardCharsets.UTF_8))
-    Files.write(Paths.get(in, "e.txt"), "fresh never seen content".getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startDedupIngest(spark, s"$in/*.txt", dd).awaitTermination()
+    val w2 = Seq(("d.txt", "the quick brown fox"), ("e.txt", "fresh never seen content"))
+      .toDF("doc_id", "text")
+    StreamingIngest.kbMaintenanceBatch(spark, w2, dd, provider, batchId = 1L)
     val lake2 = spark.read.parquet(s"$dd/lake")
     assert(lake2.count() == 3, s"only the new doc appends: ${lake2.collect().mkString}")
     assert(lake2.filter(col("doc_id").endsWith("e.txt")).count() == 1)
     assert(lake2.filter(col("doc_id").endsWith("d.txt")).count() == 0)
 
-    // replay: re-driving wave-2 docs directly appends nothing
-    import spark.implicits._
-    val replay = Seq(("file:" + in + "/d.txt", "the quick brown fox"),
-      ("file:" + in + "/e.txt", "fresh never seen content")).toDF("doc_id", "text")
-    StreamingIngest.dedupIngestBatch(spark, replay, dd)
+    // replay: re-driving the wave-2 docs appends nothing
+    StreamingIngest.kbMaintenanceBatch(spark, w2, dd, provider, batchId = 2L)
     assert(spark.read.parquet(s"$dd/lake").count() == 3, "full replay appends nothing")
   }
 
@@ -370,8 +377,7 @@ class StreamingIngestSpec extends SparkSpec {
       (1 to 60).map(i => s"alpha$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
     Files.write(Paths.get(in, "b.txt"),
       (1 to 60).map(i => s"alpha$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startEmbedMaintenance(spark, s"$in/*.txt", em, provider)
-      .awaitTermination()
+    StreamingIngest.embedMaintenanceBatch(spark, chunkFrame(s"$in/*.txt"), em, provider)
     val vecs1 = spark.read.parquet(s"$em/embeddings")
     val nChunksPerFile = vecs1.filter(col("chunk_id").contains("a.txt")).count()
     assert(vecs1.count() == 2 * nChunksPerFile, "every chunk row embedded")
@@ -383,21 +389,12 @@ class StreamingIngestSpec extends SparkSpec {
     // chunk rows still append (cache hits)
     Files.write(Paths.get(in, "c.txt"),
       (1 to 60).map(i => s"alpha$i").mkString(" ").getBytes(StandardCharsets.UTF_8))
-    StreamingIngest.startEmbedMaintenance(spark, s"$in/*.txt", em, provider)
-      .awaitTermination()
+    StreamingIngest.embedMaintenanceBatch(spark, chunkFrame(s"$in/c.txt"), em, provider)
     assert(calls.get() == callsWave1, "cache must serve the duplicate content")
     assert(spark.read.parquet(s"$em/embeddings").count() == 3 * nChunksPerFile)
 
     // direct replay of wave-2 chunks: id anti-join drops everything
-    val replay = StreamingIngest.chunkStream(spark, s"$in/*.txt") // streaming frame unused
-    val files = spark.read.option("wholetext", "true").text(s"$in/c.txt")
-      .select(input_file_name().as("sourcedoc"), col("value").as("text"))
-    val rb = files.select(col("sourcedoc"),
-        explode(graft.ingest.Chunker.chunks(col("text"), 200, 50)).as("c"))
-      .select(col("sourcedoc"), col("c.sid").as("sid"),
-        col("c.chunk_text").as("chunk_text"))
-      .withColumn("embedtext", graft.functions.TextFunctions.cleanText(col("chunk_text")))
-    StreamingIngest.embedMaintenanceBatch(spark, rb, em, provider)
+    StreamingIngest.embedMaintenanceBatch(spark, chunkFrame(s"$in/c.txt"), em, provider)
     assert(spark.read.parquet(s"$em/embeddings").count() == 3 * nChunksPerFile,
       "replay appends nothing")
     assert(calls.get() == callsWave1)
@@ -461,7 +458,8 @@ class StreamingIngestSpec extends SparkSpec {
     import spark.implicits._
     val kb = Files.createTempDirectory("graft_stream_lakefp").toString
     val b1 = Seq(("a.txt", "alpha beta gamma delta")).toDF("doc_id", "text")
-    StreamingIngest.dedupIngestBatch(spark, b1, kb)
+    StreamingIngest.kbMaintenanceBatch(spark, b1, kb,
+      graft.embed.Embedder.Deterministic(8), batchId = 0L)
     val lake = spark.read.parquet(s"$kb/lake")
     // fp is stored at append time and equals the recomputed fingerprint
     assert(lake.columns.contains("fp"))
@@ -473,13 +471,12 @@ class StreamingIngestSpec extends SparkSpec {
     // later batch recomputed fingerprints from lake TEXT it would still
     // drop the duplicate — probing the STORED column must let it through,
     // proving the at-rest fp (the 8-byte pruned scan) is authoritative.
-    val doctored = lake.select(col("doc_id"), col("text"),
-      (col("fp") + 1L).as("fp"))
+    val doctored = lake.withColumn("fp", col("fp") + 1L)
     doctored.write.mode("overwrite").parquet(s"$kb/lake2")
     spark.read.parquet(s"$kb/lake2").write.mode("overwrite").parquet(s"$kb/lake")
     spark.catalog.refreshByPath(s"$kb/lake")
     val b2 = Seq(("b.txt", "alpha beta gamma delta")).toDF("doc_id", "text")
-    val (survivors, _) = StreamingIngest.dedupSurvivors(spark, b2, kb)
+    val survivors = StreamingIngest.dedupSurvivors(spark, b2, kb)
     assert(survivors.count() == 1,
       "a doctored stored fp must change the dedup decision — the stored column is the identity")
   }
@@ -502,7 +499,7 @@ class StreamingIngestSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // crashed attempt: all pre-commit stages, NO lake append
     locally {
-      val (survivors, _) = StreamingIngest.dedupSurvivors(spark, batch, kb)
+      val survivors = StreamingIngest.dedupSurvivors(spark, batch, kb)
       val chunks = survivors
         .select(col("doc_id").as("sourcedoc"),
           explode(graft.ingest.Chunker.chunks(col("text"), 200, 50)).as("c"))
