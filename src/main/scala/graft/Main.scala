@@ -577,7 +577,7 @@ object Main {
         val bm25 = Seq(s"$kb/bm25", kb).view
           .flatMap(graft.operators.Bm25.Version.latest(spark, _)).headOption
         bm25.foreach(v => println(
-          s"[graft] verify-indexes: bm25 version ${v.number} at ${v.root}"))
+          s"[graft] verify-indexes: bm25 version ${v.number} at ${v.manifest.root}"))
         val all = pathFindings ++ // layout findings need catalog tables
           Option.when(bm25.isEmpty)(s"bm25 store missing: no committed version under $kb/bm25 or $kb")
         if (all.isEmpty) println("[graft] verify-indexes: healthy")

@@ -1,10 +1,11 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.graftshim.GraftShims
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.storage.StorageLevel
 import graft.functions.TextFunctions
@@ -223,7 +224,7 @@ object Bm25 {
     * `dir` — one segment holding every posting (bucketed into
     * `termBuckets` term buckets) and length, plus the idf and the stats.
     * The version replaces what the store served before; the commit keeps
-    * the previous version and collects older ones ([[Version.collect]]).
+    * the previous version and collects older ones ([[graft.store.Versioned]]).
     */
   def writeIndex(ix: Index, dir: String,
                  termBuckets: Int = DefaultTermBuckets): Unit = {
@@ -234,7 +235,7 @@ object Bm25 {
     val alreadyPersisted = ix.postings.storageLevel != StorageLevel.NONE
     val post = if (alreadyPersisted) ix.postings
       else ix.postings.persist(StorageLevel.MEMORY_AND_DISK)
-    try commit(spark, dir, Version.latest(spark, dir), Nil, post, ix.lengths, ix.idf,
+    try commit(spark, dir, Nil, post, ix.lengths, ix.idf,
       totalsOf(ix).copy(termBuckets = termBuckets))
     finally if (!alreadyPersisted) post.unpersist()
   }
@@ -348,10 +349,7 @@ object Bm25 {
       "version no longer reads: delete the directory and rebuild it with " +
       "`bm25 <kbDir>`, or re-run `maintain` into an empty kb"
 
-  /** Segments a [[Version]] lists at most: a commit that would list more
-    * writes one merged segment instead.
-    */
-  private[graft] val MaxSegments = 8
+  private[graft] val MaxSegments = graft.store.Versioned.MaxSegments
 
   private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT, idf DOUBLE")
   private val PostingsCols = Seq("doc_id", "term", "tf", "doc_len")
@@ -361,181 +359,71 @@ object Bm25 {
   private def segmentSchema(post: DataFrame): StructType =
     nullable(post.select(PostingsCols.map(col): _*).schema.add("term_bucket", IntegerType))
 
-  /** One committed version of a BM25 store rooted at `root` — the only
-    * at-rest format. Commit N writes `root/v<N>/`: one immutable segment
-    * (`postings`, flat files that carry `term_bucket` as a column, sorted
-    * by bucket and term, and `lengths`) plus the version's vocab-sized
-    * `idf` and one-row `stats`. It then creates `root/_manifest/v<N>` with
-    * overwrite = false — the commit point, through the Hadoop FileSystem
-    * API only, with no rename. The manifest names the live segments, their
-    * schemas and the [[Totals]], so a reader opens one flat directory per
-    * segment and table with no schema inference: Spark's driver lists them
-    * itself, and opening a version runs no Spark job. A version never
-    * changes once committed. A manifest without its closing `end` line is
-    * a crashed commit and reads as absent. A commit keeps its own version
-    * and the one before it, and deletes the rest ([[Version.collect]]).
-    *
-    * A store written before manifests — a pointer file naming a full store
-    * `v<K>`, or the tables directly under the root — is not read: the
-    * readers and [[commitVersion]] refuse it with [[preManifestRefusal]].
+  /** A committed version of a BM25 store ([[graft.store.Versioned]]):
+    * `v<N>/` holds a segment (`postings` sorted by bucket and term,
+    * `lengths`), the `idf` and the one-row `stats`; the manifest names the
+    * segments, their schemas and the [[Totals]], so opening a version runs
+    * no Spark job. Older layouts are refused ([[preManifestRefusal]]).
     */
-  private[graft] final case class Version(root: String, number: Long,
-                                          totals: Totals,
-                                          postingsSchema: StructType,
-                                          lengthsSchema: StructType,
-                                          segments: Seq[String]) {
-    def path: String = s"$root/v$number"
-    /** The memo key: the manifest path, so a commit evicts every version
-      * of its store with one [[SessionMemo.forget]] of `root/_manifest`.
-      */
-    def key: String = s"stored:$root/_manifest/v$number"
+  private[graft] final case class Version(manifest: graft.store.Versioned.Manifest) {
+    def number: Long = manifest.number
+    def segments: Seq[String] = manifest.segments
+    def path: String = manifest.path
+    /** The memo key: the manifest's, so a commit evicts the index. */
+    def key: String = s"stored:${manifest.key}"
+    val totals: Totals = manifest("totals").split(' ').map(_.toLong) match {
+      case Array(n, sumDl, nLen, buckets) => Totals(n, sumDl, nLen, buckets.toInt) }
+    private def schema(k: String) = DataType.fromJson(manifest(k)).asInstanceOf[StructType]
+    val postingsSchema: StructType = schema("postings_schema")
+    val lengthsSchema: StructType = schema("lengths_schema")
 
     private def table(spark: SparkSession, t: String, schema: StructType): DataFrame =
-      segments.map(seg => spark.read.schema(schema).parquet(s"$root/$seg/$t"))
+      manifest.segmentPaths.map(seg => spark.read.schema(schema).parquet(s"$seg/$t"))
         .reduce(_ unionByName _)
     def index(spark: SparkSession): Index =
       Index(table(spark, "postings", postingsSchema), table(spark, "lengths", lengthsSchema),
         spark.read.schema(IdfSchema).parquet(s"$path/idf"), totals.toDF(spark),
         cacheKey = Some(key))
-
-    private[Bm25] def render: String =
-      (Seq(s"version $number",
-        s"totals ${totals.n} ${totals.sumDl} ${totals.nLen} ${totals.termBuckets}",
-        s"postings_schema ${postingsSchema.json}",
-        s"lengths_schema ${lengthsSchema.json}") ++
-        segments.map(seg => s"segment $seg") :+ "end").mkString("", "\n", "\n")
   }
 
-  private[graft] object Version {
-    import org.apache.hadoop.fs.{FileSystem, Path}
-    private val Name = "v(\\d+)".r
+  private[graft] object Version
+      extends graft.store.Versioned[Version](new Version(_), Seq("idf", "stats")) {
+    /** The manifest lines of a version of `totals` with these schemas. */
+    private[graft] def fields(totals: Totals, postings: StructType,
+                             lengths: StructType): Seq[(String, String)] =
+      Seq("totals" -> s"${totals.n} ${totals.sumDl} ${totals.nLen} ${totals.termBuckets}",
+        "postings_schema" -> postings.json, "lengths_schema" -> lengths.json)
 
-    private def fs(spark: SparkSession, root: String): FileSystem =
-      graft.sources.KbStorage.fileSystem(spark, new Path(root))
-
-    private def readText(spark: SparkSession, path: String): Option[String] =
-      try {
-        val in = fs(spark, path).open(new Path(path))
-        try Some(new String(in.readAllBytes(),
-          java.nio.charset.StandardCharsets.UTF_8)) finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-
-    private def numbers(spark: SparkSession, root: String): Seq[Long] =
-      try fs(spark, root).listStatus(new Path(s"$root/_manifest")).toSeq
-        .map(_.getPath.getName).collect { case Name(n) => n.toLong }
-      catch { case _: java.io.FileNotFoundException => Nil }
-
-    /** The committed version `dir` names: `<root>/v<N>` with a complete
-      * manifest `<root>/_manifest/v<N>`.
-      */
-    def at(spark: SparkSession, dir: String): Option[Version] = {
-      val (root, name) = dir.stripSuffix("/").splitAt(dir.stripSuffix("/").lastIndexOf('/'))
-      name.drop(1) match {
-        case Name(n) if root.nonEmpty => load(spark, root, n.toLong)
-        case _ => None
-      }
-    }
-
-    // a complete manifest never changes, so it is parsed once per session;
-    // an incomplete one is not memoized (a null build records nothing)
-    private val manifests = new SessionMemo[Version]
-    private def load(spark: SparkSession, root: String, n: Long): Option[Version] =
-      Option(manifests.getOrBuild(spark, s"manifest:$root/_manifest/v$n")(parse(spark, root, n).orNull))
-
-    private def parse(spark: SparkSession, root: String, n: Long): Option[Version] =
-      readText(spark, s"$root/_manifest/v$n").map(_.split("\n").toSeq)
-        .filter(_.lastOption.contains("end")).map { lines =>
-          val kv = lines.init.map(l => l.splitAt(l.indexOf(' '))).map {
-            case (k, v) => (k, v.drop(1)) }
-          def one(k: String) = kv.collectFirst { case (`k`, v) => v }.get
-          def schema(k: String) = org.apache.spark.sql.types.DataType
-            .fromJson(one(k)).asInstanceOf[StructType]
-          val Seq(docs, sumDl, nLen, buckets) = one("totals").split(' ').toSeq
-          Version(root, n, Totals(docs.toLong, sumDl.toLong, nLen.toLong, buckets.toInt),
-            schema("postings_schema"), schema("lengths_schema"),
-            kv.collect { case ("segment", seg) => seg })
-        }
-
-    /** The newest committed version of the store at `root`. */
-    def latest(spark: SparkSession, root: String): Option[Version] =
-      numbers(spark, root).sorted.reverseIterator
-        .flatMap(load(spark, root, _)).nextOption()
-
-    /** Refuse a `root` with no committed version that holds a store
-      * written before manifests: the pointer file that named its full
-      * store, or its tables directly under the root. Called only where no
+    /** Refuse a `root` that holds a store written before manifests (a
+      * `CURRENT` pointer, or tables at the root). Called only where no
       * complete manifest was found, so a committed store never pays it.
       */
     private[Bm25] def refusePreManifest(spark: SparkSession, root: String): Unit = {
-      val fs = this.fs(spark, root)
+      val fs = graft.sources.KbStorage.fileSystem(spark, new Path(root))
       if (Seq("CURRENT", "stats").exists(n => fs.exists(new Path(s"$root/$n"))))
         throw new IllegalStateException(preManifestRefusal(root))
     }
 
-    /** The directory [[readIndex]] serves for the store at `root`: its
-      * newest version, if it has one.
-      */
+    /** The directory [[readIndex]] serves for the store at `root`. */
     def currentPath(spark: SparkSession, root: String): Option[String] =
       latest(spark, root).map(_.path).orElse { refusePreManifest(spark, root); None }
-
-    /** The number the next commit takes: one past every manifest, complete
-      * or not.
-      */
-    private[Bm25] def next(spark: SparkSession, root: String): Long =
-      numbers(spark, root).maxOption.getOrElse(0L) + 1
-
-    /** Commit `v`, whose own segment is written: create its manifest,
-      * failing if that version exists.
-      */
-    private[Bm25] def create(spark: SparkSession, v: Version): Unit = {
-      val out = fs(spark, v.root).create(new Path(s"${v.root}/_manifest/v${v.number}"), false)
-      try out.write(v.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-
-    /** Retention: delete everything that neither `v` nor `prev`, the
-      * version it follows, references — older manifests, their `idf` and
-      * `stats`, merged-away segments and uncommitted `v<N>` directories
-      * below `v`. Directories above `v` belong to a commit in flight.
-      */
-    private[Bm25] def collect(spark: SparkSession, v: Version, prev: Version): Unit = {
-      val fs = this.fs(spark, v.root)
-      val kept = Set(v.number, prev.number)
-      val live = (v.segments ++ prev.segments).toSet
-      def rm(rel: String): Unit = { fs.delete(new Path(s"${v.root}/$rel"), true); () }
-      numbers(spark, v.root).filter(n => n < v.number && !kept(n)).foreach(n => rm(s"_manifest/v$n"))
-      fs.listStatus(new Path(v.root)).map(_.getPath.getName).foreach {
-        case name @ Name(n) if n.toLong < v.number && !kept(n.toLong) =>
-          if (live(name)) { rm(s"$name/idf"); rm(s"$name/stats") } else rm(name)
-        case _ => ()
-      }
-    }
   }
 
-  /** Write and commit the version of the store at `root` that follows
-    * `prev`: a new segment from `post` and `lens`, listed after the `kept`
-    * segments, with `idf` and `totals`. The manifest create is the commit
-    * point; the commit then collects what neither version references and
-    * evicts the store's versions from every session memo.
+  /** Commit a version of `root`: the `kept` segments, then a new one of
+    * `post` and `lens`, with `idf` and `totals`.
     */
-  private def commit(spark: SparkSession, root: String, prev: Option[Version],
-                     kept: Seq[String], post: DataFrame, lens: DataFrame,
-                     idf: DataFrame, totals: Totals): Version = {
-    val number = Version.next(spark, root)
-    val dir = s"$root/v$number"
-    val seg = post.select(PostingsCols.map(col): _*)
-    val segLens = lens.select("doc_id", "doc_len")
-    writePostings(seg, s"$dir/postings", totals.termBuckets)
-    segLens.write.mode("overwrite").parquet(s"$dir/lengths")
-    idf.select("term", "df", "idf").write.mode("overwrite").parquet(s"$dir/idf")
-    totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
-    val v = Version(root, number, totals, segmentSchema(seg), nullable(segLens.schema),
-      kept :+ s"v$number")
-    Version.create(spark, v)
-    prev.foreach(Version.collect(spark, v, _))
-    SessionMemo.forget(spark, s"$root/_manifest")
-    v
-  }
+  private def commit(spark: SparkSession, root: String, kept: Seq[String], post: DataFrame,
+                     lens: DataFrame, idf: DataFrame, totals: Totals): Version =
+    Version.commit(spark, root) { (number, _) =>
+      val dir = s"$root/v$number"
+      val seg = post.select(PostingsCols.map(col): _*)
+      val segLens = lens.select("doc_id", "doc_len")
+      writePostings(seg, s"$dir/postings", totals.termBuckets)
+      segLens.write.mode("overwrite").parquet(s"$dir/lengths")
+      idf.select("term", "df", "idf").write.mode("overwrite").parquet(s"$dir/idf")
+      totals.toDF(spark).coalesce(1).write.mode("overwrite").parquet(s"$dir/stats")
+      (Version.fields(totals, segmentSchema(seg), nullable(segLens.schema)), kept :+ s"v$number")
+    }
 
   /** Commit `docs` to the store at `root` as one new [[Version]]. The
     * batch's docs not yet in the store become one new segment, bucketed
@@ -549,11 +437,8 @@ object Bm25 {
     * [[MaxSegments]] segments, or extend segments of another schema,
     * instead rewrites the whole store as one merged segment. A root with
     * no committed version that holds a store written before manifests is
-    * refused ([[preManifestRefusal]]) before anything is written. The
-    * version number is the manifest's latest + 1. Every write
-    * lands in the new `v<N>` directory (a crashed attempt's leftovers there
-    * are overwritten), and the manifest create is the commit point.
-    * Returns None, and commits nothing, when every batch doc is already in
+    * refused ([[preManifestRefusal]]) before anything is written. Every
+    * write lands in the new `v<N>` directory ([[commit]]). Returns None, and commits nothing, when every batch doc is already in
     * the store.
     *
     * Contract: doc ids are unique within `docs` (maintain's chunk ids
@@ -603,7 +488,7 @@ object Bm25 {
     val (idf2, totals) = appendDelta(stored.map(_.idf),
       old.getOrElse(Totals(0L, 0L, 0L, 0)).copy(termBuckets = buckets), batchTotals,
       fresh.select(col("doc_id"), explode(array_distinct(tokens)).as("term")))
-    Some(commit(spark, root, prev,
+    Some(commit(spark, root,
       if (merge.isDefined) Nil else prev.fold(Seq.empty[String])(_.segments),
       segPostings, segLens, idf2, totals))
   }

@@ -1,10 +1,11 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.embed.Embedder
 import graft.operators.SessionMemo
+import graft.store.Versioned
 
 /** The reference's two QUERY-side caches, re-expressed as cache-table
   * JOINS (the other two of its four caches already serve this way:
@@ -72,76 +73,69 @@ object QueryCache {
     * cluster shares. The batched join form ([[Embedder.embedWithCache]])
     * covers bulk paths, and m16 proves hit ≡ recompute value-exactly.
     *
-    * Serving contract, per `(model, dims)` cache directory:
-    *  - resident hit: the directory's `content_key → vector` rows sit in a
-    *    [[graft.operators.SessionMemo]] entry keyed by the directory
-    *    (so `SessionMemo.forget(spark, dir)` evicts it), loaded by one
-    *    collect and stamped with the [[graft.operators.PathInventory]]
-    *    stamp read before that collect. A hit returns a copy from the map
-    *    with no listing and no job: a row's vector is a function of its
-    *    key, so a map that missed a rewrite still serves correct vectors
-    *    (a session keeps serving the keys it holds even after the
-    *    directory is deleted);
-    *  - miss reload: a key the map lacks stamps the directory, and a stamp
-    *    that differs from the map's (the first load, a foreign append, a
-    *    rewrite, a deleted directory) reloads the map before the key is
+    * Serving contract, per `(model, dims)` cache directory, a
+    * [[graft.store.Versioned]] store of `(content_key, embedding)` rows:
+    *  - resident hit: the newest version's rows, loaded by one collect
+    *    into a [[graft.operators.SessionMemo]] entry keyed by the directory
+    *    and marked with the version's number (0 = none), serve a copy with
+    *    no listing and no job: a vector is a function of its key, so a map
+    *    that missed a commit, or outlived its directory, is still correct;
+    *  - miss reload: a key the map lacks lists `_manifest`, and a newest
+    *    number that differs from the map's (the first load, a foreign
+    *    flush, a deleted directory) reloads the map before the key is
     *    looked up again;
     *  - at rest over the budget: a table over
     *    [[graft.operators.Resident.MaxFloats]] is served by one
-    *    pushdown-filtered read of the table per lookup (`content_key =
-    *    <literal>`). The cache only grows by appends, so a table once over
-    *    the budget stays at rest until `forget` evicts its entry;
+    *    pushdown-filtered read of the newest version per lookup. The cache
+    *    only grows, so it stays at rest until `forget` evicts its entry;
     *  - write-behind miss: a key still missing calls the provider once
     *    and adds the row to the map and to its pending rows, with no job.
-    *    When a directory holds 32 pending rows, the miss that adds the
-    *    32nd appends them all as one parquet file and re-stamps the map,
-    *    so the engine's own append never forces a reload. [[flush]]
-    *    writes a session's pending rows at any time; the `query` verb
-    *    calls it before it exits. A reload keeps the pending rows. A
-    *    table over the budget appends each miss's row at once instead;
+    *    The miss that makes 32 pending rows commits them all as one
+    *    segment `v<N>/`, listed after the previous version's segments (a
+    *    commit that would list more than [[graft.store.Versioned.MaxSegments]]
+    *    writes one merged segment instead), so the engine's own commit
+    *    never forces a reload. [[flush]] commits a session's pending rows
+    *    at any time; the `query` verb calls it before it exits. A reload
+    *    keeps the pending rows. A table over the budget commits each
+    *    miss's row at once. Commits to one directory from one JVM, from
+    *    any session, run one at a time;
     *  - lost rows: pending rows that never reach the table (a crash, a
-    *    failed flush, a `SessionMemo.forget` of the directory, a library
-    *    session that never calls [[flush]]) and a foreign row landing between a flush
-    *    and its re-stamp cost a recompute, and a duplicate row the cache
-    *    tolerates, never a wrong vector: a vector is a function of its
-    *    key.
+    *    failed flush, a `forget`, a session that never calls [[flush]])
+    *    cost a recompute, a duplicate row is tolerated, and a crashed
+    *    flush's segment is listed by no manifest, so no reader sees it.
     * A row whose embedding is null or of the wrong length (a corrupt or
     * hand-migrated cache) is never a hit on either path: the query
     * recomputes instead of serving a vector the cosine stage would
     * silently mis-score.
     */
-  def embedQueryCached(spark: org.apache.spark.sql.SparkSession,
-                       cacheDir: String, text: String,
+  def embedQueryCached(spark: SparkSession, cacheDir: String, text: String,
                        provider: Embedder.Provider): Array[Float] = {
     // the cache identity is (model, dims, content): vectors from different
     // embedding models live in different subdirectories, so an `edit` that
     // switches models (or a re-embed that changes vector_dimensions) can
     // never serve a stale vector of the wrong space. Model names sanitize
     // to a path token; the dims ride separately so a same-name dims change
-    // still separates. Pre-keying caches (rows at the cacheDir ROOT) are
-    // deliberately ORPHANED, not migrated: an unkeyed entry carries no
-    // record of which model produced it, so serving it would be exactly
-    // the stale-model bug the keying exists to prevent — those entries
-    // cost one re-embed each and the dead files are harmless.
+    // still separates. Older layouts (rows at the cacheDir ROOT, or files
+    // in a model directory with no manifest) are deliberately ORPHANED:
+    // an unkeyed entry does not record its model, so serving it is the
+    // stale-model bug keying prevents; each costs one re-embed.
     val dir = s"$cacheDir/${provider.model.replaceAll("[^A-Za-z0-9_.-]", "_")}" +
       s"_${provider.dims}"
     val key = contentKeyValue(text)
     val ref = residentRef(spark, dir)
     def lookup(r: Resident): Option[Array[Float]] =
       if (!r.overBudget) r.vecs.get(key).map(_.clone) // callers own it
-      else if (!graft.sources.KbStorage.pathExists(spark, dir)) None
-      else spark.read.parquet(dir)
-        .filter(col("content_key") === key &&
-          size(col("embedding")) === provider.dims)
+      else store.latest(spark, dir).flatMap(v => rows(spark, v)
+        .filter(col("content_key") === key && size(col("embedding")) === provider.dims)
         .select("embedding").take(1).headOption
-        .map(_.getSeq[Float](0).toArray)
+        .map(_.getSeq[Float](0).toArray))
     val hit = lookup(ref.get).orElse {
-      lazy val stamp = graft.operators.PathInventory.stamp(spark, dir)
-      if (ref.get.overBudget || stamp == ref.get.stamp) None
+      lazy val latest = store.latest(spark, dir)
+      if (ref.get.overBudget || latest.fold(0L)(_.number) == ref.get.stamp) None
       else {
         // the reload keeps this session's pending rows, resident and
         // pending; a table now over the budget gets them written at once
-        val loaded = loadResident(spark, dir, provider.dims, stamp)
+        val loaded = loadResident(spark, latest, provider.dims)
         val r = ref.updateAndGet(r =>
           if (loaded.overBudget) loaded.copy(pending = r.pending)
           else loaded.copy(vecs = loaded.vecs ++ r.pending, pending = r.pending))
@@ -160,20 +154,25 @@ object QueryCache {
     }
   }
 
-  /** Write every pending row of this session's cache directories, one
-    * parquet file per directory that has any. The `query` verb calls it
-    * before it exits; a long-lived caller may call it at any time.
+  /** Commit every pending row of this session's cache directories, one
+    * segment per directory that has any. The `query` verb calls it before
+    * it exits; a long-lived caller may call it at any time.
     */
-  def flush(spark: org.apache.spark.sql.SparkSession): Unit =
+  def flush(spark: SparkSession): Unit =
     residentCache.entries(spark).foreach { case (dir, ref) => flushDir(spark, dir, ref) }
 
   /** Pending rows per directory that one miss writes behind together. */
   private val FlushRows = 32
 
+  /** The cache directories' store: a version is its manifest. */
+  private[graft] val store = new Versioned[Versioned.Manifest](identity)
+  private def rows(spark: SparkSession, v: Versioned.Manifest): DataFrame =
+    spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>").parquet(v.segmentPaths: _*)
+
   /** One cache directory's valid rows as loaded plus this session's own
-    * misses, and the [[graft.operators.PathInventory.stamp]] the loaded
-    * rows are current for; `pending` = the misses not yet written (each
-    * also in `vecs`); `overBudget` marks a table served at rest.
+    * misses, and the number of the version the loaded rows are current
+    * for (0 = none); `pending` = the misses not yet written (each also in
+    * `vecs`); `overBudget` marks a table served at rest.
     */
   private final case class Resident(stamp: Long, vecs: Map[String, Array[Float]],
                                     pending: Map[String, Array[Float]] = Map.empty,
@@ -181,49 +180,46 @@ object QueryCache {
   private type ResidentRef = java.util.concurrent.atomic.AtomicReference[Resident]
   private val residentCache = new SessionMemo[ResidentRef]
 
-  private def residentRef(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): ResidentRef =
+  private def residentRef(spark: SparkSession, dir: String): ResidentRef =
     residentCache.getOrBuild(spark, dir)(
       new java.util.concurrent.atomic.AtomicReference(Resident(0L, Map.empty)))
 
-  /** Swap `dir`'s pending rows out and append them as one file, then
-    * re-stamp the map — unless a reload replaced the stamp meanwhile, in
-    * which case the next miss reloads and finds the written rows. The
-    * session's flushes of a directory run one at a time: two appends in
-    * flight share the output committer's `_temporary` directory, and the
-    * first to finish deletes it under the other.
+  /** Swap `dir`'s pending rows out and commit them, by one job. A map
+    * current for the version the commit follows becomes current for the
+    * new one; otherwise the next miss reloads and finds the written rows.
     */
-  private def flushDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                       ref: ResidentRef): Unit = ref.synchronized {
+  private def flushDir(spark: SparkSession, dir: String, ref: ResidentRef): Unit = {
     val taken = ref.getAndUpdate(_.copy(pending = Map.empty))
     if (taken.pending.nonEmpty) {
       import spark.implicits._
-      taken.pending.toSeq.toDF("content_key", "embedding")
-        .coalesce(1).write.mode("append").parquet(dir)
-      if (!taken.overBudget) {
-        val stamp = graft.operators.PathInventory.stamp(spark, dir)
-        ref.updateAndGet(r => if (r.stamp == taken.stamp) r.copy(stamp = stamp) else r)
+      var base = 0L
+      val v = store.commit(spark, dir) { (number, prev) =>
+        base = prev.fold(0L)(_.number)
+        val kept = prev.fold(Seq.empty[String])(_.segments)
+        val fresh = taken.pending.toSeq.toDF("content_key", "embedding")
+        val merge = prev.filter(_ => kept.size >= Versioned.MaxSegments)
+        merge.fold(fresh)(rows(spark, _).unionByName(fresh))
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/v$number")
+        (Nil, (if (merge.isDefined) Nil else kept) :+ s"v$number")
       }
+      if (!taken.overBudget && base == taken.stamp)
+        ref.updateAndGet(r => if (r.stamp == taken.stamp) r.copy(stamp = v.number) else r)
     }
   }
 
-  /** The directory's rows at `stamp`, by one job: the explicit schema
-    * spares the footer read, and the row limit over one partition stops
-    * the scan one row past the budget. No job for a missing or empty
-    * directory (stamp 0).
+  /** The rows of version `v`, by one job: the explicit schema spares the
+    * footer read, and the row limit over one partition stops the scan one
+    * row past the budget. No job where the store has no version.
     */
-  private def loadResident(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, dims: Int, stamp: Long): Resident =
-    if (stamp == 0L) Resident(0L, Map.empty)
-    else {
-      val maxRows = (graft.operators.Resident.MaxFloats /
-        math.max(dims, 1)).toInt
-      val rows = spark.read.schema("content_key STRING, embedding ARRAY<FLOAT>")
-        .parquet(dir)
+  private def loadResident(spark: SparkSession, v: Option[Versioned.Manifest],
+                           dims: Int): Resident =
+    v.fold(Resident(0L, Map.empty)) { v =>
+      val maxRows = (graft.operators.Resident.MaxFloats / math.max(dims, 1)).toInt
+      val got = rows(spark, v)
         .filter(col("content_key").isNotNull && size(col("embedding")) === dims)
         .coalesce(1).limit(maxRows + 1).collect()
-      if (rows.length > maxRows) Resident(stamp, Map.empty, overBudget = true)
-      else Resident(stamp, rows.iterator
+      if (got.length > maxRows) Resident(v.number, Map.empty, overBudget = true)
+      else Resident(v.number, got.iterator
         .map(r => r.getString(0) -> r.getSeq[Float](1).toArray).toMap)
     }
 

@@ -30,21 +30,15 @@ object StreamingIngest {
     * ([[graft.operators.Bm25.commitVersion]]); None when the batch holds no
     * new chunk.
     *
-    * Commit order: the batch's segment, idf and stats land in a fresh
-    * `dir/v<N>`, then the manifest `dir/_manifest/v<N>` is created with
-    * overwrite = false — the commit point ([[graft.operators.Bm25.Version]]).
-    * Readers open the segments the newest manifest names, so they never
-    * observe a half-written version, and the commit never reads the files
-    * it writes. A commit writes the batch's segment and the vocab-sized
-    * idf and reads the stored lengths once (the replay guard below); one
-    * commit in every [[graft.operators.Bm25.MaxSegments]] rewrites the
-    * whole store as one merged segment instead.
+    * The commit protocol and retention are [[graft.store.Versioned]]'s:
+    * readers open the segments the newest manifest names, so they never
+    * observe a half-written version. A commit writes the batch's segment
+    * and the vocab-sized idf and reads the stored lengths once (the replay
+    * guard below); one commit in every [[graft.operators.Bm25.MaxSegments]]
+    * rewrites the whole store as one merged segment instead.
     * foreachBatch is at-least-once, so a replayed batch is made idempotent
     * by the S5 anti-join: chunk ids already in the stored lengths drop
-    * out, and an all-duplicate replay commits no version. After its
-    * manifest lands, a commit keeps its own version and the one before it
-    * and deletes every older manifest, idf, stats and merged-away segment
-    * ([[graft.operators.Bm25.Version]] retention).
+    * out, and an all-duplicate replay commits no version.
     */
   private[graft] def maintainIndexBatch(spark: SparkSession, batch: DataFrame,
                                         dir: String)

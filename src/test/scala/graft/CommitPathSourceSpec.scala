@@ -24,7 +24,7 @@ class CommitPathSourceSpec extends AnyFunSuite {
   }
 
   test("no java.io.File or java.nio.file in the code of the BM25 commit path") {
-    val found = offenders(Set("StreamingIngest.scala", "Bm25.scala"),
+    val found = offenders(Set("StreamingIngest.scala", "Bm25.scala", "Versioned.scala"),
       "\\bjava\\.io\\.File\\b|\\bjava\\.nio\\.file\\b".r)
     assert(found.isEmpty, found.mkString("\n"))
   }
@@ -38,10 +38,11 @@ class CommitPathSourceSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n"))
   }
 
-  // a BM25 version is keyed by its manifest: a file stamp in the store's
-  // memo key would bring back the in-place store it served
+  // a BM25 or query-cache version is keyed by its manifest: a file stamp
+  // in the store's memo key would bring back the in-place store it served
   test("no PathFingerprint in the code of the BM25 store") {
-    val found = offenders(Set("Bm25.scala"), "PathFingerprint|PathInventory".r)
+    val found = offenders(Set("Bm25.scala", "Versioned.scala", "QueryCache.scala"),
+      "PathFingerprint|PathInventory".r)
     assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -529,6 +529,59 @@ class Bm25Spec extends SparkSpec {
     assertSameIndex(Bm25.readIndex(spark, dir), Bm25.readIndex(spark, ref))
   }
 
+  /** The manifest of version 2 of a store of `corpus` — docs 1-2 written by
+    * `writeIndex` with 4 term buckets, docs 3-5 appended — byte for byte.
+    */
+  private val ManifestV2 = Seq(
+    "version 2",
+    "totals 5 28 5 4",
+    """postings_schema {"type":"struct","fields":[""" +
+      """{"name":"doc_id","type":"long","nullable":true,"metadata":{}},""" +
+      """{"name":"term","type":"string","nullable":true,"metadata":{}},""" +
+      """{"name":"tf","type":"long","nullable":true,"metadata":{}},""" +
+      """{"name":"doc_len","type":"long","nullable":true,"metadata":{}},""" +
+      """{"name":"term_bucket","type":"integer","nullable":true,"metadata":{}}]}""",
+    """lengths_schema {"type":"struct","fields":[""" +
+      """{"name":"doc_id","type":"long","nullable":true,"metadata":{}},""" +
+      """{"name":"doc_len","type":"long","nullable":true,"metadata":{}}]}""",
+    "segment v1",
+    "segment v2",
+    "end").mkString("", "\n", "\n")
+
+  test("the manifest format is pinned: a fixed version renders, and a commit writes, the pinned text") {
+    val ddl = org.apache.spark.sql.types.StructType.fromDDL _
+    val fixed = Bm25.Version(graft.store.Versioned.Manifest("/any/root", 2L,
+      Bm25.Version.fields(Bm25.Totals(5L, 28L, 5L, 4),
+        ddl("doc_id BIGINT, term STRING, tf BIGINT, doc_len BIGINT, term_bucket INT"),
+        ddl("doc_id BIGINT, doc_len BIGINT")), Seq("v1", "v2")))
+    assert(fixed.manifest.render == ManifestV2)
+    val docs = corpus.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_golden").toString
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"),
+      dir, termBuckets = 4)
+    Bm25.appendIndexStore(spark, dir, docs.filter(col("doc_id") > 2), "doc_id", "text")
+    assert(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/_manifest/v2")), "UTF-8") == ManifestV2)
+  }
+
+  test("a store whose manifest is the pinned text reads as the index it names") {
+    val docs = corpus.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_pinned").toString
+    val ref = java.nio.file.Files.createTempDirectory("graft_bm25_pinnedref").toString
+    val all = Bm25.buildIndex(docs, "doc_id", "text")
+    // v1: the segment of docs 1-2; v2: the segment of docs 3-5 with the
+    // whole corpus's idf and stats — the tables the pinned manifest names
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") <= 2), "doc_id", "text"),
+      dir, termBuckets = 4)
+    Bm25.writeIndex(Bm25.buildIndex(docs.filter(col("doc_id") > 2), "doc_id", "text")
+      .copy(idf = all.idf, stats = all.stats), dir, termBuckets = 4)
+    val manifest = new org.apache.hadoop.fs.Path(s"$dir/_manifest/v2")
+    val out = graft.sources.KbStorage.fileSystem(spark, manifest).create(manifest, true)
+    try out.write(ManifestV2.getBytes("UTF-8")) finally out.close()
+    Bm25.writeIndex(all, ref, termBuckets = 4)
+    assertSameIndex(Bm25.readIndex(spark, dir), Bm25.readIndex(spark, ref))
+  }
+
   test("ten commits on one root, compaction included, equal a rebuild and keep two manifests") {
     val extra = growth(10)
     val docs = (corpus ++ extra).toDF("doc_id", "text")

@@ -72,7 +72,7 @@ class QueryCacheSpec extends SparkSpec {
     QueryCache.embedQueryCached(spark, dir, "pasta", counting)
     assert(calls == 2)
     QueryCache.flush(spark)
-    assert(spark.read.parquet(s"$dir/counting-8_8").count() == 2)
+    assert(committed(dir).count() == 2)
     // a DIFFERENT model (or dims) never hits the first model's rows: the
     // at-rest cache separates by (model, dims) subdirectory
     var otherCalls = 0
@@ -121,19 +121,33 @@ class QueryCacheSpec extends SparkSpec {
   private def localDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString + "/qcache"
   private def refusing = QueryCache.refusingProvider(8, mirrorModel = "counting-8")
+  private def table(cacheDir: String): String = s"$cacheDir/counting-8_8"
+  /** The parquet files of the segments the `counting-8` table's newest
+    * manifest under `cacheDir` lists.
+    */
   private def parquetFiles(cacheDir: String): Seq[String] =
-    Option(new java.io.File(s"$cacheDir/counting-8_8").list()).toSeq.flatten
+    QueryCache.store.latest(spark, table(cacheDir)).toSeq.flatMap(_.segmentPaths)
+      .flatMap(seg => Option(new java.io.File(seg).list()).toSeq.flatten)
       .filter(_.endsWith(".parquet"))
-  /** `(content_key, count)` of the rows on disk under `cacheDir`. */
+  /** The rows of the `counting-8` table's newest version under `cacheDir`. */
+  private def committed(cacheDir: String): org.apache.spark.sql.DataFrame =
+    QueryCache.store.latest(spark, table(cacheDir)).fold(
+      Seq.empty[(String, Array[Float])].toDF("content_key", "embedding"))(v =>
+      spark.read.parquet(v.segmentPaths: _*))
+  /** `(content_key, count)` of the committed rows under `cacheDir`. */
   private def onDisk(cacheDir: String): Map[String, Long] =
-    spark.read.parquet(s"$cacheDir/counting-8_8").groupBy("content_key").count()
+    committed(cacheDir).groupBy("content_key").count()
       .as[(String, Long)].collect().toMap
-  /** Append one `(content_key, embedding)` row for `text` to the
-    * `counting-8` table under `cacheDir`, as a foreign writer would.
+  /** Commit one `(content_key, embedding)` row for `text` to the
+    * `counting-8` table under `cacheDir` as a segment of its own, as a
+    * foreign writer would.
     */
   private def appendRow(cacheDir: String, text: String, vec: Array[Float]): Unit =
-    Seq((QueryCache.contentKeyValue(text), vec)).toDF("content_key", "embedding")
-      .write.mode("append").parquet(s"$cacheDir/counting-8_8")
+    QueryCache.store.commit(spark, table(cacheDir)) { (n, prev) =>
+      Seq((QueryCache.contentKeyValue(text), vec)).toDF("content_key", "embedding")
+        .write.parquet(s"${table(cacheDir)}/v$n")
+      (Nil, prev.fold(Seq.empty[String])(_.segments) :+ s"v$n")
+    }
 
   test("embedQueryCached: a null embedding row recomputes, resident and at rest") {
     Seq(localDir("graft_qcache_null"),
@@ -225,7 +239,7 @@ class QueryCacheSpec extends SparkSpec {
       expected("window ranking"))
     assert(p.calls == 3)
     QueryCache.flush(spark)
-    assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
+    assert(committed(dir).count() == 1)
     // the rows deleted with the directory are gone from the map as well
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
     assert(p.calls == 4)
@@ -236,7 +250,7 @@ class QueryCacheSpec extends SparkSpec {
     val p = new Counting
     QueryCache.embedQueryCached(spark, dir, "spark join", p)
     QueryCache.flush(spark)
-    assert(spark.read.parquet(s"$dir/counting-8_8").count() == 1)
+    assert(committed(dir).count() == 1)
     assert(!graft.NoJavaIoFileSystem.javaIoSees(s"$dir/counting-8_8"))
     val (v, jobs) = graft.JobCount(spark)(
       QueryCache.embedQueryCached(spark, dir, "spark join", refusing).toSeq)
@@ -307,5 +321,114 @@ class QueryCacheSpec extends SparkSpec {
     assert(onDisk(dir) == all.map(t => QueryCache.contentKeyValue(t) -> 1L).toMap)
     assert(all.map(t => QueryCache.embedQueryCached(spark, dir, t, refusing).toSeq) ==
       all.map(expected))
+  }
+
+  /** A fresh session serves each of `texts` without a provider call. */
+  private def servedFresh(cacheDir: String, texts: Seq[String]): Unit = {
+    val fresh = spark.newSession()
+    assert(texts.map(t => QueryCache.embedQueryCached(fresh, cacheDir, t, refusing).toSeq) ==
+      texts.map(expected), cacheDir)
+  }
+  private def cacheDirs(prefix: String): Seq[String] =
+    Seq(localDir(prefix), graft.NoJavaIoFileSystem.tempDir(spark, s"${prefix}_noio") + "/qcache")
+  private def hadoopPath(p: String) = new org.apache.hadoop.fs.Path(p)
+  private def writeText(path: String, text: String): Unit = {
+    val out = graft.sources.KbStorage.fileSystem(spark, hadoopPath(path)).create(hadoopPath(path))
+    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  test("embedQueryCached: two sessions flushing one directory at once both commit") {
+    cacheDirs("graft_qcache_sessions").foreach { dir =>
+      val p = new Embedder.Provider {
+        val model = "counting-8"; val dims = 8
+        def embedBatch(texts: Seq[String]): Seq[Array[Float]] =
+          Embedder.Deterministic(8).embedBatch(texts)
+      }
+      val texts = (0 until 2).map(s => (1 to 40).map(i => s"session $s question $i"))
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        texts.map(ts => pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = {
+            val session = spark.newSession()
+            start.await()
+            ts.foreach(t => QueryCache.embedQueryCached(session, dir, t, p))
+            QueryCache.flush(session)
+          }
+        })).foreach(_.get())
+      } finally pool.shutdown()
+      // each session committed its 32-row flush and its last 8 rows
+      assert(QueryCache.store.latest(spark, table(dir)).map(_.number).contains(4L), dir)
+      servedFresh(dir, texts.flatten)
+    }
+  }
+
+  test("embedQueryCached: a crashed flush's segment and manifest are invisible, the next flush commits past them") {
+    cacheDirs("graft_qcache_crash").foreach { dir =>
+      val p = new Counting
+      QueryCache.embedQueryCached(spark, dir, "a", p)
+      QueryCache.flush(spark)
+      // a crash after the segment write, and one mid manifest write
+      Seq((QueryCache.contentKeyValue("b"), expected("b").toArray))
+        .toDF("content_key", "embedding").write.parquet(s"${table(dir)}/v2")
+      writeText(s"${table(dir)}/_manifest/v3", "version 3\nsegment v1\nsegment v2\n")
+      val fresh = spark.newSession()
+      val q = new Counting
+      val (a, loadJobs) = graft.JobCount(fresh)(
+        QueryCache.embedQueryCached(fresh, dir, "a", refusing).toSeq)
+      assert(a == expected("a") && loadJobs == 1, dir)
+      assert(QueryCache.embedQueryCached(fresh, dir, "b", q).toSeq == expected("b"), dir)
+      assert(q.calls == 1, dir)
+      QueryCache.flush(fresh)
+      val v = QueryCache.store.latest(spark, table(dir)).get
+      assert(v.number == 4L && v.segments == Seq("v1", "v4"), dir)
+      servedFresh(dir, Seq("a", "b"))
+    }
+  }
+
+  test("embedQueryCached: a directory written before manifests serves as empty, the next flush commits v1 beside it") {
+    cacheDirs("graft_qcache_flat").foreach { dir =>
+      // the flat layout: parquet appended straight into the model directory
+      Seq((QueryCache.contentKeyValue("a"), expected("a").toArray))
+        .toDF("content_key", "embedding").write.mode("append").parquet(table(dir))
+      val p = new Counting
+      assert(QueryCache.embedQueryCached(spark, dir, "a", p).toSeq == expected("a"), dir)
+      assert(p.calls == 1, dir)
+      QueryCache.flush(spark)
+      val v = QueryCache.store.latest(spark, table(dir)).get
+      assert(v.number == 1L && v.segments == Seq("v1"), dir)
+      assert(onDisk(dir) == Map(QueryCache.contentKeyValue("a") -> 1L), dir)
+      servedFresh(dir, Seq("a"))
+    }
+  }
+
+  test("embedQueryCached: the ninth flush merges the store into one segment; a fresh session loads it in one job") {
+    import scala.jdk.CollectionConverters._
+    val dir = localDir("graft_qcache_merge")
+    val p = new Counting
+    val texts = (1 to 9 * 32).map(i => s"question $i")
+    val (_, jobs) = graft.JobCount(spark)(texts.foreach(t => QueryCache.embedQueryCached(spark, dir, t, p)))
+    assert(p.calls == texts.size && jobs == 9, s"$jobs jobs")
+    val latest = QueryCache.store.latest(spark, table(dir)).get
+    assert(latest.number == 9L && latest.segments == Seq("v9"))
+    assert(onDisk(dir) == texts.map(t => QueryCache.contentKeyValue(t) -> 1L).toMap)
+    // at most two manifests, and every data file is in a segment they list
+    val manifests = new java.io.File(s"${table(dir)}/_manifest").list().filter(_.matches("v\\d+")).toSeq
+    assert(manifests.nonEmpty && manifests.size <= 2, manifests)
+    val live = manifests.flatMap(m => QueryCache.store.at(spark, s"${table(dir)}/$m")).flatMap(_.segments)
+    val root = java.nio.file.Paths.get(table(dir))
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+      .map(root.relativize(_).toString).filterNot(_.startsWith("_manifest/")).toSeq
+      finally walk.close()
+    val strays = files.filterNot(f => live.exists(seg => f.startsWith(s"$seg/")))
+    assert(strays.isEmpty, strays)
+    val fresh = spark.newSession()
+    val (first, loadJobs) = graft.JobCount(fresh)(
+      QueryCache.embedQueryCached(fresh, dir, texts.head, refusing).toSeq)
+    assert(first == expected(texts.head) && loadJobs == 1)
+    val (rest, restJobs) = graft.JobCount(fresh)(
+      texts.map(t => QueryCache.embedQueryCached(fresh, dir, t, refusing).toSeq))
+    assert(rest == texts.map(expected) && restJobs == 0)
   }
 }
